@@ -39,11 +39,10 @@ object Bench {
     // in the suite). A failed sample records -1, the exception class is
     // kept per query, and any error flips the process exit code.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // Round-12 verdict: a +24% serve drift (q123 2× on zero code diff) was
-    // UNATTRIBUTABLE from wall-clock alone. Every sample now records the
-    // task-level GC ms, spill bytes, and peak execution memory between
-    // bus-drained markers (ServeMetrics), so a judge can separate
-    // GC/session pressure from plan regressions using the capture alone.
+    // Every sample records the task-level GC ms, spill bytes, and peak
+    // execution memory between bus-drained markers (ServeMetrics), so
+    // GC/session pressure separates from plan regressions using the
+    // capture alone.
     val attrib = new org.apache.spark.graftbus.ServeMetrics
     spark.sparkContext.addSparkListener(attrib)
     val gcs = scala.collection.mutable.LinkedHashMap[String, List[Long]]()
@@ -66,10 +65,10 @@ object Bench {
         errors.getOrElseUpdate(name, e.getClass.getSimpleName)
         -1.0
       }
-      val (gc, memSp, diskSp, peak) = attrib.snapshot(spark.sparkContext)
-      gcs(name) = gcs.getOrElse(name, Nil) :+ gc
-      spills(name) = spills.getOrElse(name, Nil) :+ (memSp + diskSp)
-      peaks(name) = peaks.getOrElse(name, Nil) :+ peak
+      val m = attrib.snapshot(spark.sparkContext)
+      gcs(name) = gcs.getOrElse(name, Nil) :+ m.gcMs
+      spills(name) = spills.getOrElse(name, Nil) :+ (m.memorySpillBytes + m.diskSpillBytes)
+      peaks(name) = peaks.getOrElse(name, Nil) :+ m.peakExecutionMemory
       r
     }
     // Local-iteration knob: SPARK_GRAFT_BENCH_ONLY=q123,q90 restricts the

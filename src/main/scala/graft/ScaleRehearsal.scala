@@ -447,7 +447,7 @@ object ScaleRehearsal {
           }
           spark.read.parquet(s"$dirPath/embeddings.parquet")
         }
-      val sm = new org.apache.spark.graftbus.ShuffleMetrics
+      val sm = new org.apache.spark.graftbus.ServeMetrics
       spark.sparkContext.addSparkListener(sm)
       def frame(): org.apache.spark.sql.DataFrame = op match {
         case "q38op" =>
@@ -467,7 +467,7 @@ object ScaleRehearsal {
         val s0 = System.nanoTime()
         val rows = frame().count()
         val sec = (System.nanoTime() - s0) / 1e9
-        val (_, wr, _) = sm.snapshot(spark.sparkContext)
+        val wr = sm.snapshot(spark.sparkContext).shuffleWriteRows
         (sec, rows, wr)
       }
       val (c, rows, _)  = once()
@@ -565,7 +565,7 @@ object ScaleRehearsal {
     val buildSec = (System.nanoTime() - tb) / 1e9
     val docs = spark.read.parquet(s"$out/documents.parquet")
     val nDocs = docs.count()
-    val sm = new org.apache.spark.graftbus.ShuffleMetrics
+    val sm = new org.apache.spark.graftbus.ServeMetrics
     spark.sparkContext.addSparkListener(sm)
     val stages = scala.collection.mutable.LinkedHashMap[String, String]()
     def stage(name: String)(action: => Long): Long = {
@@ -573,7 +573,8 @@ object ScaleRehearsal {
       val t0 = System.nanoTime()
       val n = action
       val sec = (System.nanoTime() - t0) / 1e9
-      val (wb, wr, rb) = sm.snapshot(spark.sparkContext)
+      val m = sm.snapshot(spark.sparkContext)
+      val (wb, wr, rb) = (m.shuffleWriteBytes, m.shuffleWriteRows, m.shuffleReadBytes)
       stages(name) =
         s"""{"sec":${fmt(sec)},"rows_out":$n,"shuffle_write_bytes":$wb,""" +
         s""""shuffle_rows":$wr,"shuffle_read_bytes":$rb,""" +
@@ -651,7 +652,7 @@ object ScaleRehearsal {
     build(spark, src, out, copies = 100)
     val buildSec = (System.nanoTime() - tb) / 1e9
     val nVecs = spark.read.parquet(s"$out/embeddings.parquet").count()
-    val sm = new org.apache.spark.graftbus.ShuffleMetrics
+    val sm = new org.apache.spark.graftbus.ServeMetrics
     spark.sparkContext.addSparkListener(sm)
     val stages = scala.collection.mutable.LinkedHashMap[String, String]()
     // perRow ≤ 0 → normalize by the stage's OWN output row count instead
@@ -664,7 +665,8 @@ object ScaleRehearsal {
       val t0 = System.nanoTime()
       val n = action
       val sec = (System.nanoTime() - t0) / 1e9
-      val (wb, wr, rb) = sm.snapshot(spark.sparkContext)
+      val m = sm.snapshot(spark.sparkContext)
+      val (wb, wr, rb) = (m.shuffleWriteBytes, m.shuffleWriteRows, m.shuffleReadBytes)
       val norm =
         if (perRow > 0) s""""write_bytes_per_row":${fmt(wb.toDouble / perRow)}"""
         else s""""write_bytes_per_out_row":${fmt(wb.toDouble / math.max(n, 1))}"""
@@ -683,7 +685,7 @@ object ScaleRehearsal {
     }
     // Stage 2 — the q268 serve leg over the NOW-CACHED graph: its
     // marginal shuffle constants must be corpus-size-free (query-batch
-    // sized), which is the SessionCache claim made measurable —
+    // sized), which is the session-artifact claim made measurable —
     // normalized by ITS OWN output rows (perRow = -1), not the corpus.
     stage("nnd_serve_marginal", -1) {
       SparkEntry.queries("q268_graph_ann_beam")(spark, out).count()

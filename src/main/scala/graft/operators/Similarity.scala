@@ -390,26 +390,15 @@ object Similarity {
   private[graft] final case class BallCover(
       w: DataFrame, centroids: Array[Seq[Double]], radii: Map[Int, Double])
 
-  /** Per-(session, cacheKey) memo of fitted covers — the jacCache /
-    * nndGraph build-once discipline: q38, q274 and q280's exact side all
-    * fit the SAME (corpus, k, iters) cover, so the Lloyd jobs, the
-    * assignment cut and the radii collect run once per session, not once
-    * per consumer. Sharing changes nothing downstream: the fit is
-    * deterministic (md5-seeded Lloyd), so the memoized cover is
-    * bit-identical to a per-call fit.
+  /** Per-(session, cacheKey) memo of fitted covers, keyed
+    * `cacheKey|k=K|iters=I`: q38, q274 and q280's exact side all fit the
+    * SAME (corpus, k, iters) cover, so the Lloyd jobs, the assignment cut
+    * and the radii collect run once per session, not once per consumer.
+    * Sharing changes nothing downstream: the fit is deterministic
+    * (md5-seeded Lloyd), so the memoized cover is bit-identical to a
+    * per-call fit.
     */
-  private val coverMemo =
-    new graft.core.SessionMemo[String, Option[BallCover]]
-
-  /** Test hook: whether a cover is memoized for (session, key) — lets
-    * SimilaritySpec assert the share directly. Non-mutating (a probe
-    * that inserted a placeholder would poison a later real consumer of
-    * the same key).
-    */
-  private[graft] def fittedCoverFor(s: org.apache.spark.sql.SparkSession,
-                                    cacheKey: String, k: Int,
-                                    iters: Int): Boolean =
-    coverMemo.contains(s, s"$cacheKey|k=$k|iters=$iters")
+  private val coverMemo = new graft.core.Artifact[Option[BallCover]]("ball_cover")
 
   private def fitBallCover(corpus: DataFrame, idCol: String, vecCol: String,
                            k: Int, iters: Int): Option[BallCover] = {
@@ -461,7 +450,7 @@ object Similarity {
                                      cacheKey: Option[String]): DataFrame = {
     require(minCosine > -1.0 && minCosine <= 1.0, s"minCosine out of range: $minCosine")
     val fitted = cacheKey match {
-      case Some(ck) => coverMemo.getOrElseUpdate(
+      case Some(ck) => coverMemo(
         corpus.sparkSession, s"$ck|k=$k|iters=$iters")(
         fitBallCover(corpus, idCol, vecCol, k, iters))
       case None => fitBallCover(corpus, idCol, vecCol, k, iters)

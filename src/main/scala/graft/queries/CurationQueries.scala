@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.Tables
+import graft.core.{Artifact, Tables}
 import graft.functions.Text
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -174,28 +174,26 @@ object CurationQueries {
               expr("(cum_tokens - n_tokens) DIV 4096").as("shard_id"))
   }
 
-  private val manifestCache = new graft.core.SessionCache[String]
+  private val manifestCache = new Artifact[DataFrame]("q234_manifest")
 
   /** Memoized scattered-copy frame per (session, dir, epochs) — the
-    * q168-chain stage every manifest consumer shares (r19, VERDICT #5):
-    * the q168 allocation, the per-copy explode and the md5 permutation
-    * keys are a pure corpus-fitted artifact (deterministic md5, no
-    * query-side delta), and before this memo EVERY q190/q203 invocation
-    * re-ran that chain TWICE — once inside Sharding.runningTotal's eager
-    * `boundaries` approxQuantile scan and once in the executed plan.
-    * Carries n_tokens unconditionally so one memo serves both the
-    * position-sharded (q190 — ignores it) and token-budget consumers.
+    * q168-chain stage every manifest consumer shares: the q168
+    * allocation, the per-copy explode and the md5 permutation keys are a
+    * pure corpus-fitted artifact (deterministic md5, no query-side
+    * delta), which q190/q203 would otherwise re-run TWICE per call — once
+    * inside Sharding.runningTotal's eager `boundaries` approxQuantile
+    * scan and once in the executed plan. Carries n_tokens
+    * unconditionally so one memo serves both the position-sharded
+    * (q190 — ignores it) and token-budget consumers.
     * q191 deliberately stays on the RAW plan (its def is the plan-gate
     * and oracle surface for the bucketed prefix sum), as does q234's
     * manifest-level memo.
     */
-  private val keyedCopiesCache = new graft.core.SessionCache[String]
+  private val keyedCopiesCache = new Artifact[DataFrame]("ord_keyed_copies")
   private def orderKeyedCopiesShared(s: SparkSession, dir: String,
                                      epochs: Int): DataFrame =
-    keyedCopiesCache.getOrElseUpdate(s, s"$dir|epochs=$epochs")(
-      graft.core.Materialize.cut(
-        orderKeyedCopies(s, dir, Seq("n_tokens"), epochs),
-        s"ord_keyed_copies_e$epochs"))
+    keyedCopiesCache.cut(s, s"$dir|epochs=$epochs")(
+      orderKeyedCopies(s, dir, Seq("n_tokens"), epochs))
 
   /** The q182/q186 stage-flag frame: one row per document with the
     * cumulative survival booleans s1..s5 (see the q182 def comment for
@@ -299,7 +297,7 @@ object CurationQueries {
     graft.sources.Warehouse.sessionScopedName(s,
       "graft_q204_bpidx_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
 
-  private val bpIdxCache = new graft.core.SessionCache[String]
+  private val bpIdxCache = new Artifact[DataFrame]("q204_boilerplate_index")
 
   /** The q204 persisted boilerplate-DF index: per-segment distinct-doc
     * counts over the BASE half (q61 md5 bucket < 50), built once per
@@ -309,7 +307,7 @@ object CurationQueries {
     * frequency.
     */
   private def boilerplateIndex(s: SparkSession, dir: String): DataFrame =
-    bpIdxCache.getOrElseUpdate(s, dir) {
+    bpIdxCache(s, dir) {
       val base = docSegments(
           Tables(s, dir).documents.filter(capSplitBucket < 50))
         .groupBy(col("seg"))
@@ -362,29 +360,26 @@ object CurationQueries {
     * (no tokens or no bigrams) are excluded — a loss is only comparable
     * where both models emit one.
     */
-  /** Per-doc excess loss — memoized per (session, dir) under the
-    * dsirDocDimCache discipline: both LMs are corpus-FITTED scorers and
-    * the quantized excess is a pure function of the corpus, consumed by
-    * two gated queries (q243's domain rollup, q245's stratified filter).
-    * Uncut AND unshared, each consumer's plan duplicated the two LM
-    * scoring passes per reference (q243's committed plan: 44 parquet
-    * scans — `dom` feeds the normalizer and the readout, and each
-    * reference re-expanded the whole upstream).
+  /** Per-doc excess loss — memoized per (session, dir) and cut: both
+    * LMs are corpus-FITTED scorers and the quantized excess is a pure
+    * function of the corpus, consumed by two gated queries (q243's
+    * domain rollup, q245's stratified filter). Uncut, each consumer's
+    * plan would duplicate the two LM scoring passes per reference
+    * (`dom` feeds the normalizer and the readout).
     */
-  private val excessCache = new graft.core.SessionCache[String]
+  private val excessCache = new Artifact[DataFrame]("excess_per_doc")
   private def excessPerDoc(s: SparkSession, dir: String): DataFrame =
-    excessCache.getOrElseUpdate(s, dir) {
+    excessCache.cut(s, dir) {
       val uni = defs("q78_unigram_lm")(s, dir)
         .select(col("doc_id"), col("avg_logprob").as("lp_uni"), col("n_tokens"))
       val kn = knScores(s, dir)
         .select(col("doc_id"), col("avg_logprob").as("lp_kn"), col("n_bigrams"))
-      graft.core.Materialize.cut(
-        Tables(s, dir).documents.select(col("doc_id"), col("source"))
-          .join(uni, "doc_id").join(kn, "doc_id")
-          .filter(col("n_tokens") > 0L && col("n_bigrams") > 0L)
-          .select(col("doc_id"), col("source"),
-            floor(greatest(lit(0.0), col("lp_kn") - col("lp_uni")) * 1e9 + 0.5)
-              .cast(LongType).as("excess_e9")), "excess_per_doc")
+      Tables(s, dir).documents.select(col("doc_id"), col("source"))
+        .join(uni, "doc_id").join(kn, "doc_id")
+        .filter(col("n_tokens") > 0L && col("n_bigrams") > 0L)
+        .select(col("doc_id"), col("source"),
+          floor(greatest(lit(0.0), col("lp_kn") - col("lp_uni")) * 1e9 + 0.5)
+            .cast(LongType).as("excess_e9"))
     }
 
   /** The q243/q245 oracle CTE chain replaying [[excessPerDoc]]: q78 +
@@ -414,14 +409,13 @@ object CurationQueries {
   private val EpochRepeatConst = 15L
 
   /** Per-(session, dir) memos for the two corpus-FITTED curation
-    * artifacts (the TextQueries.jacCache discipline): the DSIR doc×dim
-    * feature frame and the canonical dup-cluster representative set.
+    * artifacts: the DSIR doc×dim feature frame and the canonical dup-cluster representative set.
     * Both are pure functions of the corpus shared verbatim by every
     * curationV2 consumer — a deployment materializes them once per
     * corpus the way it materializes a mined-pair table.
     */
-  private val dsirDocDimCache = new graft.core.SessionCache[String]
-  private val canonCache      = new graft.core.SessionCache[String]
+  private val dsirDocDimCache = new Artifact[DataFrame]("dsir_doc_dim")
+  private val canonCache = new Artifact[DataFrame]("dup_canonical_ids")
 
   /** q148's building blocks: (docDim, tot, model).
     *
@@ -441,20 +435,17 @@ object CurationQueries {
   private def dsirParts(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
     val docs = Tables(s, dir).documents
-    // memoized per (session, dir) — the jacCache discipline: the DSIR
-    // feature frame is a corpus-FITTED model artifact consumed by five
-    // gated queries (q148/q161/q196/q209/q223); before the memo each of
-    // them re-ran the full tokenize+md5 pass per invocation
-    val docDim = dsirDocDimCache.getOrElseUpdate(s, dir) {
-      graft.core.Materialize.cut(docs
-        .select(col("doc_id"), col("lang"),
-                explode(Text.tokens(col("text"))).as("tok"))
-        .select(col("doc_id"), col("lang"),
-                (hexValue16(md5(concat(lit("fh|"), col("tok"))), 0) % DsirB)
-                  .cast(LongType).as("dim"))
-        .groupBy(col("doc_id"), col("lang"), col("dim"))
-        .agg(count(lit(1)).as("c")), "dsir_doc_dim")
-    }
+    // memoized per (session, dir): the DSIR feature frame is a
+    // corpus-FITTED model artifact consumed by five gated queries
+    // (q148/q161/q196/q209/q223), so the tokenize+md5 pass runs once
+    val docDim = dsirDocDimCache.cut(s, dir)(docs
+      .select(col("doc_id"), col("lang"),
+              explode(Text.tokens(col("text"))).as("tok"))
+      .select(col("doc_id"), col("lang"),
+              (hexValue16(md5(concat(lit("fh|"), col("tok"))), 0) % DsirB)
+                .cast(LongType).as("dim"))
+      .groupBy(col("doc_id"), col("lang"), col("dim"))
+      .agg(count(lit(1)).as("c")))
     val byDim = docDim.groupBy(col("dim")).agg(
       sum(col("c")).as("r_cnt"),
       sum(when(col("lang") === "en", col("c")).otherwise(lit(0L))).as("t_cnt"))
@@ -534,9 +525,9 @@ object CurationQueries {
     graft.functions.HexKeys.value16(
       md5(concat(lit("split|"), col("doc_id").cast(StringType)))) % 100
 
-  private val capIdxCache = new graft.core.SessionCache[String]
+  private val capIdxCache = new Artifact[DataFrame]("q198_cap_index")
   private def sourceCapIndex(s: SparkSession, dir: String): DataFrame =
-    capIdxCache.getOrElseUpdate(s, dir) {
+    capIdxCache(s, dir) {
       val kept = sourceCapped(
         Tables(s, dir).documents.filter(capSplitBucket < 50))
       graft.model.Contract.enforce("q198_cap_index", kept, SourceCapContract)
@@ -566,7 +557,7 @@ object CurationQueries {
     // all four curationV2 consumers share the SAME canonical cluster set
     // (the restrict hook governs what may be picked, not what the models
     // see), and the CC star loop is eager per invocation otherwise
-    val canon = canonCache.getOrElseUpdate(s, dir) {
+    val canon = canonCache(s, dir) {
       graft.operators.Dedup.connectedComponentsStars(
           d.select(col("doc_id").as("id")),
           TextQueries.dupEdges05(s, dir),
@@ -2116,8 +2107,7 @@ object CurationQueries {
       // rollup), so this query cuts a memoized copy — Materialize
       // class-1 routing (corpus-derived state, multiple consumers); the
       // q191 def itself stays the raw gated plan
-      val m = manifestCache.getOrElseUpdate(s, dir)(
-        graft.core.Materialize.cut(tokenBudgetManifest(s, dir), "q234_manifest"))
+      val m = manifestCache.cut(s, dir)(tokenBudgetManifest(s, dir))
       val cut = m.agg(expr("max(cum_tokens) DIV 2").as("t_cut"))
       val st = m.crossJoin(broadcast(cut))
         .withColumn("status",

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.Tables
+import graft.core.{Artifact, Tables}
 import graft.functions.Exact._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -576,7 +576,7 @@ object OlapQueries {
     graft.sources.Warehouse.sessionScopedName(s,
       "graft_q220_zstats_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
 
-  private val zIdxCache = new graft.core.SessionCache[String]
+  private val zIdxCache = new Artifact[DataFrame]("q220_zorder_stats")
 
   /** q220's persisted base stats: per-file min/max/count over the EVEN
     * o_orderkey half, with the base grid bounds stored as constant
@@ -584,7 +584,7 @@ object OlapQueries {
     * batches must bucket on the build-time grid, not refit it).
     */
   private def zorderStatsIndex(s: SparkSession, dir: String): DataFrame =
-    zIdxCache.getOrElseUpdate(s, dir) {
+    zIdxCache(s, dir) {
       val base = ZOrder.prep(
         Tables(s, dir).orders.filter(col("o_orderkey") % 2 === 0))
       val b = ZOrder.bounds(base)

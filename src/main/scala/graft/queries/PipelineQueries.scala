@@ -3,7 +3,7 @@ package graft.queries
 import java.sql.Timestamp
 
 import graft.analytics.{Anomaly, Forecast, QualityScores}
-import graft.core.Tables
+import graft.core.{Artifact, Tables}
 import graft.models._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, StringType}
@@ -43,18 +43,14 @@ object PipelineQueries {
     * per reference. Staging outputs are tiny (countries × months), so
     * caching them is the correct plan cut — the query-level analog of the
     * reference materializing marts as tables (`dbt_project.yml:45`).
-    * Cached per (session, sfDir), shared across pipeline queries.
+    * Cached per (session, sfDir), shared across pipeline queries, as an
+    * eager lineage cut rather than a lazy `.cache()`: consumer plans
+    * start from the materialized stage instead of carrying (and
+    * re-analyzing) the full staging lineage.
     */
-  private val stageCache = new graft.core.SessionCache[(String, String)]
+  private val stageCache = new Artifact[DataFrame]("pipeline_stage")
   private def cached(t: Tables, key: String)(build: => DataFrame): DataFrame =
-    stageCache.getOrElseUpdate(t.spark, (t.dir, key))(
-      // r19: eager lineage cut instead of a lazy .cache() — the lazy
-      // form kept the full staging lineage in every consumer's plan
-      // (nine queries × ~140 KB plan text re-analyzed/optimized per
-      // invocation, 26 parquet scans rendered inside the InMemory
-      // relation); the cut consumer plans start from the materialized
-      // stage. Same per-(session, sfDir) memo, same rows.
-      graft.core.Materialize.cut(build, "pipeline_" + key))
+    stageCache.cut(t.spark, s"${t.dir}|$key")(build)
 
   private def stgUnemp(t: Tables) =
     cached(t, "su")(Staging.unemployment(TestdataRaw.rawUnemployment(t)))
@@ -76,17 +72,17 @@ object PipelineQueries {
     Intermediate.monthlyIndicators(stgUnemp(t), stgInfl(t), intAnnual(t)))
   private def dim(t: Tables) = cached(t, "dim")(
     Marts.dimCountry(TestdataRaw.seedCountryMetadata(t), stgGdp(t), AsOf))
-  private def fct(t: Tables) = cached(t, "fct")(
-    Marts.fctEconomicIndicators(intMonthly(t), dim(t), AsOf, "graft-run"))
+  private def fct(t: Tables) = cached(t, "fct")(fctPlan(t.spark, t.dir))
 
-  /** The LAZY fct plan over the memoized upstream stages (no cut of the
-    * final mart join) — exposed so PlanQualitySpec can assert the
-    * dim-join broadcast shape that the shipped cut form hides behind its
-    * checkpoint scan (the jaccardQuery materialize=false discipline).
+  /** The LAZY fct plan over the memoized upstream stages — the very plan
+    * [[fct]] cuts, exposed so PlanQualitySpec can assert the dim-join
+    * broadcast shape that the shipped cut form hides behind its
+    * checkpoint scan.
     */
-  def fctPlan(s: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
-    Marts.fctEconomicIndicators(intMonthly(Tables(s, dir)),
-                                dim(Tables(s, dir)), AsOf, "graft-run")
+  def fctPlan(s: SparkSession, dir: String): DataFrame = {
+    val t = Tables(s, dir)
+    Marts.fctEconomicIndicators(intMonthly(t), dim(t), AsOf, "graft-run")
+  }
 
   val defs: Map[String, Q] = Map(
     "q50_stg_unemployment" -> { (s, dir) => out(stgUnemp(Tables(s, dir))) },

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.Tables
+import graft.core.{Artifact, Tables}
 import graft.functions.Text
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -788,9 +788,9 @@ object RetrievalQueries {
     * should never run twice because two queries need its output.
     * Eagerly checkpointed (same CLUSTER CAVEAT as the pair miners).
     */
-  private val scoreCache = new graft.core.SessionCache[String]
+  private val scoreCache = new Artifact[DataFrame]("nb_scores")
   private def classifierScores(s: SparkSession, dir: String): DataFrame =
-    scoreCache.getOrElseUpdate(s, dir) {
+    scoreCache.cut(s, dir) {
       val d = Tables(s, dir).documents
       val toks = Text.tokens(col("text"))
       val aug = concat(toks, array(concat(lit("len:"),
@@ -809,9 +809,8 @@ object RetrievalQueries {
         .select(col("doc_id"), col("is_high_quality").as("label"))
       val trainIds = TextQueries.defs("q61_train_split")(s, dir)
         .filter(col("split") === "train").select(col("doc_id"))
-      graft.core.Materialize.cut(graft.operators.Classifier.nbLogOddsScore(
-        d.select(col("doc_id")), feats, labels, trainIds, dims = 64),
-        "nb_scores")
+      graft.operators.Classifier.nbLogOddsScore(
+        d.select(col("doc_id")), feats, labels, trainIds, dims = 64)
     }
 
   /** The q103 featurizer oracle — shared verbatim by q129's composed fit. */

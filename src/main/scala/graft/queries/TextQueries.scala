@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.Tables
+import graft.core.{Artifact, Tables}
 import graft.functions.Text
 import graft.operators.Dedup
 import org.apache.spark.sql.functions._
@@ -615,9 +615,8 @@ object TextQueries {
       import s.implicits._
       val d = Tables(s, dir).documents
       // the fitted table is a tiny driver-side Seq but costs 5 corpus
-      // scans — fit once per (session, dir); SessionMemo's lazy holder
-      // runs the fit exactly once even under racing callers
-      val merges = bpeFitCache.getOrElseUpdate(s, dir)(
+      // scans — fit once per (session, dir)
+      val merges = bpeFitCache(s, dir)(
         graft.operators.Bpe.fit(d, "text", numMerges = 5))
       val baseDf = d.select(col("doc_id"), col("text").cast(StringType))
       val para = s.sparkContext.defaultParallelism
@@ -655,7 +654,7 @@ object TextQueries {
     "q144_bpe_fit_delta" -> { (s, dir) =>
       import s.implicits._
       val d = Tables(s, dir).documents
-      val merges = bpeDeltaFitCache.getOrElseUpdate(s, dir)(
+      val merges = bpeDeltaFitCache(s, dir)(
         graft.operators.Bpe.fitDelta(d, "text", numMerges = 256))
       val baseDf = d.select(col("doc_id"), col("text").cast(StringType))
       val para = s.sparkContext.defaultParallelism
@@ -694,7 +693,7 @@ object TextQueries {
     "q210_bpe_fit_batched" -> { (s, dir) =>
       import s.implicits._
       val d = Tables(s, dir).documents
-      val merges = bpeBatchedFitCache.getOrElseUpdate(s, dir)(
+      val merges = bpeBatchedFitCache(s, dir)(
         graft.operators.Bpe.fitDeltaBatched(d, "text",
           numMerges = BpeBatchRounds * BpeBatchSize,
           maxBatch = BpeBatchSize, maxRounds = BpeBatchRounds))
@@ -728,7 +727,7 @@ object TextQueries {
     "q151_vocab_coverage" -> { (s, dir) =>
       import s.implicits._
       val d = Tables(s, dir).documents
-      val merges = bpeDeltaFitCache.getOrElseUpdate(s, dir)(
+      val merges = bpeDeltaFitCache(s, dir)(
         graft.operators.Bpe.fitDelta(d, "text", numMerges = 256))
       val cps = BpeCoverageCheckpoints
       val baseDf = d.select(col("text").cast(StringType))
@@ -1332,24 +1331,20 @@ object TextQueries {
     // ---------------------------------------------------------------
     "q206_winnow_overlap" -> { (s, dir) =>
       // The DF-capped postings are the MOSS fingerprint INDEX — pure
-      // corpus-fitted state (the snmValsCache discipline), memoized per
-      // (session, dir) so repeat serves pay the self-join + rollup, not
-      // the corpus tokenize+winnow pass. Inside the build, BOTH
-      // intermediates are eagerly cut (the mined-pair lineage-cut
-      // discipline): uncut, the committed r18 plan re-ran the corpus-
-      // scale q87 fingerprint pass 16× in ONE execution (16 parquet
-      // scans, 44 exchanges, zero reuse — `fp` feeds df + rare, `rare`
-      // feeds cnt + both self-join sides, and the planner duplicated
-      // the whole upstream per reference). The gated q87 entry itself
+      // corpus-fitted state, memoized per (session, dir) so repeat
+      // serves pay the self-join + rollup, not the corpus
+      // tokenize+winnow pass. Inside the build, BOTH intermediates are
+      // eagerly cut: uncut, the planner duplicates the corpus-scale q87
+      // fingerprint pass per reference (`fp` feeds df + rare, `rare`
+      // feeds cnt + both self-join sides). The gated q87 entry itself
       // stays uncached.
-      val rare = winnowRareCache.getOrElseUpdate(s, dir) {
+      val rare = winnowRareCache.cut(s, dir) {
         val fp = graft.core.Materialize.cut(
           defs("q87_winnow_fingerprint")(s, dir)
             .select(col("doc_id"), col("fp_hash")).distinct(), "winnow_fp")
         val df = fp.groupBy(col("fp_hash")).agg(count(lit(1)).as("df"))
-        graft.core.Materialize.cut(
-          fp.join(df.filter(col("df") <= WinnowDfCap), "fp_hash")
-            .select(col("fp_hash"), col("doc_id")), "winnow_rare")
+        fp.join(df.filter(col("df") <= WinnowDfCap), "fp_hash")
+          .select(col("fp_hash"), col("doc_id"))
       }
       val cnt = rare.groupBy(col("doc_id")).agg(count(lit(1)).as("nfp"))
       val pairs = rare.select(col("fp_hash"), col("doc_id").as("doc_a"))
@@ -3465,31 +3460,25 @@ object TextQueries {
        |${checkpoints.map(sel).mkString("\nUNION ALL\n")}""".stripMargin
   }
 
-  /** q134's fitted merge table, fitted once per (session, dir) —
-    * weak-keyed so the driver-side merge list follows session lifetime
-    * (the ivfCentCache eviction discipline).
-    */
-  private val bpeFitCache =
-    new graft.core.SessionMemo[String, Seq[(String, String)]]
+  /** q134's fitted merge table, fitted once per (session, dir). */
+  private val bpeFitCache = new Artifact[Seq[(String, String)]]("bpe_fit")
 
   /** q144's 256-merge delta-fit table, fitted once per (session, dir). */
-  private val bpeDeltaFitCache =
-    new graft.core.SessionMemo[String, Seq[(String, String)]]
+  private val bpeDeltaFitCache = new Artifact[Seq[(String, String)]]("bpe_fit_delta")
 
   /** q210's batched (batch=16) 256-merge fit, fitted once per
     * (session, dir) — memoized separately from q144's sequential fit so
     * the two algorithm paths are independently exercised and timed.
     */
-  private val bpeBatchedFitCache =
-    new graft.core.SessionMemo[String, Seq[(String, String)]]
+  private val bpeBatchedFitCache = new Artifact[Seq[(String, String)]]("bpe_fit_batched")
 
   /** The decoded (media_id, dhash) frame, hashed once per (session, dir)
     * — consumed by the q127 pair miner AND q132's quotient-graph cluster
     * resolution; the per-row PNG decode should never run twice.
     */
-  private val dhashCache = new graft.core.SessionCache[String]
+  private val dhashCache = new Artifact[DataFrame]("dhash_frame")
   private def dhashes(s: SparkSession, dir: String): DataFrame =
-    dhashCache.getOrElseUpdate(s, dir) {
+    dhashCache.cut(s, dir) {
       import s.implicits._
       val idsDf = Tables(s, dir).documents.select(col("doc_id"))
       // the map below multiplies work per row (PNG encode + imageio
@@ -3500,12 +3489,12 @@ object TextQueries {
       val para = s.sparkContext.defaultParallelism
       val ids = (if (idsDf.rdd.getNumPartitions < para)
                    idsDf.repartition(para) else idsDf).as[Long]
-      graft.core.Materialize.cut(ids.map { id =>
+      ids.map { id =>
         val h = graft.operators.Multimodal.dHash64(
           graft.operators.Multimodal.syntheticPatternPng(id))
           .getOrElse(sys.error(s"undecodable synthetic PNG for id $id"))
         (id, h)
-      }.toDF("media_id", "dhash"), "dhash_frame")
+      }.toDF("media_id", "dhash")
     }
 
   /** The q127 dHash pair miner, mined once per (session, dir) — the
@@ -3514,11 +3503,9 @@ object TextQueries {
     * run twice because two queries need its output. Eagerly
     * checkpointed (same CLUSTER CAVEAT as [[jaccard05]]).
     */
-  private val dhashPairCache = new graft.core.SessionCache[String]
+  private val dhashPairCache = new Artifact[DataFrame]("dhash_pairs")
   private def dhashPairs(s: SparkSession, dir: String): DataFrame =
-    dhashPairCache.getOrElseUpdate(s, dir) {
-      graft.core.Materialize.cut(dhashPairsPlan(s, dir), "dhash_pairs")
-    }
+    dhashPairCache.cut(s, dir)(dhashPairsPlan(s, dir))
 
   /** The LAZY banded-join mining plan (no memo, no checkpoint) — exposed
     * so PlanQualitySpec can assert the banded equi-join shape that the
@@ -3561,31 +3548,29 @@ object TextQueries {
     * (session, dir) — the audio twin of [[dhashes]] (same spread guard,
     * same memo discipline).
     */
-  private val afpCache = new graft.core.SessionCache[String]
+  private val afpCache = new Artifact[DataFrame]("afp_frame")
   private def audioFps(s: SparkSession, dir: String): DataFrame =
-    afpCache.getOrElseUpdate(s, dir) {
+    afpCache.cut(s, dir) {
       import s.implicits._
       val idsDf = Tables(s, dir).documents.select(col("doc_id"))
       val para = s.sparkContext.defaultParallelism
       val ids = (if (idsDf.rdd.getNumPartitions < para)
                    idsDf.repartition(para) else idsDf).as[Long]
-      graft.core.Materialize.cut(ids.map { id =>
+      ids.map { id =>
         val h = graft.operators.Multimodal.audioFingerprint64(
           graft.operators.Multimodal.syntheticToneWav(id))
           .getOrElse(sys.error(s"undecodable synthetic WAV for id $id"))
         (id, h)
-      }.toDF("media_id", "afp"), "afp_frame")
+      }.toDF("media_id", "afp")
     }
 
   /** The q135 audio-fingerprint pair miner, mined once per (session, dir)
     * — the [[dhashPairs]] memo discipline (same CLUSTER CAVEAT as
     * [[jaccard05]]).
     */
-  private val afpPairCache = new graft.core.SessionCache[String]
+  private val afpPairCache = new Artifact[DataFrame]("afp_pairs")
   private def audioPairs(s: SparkSession, dir: String): DataFrame =
-    afpPairCache.getOrElseUpdate(s, dir) {
-      graft.core.Materialize.cut(audioPairsPlan(s, dir), "afp_pairs")
-    }
+    afpPairCache.cut(s, dir)(audioPairsPlan(s, dir))
 
   /** The LAZY q135 mining plan — exposed for PlanQualitySpec, like
     * [[dhashPairsPlan]].
@@ -3593,38 +3578,24 @@ object TextQueries {
   def audioPairsPlan(s: SparkSession, dir: String): DataFrame =
     banded64Pairs(audioFps(s, dir), "afp")
 
-  /** Verified Jaccard pairs at threshold 0.5, mined once per
-    * (session, dir) — Dedup.jaccardPairs returns an eagerly-checkpointed
-    * frame, so the memo holds materialized pairs, not a live cache;
-    * evicted when the session's application ends (SessionCache).
-    * CLUSTER CAVEAT: localCheckpoint blocks are not recomputable — if an
-    * executor is lost, the memoized frame dies with it for the rest of
-    * the session. Correct for local/test drivers (the gate); a long-lived
-    * multi-executor deployment should materialize mined pairs as a TABLE
-    * via the Runner (which is what the model layer does for every shared
-    * stage) instead of relying on this in-session memo.
-    */
   /** q206's DF-capped winnow-fingerprint postings (the MOSS match index)
     * — corpus-fitted, memoized per (session, dir); see the q206 def.
     */
-  private val winnowRareCache = new graft.core.SessionCache[String]
+  private val winnowRareCache = new Artifact[DataFrame]("winnow_rare")
 
   /** Memoized exact-dup STAR edges (canonical → member, the
-    * `Dedup.exact(...).filter(is_duplicate)` pair set) — corpus-fitted
-    * under the jacCache discipline: seven sites (q149 q154 q155 q247
-    * q263 + the q67-cluster and canonical-set memo builds) each re-ran
-    * the full md5 + groupBy + join-back corpus pass per invocation to
-    * mine the identical edge set. The q34 gated entry (which reports
-    * ALL rows, not just edges) stays uncached.
+    * `Dedup.exact(...).filter(is_duplicate)` pair set) — corpus-fitted,
+    * shared by seven sites (q149 q154 q155 q247 q263 + the q67-cluster
+    * and canonical-set builds), so the md5 + groupBy + join-back corpus
+    * pass runs once per session. The q34 gated entry (which reports ALL
+    * rows, not just edges) stays uncached.
     */
-  private val exactEdgeCache = new graft.core.SessionCache[String]
+  private val exactEdgeCache = new Artifact[DataFrame]("exact_dup_edges")
   private[graft] def exactDupEdges(s: SparkSession, dir: String): DataFrame =
-    exactEdgeCache.getOrElseUpdate(s, dir)(
-      graft.core.Materialize.cut(
-        Dedup.exact(Tables(s, dir).documents, "doc_id", "text")
-          .filter(col("is_duplicate"))
-          .select(col("canonical_id").as("doc_a"), col("doc_id").as("doc_b")),
-        "exact_dup_edges"))
+    exactEdgeCache.cut(s, dir)(
+      Dedup.exact(Tables(s, dir).documents, "doc_id", "text")
+        .filter(col("is_duplicate"))
+        .select(col("canonical_id").as("doc_a"), col("doc_id").as("doc_b")))
 
   /** The standard q67 dup-edge set (exact stars ∪ Jaccard≥0.5 pairs)
     * assembled from the two memoized pair tables — what
@@ -3634,9 +3605,19 @@ object TextQueries {
     exactDupEdges(s, dir).union(
       jaccard05(s, dir).select(col("doc_a"), col("doc_b")))
 
-  private val jacCache = new graft.core.SessionCache[String]
+  /** Verified Jaccard pairs at threshold 0.5, mined once per
+    * (session, dir) — Dedup.jaccardPairs returns an eagerly-checkpointed
+    * frame, so the artifact holds materialized pairs, not a live cache.
+    * CLUSTER CAVEAT: localCheckpoint blocks are not recomputable — if an
+    * executor is lost, the memoized frame dies with it for the rest of
+    * the session. Correct for local/test drivers (the gate); a long-lived
+    * multi-executor deployment should materialize mined pairs as a TABLE
+    * via the Runner (which is what the model layer does for every shared
+    * stage) instead of relying on this in-session memo.
+    */
+  private val jacCache = new Artifact[DataFrame]("jaccard05_pairs")
   private def jaccard05(s: SparkSession, dir: String): DataFrame =
-    jacCache.getOrElseUpdate(s, dir)(
+    jacCache(s, dir)(
       Dedup.jaccardPairs(Tables(s, dir).documents, "doc_id", "text", threshold = 0.5))
 
   /** The q67 transitive dup-cluster ASSIGNMENT (doc_id, cluster_id,
@@ -3654,21 +3635,19 @@ object TextQueries {
       comp.select(col("id").as("doc_id"), col("cluster_id")), "doc_id")
   }
 
-  /** Memoized q67 cluster-assignment frame — corpus-FITTED state under
-    * the jacCache/canonCache discipline: nine gated consumers (q143
-    * q207 q219 q224 q231 q236 q237 q240 q241) compose the q67 clusters,
-    * and before this memo EVERY invocation re-ran the exact-dup mining
-    * pass and the eager min-label CC loop (r19 bench: ~1-1.4 s each at
-    * sf0.1, ×9 consumers). A dedup pipeline materializes its cluster
-    * table once per corpus; consumers read it. The gated q67 entry
-    * itself stays UNCACHED (it is the query under test). Eagerly cut:
-    * four narrow columns per doc, so consumers' plans read a
-    * checkpointed frame instead of re-expanding the mining subtree.
+  /** Memoized q67 cluster-assignment frame — corpus-FITTED state: nine
+    * gated consumers (q143 q207 q219 q224 q231 q236 q237 q240 q241)
+    * compose the q67 clusters, so the exact-dup mining pass and the
+    * eager min-label CC loop run once per session. A dedup pipeline
+    * materializes its cluster table once per corpus; consumers read it.
+    * The gated q67 entry itself stays UNCACHED (it is the query under
+    * test). Eagerly cut: four narrow columns per doc, so consumers'
+    * plans read a checkpointed frame instead of re-expanding the mining
+    * subtree.
     */
-  private val clusterCache = new graft.core.SessionCache[String]
+  private val clusterCache = new Artifact[DataFrame]("q67_clusters")
   private[graft] def dupClusterAssignments(s: SparkSession, dir: String): DataFrame =
-    clusterCache.getOrElseUpdate(s, dir)(
-      graft.core.Materialize.cut(q67Clusters(s, dir), "q67_clusters"))
+    clusterCache.cut(s, dir)(q67Clusters(s, dir))
 
   /** Shipped q35/q36/q41, parameterized on `materialize` so plan-inspection
     * callers (PlanDump) dump the LAZY form of the exact shipped query
@@ -3773,9 +3752,9 @@ object TextQueries {
     notNull = Seq("doc_id", "band_idx", "band_hash"),
     uniqueKeys = Seq(Seq("doc_id", "band_idx")))
 
-  private val lshIdxCache = new graft.core.SessionCache[String]
+  private val lshIdxCache = new Artifact[DataFrame]("q145_lsh_index")
   private def lshIndex(s: SparkSession, dir: String): DataFrame =
-    lshIdxCache.getOrElseUpdate(s, dir) {
+    lshIdxCache(s, dir) {
       val base = Tables(s, dir).documents.filter(col("doc_id") % 2 === 0)
       val bands = Dedup.lshBands(Dedup.minhashSignatures(base, "doc_id", "text"))
       graft.model.Contract.enforce("q145_lsh_index", bands, LshIndexContract)
@@ -3865,17 +3844,12 @@ object TextQueries {
   /** q213/q214's distinct simhash VALUE frame, fingerprinted once per
     * (session, dir) and eagerly cut — the corpus shingle+md5 pass
     * behind the SNM screen must not re-run for the screen, its quantile
-    * boundary scan, and the recall audit separately (bench round 13:
-    * three recomputes read as ~4.3 s/sample on a ~1 s screen).
+    * boundary scan, and the recall audit separately.
     */
-  private val snmValsCache = new graft.core.SessionCache[String]
+  private val snmValsCache = new Artifact[DataFrame]("snm_vals")
   private def snmVals(s: SparkSession, dir: String): DataFrame =
-    snmValsCache.getOrElseUpdate(s, dir) {
-      graft.core.Materialize.cut(
-        graft.operators.Dedup.simhashVals(
-          Tables(s, dir).documents, "doc_id", "text"),
-        "snm_vals")
-    }
+    snmValsCache.cut(s, dir)(
+      graft.operators.Dedup.simhashVals(Tables(s, dir).documents, "doc_id", "text"))
 
   /** q215 persisted SNM index table names (session-scoped). */
   def snmIndexTables(s: SparkSession, dir: String): (String, String, String, String) = {
@@ -3905,9 +3879,9 @@ object TextQueries {
     * assign delta keys with the EXACT build-time bucketing, and
     * re-deriving quantiles at probe time would silently shift buckets.
     */
-  private val snmIdxCache = new graft.core.SessionCache[String]
+  private val snmIdxCache = new Artifact[DataFrame]("q215_snm_index")
   private[graft] def snmIndex(s: SparkSession, dir: String): DataFrame =
-    snmIdxCache.getOrElseUpdate(s, dir) {
+    snmIdxCache(s, dir) {
       val (valsT, keysT, countsT, boundsT) = snmIndexTables(s, dir)
       val base = Tables(s, dir).documents.filter(
         graft.functions.HexKeys.value16(
@@ -4041,9 +4015,9 @@ object TextQueries {
     * granularity). Every base chunk TEXT has a canonical row, so hash
     * membership in the index ≡ membership in the full base chunk set.
     */
-  private val chunkIdxCache = new graft.core.SessionCache[String]
+  private val chunkIdxCache = new Artifact[DataFrame]("q172_chunk_index")
   private def chunkIndex(s: SparkSession, dir: String): DataFrame =
-    chunkIdxCache.getOrElseUpdate(s, dir) {
+    chunkIdxCache(s, dir) {
       val base = Tables(s, dir).documents.filter(col("doc_id") % 2 === 0)
       val ch = Dedup.chunkFrame(base, "doc_id", "text", ChunkDedupTokens)
         .withColumn("chunk_hash", md5(col("chunk_text")))
@@ -4124,9 +4098,9 @@ object TextQueries {
     * measured 3.9% → 84% contrast), so the index actually blocks the
     * routine mirror-with-banner case instead of passing it through.
     */
-  private val cdcIdxCache = new graft.core.SessionCache[String]
+  private val cdcIdxCache = new Artifact[DataFrame]("q227_cdc_index")
   private def cdcChunkIndex(s: SparkSession, dir: String): DataFrame =
-    cdcIdxCache.getOrElseUpdate(s, dir) {
+    cdcIdxCache(s, dir) {
       val base = Tables(s, dir).documents.filter(col("doc_id") % 2 === 0)
       val ch = Dedup.cdcChunkFrame(base, "doc_id", "text")
         .withColumn("chunk_hash", md5(col("chunk_text")))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.Tables
+import graft.core.{Artifact, Tables}
 import graft.operators.Similarity
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
@@ -1426,44 +1426,30 @@ object VectorQueries {
     * (session, sfDir) so the build runs ONCE however many serve legs
     * read it (q268 + three q272 widths).
     */
-  private val nndVecCache  = new graft.core.SessionCache[String]
-  private val nndEdgeCache = new graft.core.SessionCache[String]
-  private val nndSymCache  = new graft.core.SessionCache[String]
-  private val q37TruthCache = new graft.core.SessionCache[String]
+  private val nndVecCache = new Artifact[DataFrame]("nnd_corpus")
+  private val nndEdgeCache = new Artifact[DataFrame]("nnd_edges")
+  private val nndSymCache = new Artifact[DataFrame]("nnd_sym_edges")
+  private val q37TruthCache = new Artifact[DataFrame]("q37_truth")
 
   /** The q37 brute-force truth projected to (query_id, neighbor_id), cut
     * ONCE per (session, dir): reference labels for the recall gates
-    * (q268, q272's three legs, q273) — q272 already cut it per CALL; the
-    * session memo is the same argument one level up (the truth is a pure
-    * function of the corpus, and each gate re-scoring it added a full
-    * brute-force pass per invocation). The q37 gated query itself stays
+    * (q268, q272's three legs, q273). The truth is a pure function of the
+    * corpus, so no gate re-scores it. The q37 gated query itself stays
     * uncached — its bench entry still computes from the parquet scan.
     */
   private def q37Truth(s: SparkSession, dir: String): DataFrame =
-    q37TruthCache.getOrElseUpdate(s, s"$dir|q37truth") {
-      graft.core.Materialize.cut(
-        defs("q37_cosine_topk")(s, dir)
-          .select(col("query_id"), col("neighbor_id")), "q37-truth")
-    }
+    q37TruthCache.cut(s, dir)(
+      defs("q37_cosine_topk")(s, dir).select(col("query_id"), col("neighbor_id")))
 
   /** Symmetrized (both directions, distinct) view of an NN-descent edge
     * frame, materialized ONCE per (session, key). Every beam round
     * references the edge set, and each beam round is its own job after
     * the per-round lineage cut — without cutting the symmetrize here,
-    * every round of every serve leg would re-run the union+distinct
-    * (q272's three widths alone re-ran it 12×).
+    * every round of every serve leg would re-run the union+distinct.
     */
   private def symEdgesCached(s: SparkSession, key: String,
                              g: => DataFrame): DataFrame =
-    nndSymCache.getOrElseUpdate(s, key) {
-      graft.core.Materialize.cut(symmetrized(g), "nnd-sym")
-    }
-
-  /** Test hook: NN-descent edge-cache keys for `s` — PlanQualitySpec
-    * asserts the q272 sweep's three legs share ONE build entry.
-    */
-  private[graft] def nndEdgeCacheKeys(s: SparkSession): Set[String] =
-    nndEdgeCache.keys(s)
+    nndSymCache.cut(s, key)(symmetrized(g))
 
   /** Catalog name of the cand_id-bucketed NN-descent corpus table for one
     * (session, cache key) — the persisted index every build-round vector
@@ -1497,17 +1483,14 @@ object VectorQueries {
     */
   private def nndCorpus(s: SparkSession, dir: String,
                         base: Boolean = false): DataFrame =
-    nndVecCache.getOrElseUpdate(s, if (base) s"$dir|base" else dir) {
+    nndVecCache.cut(s, if (base) s"$dir|base" else dir) {
       import graft.functions.Vectors
       val n0 = Tables(s, dir).embeddings
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         .withColumn("nrm", Vectors.norm(col("v")))
         .filter(col("nrm") > 0)
       val n = if (base) n0.filter(col("vec_id") % 5 =!= 3) else n0
-      graft.core.Materialize.cut(
-        n.select(col("vec_id").as("cand_id"), col("v").as("cv"),
-                 col("nrm").as("cn")),
-        if (base) "q273-base-corpus" else "q268-corpus")
+      n.select(col("vec_id").as("cand_id"), col("v").as("cv"), col("nrm").as("cn"))
     }
 
   private val NndBig = 1000000000000000000L // 10^18; scaled cosine < 2^31
@@ -1547,7 +1530,7 @@ object VectorQueries {
     */
   private def nndGraphOver(s: SparkSession, corpus: DataFrame,
                            cacheKey: String, tagPfx: String): DataFrame =
-    nndEdgeCache.getOrElseUpdate(s, cacheKey) {
+    nndEdgeCache(s, cacheKey) {
       // durable mode: the finished edge list is published as a
       // cross-session warehouse index (dir-keyed name), so a NEW session
       // serves from a parquet scan instead of re-paying the build — the
@@ -1694,10 +1677,10 @@ object VectorQueries {
     * retires the per-call `min(vec_id)` job and frame rebuilds (q273 is
     * re-invoked per bench pass; the streaming leg builds it once anyway).
     */
-  private val insertCtxMemo = new graft.core.SessionMemo[String, InsertContext]
+  private val insertCtxMemo = new Artifact[InsertContext]("q273_insert_context")
 
   private[graft] def insertContext(s: SparkSession, dir: String): InsertContext =
-    insertCtxMemo.getOrElseUpdate(s, dir) {
+    insertCtxMemo(s, dir) {
       val nBase = labeledVecs(s, dir).filter(col("vec_id") % 5 =!= 3)
       val gBase = nndGraphOver(s, nndCorpus(s, dir, base = true),
                                s"$dir|base", "q273")
@@ -1916,7 +1899,7 @@ object VectorQueries {
     graft.sources.Warehouse.sessionScopedName(s,
       "graft_knn_edges_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
 
-  private val knnEdgeCache = new graft.core.SessionCache[String]
+  private val knnEdgeCache = new Artifact[DataFrame]("q118_knn_sym_edges")
 
   /** The symmetrized q118 kNN graph (both directions, distinct),
     * materialized ONCE per (session, dir) to a src-bucketed warehouse
@@ -1929,7 +1912,7 @@ object VectorQueries {
     * edge table in the warehouse, scanned in place every iteration.
     */
   private def symKnnEdges(s: SparkSession, dir: String): DataFrame =
-    knnEdgeCache.getOrElseUpdate(s, dir) {
+    knnEdgeCache(s, dir) {
       val knn = knnGraph(s, dir).select(col("vec_id"), col("neighbor_id"))
       val di  = knn.select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
       val edges = di.union(di.select(col("dst").as("src"), col("src").as("dst")))
@@ -2067,45 +2050,36 @@ object VectorQueries {
   /** Codebooks memoized per (session, dir) — 4 driver Lloyd fits, each
     * k·subDim doubles (driver-sized by construction).
     */
-  private val pqCbCache =
-    new graft.core.SessionMemo[String, Seq[Array[Seq[Double]]]]
+  private val pqCbCache = new Artifact[Seq[Array[Seq[Double]]]]("pq_codebooks")
   private def pqCodebooks(s: SparkSession, dir: String): Seq[Array[Seq[Double]]] =
-    pqCbCache.getOrElseUpdate(s, dir)(
+    pqCbCache(s, dir)(
       graft.operators.Pq.fitCodebooks(Tables(s, dir).embeddings,
         "vec_id", "embedding", PqM, PqSubDim, PqK, PqIters))
 
-  /** The encoded corpus, memoized per (session, dir) with a lineage cut.
-    * The encode expression embeds M·k codebook centroids as literals —
-    * cheap to EXECUTE (one scan) but expensive to RE-PLAN: a consumer
-    * that joins it four times (q178's lut chain) re-analyzes the whole
-    * literal-laden subtree per join and pays seconds of optimizer/codegen
-    * time on a frame with thousands of rows (probe: 4.3 s → 0.6 s once
-    * cut). This is also the production shape — encode once, serve many.
-    */
   /** The shared k=8/iters=2 kmeans assignment (with the double-cast
     * vector riding along), memoized per (session, dir) behind a lineage
     * cut — q97/q98/q99/q184 all consume this one fit instead of each
     * re-running Lloyd (the pqCodes discipline: fit once, serve many; at
     * scale this IS a materialized assignment table).
     */
-  private val kmeans8Cache = new graft.core.SessionCache[String]
+  private val kmeans8Cache = new Artifact[DataFrame]("kmeans8")
   /** q262's candidate + pairwise-sim frames, memoized per (session,
     * dir) behind lineage cuts — the ranker pass is an index build the
     * 5-step greedy serves from (kmeans8's discipline).
     */
-  private val mmrCandCache  = new graft.core.SessionCache[String]
-  private val mmrPairsCache = new graft.core.SessionCache[String]
+  private val mmrCandCache = new Artifact[DataFrame]("q262_cand")
+  private val mmrPairsCache = new Artifact[DataFrame]("q262_pairs")
   private def mmrCand(s: SparkSession, dir: String): DataFrame =
-    mmrCandCache.getOrElseUpdate(s, dir)(graft.core.Materialize.cut({
+    mmrCandCache.cut(s, dir) {
       val e = Tables(s, dir).embeddings
       Similarity.bruteForceTopK(
           e.filter(col("vec_id") < 20), e, "vec_id", "embedding", 10)
         .filter(col("cosine").isNotNull)
         .select(col("query_id"), col("neighbor_id").as("doc"),
                 col("cosine").as("rel"))
-    }, "q262-cand"))
+    }
   private def mmrPairs(s: SparkSession, dir: String): DataFrame =
-    mmrPairsCache.getOrElseUpdate(s, dir)(graft.core.Materialize.cut({
+    mmrPairsCache.cut(s, dir) {
       val e = Tables(s, dir).embeddings
       val v = e.select(col("vec_id").as("doc"),
           col("embedding").cast("array<double>").as("v"))
@@ -2119,28 +2093,24 @@ object VectorQueries {
                 when(col("a.nrm") > 0 && col("b.nrm") > 0,
                      graft.functions.Vectors.dot(col("a.v"), col("b.v")) /
                        (col("a.nrm") * col("b.nrm"))).as("sim"))
-    }, "q262-pairs"))
+    }
 
   /** The k=8 Lloyd centroids, fitted ONCE per (session, dir) — pure
     * corpus-fitted model state (deterministic md5 seeds) shared by the
     * kmeans8 assignment build and q246's driver-side centroid
-    * separations, which used to re-run the whole iters × k aggregation
-    * fit per invocation next to the memoized assignment it audits.
+    * separations, so the iters × k aggregation fit runs once.
     */
-  private val cents8Memo =
-    new graft.core.SessionMemo[String, Array[Seq[Double]]]
+  private val cents8Memo = new Artifact[Array[Seq[Double]]]("kmeans8_centroids")
   private def cents8(s: SparkSession, dir: String): Array[Seq[Double]] =
-    cents8Memo.getOrElseUpdate(s, dir)(
+    cents8Memo(s, dir)(
       graft.operators.Clustering.fitCentroids(
         Tables(s, dir).embeddings, "vec_id", "embedding", k = 8, iters = 2))
 
   private def kmeans8(s: SparkSession, dir: String): DataFrame =
-    kmeans8Cache.getOrElseUpdate(s, dir)(
-      graft.core.Materialize.cut(
-        graft.operators.Clustering.kmeans(Tables(s, dir).embeddings,
-          "vec_id", "embedding", k = 8, iters = 2, keepVectors = true,
-          precomputed = Some(cents8(s, dir))),
-        "kmeans8"))
+    kmeans8Cache.cut(s, dir)(
+      graft.operators.Clustering.kmeans(Tables(s, dir).embeddings,
+        "vec_id", "embedding", k = 8, iters = 2, keepVectors = true,
+        precomputed = Some(cents8(s, dir))))
 
   /** The PQ-codes mart contract (q139's discipline): one row per vector,
     * every code present — a null/duplicate row would silently distort
@@ -2163,10 +2133,9 @@ object VectorQueries {
     * behind a lineage cut — the two codebook fits are index builds, not
     * per-read work (the pqCodes discipline).
     */
-  private val residPqCache = new graft.core.SessionCache[String]
+  private val residPqCache = new Artifact[DataFrame]("residual_pq")
   private def residualPqFrame(s: SparkSession, dir: String): DataFrame =
-    residPqCache.getOrElseUpdate(s, dir)(graft.core.Materialize.cut({
-
+    residPqCache.cut(s, dir) {
       val e = Tables(s, dir).embeddings
       val n = e.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val (_, cents) = ivfServingParts(s, dir)
@@ -2194,15 +2163,14 @@ object VectorQueries {
                 col("code_0"), col("code_1"), col("code_2"), col("code_3"),
                 col("distortion_residual"), col("distortion_raw"),
                 (col("distortion_residual") < col("distortion_raw")).as("improved"))
-    }, "residual_pq"))
+    }
 
   /** q194's drift frame, memoized per (session, dir) behind a lineage
     * cut — both fits plus both encodes run once per session.
     */
-  private val pqDriftCache = new graft.core.SessionCache[String]
+  private val pqDriftCache = new Artifact[DataFrame]("pq_drift")
   private def pqDriftFrame(s: SparkSession, dir: String): DataFrame =
-    pqDriftCache.getOrElseUpdate(s, dir)(graft.core.Materialize.cut({
-
+    pqDriftCache.cut(s, dir) {
       val e = Tables(s, dir).embeddings
       val frozen = graft.operators.Pq.fitCodebooks(
         e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
@@ -2218,15 +2186,23 @@ object VectorQueries {
                 col("distortion_frozen"), col("distortion_refit"),
                 (col("distortion_refit") < col("distortion_frozen"))
                   .as("refit_improves"))
-    }, "pq_drift"))
+    }
 
-  private val pqCodesCache = new graft.core.SessionCache[String]
+  /** The encoded corpus, memoized per (session, dir) with a lineage cut.
+    * The encode expression embeds M·k codebook centroids as literals —
+    * cheap to EXECUTE (one scan) but expensive to RE-PLAN: a consumer
+    * that joins it four times (q178's lut chain) re-analyzes the whole
+    * literal-laden subtree per join and pays seconds of optimizer/codegen
+    * time on a frame with thousands of rows. This is also the
+    * production shape — encode once, serve many.
+    */
+  private val pqCodesCache = new Artifact[DataFrame]("pq_codes")
   private def pqCodes(s: SparkSession, dir: String): DataFrame =
-    pqCodesCache.getOrElseUpdate(s, dir) {
+    pqCodesCache.cut(s, dir) {
       val enc = graft.operators.Pq.encode(Tables(s, dir).embeddings,
         "vec_id", "embedding", pqCodebooks(s, dir), PqSubDim)
       graft.model.Contract.enforce("q177_pq_codes", enc, PqCodesContract)
-      graft.core.Materialize.cut(enc, "pq_codes")
+      enc
     }
 
   /** The q177/q178 oracle head: per-subspace kmeans replays (the q97 CTE
@@ -2412,9 +2388,9 @@ object VectorQueries {
     * ONCE to a centroid_id-bucketed warehouse table; every serve call
     * (and the PlanQualitySpec probe) then reads the bucketed layout.
     */
-  private val ivfIdxCache = new graft.core.SessionCache[String]
+  private val ivfIdxCache = new Artifact[DataFrame]("q139_ivf_index")
   private def ivfIndex(s: SparkSession, dir: String): DataFrame =
-    ivfIdxCache.getOrElseUpdate(s, dir) {
+    ivfIdxCache(s, dir) {
       val n = Tables(s, dir).embeddings
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val (_, assigned) = Similarity.ivfIndexFrames(n, IvfNlist)
@@ -2428,12 +2404,12 @@ object VectorQueries {
     * exposed so PlanQualitySpec can serve a single query and assert the
     * probe scan touches ≤ nprobe of nlist buckets. Centroids are a tiny
     * driver-side Seq but cost a corpus TakeOrdered per pick — memoized
-    * per (session, dir) alongside the index (bpeFitCache discipline; a
+    * per (session, dir) alongside the index (a
     * racing double-pick is idempotent, the pick is a pure function of
     * the corpus).
     */
   private val ivfCentCache =
-    new graft.core.SessionMemo[String, Seq[(Long, Array[Double], Double)]]
+    new Artifact[Seq[(Long, Array[Double], Double)]]("q139_ivf_centroids")
   /** The memoized q139 serving pair — bucketed index frame + frozen
     * centroids — exposed for the streaming serving leg, which must score
     * against EXACTLY the session's persisted index to gate parity.
@@ -2441,7 +2417,7 @@ object VectorQueries {
   def ivfServingParts(s: SparkSession, dir: String)
       : (DataFrame, Seq[(Long, Array[Double], Double)]) = {
     val e = Tables(s, dir).embeddings
-    val cents = ivfCentCache.getOrElseUpdate(s, dir)(
+    val cents = ivfCentCache(s, dir)(
       Similarity.ivfCentroids(
         e.select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
         IvfNlist))
@@ -2465,17 +2441,17 @@ object VectorQueries {
     * the delta (odd vec_ids) is assigned with those centroids and
     * APPENDED — the base files are never touched again.
     */
-  private val ivfIncCache = new graft.core.SessionCache[String]
+  private val ivfIncCache = new Artifact[DataFrame]("q141_ivf_index")
   private val ivfIncCentCache =
-    new graft.core.SessionMemo[String, Seq[(Long, Array[Double], Double)]]
+    new Artifact[Seq[(Long, Array[Double], Double)]]("q141_ivf_centroids")
   private def ivfIncCents(s: SparkSession, dir: String): Seq[(Long, Array[Double], Double)] =
-    ivfIncCentCache.getOrElseUpdate(s, dir)(
+    ivfIncCentCache(s, dir)(
       Similarity.ivfCentroids(
         Tables(s, dir).embeddings.filter(col("vec_id") % 2 === 0)
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v")),
         IvfNlist))
   private def ivfIncIndex(s: SparkSession, dir: String): DataFrame =
-    ivfIncCache.getOrElseUpdate(s, dir) {
+    ivfIncCache(s, dir) {
       val e = Tables(s, dir).embeddings
       def proj(pred: org.apache.spark.sql.Column) = e.filter(pred)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -2498,10 +2474,9 @@ object VectorQueries {
   /** q197's drift readout, memoized per (session, dir) and cut (the
     * q194 discipline). See the defs-map comment for semantics.
     */
-  private val ivfDriftCache = new graft.core.SessionCache[String]
+  private val ivfDriftCache = new Artifact[DataFrame]("ivf_drift")
   private def ivfDriftFrame(s: SparkSession, dir: String): DataFrame =
-    ivfDriftCache.getOrElseUpdate(s, dir)(
-      graft.core.Materialize.cut(ivfDriftPlan(s, dir), "ivf_drift"))
+    ivfDriftCache.cut(s, dir)(ivfDriftPlan(s, dir))
 
   /** The LAZY q197 readout plan (no memo, no cut) — exposed so
     * PlanQualitySpec can assert the per-centroid aggregate rides the
@@ -2562,9 +2537,9 @@ object VectorQueries {
     * lands on exactly the centroids a one-shot full-corpus build picks.
     */
   private val ivfRebCentCache =
-    new graft.core.SessionMemo[String, Seq[(Long, Array[Double], Double)]]
+    new Artifact[Seq[(Long, Array[Double], Double)]]("q146_ivf_centroids")
   private def ivfRebCents(s: SparkSession, dir: String): Seq[(Long, Array[Double], Double)] =
-    ivfRebCentCache.getOrElseUpdate(s, dir)(
+    ivfRebCentCache(s, dir)(
       Similarity.ivfCentroids(
         ivfIncIndex(s, dir).select(col("vec_id"), col("v")), IvfNlist))
 
@@ -2578,9 +2553,9 @@ object VectorQueries {
     * clean per-bucket layout. Cost: one index scan + one bucketed write;
     * the raw corpus is never re-read.
     */
-  private val ivfRebCache = new graft.core.SessionCache[String]
+  private val ivfRebCache = new Artifact[DataFrame]("q146_ivf_index")
   private def ivfRebIndex(s: SparkSession, dir: String): DataFrame =
-    ivfRebCache.getOrElseUpdate(s, dir) {
+    ivfRebCache(s, dir) {
       val assigned = Similarity.ivfAssignWith(
         ivfIncIndex(s, dir).select(col("vec_id"), col("v")),
         ivfRebCents(s, dir))

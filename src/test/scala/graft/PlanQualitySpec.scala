@@ -43,9 +43,9 @@ class PlanQualitySpec extends SparkSpec {
   test("small dimension joins broadcast (no shuffle of the fact side)") {
     val df = SparkEntry.queries("q04_annual_metrics")(spark, dir)
     assert(planOf(df).contains("BroadcastHashJoin"))
-    // q54's shipped frame is the memoized lineage-cut mart (r19); the
-    // dim-join broadcast property is asserted on the LAZY build plan,
-    // which is what the memo materializes
+    // q54's shipped frame is the memoized lineage-cut mart; fctPlan is
+    // the very plan that memo cuts, so the dim-join broadcast is
+    // asserted on the plan that ships
     val fct = graft.queries.PipelineQueries.fctPlan(spark, dir)
     assert(planOf(fct).contains("BroadcastHashJoin"))
     // q74's star join: all three dims broadcast, and the only exchange of
@@ -1636,16 +1636,17 @@ class PlanQualitySpec extends SparkSpec {
 
   test("q272 beam-width sweep reuses the session-cached graph across legs") {
     // The three serve legs must read the SAME cached NN-descent edge
-    // list (no per-leg rebuild): asserted DIRECTLY on the cache — after
-    // planning the sweep, the full-corpus edge cache holds exactly ONE
-    // entry for this dir (a per-leg rebuild would need per-leg keys, and
-    // three builds behind one key would still be caught by the Memo's
-    // once-only lazy build). Plan-shape gates stay as a backstop.
+    // list (no per-leg rebuild): asserted DIRECTLY on the artifact store —
+    // after planning the sweep, the full-corpus edge artifact holds
+    // exactly ONE entry for this dir (a per-leg rebuild would need per-leg
+    // keys, and three builds behind one key would still be caught by the
+    // artifact's once-only lazy build). Plan-shape gates stay as a
+    // backstop.
     val p = planOf(SparkEntry.queries("q272_beam_width_sweep")(spark, dir))
     assert(!p.contains("Window"), s"q272 windows:\n$p")
     assert(!p.contains("CartesianProduct"), s"q272 cartesian:\n$p")
-    val edgeKeys = graft.queries.VectorQueries.nndEdgeCacheKeys(spark)
-      .filter(k => k.startsWith(dir) && !k.endsWith("|base"))
+    val edgeKeys = graft.core.Artifact.built(spark)
+      .collect { case ("nnd_edges", k) if k.startsWith(dir) && !k.endsWith("|base") => k }
     assert(edgeKeys == Set(dir),
       s"q272 expected one full-corpus NN-descent build entry [$dir], got $edgeKeys")
   }
@@ -1676,7 +1677,7 @@ class PlanQualitySpec extends SparkSpec {
   test("durable mode: a NEW session serves q268 from the persisted graph, no rebuild") {
     // The production index lifecycle (round-16 verdict #6): in durable
     // materialization mode the finished NN-descent edge list is published
-    // as a cross-session warehouse index. Session 2 (fresh SessionCache,
+    // as a cross-session warehouse index. Session 2 (fresh artifact entries,
     // fresh session-scoped table namespace) must serve q268 by SCANNING
     // that index — asserted by (a) identical results, (b) the serve plan
     // reading the graft_nnd_edges_* parquet, and (c) the build-only

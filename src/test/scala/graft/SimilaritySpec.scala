@@ -258,7 +258,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("shared ball-cover memo: one fit, bit-identical outputs (q38/q274/q280 discipline)") {
-    // the round-18 fit memo: consumers passing the same cacheKey share
+    // the ball-cover artifact: consumers passing the same cacheKey share
     // ONE (session, corpus, k, iters) Lloyd fit + assignment cut; the
     // fit is deterministic, so shared-vs-fresh covers must be
     // bit-identical — asserted against cacheKey = None runs of BOTH
@@ -270,13 +270,15 @@ class SimilaritySpec extends SparkSpec {
       (i.toLong, Array.tabulate(8)(j => (-1.0 - 0.05 * math.cos(i * 8 + j)).toFloat))
     }).toDF("vec_id", "embedding")
     val key = "similarity-spec-shared-cover"
-    assert(!Similarity.fittedCoverFor(spark, key + "!absent", k = 4, iters = 2),
+    def fittedCoverFor(cacheKey: String): Boolean =
+      graft.core.Artifact.built(spark).contains(("ball_cover", s"$cacheKey|k=4|iters=2"))
+    assert(!fittedCoverFor(key + "!absent"),
       "probe must report a miss for a never-fitted key")
     val pairsShared = Similarity.exactNearDupBlocked(
       vecs, "vec_id", "embedding", minCosine = 0.4, k = 4, iters = 2,
       cacheKey = Some(key))
     pairsShared.count() // force the fit through the memo
-    assert(Similarity.fittedCoverFor(spark, key, k = 4, iters = 2),
+    assert(fittedCoverFor(key),
       "first consumer must have populated the cover memo")
     val topShared = Similarity.nearDupTopK(
       vecs, "vec_id", "embedding", minCosine = 0.4, kNeighbors = 3,
