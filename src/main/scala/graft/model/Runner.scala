@@ -2,11 +2,12 @@ package graft.model
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
+import java.util.concurrent.{Executors, LinkedBlockingQueue}
 
 import graft.functions.Macros
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 
 /** DAG runner: topologically orders registered models over their `deps`
   * edges and applies each model's materializer (the Spark equivalent of
@@ -31,22 +32,18 @@ final class Runner(
     if (env == "prod") customSchema.trim else s"${env}_${customSchema.trim}"
 
   // name → warehouse subdirectory, recorded at materialization so
-  // readTable resolves custom-schema models after a run.
-  private val schemaDirs = scala.collection.mutable.Map.empty[String, String]
+  // readTable resolves custom-schema models after a run. Concurrent: run()
+  // materializes independent models on several threads, and path() fills
+  // it in lazily from any of them.
+  private val schemaDirs = scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** `log_row_count` port (`macros/data_quality.sql:49-63`): one line per
-    * table-backed model, also collected for inspection/alerting.
+    * table-backed model, in topo order, also collected for
+    * inspection/alerting.
     */
   val auditLog = scala.collection.mutable.ArrayBuffer.empty[String]
-  private def logRowCount(name: String, df: DataFrame): Unit = {
-    // count(*) on a bare parquet scan IS a Spark job, but not a data scan:
-    // the pruned read schema is empty (struct<>), so the vectorized reader
-    // emits counted empty batches from row-group metadata without decoding
-    // any pages — per-file footer cost, not per-row (RunnerSpec asserts
-    // the empty ReadSchema). Collapsing it to a driver-only footer read
-    // needs DSv2 parquet + aggregatePushdown, which would drop v1
-    // bucketing — not worth it for an audit line.
-    val line = s"Row count for $name: ${df.count()}"
+  private def logRowCount(name: String, rows: Long): Unit = {
+    val line = s"Row count for $name: $rows"
     auditLog += line
     // scalastyle:off println
     println(s"[graft] $line")
@@ -221,41 +218,98 @@ final class Runner(
     expired
   }
 
-  private def writeVersioned(name: String, df: DataFrame): Unit = {
+  /** Writes a new version of the table and returns its row count. */
+  private def writeVersioned(name: String, df: DataFrame): Long = {
     // zero-padded to 19 digits (Long.MaxValue width) so the ids also
     // read correctly in a plain directory listing
     val version = f"v_${System.nanoTime()}%019d"
-    df.write.mode("overwrite").parquet(s"${path(name)}/$version")
+    val rows = countedWrite(df)(_.write.mode("overwrite").parquet(s"${path(name)}/$version"))
     val tmp = Paths.get(path(name), "_VERSION.tmp")
     Files.createDirectories(Paths.get(path(name)))
     Files.writeString(tmp, version)
     Files.move(tmp, Paths.get(path(name), "_VERSION"),
       StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    rows
+  }
+
+  /** Runs `write` over `df` and returns the number of rows it wrote,
+    * counted by an observation on the write's own job rather than by a
+    * second job over the written files.
+    */
+  private def countedWrite(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val rows = Observation()
+    write(df.observe(rows, count(lit(1)).as("rows")))
+    rows.get("rows").asInstanceOf[Long]
   }
 
   /** Run the DAG over the given source tables; returns every model's
     * resolved DataFrame (views stay lazy, tables/incrementals/snapshots
     * read back their materialized output).
+    *
+    * Scheduling follows dbt's `threads`: a model starts as soon as all its
+    * `deps` are resolved, with at most `defaultParallelism` models in
+    * flight, earliest in topo order first. The worker threads are created
+    * per run from the calling thread, so every job a model launches
+    * carries the caller's job-local properties (job group, description,
+    * custom properties). A failing model's dependents never start; models
+    * independent of it still run. Once every started model has finished,
+    * the exception of the earliest failing model in topo order is rethrown
+    * unchanged. Audit lines are logged in topo order.
     */
   def run(models: Seq[Model], sources: Map[String, DataFrame]): Map[String, DataFrame] = {
-    val resolved = scala.collection.mutable.Map[String, DataFrame](sources.toSeq: _*)
-    topoOrder(models).foreach { m =>
-      val missing = m.deps.filterNot(resolved.contains)
+    val order = topoOrder(models)
+    val known = sources.keySet ++ order.map(_.name)
+    order.foreach { m =>
+      val missing = m.deps.filterNot(known.contains)
       require(missing.isEmpty, s"model ${m.name}: unresolved deps $missing")
-      m.customSchema.foreach { cs =>
-        val schema = schemaName(cs)
-        schemaDirs += m.name -> schema
-        // env stamp: lets fresh Runners resolve this schema dir later
-        // without ever crossing env boundaries (see path())
-        val dir = Paths.get(warehouseDir, schema)
-        Files.createDirectories(dir)
-        Files.writeString(dir.resolve("_ENV"), env)
-      }
-      val df  = m.transform(resolved.toMap)
-      val out = materialize(m, df)
-      if (m.materialization != Materialization.View) logRowCount(m.name, out)
-      resolved += m.name -> out
     }
+    val resolved = scala.collection.mutable.Map[String, DataFrame](sources.toSeq: _*)
+    val rowCounts = scala.collection.mutable.Map.empty[String, Long]
+    val failures = scala.collection.mutable.Map.empty[String, Throwable]
+    val waiting = scala.collection.mutable.ArrayBuffer(order: _*)
+    val finished = new LinkedBlockingQueue[(Model, Either[Throwable, (DataFrame, Option[Long])])]()
+    val width = math.max(1, spark.sparkContext.defaultParallelism)
+    // The pool creates its threads inside execute(), which only this
+    // thread calls: each inherits this thread's Spark local properties.
+    val pool = Executors.newFixedThreadPool(width)
+    var inFlight = 0
+    def launchReady(): Unit =
+      waiting.filter(_.deps.forall(resolved.contains)).take(width - inFlight).foreach { m =>
+        waiting -= m
+        m.customSchema.foreach { cs =>
+          val schema = schemaName(cs)
+          schemaDirs += m.name -> schema
+          // env stamp: lets fresh Runners resolve this schema dir later
+          // without ever crossing env boundaries (see path())
+          val dir = Paths.get(warehouseDir, schema)
+          Files.createDirectories(dir)
+          Files.writeString(dir.resolve("_ENV"), env)
+        }
+        val deps = resolved.toMap
+        inFlight += 1
+        pool.execute { () =>
+          val out =
+            try Right(materialize(m, m.transform(deps)))
+            catch { case t: Throwable => Left(t) }
+          finished.put(m -> out)
+        }
+      }
+    try {
+      launchReady()
+      while (inFlight > 0) {
+        val (m, out) = finished.take()
+        inFlight -= 1
+        out match {
+          case Right((df, rows)) =>
+            resolved += m.name -> df
+            rows.foreach(rowCounts += m.name -> _)
+          case Left(t) => failures += m.name -> t
+        }
+        launchReady()
+      }
+    } finally pool.shutdown()
+    order.foreach(m => rowCounts.get(m.name).foreach(logRowCount(m.name, _)))
+    order.flatMap(m => failures.get(m.name)).headOption.foreach(t => throw t)
     resolved.toMap
   }
 
@@ -282,15 +336,19 @@ final class Runner(
     order.toSeq
   }
 
-  private def materialize(m: Model, df: DataFrame): DataFrame = m.materialization match {
+  /** Applies the model's materializer to its transformed frame; returns
+    * the resolved frame and, for table-backed models, the row count of
+    * the materialized table.
+    */
+  private def materialize(m: Model, df: DataFrame): (DataFrame, Option[Long]) = m.materialization match {
     case Materialization.View =>
       m.contract.foreach(enforce(m.name, df, _))
-      df
+      (df, None)
 
     case Materialization.Table =>
       m.contract.foreach(enforce(m.name, df, _))
-      writeVersioned(m.name, df)
-      readTable(m.name)
+      val rows = writeVersioned(m.name, df)
+      (readTable(m.name), Some(rows))
 
     case Materialization.Incremental(uniqueKey, watermarkCol, onSchemaChange) =>
       m.contract.foreach(enforce(m.name, df, _))
@@ -298,11 +356,12 @@ final class Runner(
         Files.createDirectories(Paths.get(path(m.name)))
         Files.writeString(Paths.get(path(m.name), "_WIDENING"), "append_new_columns")
       }
-      if (!exists(m.name)) {
+      val rows = if (!exists(m.name)) {
         writeVersioned(m.name, latestPerKey(df, uniqueKey, watermarkCol))
       } else {
         val existing = readTable(m.name)
-        val wm = existing.agg(max(col(watermarkCol))).head.get(0)
+        val stats = existing.agg(max(col(watermarkCol)), count(lit(1))).head
+        val wm = stats.get(0)
         val fresh0 = if (wm == null) df else df.filter(col(watermarkCol) > lit(wm))
         val fresh  = latestPerKey(fresh0, uniqueKey, watermarkCol)
         val toInsert0 = fresh.join(
@@ -318,14 +377,16 @@ final class Runner(
             toInsert0
         }
         // Append into the CURRENT version dir: cheap micro-batch append;
-        // the versioned rewrite path is reserved for snapshot merges.
-        toInsert.write.mode("append").parquet(currentPath(m.name))
+        // the versioned rewrite path is reserved for snapshot merges. The
+        // anti-join keeps keys unique, so the table grows by what is written.
+        stats.getLong(1) +
+          countedWrite(toInsert)(_.write.mode("append").parquet(currentPath(m.name)))
       }
-      readTable(m.name)
+      (readTable(m.name), Some(rows))
 
     case Materialization.Snapshot(key, checkCols) =>
       val source = df
-      if (!exists(m.name)) {
+      val rows = if (!exists(m.name)) {
         writeVersioned(m.name, snapshotCols(source, key))
       } else {
         val snap    = readTable(m.name).localCheckpoint(true)
@@ -352,7 +413,7 @@ final class Runner(
           .unionByName(snapshotCols(inserts, key))
         writeVersioned(m.name, merged)
       }
-      readTable(m.name)
+      (readTable(m.name), Some(rows))
   }
 
   /** In-batch upsert rule for incremental models (shared with the

@@ -1,14 +1,21 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import graft.model._
+import org.apache.spark.graftbus.Listeners
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** DAG runner + materializer semantics: topo order, incremental
-  * high-watermark upsert, SCD2 snapshot merge, contract enforcement.
+/** DAG runner + materializer semantics: topo order, concurrent scheduling,
+  * incremental high-watermark upsert, SCD2 snapshot merge, contract
+  * enforcement.
   */
 class RunnerSpec extends SparkSpec {
   import spark.implicits._
@@ -16,6 +23,21 @@ class RunnerSpec extends SparkSpec {
   private def tmpDir() = Files.createTempDirectory("graft-runner").toString
   private val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
   private val t1 = Timestamp.valueOf("2024-02-01 00:00:00")
+
+  /** Blocks a model's transform until `latch` opens, failing the model if
+    * it stays shut for 30 s (a serial runner never opens it).
+    */
+  private def await(latch: CountDownLatch, what: String): Unit =
+    if (!latch.await(30, TimeUnit.SECONDS))
+      throw new IllegalStateException(s"timed out waiting for $what")
+
+  /** A transform for `n` sibling models that only returns once all `n`
+    * are inside it at the same time.
+    */
+  private def meeting(n: Int): DataFrame => DataFrame = {
+    val arrived = new CountDownLatch(n)
+    df => { arrived.countDown(); await(arrived, s"$n siblings to overlap"); df }
+  }
 
   test("topoOrder resolves dependencies; cycles are rejected") {
     val r = new Runner(spark, tmpDir(), t0, "run0")
@@ -216,12 +238,35 @@ class RunnerSpec extends SparkSpec {
       Model("v1", Seq("t1"))(d => d("t1"))), // view → not logged
       Map("src" -> Seq(("a", 1.0), ("b", 2.0)).toDF("k", "v")))
     assert(r.auditLog.toSeq == Seq("Row count for t1: 2"))
+
+    // The count comes from the write itself; it must equal a read-back
+    // count for every table-backed materializer: first writes, an
+    // incremental append and a snapshot merge, then an append of nothing.
+    val wh = tmpDir()
+    def runAll(rows: Seq[(String, String, Double)], asOf: Timestamp, runId: String): Unit = {
+      val src = rows.toDF("k", "d", "v").withColumn("d", col("d").cast(DateType))
+      val r = new Runner(spark, wh, asOf, runId)
+      val names = Seq("inc", "snap", "tab")
+      r.run(Seq(
+        Model("inc", Seq("src"), Materialization.Incremental("k", "d"))(d => d("src")),
+        Model("snap", Seq("src"), Materialization.Snapshot("k", Seq("v")))(d => d("src")),
+        Model("tab", Seq("src"), Materialization.Table)(d => d("src"))),
+        Map("src" -> src))
+      assert(r.auditLog.toSeq ==
+        names.map(n => s"Row count for $n: ${r.readTable(n).count()}"), runId)
+    }
+    runAll(Seq(("a", "2024-01-01", 1.0), ("b", "2024-01-02", 2.0)), t0, "c1")
+    val second = Seq(("a", "2024-01-01", 1.5), ("b", "2024-01-02", 2.0), ("c", "2024-01-03", 3.0))
+    runAll(second, t1, "c2")
+    runAll(second, Timestamp.valueOf("2024-03-01 00:00:00"), "c3")
   }
 
   test("audit count(*) decodes no columns: the scan's pruned ReadSchema is empty") {
-    // logRowCount's documented cost model: count(*) over a parquet-backed
-    // model launches a job but reads only row-group metadata — which is
-    // visible in the plan as an empty pruned read schema (struct<>).
+    // The audit line counts rows as they are written, with no extra job.
+    // Re-counting a model afterwards (`readTable(name).count()`, as the
+    // log_row_count spec does) launches a job but reads only row-group
+    // metadata — visible in the plan as an empty pruned read schema
+    // (struct<>).
     val r = new Runner(spark, tmpDir(), t0, "lp")
     r.run(Seq(Model("t2", Seq("src"), Materialization.Table)(d => d("src"))),
       Map("src" -> Seq(("a", 1.0), ("b", 2.0)).toDF("k", "v")))
@@ -230,6 +275,105 @@ class RunnerSpec extends SparkSpec {
     val plan = counted.queryExecution.executedPlan.toString
     assert(plan.contains("ReadSchema: struct<>"),
       s"audit count decodes column data:\n$plan")
+  }
+
+  test("independent models run concurrently, up to defaultParallelism at a time") {
+    assert(spark.sparkContext.defaultParallelism >= 3)
+    val meet = meeting(3)
+    val r = new Runner(spark, tmpDir(), t0, "par")
+    val out = r.run(
+      Seq("left", "middle", "right").map(n =>
+        Model(n, Seq("src"), Materialization.Table)(d => meet(d("src")))),
+      Map("src" -> Seq(("a", 1.0)).toDF("k", "v")))
+    assert(Seq("left", "middle", "right").forall(out(_).count() == 1))
+  }
+
+  test("every job of a concurrent run carries the caller's job group and local properties") {
+    val sc = spark.sparkContext
+    val seen = new ConcurrentLinkedQueue[(String, String, String)]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = Option(e.properties)
+        def prop(k: String) = p.flatMap(x => Option(x.getProperty(k))).getOrElse("<none>")
+        seen.add((prop("spark.jobGroup.id"), prop("graft.spec.tag"), e.stageInfos.map(_.name).mkString))
+      }
+    }
+    // Two runs with different tags: the second run's jobs must carry the
+    // second tag, so worker threads may not outlive the run that made them.
+    def runTagged(tag: String): Seq[(String, String, String)] = {
+      Listeners.drain(sc)
+      seen.clear()
+      sc.setJobGroup(s"group-$tag", "runner spec")
+      sc.setLocalProperty("graft.spec.tag", tag)
+      try {
+        val meet = meeting(2)
+        new Runner(spark, tmpDir(), t0, s"props-$tag").run(Seq(
+          Model("left", Seq("src"), Materialization.Table)(d => meet(d("src"))),
+          Model("right", Seq("src"), Materialization.Incremental("k", "d"))(d => meet(d("src"))),
+          Model("after", Seq("left", "right"), Materialization.Table)(d =>
+            d("left").unionByName(d("right")).groupBy("k").agg(max("v").as("v")))),
+          Map("src" -> Seq(("a", "2024-01-01", 1.0)).toDF("k", "d", "v")
+            .withColumn("d", col("d").cast(DateType))))
+      } finally {
+        sc.clearJobGroup()
+        sc.setLocalProperty("graft.spec.tag", null)
+      }
+      Listeners.drain(sc)
+      seen.asScala.toSeq
+    }
+    sc.addSparkListener(listener)
+    try {
+      Seq("one", "two").foreach { tag =>
+        val jobs = runTagged(tag)
+        assert(jobs.nonEmpty)
+        val stray = jobs.filterNot { case (g, t, _) => g == s"group-$tag" && t == tag }
+        assert(stray.isEmpty, s"jobs without the caller's properties: $stray")
+      }
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a failing model rethrows its own exception; dependents never start, independent models commit") {
+    val wh = tmpDir()
+    val r = new Runner(spark, wh, t0, "fail")
+    val wrong = Contract(StructType(Seq(StructField("k", IntegerType))))
+    val childStarted = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val e = intercept[ContractViolation] {
+      r.run(Seq(
+        Model("a_bad", Seq("src"), Materialization.Table, Some(wrong))(d => d("src")),
+        Model("b_child", Seq("a_bad"), Materialization.Table)(d => {
+          childStarted.set(true); d("a_bad")
+        }),
+        Model("c_sibling", Seq("src"), Materialization.Table)(d => d("src")),
+        // fails too, but later in topo order: its exception is not the one rethrown
+        Model("d_bad", Seq("src"), Materialization.Table)(_ =>
+          throw new IllegalStateException("d_bad"))),
+        Map("src" -> Seq(("a", 1.0)).toDF("k", "v")))
+    }
+    assert(e.model == "a_bad")
+    assert(!childStarted.get)
+    assert(!Files.exists(Paths.get(wh, "b_child")))
+    val check = new Runner(spark, wh, t0, "check")
+    assert(check.exists("c_sibling"))
+    assert(check.readTable("c_sibling").count() == 1)
+    assert(r.auditLog.toSeq == Seq("Row count for c_sibling: 1"))
+  }
+
+  test("auditLog comes out in topo order whatever order the models finish in") {
+    // a_slow is first in topo order but finishes last: it waits until
+    // c_after, which starts only once b_fast is committed, is running.
+    val cStarted = new CountDownLatch(1)
+    val r = new Runner(spark, tmpDir(), t0, "order")
+    r.run(Seq(
+      Model("a_slow", Seq("src"), Materialization.Table)(d => {
+        await(cStarted, "c_after to start"); d("src").limit(1)
+      }),
+      Model("b_fast", Seq("src"), Materialization.Table)(d => d("src")),
+      Model("c_after", Seq("b_fast"), Materialization.Table)(d => {
+        cStarted.countDown(); d("b_fast").limit(2)
+      })),
+      Map("src" -> Seq(("a", 1.0), ("b", 2.0), ("c", 3.0)).toDF("k", "v")))
+    assert(r.auditLog.toSeq == Seq(
+      "Row count for a_slow: 1", "Row count for b_fast: 3", "Row count for c_after: 2"))
   }
 
   test("generate_schema_name routes non-prod targets to env-prefixed schemas") {

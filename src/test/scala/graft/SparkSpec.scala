@@ -4,16 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base for all suites (one session per JVM — suites reuse
-  * the same local[4] session via getOrCreate).
+  * the same local[4] session, built by the engine's own factory, via
+  * getOrCreate).
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.core.Sessions.local(4)
     // StreamingJoinHelper computes stream-stream state-eviction bounds
     // by symbolically solving the join condition; on conditions mixing
     // time bounds with non-time predicates (minhashCandidateStream's

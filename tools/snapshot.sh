@@ -26,6 +26,10 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 SF=${1:-/root/testdata/sf0.1}
 
+# 0. Guard: the tree must compile and pass the plan-quality pins before
+#    anything is regenerated or committed (set -e stops on failure).
+sbt -batch Test/compile "testOnly graft.PlanQualitySpec"
+
 # 1. PLANS.md — dump-set policy: every SparkEntry.queries entry (PlanDump
 #    derives the list, so a new query can't be missed the way q263 was).
 sbt -batch "runMain graft.PlanDump /root/testdata/sf0.001 PLANS.md"
