@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -12,13 +11,7 @@ object Bench {
     // load spike (round 7: both back-to-back samples of q113 landed inside
     // one spike). Overridable for fast local iteration.
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.Sessions.local(cpus.toInt)
     // Warm the session (codegen, parquet footer reads, shuffle machinery)
     // so the first measured query doesn't absorb ~4s of one-time cost.
     spark.range(1000).selectExpr("sum(id)").collect()

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `PLANS.md`: the formatted physical plan of each gated query —
   * reviewable evidence that pushdown/pruning/broadcast/partial-agg shapes
   * hold (the machine-checked versions live in PlanQualitySpec).
@@ -25,13 +23,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out   = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = core.Sessions.local(4)
     val names = SparkEntry.queries.keys.toSeq.sortBy(n => (qid(n), n))
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of every gated query\n\n")

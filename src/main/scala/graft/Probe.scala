@@ -10,14 +10,21 @@ import org.apache.spark.sql.functions._
   * Usage (via sbt):
   *   runMain graft.Probe time <sfDir> <q1,q2,...|all> [reps]
   *     — per-query wall time over `reps` runs (default 2) in ONE warm JVM;
-  *       prints every rep so noise is visible, plus the best.
+  *       prints every rep so noise is visible, plus the best. The
+  *       Eurostat DAG's marts time as `time <sfDir> q50_…,q59_…`.
   *   runMain graft.Probe plan <sfDir> <query>
   *     — executed physical plan of a SparkEntry query (first 8 KB).
+  *   runMain graft.Probe fmt <sfDir> <q1,q2,...> [outDir suffix]
+  *     — `explain("formatted")` text per query, printed or written to
+  *       <outDir>/<query>_<suffix>.txt.
+  *   runMain graft.Probe shuffles <sfDir> <query>
+  *     — bytes and rows each executed shuffle exchange moved.
   *   runMain graft.Probe q67 <sfDir>
   *     — stage split of q67 dup clusters: pair mining vs the label-
   *       propagation loop (the PERF.md "loop measured 1.8 s" claim).
-  *   runMain graft.Probe pipeline <sfDir>
-  *     — staged timing of the staging→intermediate→mart→analytics DAG.
+  *   runMain graft.Probe bpe <sfDir> [nEq] [nBig]
+  *     — `Bpe.fit` ≡ `fitDelta` at `nEq` merges, then `fitDelta` alone
+  *       at `nBig`.
   */
 object Probe {
 
@@ -28,7 +35,7 @@ object Probe {
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "subcommand required: time | plan | q67 | pipeline")
+    require(args.nonEmpty, "subcommand required: time | plan | fmt | shuffles | q67 | bpe")
     val spark = core.Sessions.local(32, s"probe-${args(0)}")
     spark.range(1000).selectExpr("sum(id)").collect() // JVM/codegen warmup
     args(0) match {
@@ -132,26 +139,6 @@ object Probe {
         val big = time(s"bpe.fitDelta($nBig)") {
           graft.operators.Bpe.fitDelta(d, "text", nBig) }
         println(s"PROBE bpe.fitDelta($nBig).merges = ${big.length}")
-      case "pipeline" =>
-        import graft.models._
-        val t = Tables(spark, args(1))
-        time("raw_unemployment")(TestdataRaw.rawUnemployment(t).count())
-        val su = Staging.unemployment(TestdataRaw.rawUnemployment(t)).cache()
-        val si = Staging.inflation(TestdataRaw.rawInflation(t)).cache()
-        val sg = Staging.gdp(TestdataRaw.rawGdp(t)).cache()
-        val sp = Staging.population(TestdataRaw.rawPopulation(t)).cache()
-        time("stg cache warm")(su.count() + si.count() + sg.count() + sp.count())
-        val ia = Intermediate.annualMetrics(sg, sp, su, si)
-        time("int_annual")(ia.count())
-        val im = Intermediate.monthlyIndicators(su, si, ia)
-        time("int_monthly")(im.count())
-        val asOf = java.sql.Timestamp.valueOf("2002-01-01 00:00:00")
-        val dm = Marts.dimCountry(TestdataRaw.seedCountryMetadata(t), sg, asOf)
-        val f  = Marts.fctEconomicIndicators(im, dm, asOf, "x")
-        time("fct")(f.count())
-        time("fct again")(f.count())
-        time("forecast")(graft.analytics.Forecast.forecast(f, asOf).count())
-        time("anomaly")(graft.analytics.Anomaly.detect(f).count())
       case other => sys.error(s"unknown subcommand: $other")
     }
     spark.stop()

@@ -38,67 +38,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * REHEARSAL, not a correctness gate: no oracle runs here (the synthetic
   * corpus has no DuckDB twin); correctness is the 191-row sf0.01 gate.
   *
-  * Usage: runMain graft.ScaleRehearsal [srcDir] [outDir] [copies]
-  * Emits one JSON line (and BENCH_SF1.json if cwd is writable):
-  * per-query cold seconds, a warm second pass for the serve-path
-  * queries, and output row counts.
+  * Usage: runMain graft.ScaleRehearsal <mode> [srcDir] ...
+  *   full       every query cold + warm at 10 copies → BENCH_SF1.json
+  *   exponents  the top-cost tier at 10 and 30 copies → BENCH_SF3.json
+  *   lsh100x    the MinHash dedup chain at 100 copies → BENCH_LSH100X.json
+  *   heavy100x  NN-descent build + covariance at 100 copies → BENCH_HEAVY100X.json
+  *   clustered  ball-cover pruning by corpus geometry → BENCH_CLUSTERED.json
   */
 object ScaleRehearsal {
 
   private val Shift = 10000000L
-
-  /** Queries rehearsed: the verdict's headline families. */
-  private val Headline = Seq(
-    "q36_minhash_lsh",          // LSH band mining
-    "q145_lsh_index_incremental", // persisted band index + delta probe
-    "q38_embedding_neardup",    // ball-cover exact near-dup
-    "q62_token_shards",         // bucketed prefix-sum sharding
-    "q190_training_order",      // scattered-copy global order
-    "q123_triangle_count",      // degree-oriented wedges
-    "q144_bpe_fit_delta",       // 256-merge delta-maintained fit
-    "q161_curation_v2",         // DSIR → dedup → quota composition
-    "q195_source_cap",          // bounded-heap anti-flooding cap
-    "q197_ivf_list_drift",      // index-health monitor over q141's index
-    "q198_source_cap_incremental", // persisted cap state + delta merge
-    "q200_boilerplate_scrub",      // DF scrub: explode + DF agg + rebuild
-    "q204_boilerplate_incremental", // persisted DF index + delta merge
-    "q205_scrub_then_dedup",       // scrub → clean-hash dedup composition
-    "q206_winnow_overlap",         // DF-capped fingerprint postings join
-    "q201_ks_drift",               // binned two-sample KS (bounded windows)
-    "q203_repeat_spacing",         // 3-epoch manifest per-doc gap audit
-    // round-12 verdict ask #4: the two most expensive SERVING queries —
-    // the flagship curation compositions most likely to hit a
-    // composition cliff at scale — were missing from the rehearsal
-    "q196_capped_curation",        // cap-restricted curationV2 chain
-    "q209_scrubbed_curation",      // scrub-survivor-restricted curationV2
-    "q210_bpe_fit_batched",        // 16×16 batched fit (round-13 sibling)
-    "q213_snm_simhash",            // sorted-neighborhood simhash screen
-    "q215_snm_incremental",        // persisted SNM index + halo probe
-    // round-13 second wave
-    "q216_multiprobe_lsh",         // hamming-1 probe union, exploded equi-join
-    "q218_zorder_layout",          // Morton grid + per-file skipping stats
-    "q219_dup_cluster_spectrum",   // Hill plot over cluster size order stats
-    "q220_zorder_incremental",     // persisted stats + frozen-grid delta merge
-    "q222_source_quantile_norm",   // per-source lattice quantile calibration
-    // round-13 third wave
-    "q225_cdc_chunk_dedup",        // content-defined chunking, native rolling pass
-    "q227_cdc_incremental",        // persisted CDC index + delta probe
-    "q224_leakage_safe_split",     // cluster-keyed split over shared CC pairs
-    // round-13 fourth wave
-    "q233_entropy_rate",           // projection-only CharGramHistogram fold
-    "q235_shuffle_skew_plan",      // 3×P lattice bucket histogram audit
-    "q234_resume_manifest",        // interval cut over the q191 prefix sums
-    "q237_dedup_roi",              // per-cluster bytes agg + bounded heap
-    // round-14 verdict ask #3: the heaviest new composition (26.1 s cold
-    // in BENCH_FULL at sf0.1) and a q231-family Good–Turing richness
-    // representative
-    "q223_calibrated_curation",    // quantile-normalized curationV2 chain
-    "q231_chao1_unseen",           // singleton/doubleton Chao1 over q67 clusters
-    // round-14 additions: the heaviest new operator (4 endpoint-seeded
-    // CC runs over the shared mined pairs) and the banding tuner's
-    // 4-config candidate generation
-    "q247_threshold_sweep",        // per-threshold CC + byte rollups
-    "q244_lsh_band_tuning")        // 4 banded self-joins, one sig pass
 
   private def copyTable(spark: SparkSession, src: String, out: String,
                         name: String): Unit =
@@ -114,6 +63,9 @@ object ScaleRehearsal {
   def build(spark: SparkSession, src: String, out: String, copies: Int): Unit = {
     val done = new java.io.File(s"$out/_REHEARSAL_READY")
     if (done.exists) return
+    val dim = spark.read.parquet(s"$src/embeddings.parquet")
+      .select(size(col("embedding"))).first().getInt(0)
+    require(dim == 64, s"embedding dim changed ($dim != 64): fix the rotation")
     scaled(spark, src, "documents", copies) { (d, i) =>
       if (i == 0) d
       else d.select(
@@ -583,8 +535,8 @@ object ScaleRehearsal {
       n
     }
     // Constructions happen INSIDE the stage blocks: the dedup operators
-    // run their mining EAGERLY at DataFrame-construction time (the
-    // withCaches/localCheckpoint lineage cuts), so building them outside
+    // run their mining EAGERLY at DataFrame-construction time (their
+    // Materialize lineage cuts), so building them outside
     // would bill every real job to no stage (the first capture measured
     // 0.15 s / 118 shuffle bytes for the whole mine — all its work had
     // already run at construction).
@@ -600,12 +552,9 @@ object ScaleRehearsal {
     var verified: org.apache.spark.sql.DataFrame = null
     val nPairs = stage("verify_pairs") {
       val sh = Dedup.shingled(docs, "doc_id", "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      verified = Dedup.verifyPairs(cand, sh, threshold = 0.5)
-        .localCheckpoint()
-      val n = verified.count()
-      sh.unpersist()
-      n
+      verified = core.Materialize.cachedWhile(sh)(
+        core.Materialize.cutLocal(Dedup.verifyPairs(cand, sh, threshold = 0.5)))
+      verified.count()
     }
     // Stage 3 — connected components over the verified dup edges
     // (endpoints-only label propagation: the cluster-labeling leg).
@@ -706,8 +655,8 @@ object ScaleRehearsal {
     spark.stop()
   }
 
-  /** FULL-SUITE sf1 rehearsal: every `SparkEntry.queries` entry (not the
-    * hand-picked 38-family Headline) cold + warm at 10 copies — closing
+  /** FULL-SUITE sf1 rehearsal: every `SparkEntry.queries` entry cold +
+    * warm at 10 copies — closing
     * the round-14 verdict's top gap ("219/257 families have no measured
     * 10× point").
     *
@@ -852,47 +801,8 @@ object ScaleRehearsal {
       clusteredMain(if (args.length > 1) args(1) else "/root/testdata/sf0.1")
       return
     }
-    val src    = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val out    = if (args.length > 1) args(1) else "/tmp/graft_sf1"
-    val copies = if (args.length > 2) args(2).toInt else 10
-    val spark  = core.Sessions.local(32, "scale-rehearsal")
-    spark.range(1000).selectExpr("sum(id)").collect() // codegen warmup
-    val dim = spark.read.parquet(s"$src/embeddings.parquet")
-      .select(size(col("embedding"))).first().getInt(0)
-    require(dim == 64, s"embedding dim changed ($dim != 64): fix the rotation")
-    val t0 = System.nanoTime()
-    build(spark, src, out, copies)
-    val buildSec = (System.nanoTime() - t0) / 1e9
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
-    val cold  = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val warm  = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val rows  = scala.collection.mutable.LinkedHashMap[String, Long]()
-    val errs  = scala.collection.mutable.LinkedHashMap[String, String]()
-    for (q <- Headline) {
-      def once(): Double = {
-        val s0 = System.nanoTime()
-        rows(q) = SparkEntry.queries(q)(spark, out).count()
-        (System.nanoTime() - s0) / 1e9
-      }
-      try { cold(q) = once(); warm(q) = once() }
-      catch { case e: Throwable =>
-        errs(q) = e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage).take(200)
-      }
-      System.err.println(s"[sf1] $q cold=${cold.get(q).map(fmt)} warm=${warm.get(q).map(fmt)} rows=${rows.get(q)} err=${errs.get(q)}")
-    }
-    def m(kv: Iterable[(String, String)]): String =
-      kv.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val line =
-      s"""{"metric":"sf1_rehearsal","copies":$copies,"build_sec":${fmt(buildSec)},""" +
-      s""""cold":${m(cold.map { case (k, v) => k.takeWhile(_ != '_') -> fmt(v) })},""" +
-      s""""warm":${m(warm.map { case (k, v) => k.takeWhile(_ != '_') -> fmt(v) })},""" +
-      s""""rows":${m(rows.map { case (k, v) => k.takeWhile(_ != '_') -> v.toString })},""" +
-      s""""errors":${m(errs.map { case (k, v) => k.takeWhile(_ != '_') -> ("\"" + v + "\"") })}}"""
-    println(line)
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SF1.json"), line + "\n")
-    catch { case _: Throwable => () }
-    spark.stop()
-    if (errs.nonEmpty) sys.exit(1)
+    System.err.println(
+      "usage: runMain graft.ScaleRehearsal full|exponents|lsh100x|heavy100x|clustered [srcDir] ...")
+    sys.exit(2)
   }
 }

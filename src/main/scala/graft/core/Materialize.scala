@@ -1,40 +1,32 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Eager lineage cuts with a durability switch.
+/** The one owner of lineage cuts and caches: no other file in `src/main`
+  * calls `localCheckpoint`, `checkpoint`, `cache` or `persist`, so what a
+  * session may lose on executor loss is decided here.
   *
-  * Operators that materialize derived state mid-plan (mined pair tables,
-  * ball-cover assignments) default to `localCheckpoint(true)`: cheap, but
-  * the blocks live in executor storage and are NOT recomputable after
-  * executor loss — fine on local[n] (no executor loss), a real risk on a
-  * long-lived cluster. Setting
+  * Two durability classes, chosen by the call:
   *
-  *   spark.conf.set("spark.graft.materialize.durable", "true")
+  *   - [[cut]]: SHARED state — memoized artifacts, mined pair tables,
+  *     frames consumed across queries or by several downstream stages.
+  *     Follows `spark.graft.materialize.durable`: off (the default) it is
+  *     an eager `localCheckpoint`, whose blocks live in executor storage
+  *     and are not recomputable after executor loss; on, the frame is
+  *     written as a session-scoped warehouse table and read back, so a
+  *     lost executor re-reads files. Results are identical either way
+  *     (DedupSpec and SimilaritySpec assert this under both modes).
+  *   - [[cutLocal]]: LOOP-ROUND state (label propagation, PageRank ranks,
+  *     the BPE fit's per-round corpus and counts, beam rounds) and
+  *     DRIVER-BOUNDED frames (per-language or per-label quota and margin
+  *     tables, one-row totals). Always an eager `localCheckpoint`, in
+  *     either mode: a table write per loop round would thrash the
+  *     warehouse, a loop re-derives its rounds from its own inputs, and a
+  *     tiny frame costs less to recompute than to round-trip.
   *
-  * flips every [[cut]] site to a warehouse-table round-trip instead: the
-  * frame is written as a session-scoped parquet table and read back, so a
-  * lost executor re-reads files rather than failing the job. One conf,
-  * not N call sites; results are bit-identical either way (DedupSpec
-  * asserts the near-dup hash under both modes — parquet round-trips
-  * preserve the engine's long/double/string values exactly).
-  *
-  * ROUTING POLICY (audited round 12 — every `localCheckpoint` site in
-  * `src/main` is one of these three, with a justifying comment):
-  *
-  *   1. MEMOIZED / CORPUS-DERIVED state consumed across queries or by
-  *      multiple downstream stages (mined pair tables, perceptual-hash
-  *      frames, DSIR doc×dim features, classifier features, CC loop
-  *      inputs, scoring frames) → routed THROUGH [[cut]], so the one
-  *      durability conf governs all of them;
-  *   2. iterative ROUND state (connected-components labels, pagerank
-  *      ranks, the BPE fit's per-round corpus/counts) — deliberately
-  *      stays on localCheckpoint even in durable mode: a table write
-  *      per loop round would thrash the warehouse, and those loops
-  *      re-derive from their own (durably-cut) inputs on restart;
-  *   3. TINY driver-bounded frames (≤|langs|/≤k/1-row quota and margin
-  *      tables) — a warehouse round-trip costs more than recomputing
-  *      them; executor loss re-runs a sub-second aggregation.
+  * [[release]] frees a local cut early; [[cachedWhile]] scopes a cache to
+  * the evaluation that needs it, so no cache outlives its call.
   */
 object Materialize {
 
@@ -57,4 +49,30 @@ object Materialize {
       graft.sources.Warehouse.writeTable(df, name)
       df.sparkSession.table(name)
     }
+
+  /** Eager local cut of loop-round or driver-bounded state, in either
+    * durability mode. Takes no tag: a local cut never becomes a table.
+    */
+  def cutLocal[T](ds: Dataset[T]): Dataset[T] = ds.localCheckpoint(true)
+
+  /** Free the blocks of a [[cutLocal]] frame now rather than when the
+    * ContextCleaner collects it. A local cut is registered with the block
+    * manager, not the cache manager, so `Dataset.unpersist` would be a
+    * no-op; the checkpointed RDD is unpersisted directly. Any other frame
+    * is left alone.
+    */
+  def release(ds: Dataset[_]): Unit = ds.queryExecution.analyzed match {
+    case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+    case _ => ()
+  }
+
+  /** Cache `dfs` for the evaluation of `body`, then unpersist them, also
+    * when `body` throws. For inputs that several stages of one eager
+    * evaluation read; `body` must not return a lazy plan over them.
+    */
+  def cachedWhile[A](dfs: Dataset[_]*)(body: => A): A = {
+    dfs.foreach(_.cache())
+    try body
+    finally dfs.foreach(_.unpersist(false))
+  }
 }

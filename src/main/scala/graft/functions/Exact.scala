@@ -43,16 +43,6 @@ object Exact {
       .otherwise(lit(null).cast(DoubleType))
   }
 
-  /** Population variance from exact power sums (for z-scores over full
-    * partitions where the oracle uses ddof=0).
-    */
-  def varPopExact(c: Column, scale: Int = 2): Column = {
-    val n   = count(c).cast(DoubleType)
-    val sx  = sum(dec(c, scale)).cast(DoubleType)
-    val sxx = sum(dec(c, scale) * dec(c, scale)).cast(DoubleType)
-    (n * sxx - sx * sx) / (n * n)
-  }
-
   /** Closed-form OLS slope over (x, y) pairs from exact sums:
     * (nΣxy − ΣxΣy) / (nΣx² − (Σx)²). `x` must be integral (exact as-is);
     * `y` is decimal-cast. Matches `regr_slope` semantics but

@@ -389,7 +389,7 @@ final class Runner(
       val rows = if (!exists(m.name)) {
         writeVersioned(m.name, snapshotCols(source, key))
       } else {
-        val snap    = readTable(m.name).localCheckpoint(true)
+        val snap    = graft.core.Materialize.cutLocal(readTable(m.name))
         val current = snap.filter(col("dbt_valid_to").isNull)
         val changed = checkCols
           .map(c => !(col(s"cur.$c") <=> col(s"src.$c")))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Materialize
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.{Column, DataFrame}
@@ -160,14 +161,11 @@ object Bpe {
     * because at local[n] the per-round cost is task scheduling, not data;
     * a 100 TB fit raises it to match the cluster.
     *
-    * State is `localCheckpoint`ed each round (lineage/plan depth would
-    * otherwise grow linearly in R and blow analysis + codegen); the
-    * superseded round’s blocks are unpersisted immediately, so peak
-    * storage is two corpus snapshots. On a multi-executor cluster the
-    * durable form of this cut is a warehouse-table materialization per K
-    * rounds (localCheckpoint blocks die with an executor); local[n] has
-    * no executor loss, so the cheap cut is correct here (see
-    * [[graft.core.Materialize]] — round state deliberately stays local).
+    * State is cut each round with [[graft.core.Materialize.cutLocal]]
+    * (lineage/plan depth would otherwise grow linearly in R and blow
+    * analysis + codegen); the superseded round’s blocks are released
+    * immediately, so peak storage is two corpus snapshots. Round state
+    * stays local in either durability mode (see [[graft.core.Materialize]]).
     *
     * Identical output to [[fit]] by the argmax-sequence argument: both
     * maintain exactly the corpus pair-count multiset between rounds and
@@ -261,14 +259,6 @@ object Bpe {
     val shufBefore = conf.get("spark.sql.shuffle.partitions")
     conf.set("spark.sql.adaptive.enabled", "false")
     conf.set("spark.sql.shuffle.partitions", stateBuckets.toString)
-    // Truncated-lineage blocks of the superseded round: a localCheckpoint
-    // is registered with the block manager, not the cache manager, so
-    // Dataset.unpersist would be a no-op — free the RDD directly.
-    def freeCheckpoint(d: org.apache.spark.sql.Dataset[_]): Unit =
-      d.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-        case _ => ()
-      }
     def hasAdjacent(t: Seq[String], a: String, b: String): Boolean = {
       val it = t.iterator.zip(t.iterator.drop(1))
       it.exists { case (x, y) => x == a && y == b }
@@ -279,30 +269,22 @@ object Bpe {
     var curCkpt: org.apache.spark.sql.Dataset[Seq[String]] = null
     var counts: DataFrame = null
     var merges = Vector.empty[(String, String)]
-    val dbg = sys.env.contains("SPARK_GRAFT_BPE_DEBUG")
-    def tt[A](tag: String)(f: => A): A =
-      if (!dbg) f else {
-        val t0 = System.nanoTime(); val r = f
-        System.err.println(f"[bpe] $tag ${(System.nanoTime() - t0) / 1e6}%.0f ms"); r
-      }
     try {
       // Same tokenization as fit: split on single spaces, drop empties
       // (whitespace-insensitive), skip null text. Rows with < 2 tokens
       // are inert for pair counting forever — dropped at entry and per
       // round.
-      cur = df.select(col(textCol).cast("string")).as[String]
+      cur = Materialize.cutLocal(df.select(col(textCol).cast("string")).as[String]
         .filter((t: String) => t != null)
         .map(t => t.split(' ').toSeq.filter(_.nonEmpty))
-        .filter((t: Seq[String]) => t.length >= 2)
-        .localCheckpoint()
+        .filter((t: Seq[String]) => t.length >= 2))
       // The counts state lands hash-bucketed by (a,b) across
       // `stateBuckets` partitions (the scoped shuffle.partitions above):
       // every per-round merge and argmax parallelizes across buckets, and
       // no corpus-scale structure ever funnels through one task.
-      counts = cur.flatMap(localPairs).toDF("a", "b")
+      counts = Materialize.cutLocal(cur.flatMap(localPairs).toDF("a", "b")
         .groupBy(col("a"), col("b"))
-        .agg(count(lit(1)).cast(LongType).as("cnt"))
-        .localCheckpoint()
+        .agg(count(lit(1)).cast(LongType).as("cnt")))
       // The corpus is re-materialized only every CkptEvery rounds; in
       // between it rides as a lazy chain of ≤CkptEvery typed maps over
       // the last checkpoint (maps fuse — objects flow through without
@@ -319,8 +301,8 @@ object Bpe {
         // round's batch (≤ remaining merges). maxBatch=1 degenerates to
         // the exact sequential argmax.
         val want = math.min(maxBatch, numMerges - round)
-        val top = tt("argmax")(counts.orderBy(col("cnt").desc, col("a"), col("b"))
-          .limit(maxBatch).collect())
+        val top = counts.orderBy(col("cnt").desc, col("a"), col("b"))
+          .limit(maxBatch).collect()
         if (top.isEmpty) return merges // no adjacent pairs left anywhere
         val batch = disjointBatch(
           top.toSeq.map(r => (r.getString(0), r.getString(1))), want)
@@ -348,25 +330,24 @@ object Bpe {
                 localPairs(toks).map { case (x, y) => (x, y, -1L) }
             }
           }.toDF("a", "b", "cnt")
-          val newCounts = tt("counts-ckpt")(
-            mergedCounts(counts, delta).localCheckpoint())
-          freeCheckpoint(counts)
+          val newCounts = Materialize.cutLocal(mergedCounts(counts, delta))
+          Materialize.release(counts)
           counts = newCounts
           cur = cur
             .map(t => if (hitsAny(t)) applyBatch(t) else t)
             .filter((t: Seq[String]) => t.length >= 2)
           sinceCkpt += 1
           if (sinceCkpt >= CkptEvery) {
-            val nc = tt("cur-ckpt")(cur.localCheckpoint())
-            freeCheckpoint(curCkpt)
+            val nc = Materialize.cutLocal(cur)
+            Materialize.release(curCkpt)
             curCkpt = nc; cur = nc; sinceCkpt = 0
           }
         }
       }
       merges
     } finally {
-      if (counts != null) freeCheckpoint(counts)
-      if (curCkpt != null) freeCheckpoint(curCkpt)
+      if (counts != null) Materialize.release(counts)
+      if (curCkpt != null) Materialize.release(curCkpt)
       conf.set("spark.sql.adaptive.enabled", aqeBefore)
       conf.set("spark.sql.shuffle.partitions", shufBefore)
     }

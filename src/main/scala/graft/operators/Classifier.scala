@@ -78,19 +78,17 @@ object Classifier {
       .select(col("dim"),
               coalesce(col("cp0"), lit(0L)).as("cp"),
               coalesce(col("cn0"), lit(0L)).as("cn"))
-    // class totals + doc counts: ONE row (exact integer sums)
-    val totals = trainIds.join(labels, Seq("doc_id"))
+    // class totals + doc counts: ONE row (exact integer sums). totals
+    // feeds the weight table, the bias AND the precondition check below —
+    // cut the 1-row frame so the train-slice aggregation runs exactly once
+    val totals = graft.core.Materialize.cutLocal(trainIds.join(labels, Seq("doc_id"))
       .join(feats.groupBy(col("doc_id")).agg(sum(col("n_hits")).as("doc_hits")),
             Seq("doc_id"), "left")
       .agg(
         sum(when(col("label"), coalesce(col("doc_hits"), lit(0L))).otherwise(lit(0L))).as("tp"),
         sum(when(!col("label"), coalesce(col("doc_hits"), lit(0L))).otherwise(lit(0L))).as("tn"),
         sum(when(col("label"), 1L).otherwise(0L)).as("npos"),
-        sum(when(!col("label"), 1L).otherwise(0L)).as("nneg"))
-      // totals feeds the weight table, the bias AND the precondition
-      // check below — checkpoint the 1-row frame so the train-slice
-      // aggregation runs exactly once
-      .localCheckpoint()
+        sum(when(!col("label"), 1L).otherwise(0L)).as("nneg")))
     // The fit REQUIRES at least one positive and one negative train doc:
     // with zero of either, bias_q = qln(npos/nneg) would silently become
     // floor(±Infinity) → Long.MIN/MAX on the Spark side while the DuckDB

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Materialize
 import graft.functions.Text
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -22,29 +23,20 @@ object Dedup {
 
   /** Cache `tmp` frames for the duration of `build`, FORCE the result
     * (eager cut — pair/edge outputs are tiny next to the corpus), then
-    * free the caches. Without the force-then-free, every pair-mining
-    * call left its intermediate caches pinned in executor storage for
-    * the life of the session (round-2 advisor finding); with it, the
-    * caches serve exactly the multi-consumer evaluation they were cut
-    * for and nothing outlives the call. The trade: the returned frame is
-    * materialized at call time rather than first action. The cut honors
-    * [[graft.core.Materialize]]'s durability conf — a cluster deployment
-    * flips mined-pair memos to warehouse tables with one setting.
-    */
-  private def withCaches(tmp: DataFrame*)(build: => DataFrame): DataFrame = {
-    tmp.foreach(_.cache())
-    try graft.core.Materialize.cut(build, "dedup_pairs")
-    finally tmp.foreach(_.unpersist(false))
-  }
-
-  /** `materialize = false` skips the cache/checkpoint machinery and
-    * returns the RAW composed plan — for plan inspection (PlanDump): an
-    * eager checkpoint collapses the plan to an ExistingRDD scan, which
-    * documents nothing and runs the mining job just to print it. Executing
-    * the lazy form recomputes shared stages; use the default for real runs.
+    * free the caches, so nothing outlives the call. The trade: the
+    * returned frame is materialized at call time rather than first
+    * action. The cut is shared state and honors
+    * [[graft.core.Materialize]]'s durability conf.
+    *
+    * `materialize = false` skips the cache/cut machinery and returns the
+    * RAW composed plan — for plan inspection (PlanDump): an eager cut
+    * collapses the plan to an ExistingRDD scan, which documents nothing
+    * and runs the mining job just to print it. Executing the lazy form
+    * recomputes shared stages; use the default for real runs.
     */
   private def withCachesIf(materialize: Boolean, tmp: DataFrame*)(build: => DataFrame): DataFrame =
-    if (materialize) withCaches(tmp: _*)(build) else build
+    if (materialize) Materialize.cachedWhile(tmp: _*)(Materialize.cut(build, "dedup_pairs"))
+    else build
 
   /** Attach `canonical_id` (= min id in the hash group) and `group_size`
     * to every row via groupBy + join-back — NEVER a window over the
@@ -855,7 +847,7 @@ object Dedup {
       (Seq(col("rot"), col("__b"), col("h"),
            row_number().over(wOrd).as("rn")) ++
        (1 to windowW).map(d => lead(col("h"), d).over(wOrd).as(s"__l$d"))): _*)
-    val rn = if (materialize) graft.core.Materialize.cut(rnRaw, "snm_rank")
+    val rn = if (materialize) Materialize.cut(rnRaw, "snm_rank")
              else rnRaw
     val inBucket = rn
       .select(col("h").as("h_a"),
@@ -951,8 +943,8 @@ object Dedup {
     val spark = nodes.sparkSession
     val edges = pairs.select(col(aCol).cast(LongType).as("src"), col(bCol).cast(LongType).as("dst"))
       .union(pairs.select(col(bCol).cast(LongType).as("src"), col(aCol).cast(LongType).as("dst")))
-      .distinct().cache()
-    try {
+      .distinct()
+    Materialize.cachedWhile(edges) {
       // Only EDGE ENDPOINTS need iteration — in a dedup corpus the vast
       // majority of docs are singletons and can skip the loop entirely
       // (label = self). The iterated set is |dup docs|, not |corpus|.
@@ -960,10 +952,10 @@ object Dedup {
       // consumed long after this call returns, and checkpoint blocks are
       // reclaimed by the ContextCleaner once unreferenced — a cache here
       // would leak executor storage across invocations.
-      val edgeNodes = graft.core.Materialize.cut(
+      val edgeNodes = Materialize.cut(
         edges.select(col("src").as("id")).distinct(), "cc_edge_nodes")
-      // Per-round lineage is truncated by an EAGER localCheckpoint, and
-      // the convergence count rides a LongAccumulator on the checkpoint
+      // Per-round lineage is truncated by an eager local cut, and the
+      // convergence count rides a LongAccumulator on the checkpoint
       // materialization itself — ONE action per round, not a checkpoint
       // plus a separate count job. (Task retries can only over-count: a
       // zero-change round counts 0 on every attempt, so the fixpoint test
@@ -988,9 +980,9 @@ object Dedup {
           .agg(min(col("cid")).as("new_cid"),
                min(when(col("own"), col("cid"))).as("old_cid"))
         val acc = spark.sparkContext.longAccumulator(s"cc_changes_$i")
-        val next = folded.mapPartitions { it =>
+        val next = Materialize.cutLocal(folded.mapPartitions { it =>
           it.map { r => if (r.getLong(1) != r.getLong(2)) acc.add(1L); r }
-        }(Encoders.row(folded.schema)).localCheckpoint(true)
+        }(Encoders.row(folded.schema)))
         changed = acc.value
         // dropping the previous `labels` reference frees its checkpoint
         // blocks (ContextCleaner reclaims unreferenced RDDs)
@@ -1001,11 +993,9 @@ object Dedup {
       val singletons = nodes.select(col("id").cast(LongType).as("id")).distinct()
         .join(edgeNodes, Seq("id"), "left_anti")
         .withColumn("cluster_id", col("id"))
+      // the result references only cuts (labels, edgeNodes), so the edge
+      // cache can go when this block exits, on the throw path too
       labels.unionByName(singletons)
-    } finally {
-      // the result references only checkpoints (labels, edgeNodes) — the
-      // edge cache can go even on the non-convergence throw path
-      edges.unpersist(false)
     }
   }
 
@@ -1058,19 +1048,19 @@ object Dedup {
         .union(mm.select(col("u"), col("m").as("v")))
         .filter(col("u") =!= col("v")).distinct()
     }
-    val initial = graft.core.Materialize.cut(pairs
+    val initial = Materialize.cut(pairs
       .select(col(aCol).cast(LongType).as("u"), col(bCol).cast(LongType).as("v"))
       .filter(col("u") =!= col("v")).distinct(), "cc_star_edges")
     // endpoint set from the ORIGINAL edges — the contracted set only
     // retains (child, root) pairs, but every original endpoint needs a label
-    val endpoints = graft.core.Materialize.cut(
+    val endpoints = Materialize.cut(
       initial.select(col("u").as("id"))
         .union(initial.select(col("v").as("id"))).distinct(), "cc_endpoints")
     var edges = initial
     var converged = initial.isEmpty
     var i = 0
     while (!converged && i < maxIters) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(true)
+      val next = Materialize.cutLocal(smallStar(largeStar(edges)))
       converged = next.count() == edges.count() && next.except(edges).isEmpty
       edges = next
       i += 1

@@ -164,13 +164,12 @@ object Graph {
     * conserved up to truncation (RetrievalGraphSpec asserts it).
     *
     * Long chains: every `checkpointEvery` iterations the rank frame is
-    * `localCheckpoint`ed — the same lineage-truncation discipline as
-    * [[Dedup.connectedComponents]] — so the logical plan depth stays
-    * bounded instead of nesting 2 joins + an aggregate per iteration
-    * (a deep enough unchecked chain superlinearly inflates Catalyst
-    * analysis and can overflow the driver stack). Same caveat as there:
-    * localCheckpoint blocks are not recomputable after executor loss; a
-    * long-lived deployment should materialize ranks as a table instead.
+    * cut as loop-round state ([[graft.core.Materialize.cutLocal]]) — the
+    * same lineage-truncation discipline as [[Dedup.connectedComponents]]
+    * — so the logical plan depth stays bounded instead of nesting 2
+    * joins + an aggregate per iteration (a deep enough unchecked chain
+    * superlinearly inflates Catalyst analysis and can overflow the
+    * driver stack).
     *
     * @param edges DataFrame with `src`, `dst` (any integral type)
     * @return DataFrame of (node, rank_e12): BIGINT rank in 1e-12 units
@@ -202,7 +201,7 @@ object Graph {
         .join(inRank, col("node") === col("dst"), "left")
         .select(col("node"),
                 (teleport + coalesce(col("in_rank"), lit(0L))).as("rank"))
-      if (i % checkpointEvery == 0 && i < iters) ranks = ranks.localCheckpoint()
+      if (i % checkpointEvery == 0 && i < iters) ranks = graft.core.Materialize.cutLocal(ranks)
     }
     ranks.select(col("node"), col("rank").as("rank_e12"))
   }

@@ -50,12 +50,6 @@ object Multimodal {
       // undecodable payloads.
       feature: Array[Float])
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("modality", StringType, nullable = false),
-    StructField("payload", BinaryType, nullable = true),
-    StructField("source_uri", StringType, nullable = true)))
-
   /** Wrap any table with a string/binary column as a media table — used by
     * the testdata plumbing (documents.text as fake payloads).
     */

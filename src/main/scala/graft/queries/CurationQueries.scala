@@ -565,19 +565,17 @@ object CurationQueries {
         .filter(col("id") === col("cluster_id"))
         .select(col("id").as("doc_id"))
     }
-    val selected = w.join(canon, Seq("doc_id"))
+    val selected = graft.core.Materialize.cutLocal(w.join(canon, Seq("doc_id"))
       .join(d.select(col("doc_id"), col("lang")), Seq("doc_id"))
-      .orderBy(col("logw_q").desc, col("doc_id")).limit(100)
-      .localCheckpoint() // 100 rows, consumed by counts + pick below
+      .orderBy(col("logw_q").desc, col("doc_id")).limit(100)) // 100 rows, consumed by counts + pick below
     val B = 50
     val counts = selected.groupBy(col("lang")).agg(count(lit(1)).as("n_l"))
     val tot = counts.agg(sum(col("n_l")).as("nn"))
-    val q = counts.crossJoin(broadcast(tot))
+    val q = graft.core.Materialize.cutLocal(counts.crossJoin(broadcast(tot))
       .select(col("lang"), col("n_l"),
               expr(s"($B * n_l) DIV nn").as("base_l"),
               (lit(B.toLong) * col("n_l") -
-                expr(s"($B * n_l) DIV nn") * col("nn")).as("rem"))
-      .localCheckpoint() // ≤|langs| rows, consumed twice below
+                expr(s"($B * n_l) DIV nn") * col("nn")).as("rem"))) // ≤|langs| rows, consumed twice below
     val sumBase = q.agg(sum(col("base_l")).as("sum_base"))
     val ranked = q
       .agg(sort_array(collect_list(struct((-col("rem")).as("negrem"),
@@ -624,6 +622,9 @@ object CurationQueries {
         * 1e9 + 0.5).toLong
     (m, default)
   }
+
+  /** q82's corpus 8-gram stream per dir: (doc_id, ngram). */
+  private val ngramStream = new Artifact[DataFrame]("q82_ngram_stream")
 
   val defs: Map[String, Q] = Map(
 
@@ -1190,15 +1191,14 @@ object CurationQueries {
     // groupBy(ngram).min(doc_id) — partial aggregation collapses an
     // n-gram repeated across billions of docs BEFORE its shuffle — and
     // the verdict returns via an equi-join on the n-gram. The exploded
-    // n-gram stream is cached only because it feeds both the aggregate
-    // and the join probe at bench scale; at 100 TB you would recompute
-    // the (cheap, scan-local) explode instead of materializing it.
+    // n-gram stream is cut only because it feeds both the aggregate and
+    // the join probe at bench scale; at 100 TB you would recompute the
+    // (cheap, scan-local) explode instead of materializing it.
     // ---------------------------------------------------------------
     "q82_ngram_novelty" -> { (s, dir) =>
       val docs = Tables(s, dir).documents
-      val ng = docs
-        .select(col("doc_id"), explode(Text.shingles(col("text"), 8)).as("ngram"))
-        .cache()
+      val ng = ngramStream.cut(s, dir)(docs
+        .select(col("doc_id"), explode(Text.shingles(col("text"), 8)).as("ngram")))
       val firsts = ng.groupBy(col("ngram")).agg(min(col("doc_id")).as("first_doc"))
       val perDoc = ng.join(firsts, "ngram")
         .groupBy(col("doc_id"))
@@ -1406,12 +1406,11 @@ object CurationQueries {
       val d = Tables(s, dir).documents
       val counts = d.groupBy(col("lang")).agg(count(lit(1)).as("n_l"))
       val tot = counts.agg(sum(col("n_l")).as("nn"))
-      val q = counts.crossJoin(broadcast(tot))
+      val q = graft.core.Materialize.cutLocal(counts.crossJoin(broadcast(tot))
         .select(col("lang"), col("n_l"),
                 expr(s"($QuotaB * n_l) DIV nn").as("base_l"),
                 (lit(QuotaB.toLong) * col("n_l") -
-                  expr(s"($QuotaB * n_l) DIV nn") * col("nn")).as("rem"))
-        .localCheckpoint() // ≤|langs| rows, consumed twice below
+                  expr(s"($QuotaB * n_l) DIV nn") * col("nn")).as("rem"))) // ≤|langs| rows, consumed twice below
       val sumBase = q.agg(sum(col("base_l")).as("sum_base"))
       val ranked = q
         .agg(sort_array(collect_list(struct((-col("rem")).as("negrem"),
@@ -2013,10 +2012,9 @@ object CurationQueries {
     // the exact integer sum, so summation order can't move the curve.
     // ---------------------------------------------------------------
     "q189_temperature_sweep" -> { (s, dir) =>
-      val pl = Tables(s, dir).documents.select(
+      val pl = graft.core.Materialize.cutLocal(Tables(s, dir).documents.select(
           col("lang"), size(Text.tokens(col("text"))).cast(LongType).as("n_tokens"))
-        .groupBy(col("lang")).agg(sum(col("n_tokens")).as("lang_tokens"))
-        .localCheckpoint() // ≤|langs| rows, consumed by 4 sweep legs
+        .groupBy(col("lang")).agg(sum(col("n_tokens")).as("lang_tokens"))) // ≤|langs| rows, consumed by 4 sweep legs
       val legs = Seq(0, 1, 2, 3).map { n =>
         val root = (1 to n).foldLeft(col("lang_tokens").cast(DoubleType))(
           (c, _) => sqrt(c))

@@ -52,6 +52,9 @@ object OlapQueries {
     pmf.map(c => math.floor(c * 65536.0).toLong)
   }
 
+  /** q48's buyer sets per dir: the distinct 1995 and 1996 custkeys. */
+  private val buyerSets = new Artifact[(DataFrame, DataFrame)]("q48_buyer_sets")
+
   val defs: Map[String, Q] = Map(
     // ROLLUP: region → nation → total revenue hierarchy with grouping ids.
     "q46_rollup" -> { (s, dir) =>
@@ -290,7 +293,9 @@ object OlapQueries {
       // Each buyer set feeds union + intersect + except; Catalyst does not
       // dedupe common subtrees, so without a cut this is 6 scans of orders
       // for a 2-scan job. The cut is the distinct sets (tiny: custkeys).
-      val a = buyers(1995).cache(); val b = buyers(1996).cache()
+      val (a, b) = buyerSets(s, dir)(
+        (graft.core.Materialize.cut(buyers(1995), buyerSets.name),
+         graft.core.Materialize.cut(buyers(1996), buyerSets.name)))
       a.union(b).distinct().withColumn("set_op", lit("union"))
         .unionByName(a.intersect(b).withColumn("set_op", lit("intersect")))
         .unionByName(a.except(b).withColumn("set_op", lit("except")))

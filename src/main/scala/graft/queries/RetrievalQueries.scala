@@ -412,11 +412,10 @@ object RetrievalQueries {
     },
 
     "q131_classifier_eval" -> { (s, dir) =>
-      val cells = defs("q129_quality_classifier")(s, dir)
+      val cells = graft.core.Materialize.cutLocal(defs("q129_quality_classifier")(s, dir)
         .filter(!col("in_train"))
         .groupBy(col("label"), col("predicted"))
-        .agg(count(lit(1)).as("n_docs"))
-        .localCheckpoint() // ≤|labels|² rows, consumed by 3 margins below
+        .agg(count(lit(1)).as("n_docs"))) // ≤|labels|² rows, consumed by 3 margins below
       val rt = cells.groupBy(col("label")).agg(sum(col("n_docs")).as("n_labeled"))
       val ct = cells.groupBy(col("predicted")).agg(sum(col("n_docs")).as("n_predicted"))
       cells.join(broadcast(rt), Seq("label"))

@@ -339,10 +339,9 @@ object TextQueries {
     // is checkpointed (driver-small) so the row/column marginals don't
     // re-scan the corpus, and they join back by broadcast.
     "q120_langid_eval" -> { (s, dir) =>
-      val cells = defs("q32_langid")(s, dir)
+      val cells = graft.core.Materialize.cutLocal(defs("q32_langid")(s, dir)
         .groupBy(col("labeled_lang"), col("predicted_lang"))
-        .agg(count(lit(1)).as("n_docs"))
-        .localCheckpoint() // ≤|langs|² rows, consumed by 3 margins below
+        .agg(count(lit(1)).as("n_docs"))) // ≤|langs|² rows, consumed by 3 margins below
       val rt = cells.groupBy(col("labeled_lang"))
         .agg(sum(col("n_docs")).as("n_labeled"))
       val ct = cells.groupBy(col("predicted_lang"))
@@ -748,13 +747,12 @@ object TextQueries {
           outs.iterator.flatMap { case (v, ps) => ps.iterator.map(p => (v, p)) }
         }
         .toDF("vocab_checkpoint", "piece")
-      val stats = pieces
+      val stats = graft.core.Materialize.cutLocal(pieces
         .groupBy(col("vocab_checkpoint"))
         .agg(count(lit(1)).as("n_tokens_after"),
              sum(when(col("piece").contains(graft.operators.Bpe.Sep), lit(1L))
                    .otherwise(lit(0L))).as("n_merged_tokens"),
-             countDistinct(col("piece")).as("vocab_size"))
-        .localCheckpoint() // ≤|checkpoints| rows, consumed twice below
+             countDistinct(col("piece")).as("vocab_size"))) // ≤|checkpoints| rows, consumed twice below
       val base = stats.filter(col("vocab_checkpoint") === 0)
         .select(col("n_tokens_after").as("n_base_tokens"))
       stats.crossJoin(broadcast(base))
@@ -2626,8 +2624,8 @@ object TextQueries {
     // full-corpus clusters bit for bit.
     "q154_incremental_components" -> { (s, dir) =>
       val d = Tables(s, dir).documents
-      val edges = dupEdges05(s, dir)
-        .localCheckpoint() // consumed by both parity filters below
+      // consumed by both parity filters below
+      val edges = graft.core.Materialize.cutLocal(dupEdges05(s, dir))
       val baseEdges = edges
         .filter(col("doc_a") % 2 === 0 && col("doc_b") % 2 === 0)
       val deltaEdges = edges
@@ -3606,14 +3604,9 @@ object TextQueries {
       jaccard05(s, dir).select(col("doc_a"), col("doc_b")))
 
   /** Verified Jaccard pairs at threshold 0.5, mined once per
-    * (session, dir) — Dedup.jaccardPairs returns an eagerly-checkpointed
-    * frame, so the artifact holds materialized pairs, not a live cache.
-    * CLUSTER CAVEAT: localCheckpoint blocks are not recomputable — if an
-    * executor is lost, the memoized frame dies with it for the rest of
-    * the session. Correct for local/test drivers (the gate); a long-lived
-    * multi-executor deployment should materialize mined pairs as a TABLE
-    * via the Runner (which is what the model layer does for every shared
-    * stage) instead of relying on this in-session memo.
+    * (session, dir) — Dedup.jaccardPairs returns a shared-state
+    * [[graft.core.Materialize.cut]], so the artifact holds materialized
+    * pairs, not a live cache, and follows the durability conf.
     */
   private val jacCache = new Artifact[DataFrame]("jaccard05_pairs")
   private def jaccard05(s: SparkSession, dir: String): DataFrame =

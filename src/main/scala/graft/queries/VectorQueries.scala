@@ -449,12 +449,11 @@ object VectorQueries {
       val asg = kmeans8(s, dir).select(col("vec_id"), col("cluster_id"))
       val counts = asg.groupBy(col("cluster_id")).agg(count(lit(1)).as("n_c"))
       val tot = counts.agg(sum(col("n_c")).as("nn"))
-      val q = counts.crossJoin(broadcast(tot))
+      val q = graft.core.Materialize.cutLocal(counts.crossJoin(broadcast(tot))
         .select(col("cluster_id"), col("n_c"),
                 expr(s"($B * n_c) DIV nn").as("base_c"),
                 (lit(B) * col("n_c") -
-                  expr(s"($B * n_c) DIV nn") * col("nn")).as("rem"))
-        .localCheckpoint() // ≤k rows, consumed twice below
+                  expr(s"($B * n_c) DIV nn") * col("nn")).as("rem"))) // ≤k rows, consumed twice below
       val sumBase = q.agg(sum(col("base_c")).as("sum_base"))
       val ranked = q
         .agg(sort_array(collect_list(struct((-col("rem")).as("negrem"),
@@ -1076,17 +1075,16 @@ object VectorQueries {
       val para = s.sparkContext.defaultParallelism
       val spread = if (vecs.rdd.getNumPartitions < para)
         vecs.repartition(para) else vecs
-      val agg = spread
+      // materialize the (d(d+1)/2 + d)-row moment frame (2144 at
+      // d=64) BEFORE any branch filters: otherwise the j=0 / j>0 /
+      // i=j group filters push below the aggregate and each branch
+      // re-scans + re-explodes the corpus (the q35/q36 miner pattern)
+      val agg = graft.core.Materialize.cutLocal(spread
         .select(explode(
           org.apache.spark.sql.graftx.MomentTerms.momentTerms(col("v"))).as("e"))
         .groupBy(col("e.i").as("i"), col("e.j").as("j"))
         .agg(sum(col("e.t").cast("decimal(28,14)")).as("s"),
-             count(lit(1)).as("n"))
-        // materialize the (d(d+1)/2 + d)-row moment frame (2144 at
-        // d=64) BEFORE any branch filters: otherwise the j=0 / j>0 /
-        // i=j group filters push below the aggregate and each branch
-        // re-scans + re-explodes the corpus (the q35/q36 miner pattern)
-        .localCheckpoint()
+             count(lit(1)).as("n")))
       val firsts = agg.filter(col("j") === 0)
         .select(col("i").as("fi"), col("s").cast("double").as("m"))
       val nd     = col("n").cast("double")
@@ -1801,8 +1799,8 @@ object VectorQueries {
         .select(col("query_id"), col("c.id").as("cand_id"),
                 (lit(NndBig) - substring(col("c.key"), 1, 19).cast("long"))
                   .as("scaled"))
-      // iterative ROUND state (Materialize routing policy #2, the CC-
-      // loop precedent): without the per-round cut the beam lineage
+      // iterative ROUND state (a local cut, as in the CC loop): without
+      // the per-round cut the beam lineage
       // COMPOUNDS — round r's broadcast subtrees nest rounds 1..r-1
       // (q273's committed plan hit 292 exchanges) and the A/B probe
       // measured the uncut form 2-4× slower with wild variance. The
@@ -1810,7 +1808,7 @@ object VectorQueries {
       // readout below, so lineage stays one round deep and the
       // checkpoint job would be pure overhead (one fewer action per
       // serve leg — same truncation argument).
-      beam = if (round < BeamRounds) next.localCheckpoint(true) else next
+      beam = if (round < BeamRounds) graft.core.Materialize.cutLocal(next) else next
     }
     val key3 = concat(
       lpad((lit(NndBig) - col("scaled")).cast("string"), 19, "0"),

@@ -68,12 +68,6 @@ object Metrics {
       .as("cumulative_gdp_growth")
   }
 
-  /** Convenience: the annual metric rollup per country over fct. */
-  def annualRollup(fct: DataFrame): DataFrame =
-    fct.groupBy(col("country_code"), col("reference_year"))
-      .agg(simple("unemployment_rate"), simple("monthly_inflation"),
-           simple("annual_inflation"))
-
   /** MetricFlow-style time-grain dimensions → mart time columns. */
   private val TimeGrainDims = Map(
     "metric_time__year"  -> "reference_year",

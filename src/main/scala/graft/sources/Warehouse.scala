@@ -279,13 +279,4 @@ object Warehouse {
     */
   def analyzeTable(spark: SparkSession, table: String): Unit =
     spark.sql(s"ANALYZE TABLE `$table` COMPUTE STATISTICS FOR ALL COLUMNS")
-
-  /** Relative shuffle-partition sizing: partitions ≈ input bytes / target
-    * partition size, clamped — the knob that keeps partitions
-    * memory-resident as SF scales (SURVEY: spill-aware sizing).
-    */
-  def adviseShufflePartitions(spark: SparkSession, inputBytes: Long,
-                              targetPartitionBytes: Long = 128L << 20,
-                              minP: Int = 4, maxP: Int = 4096): Int =
-    math.min(maxP, math.max(minP, (inputBytes / targetPartitionBytes).toInt)).toInt
 }

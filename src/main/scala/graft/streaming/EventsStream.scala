@@ -657,8 +657,8 @@ object EventsStream {
           .unionByName(cur).distinct()
         // materialize BEFORE the overwrite — the plan reads the table it
         // is about to replace (tiny: ≤ cap·|sources| + batch rows)
-        val kept = graft.queries.CurationQueries.sourceCapped(merged)
-          .localCheckpoint()
+        val kept = graft.core.Materialize.cutLocal(
+          graft.queries.CurationQueries.sourceCapped(merged))
         graft.sources.Warehouse.writeTable(kept, table)
         // the overwrite replaced the table's files in place — drop the
         // cached file listing or the next batch reads deleted parts.

@@ -1774,4 +1774,37 @@ class PlanQualitySpec extends SparkSpec {
     val buckets = sl.filter(col("k") === "hot").select("__salt").distinct().count()
     assert(buckets > 1)
   }
+
+  test("core.Materialize is the only caller of checkpoint, cache and persist in src/main") {
+    // Every lineage cut and cache goes through one file, so what a session
+    // may lose on executor loss is decided in one place. Comment lines and
+    // trailing comments are exempt.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val owner = root.resolve("graft/core/Materialize.scala")
+    val call = """localCheckpoint|\.checkpoint\(|\.cache\(\)|\.persist\(""".r
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(f => f.toString.endsWith(".scala") && f != owner).toSeq
+    assert(files.size > 50, s"source tree not found from ${root.toAbsolutePath}")
+    val hits = for {
+      f <- files
+      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
+      code = line.trim
+      if !(code.startsWith("//") || code.startsWith("*") || code.startsWith("/*"))
+      if call.findFirstIn(code.replaceFirst("//.*", "")).isDefined
+    } yield s"$f:${i + 1}: $code"
+    assert(hits.isEmpty, hits.mkString("cut or cache outside core.Materialize:\n", "\n", ""))
+  }
+
+  test("q48 and q82 keep their cut inputs as named artifacts, not session-long caches") {
+    val s = spark.newSession()
+    spark.catalog.clearCache()
+    for (_ <- 1 to 2; q <- Seq("q48_set_ops", "q82_ngram_novelty"))
+      SparkEntry.queries(q)(s, dir).count()
+    val cache = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager
+    assert(cache.isEmpty, "q48/q82 left frames in the cache manager")
+    val named = graft.core.Artifact.built(s)
+      .filter { case (name, _) => name.startsWith("q48_") || name.startsWith("q82_") }
+    assert(named == Set(("q48_buyer_sets", dir), ("q82_ngram_stream", dir)))
+  }
 }

@@ -317,7 +317,7 @@ class SimilaritySpec extends SparkSpec {
     try {
       assert(graft.core.Materialize.durable(spark))
       assert(run() == local, "durable cut changed the near-dup result")
-      // the mined-pair memo path (Dedup.withCaches) cuts durably too
+      // the mined-pair memo path (Dedup.withCachesIf) cuts durably too
       val docs = Seq((1L, "a b c d e f"), (2L, "a b c d e f"), (3L, "x y z w q r"))
         .toDF("doc_id", "text")
       val cand = graft.operators.Dedup
