@@ -1,6 +1,7 @@
 package graft
 
 import graft.core.Tables
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.functions._
 
 /** Dev measurement harness behind PERF.md's numbers — ONE main with
@@ -10,7 +11,8 @@ import org.apache.spark.sql.functions._
   * Usage (via sbt):
   *   runMain graft.Probe time <sfDir> <q1,q2,...|all> [reps]
   *     — per-query wall time over `reps` runs (default 2) in ONE warm JVM;
-  *       prints every rep so noise is visible, plus the best. The
+  *       prints every rep with its codegen compile count and compile ms,
+  *       so noise and recompiles are visible, plus the best. The
   *       Eurostat DAG's marts time as `time <sfDir> q50_…,q59_…`.
   *   runMain graft.Probe plan <sfDir> <query>
   *     — executed physical plan of a SparkEntry query (first 8 KB).
@@ -34,6 +36,18 @@ object Probe {
     r
   }
 
+  /** Codegen compiles so far in this JVM and their total ms, read from
+    * Spark's `CodegenMetrics`. The histogram's reservoir keeps every
+    * sample up to its size (1028); past that the total is the count times
+    * the reservoir mean, an estimate.
+    */
+  private def codegen(): (Long, Double) = {
+    val h = CodegenMetrics.METRIC_COMPILATION_TIME
+    val snap = h.getSnapshot
+    val n = h.getCount
+    (n, if (n <= snap.size) snap.getValues.sum.toDouble else n * snap.getMean)
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "subcommand required: time | plan | fmt | shuffles | q67 | bpe")
     val spark = core.Sessions.local(32, s"probe-${args(0)}")
@@ -47,10 +61,12 @@ object Probe {
           else args(2).split(',').toSeq
         for (name <- names; fn = SparkEntry.queries(name)) {
           val times = (1 to reps).map { i =>
+            val (n0, ms0) = codegen()
             val t0 = System.nanoTime()
             fn(spark, dir).count()
             val s = (System.nanoTime() - t0) / 1e9
-            println(f"PROBE $name rep$i $s%8.2f s")
+            val (n1, ms1) = codegen()
+            println(f"PROBE $name rep$i $s%8.2f s compiles=${n1 - n0} compile_ms=${ms1 - ms0}%.0f")
             s
           }
           println(f"PROBE $name best ${times.min}%8.2f s")

@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graftx.LocalCutBlocks
 
 /** The one owner of lineage cuts and caches: no other file in `src/main`
   * calls `localCheckpoint`, `checkpoint`, `cache` or `persist`, so what a
@@ -25,6 +26,7 @@ import org.apache.spark.sql.execution.LogicalRDD
   *     warehouse, a loop re-derives its rounds from its own inputs, and a
   *     tiny frame costs less to recompute than to round-trip.
   *
+  * [[cutLocalWith]] cuts a round's two state frames in one job;
   * [[release]] frees a local cut early; [[cachedWhile]] scopes a cache to
   * the evaluation that needs it, so no cache outlives its call.
   */
@@ -55,14 +57,31 @@ object Materialize {
     */
   def cutLocal[T](ds: Dataset[T]): Dataset[T] = ds.localCheckpoint(true)
 
+  /** [[cutLocal]] of `ds` and of `f(cut of ds)` in ONE job, for loop
+    * rounds whose next state is built from a frame the round derives
+    * first. Both frames are marked for a local checkpoint, and one job
+    * computes every partition of both: `ds` is computed once, where
+    * `f`'s plan first reads it, and its blocks are cut with the rest. The
+    * frames' shuffles must not run at planning time, so call this with
+    * AQE off (an adaptive plan runs its shuffle stages while it plans).
+    */
+  def cutLocalWith[A, B](ds: Dataset[A])(f: Dataset[A] => Dataset[B]): (Dataset[A], Dataset[B]) = {
+    val a = ds.localCheckpoint(eager = false)
+    val b = f(a).localCheckpoint(eager = false)
+    def marked(d: Dataset[_]) = d.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
+    ds.sparkSession.sparkContext.union(marked(a), marked(b)).foreach(_ => ())
+    (a, b)
+  }
+
   /** Free the blocks of a [[cutLocal]] frame now rather than when the
     * ContextCleaner collects it. A local cut is registered with the block
     * manager, not the cache manager, so `Dataset.unpersist` would be a
-    * no-op; the checkpointed RDD is unpersisted directly. Any other frame
-    * is left alone.
+    * no-op; the checkpointed RDD's blocks are freed directly, without the
+    * WARN `RDD.unpersist` logs for every local cut. Any other frame is
+    * left alone.
     */
   def release(ds: Dataset[_]): Unit = ds.queryExecution.analyzed match {
-    case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+    case lr: LogicalRDD => LocalCutBlocks.free(lr.rdd)
     case _ => ()
   }
 

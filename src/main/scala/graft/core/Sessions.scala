@@ -21,6 +21,26 @@ import org.apache.spark.sql.SparkSession
   * deliberately not set anywhere). The UTC session timezone below is part
   * of that contract: the ntz→timestamp cast preserves the instant only
   * under UTC, and DuckDB-oracle parity requires UTC regardless.
+  *
+  * Generated classes are shared by every session of the JVM:
+  *
+  *   - artifact isolation is off (`spark.sql.artifact.isolation.enabled`).
+  *     Spark 4.1 otherwise gives each `newSession()` its own executor
+  *     classloader, and the generated-class cache is keyed by classloader,
+  *     so a cold call in a fresh session recompiles on its executors the
+  *     classes the JVM already holds, and compiles more slowly through
+  *     that loader. The engine adds no per-session jars or classes, so all
+  *     sessions can share the executor's default classloader;
+  *   - the whole-stage stage number stays out of generated class names
+  *     (`spark.sql.codegen.useIdInClassName`). AQE numbers stages as it
+  *     plans them, so one plan could generate differently named, hence
+  *     uncached, classes from run to run.
+  *
+  * One build_cold cycle (sf0.01, local[4], every query in a new session)
+  * compiled 314 classes in 7.7 s in a fresh JVM and 195 in 3.5 s in the
+  * next cycle; with both settings, 268 in 4.0 s, then none. Isolation is
+  * a static setting: a session built outside this factory keeps it on and
+  * recompiles per session.
   */
 object Sessions {
 
@@ -48,6 +68,8 @@ object Sessions {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.sql.artifact.isolation.enabled", "false")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

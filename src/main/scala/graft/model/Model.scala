@@ -87,19 +87,46 @@ object Contract {
     * runner (the persisted ANN/LSH index tables — q139/q141/q145/q146)
     * get the same schema-equality + not-null/unique checks the Eurostat
     * marts get, before any warehouse write.
+    *
+    * The data checks run as one aggregation query that computes `df`
+    * once, however many constraints there are: grouping sets give one
+    * group per value of each unique key plus the empty grouping set,
+    * which carries the null counts, and a global level reads every check
+    * off those groups. Violations are reported in declaration order,
+    * not-null first.
     */
   def enforce(name: String, df: DataFrame, c: Contract): Unit = {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions._
     val got  = df.schema.fields.map(f => (f.name, f.dataType)).toSeq
     val want = c.schema.fields.map(f => (f.name, f.dataType)).toSeq
     if (got != want)
       throw ContractViolation(name, s"schema mismatch:\n  got  $got\n  want $want")
-    c.notNull.foreach { col0 =>
-      val n = df.filter(col(col0).isNull).count()
+    if (c.notNull.isEmpty && c.uniqueKeys.isEmpty) return
+    val nulls = c.notNull.map(n => count_if(col(n).isNull))
+    val counts: Seq[Long] =
+      if (c.uniqueKeys.isEmpty) {
+        val row = df.agg(nulls.head, nulls.tail: _*).head()
+        nulls.indices.map(row.getLong)
+      } else {
+        // grouping_id sets bit (m-1-i) for each of the m key columns that
+        // the grouping set leaves out
+        val keyCols = c.uniqueKeys.flatten.distinct
+        def gid(set: Seq[String]): Long = keyCols.indices
+          .filterNot(i => set.contains(keyCols(i)))
+          .map(i => 1L << (keyCols.length - 1 - i)).sum
+        val groups = df.groupingSets((c.uniqueKeys :+ Nil).map(_.map(col)), keyCols.map(col): _*)
+          .agg(grouping_id().as("__gid"),
+            (count(lit(1)).as("__n") +: nulls.zipWithIndex.map { case (e, i) => e.as(s"__null$i") }): _*)
+        val all = col("__gid") === gid(Nil)
+        val checks = nulls.indices.map(i => coalesce(max(when(all, col(s"__null$i"))), lit(0L))) ++
+          c.uniqueKeys.map(k => count_if(col("__gid") === gid(k) && col("__n") > 1))
+        val row = groups.agg(checks.head, checks.tail: _*).head()
+        checks.indices.map(row.getLong)
+      }
+    c.notNull.zip(counts).foreach { case (col0, n) =>
       if (n > 0) throw ContractViolation(name, s"$n null rows in not-null column $col0")
     }
-    c.uniqueKeys.foreach { keys =>
-      val n = df.groupBy(keys.map(col): _*).count().filter(col("count") > 1).count()
+    c.uniqueKeys.zip(counts.drop(c.notNull.length)).foreach { case (keys, n) =>
       if (n > 0) throw ContractViolation(name, s"$n duplicate groups on key (${keys.mkString(",")})")
     }
   }

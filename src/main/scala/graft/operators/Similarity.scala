@@ -160,7 +160,7 @@ object Similarity {
       extraCols = negLabelCol.map(_ => "__qlab").toSeq)
     // 4. exact cosine on probed lists only; corpus side stays unshuffled
     // (broadcast-hash join on centroid_id)
-    val candidates = probes.join(assigned, Seq("centroid_id"))
+    val candidates = broadcast(probes).join(assigned, Seq("centroid_id"))
       .filter(col("query_id") =!= col("vec_id"))
     val scored = negLabelCol.fold(candidates)(_ =>
         candidates.filter(col("__qlab") =!= col("__clab")))
@@ -233,7 +233,9 @@ object Similarity {
 
   /** Probe ranking (the query side of [[annTopKIvf]]): each query row of
     * `q` — (query_id, qv, qn [, extraCols]) — keeps its `nprobe` closest
-    * centroid lists. The result is broadcast (query-batch × nprobe rows).
+    * centroid lists. The result is query-batch × nprobe rows; a caller
+    * that joins it broadcasts it there (a hint on a frame that is
+    * collected instead of joined does nothing but log a warning).
     */
   def ivfProbes(q: DataFrame, cents: Seq[(Long, Array[Double], Double)],
                 nprobe: Int, extraCols: Seq[String] = Nil): DataFrame = {
@@ -247,10 +249,10 @@ object Similarity {
       .orderBy(probeSim.desc_nulls_last, col("centroid_id"))
     val probeCols = Seq(col("query_id"), col("qv"), col("qn"), col("centroid_id")) ++
       extraCols.map(col)
-    broadcast(q.crossJoin(seedDf)
+    q.crossJoin(seedDf)
       .withColumn("prn", row_number().over(wProbe))
       .filter(col("prn") <= nprobe)
-      .select(probeCols: _*))
+      .select(probeCols: _*)
   }
 
   // Probed-list candidate ranking: a probe list is corpus-sized ÷ nlist —

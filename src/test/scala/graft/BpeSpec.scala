@@ -153,4 +153,39 @@ class BpeSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     assert(got == Map(("a", "b") -> 2L, ("b", "a") -> 2L))
   }
+
+  test("fitDeltaBatched: one plan-stable job per round, no collect, no compile after round 2") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val docs = (Seq.fill(6)("a b c a b d e a b f g") ++
+      Seq.fill(4)("c d e c d f g h") ++ Seq.fill(3)("h i j h i k")).toDF("text")
+    def fit(rounds: Int) = Bpe.fitDeltaBatched(docs, "text", numMerges = 64,
+      maxBatch = 2, maxRounds = rounds)
+    // rounds 1 and 2 compile whatever the JVM has not compiled yet
+    val twoRounds = fit(2)
+    val sc = spark.sparkContext
+    val group = "bpe-spec-rounds"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add(e.stageInfos.map(_.name))
+    }
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    sc.addSparkListener(listener)
+    val before = compiles
+    sc.setJobGroup(group, "six-round BPE fit")
+    val sixRounds = try fit(6) finally sc.clearJobGroup()
+    val compiled = compiles - before
+    org.apache.spark.graftbus.Listeners.drain(sc)
+    sc.removeSparkListener(listener)
+    assert(sixRounds.take(twoRounds.length) == twoRounds)
+    assert(sixRounds.length > 6, s"want several merges per round, got $sixRounds")
+    assert(compiled == 0, s"rounds 3-6 compiled $compiled classes: their plans changed")
+    import scala.jdk.CollectionConverters._
+    val names = jobs.asScala.toSeq
+    // one job to start, one per state update; the sixth round updates nothing
+    assert(names.size == 6, s"want 6 jobs, got ${names.size}: $names")
+    assert(!names.flatten.exists(_.startsWith("collect")), s"a round collects: $names")
+  }
 }

@@ -63,11 +63,12 @@ class EndToEndSpec extends SparkSpec {
     // DAG run evicts its own classes: a repeated full refresh recompiled
     // 319-324 of them (sf0.001, local[4]). With the cache sized by
     // Sessions.CodegenCacheEntries, repeated runs compiled 2-68 classes
-    // over 15 runs, alone and after the rest of the suite. They are not 0:
-    // the whole-stage-codegen stage number is part of the generated class,
-    // and AQE assigns those numbers while it re-plans a running query, so
-    // they can differ between runs of one plan. The bound of 120 sits
-    // above that spread and well below a thrashing cache.
+    // over 15 runs, alone and after the rest of the suite: the whole-stage
+    // stage number was part of the generated class, and AQE assigns those
+    // numbers while it re-plans a running query, so they could differ
+    // between runs of one plan. Sessions.local now keeps the number out of
+    // class names, and one run alone recompiled 2 classes. The bound of
+    // 120 sits above the old spread and well below a thrashing cache.
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val before = compiles
     new Runner(spark, Files.createTempDirectory("graft-e2e").toString, asOf1, "e2e-run-3")

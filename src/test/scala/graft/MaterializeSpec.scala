@@ -52,6 +52,37 @@ class MaterializeSpec extends SparkSpec {
     Materialize.release(s.range(3).toDF("id"))
   }
 
+  test("cutLocalWith cuts a frame and a frame built on it in one job, computing the first once") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "false")
+    import s.implicits._
+    val reads = s.sparkContext.longAccumulator("cut-with-reads")
+    val base = s.range(0, 40, 1, 4).as[Long].map { i => reads.add(1); i }
+    val sc = s.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == "cut-with")
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup("cut-with", "cutLocalWith")
+    val (a, b) =
+      try Materialize.cutLocalWith(base)(_.groupBy((col("value") % 3).as("k")).count())
+      finally sc.clearJobGroup()
+    org.apache.spark.graftbus.Listeners.drain(sc)
+    sc.removeSparkListener(listener)
+    assert(jobs.get == 1, s"cutLocalWith ran ${jobs.get} jobs")
+    assert(reads.value == 40, s"the first frame was computed ${reads.value / 40.0} times")
+    Seq(a, b).foreach { d =>
+      val rdd = d.queryExecution.analyzed.asInstanceOf[LogicalRDD].rdd
+      assert(rdd.isCheckpointed, s"not cut: $rdd")
+    }
+    assert(a.collect().toSet == (0L until 40L).toSet)
+    assert(b.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap == Map(0L -> 14L, 1L -> 13L, 2L -> 13L))
+    assert(reads.value == 40, "reading the cuts recomputed the first frame")
+  }
+
   test("cachedWhile caches for the body only, also when the body throws") {
     val s = durableSession()
     s.catalog.clearCache()

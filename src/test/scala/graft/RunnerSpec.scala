@@ -416,6 +416,32 @@ class RunnerSpec extends SparkSpec {
     assert(ok.count() == 2)
   }
 
+  test("contract data checks read the frame once and report each violation as before") {
+    val schema = StructType(Seq(StructField("k", StringType), StructField("v", DoubleType)))
+    val rows = Seq(("a", 1.0), ("a", 2.0), (null, 3.0), (null, 4.0), ("b", 5.0))
+    // every evaluation of the frame adds its row count
+    val reads = spark.sparkContext.longAccumulator("contract-reads")
+    val df = rows.toDF("k", "v").as[(String, Double)]
+      .map { r => reads.add(1); r }.toDF("k", "v")
+    def enforce(c: Contract): Option[String] = {
+      reads.reset()
+      val detail =
+        try { Contract.enforce("m", df, c); None }
+        catch { case e: ContractViolation => Some(e.detail) }
+      assert(reads.value == rows.size,
+        s"enforce read the frame ${reads.value.toDouble / rows.size} times for $c")
+      detail
+    }
+    // not-null violations first, in declaration order
+    assert(enforce(Contract(schema, notNull = Seq("v", "k"), uniqueKeys = Seq(Seq("v"))))
+      .contains("2 null rows in not-null column k"))
+    // groups a and NULL repeat; v is unique
+    assert(enforce(Contract(schema, notNull = Seq("v"), uniqueKeys = Seq(Seq("v"), Seq("k"))))
+      .contains("2 duplicate groups on key (k)"))
+    assert(enforce(Contract(schema, uniqueKeys = Seq(Seq("k", "v")))).isEmpty)
+    assert(enforce(Contract(schema, notNull = Seq("v"))).isEmpty)
+  }
+
   test("persisted index marts (q139/q141) satisfy the IVF index contract; violations throw") {
     val dir = "/root/testdata/sf0.001"
     // building the indexes runs the contract enforcement inline — a

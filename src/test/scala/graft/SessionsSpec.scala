@@ -1,6 +1,8 @@
 package graft
 
 import graft.core.Tables
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -56,5 +58,42 @@ class SessionsSpec extends SparkSpec {
     assert(Tables.isEventTimeType(TimestampNTZType))
     assert(Tables.isEventTimeType(TimestampType))
     assert(!Tables.isEventTimeType(LongType))
+  }
+
+  test("a cold call in a new session reuses the executor classes the JVM already compiled") {
+    // Artifact isolation is off in Sessions.local, so every session's tasks
+    // run under one classloader and hit the JVM-wide codegen cache. With
+    // isolation on, each newSession() got its own executor classloader and
+    // recompiled every class of its first call. AQE is off in both
+    // sessions so the plans, and hence the generated sources, are equal.
+    def query(s: SparkSession): Long = {
+      import s.implicits._
+      Tables(s, dir).documents
+        .select(col("doc_id"), col("text").cast("string")).as[(Long, String)]
+        .map { case (id, t) => (id % 7, if (t == null) 0 else t.length) }
+        .toDF("g", "len")
+        .groupBy("g").agg(sum("len").as("len"), count(lit(1)).as("n"))
+        .count()
+    }
+    def loaders(s: SparkSession): Set[String] = {
+      import s.implicits._
+      s.range(0, 8, 1, 4).as[Long].mapPartitions { _ =>
+        val cl = Thread.currentThread().getContextClassLoader
+        Iterator(s"${cl.getClass.getName}@${System.identityHashCode(cl)}")
+      }.collect().toSet
+    }
+    val first = spark.newSession()
+    first.conf.set("spark.sql.adaptive.enabled", "false")
+    val warm = query(first)
+    val firstLoaders = loaders(first)
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val cold = spark.newSession()
+    cold.conf.set("spark.sql.adaptive.enabled", "false")
+    val before = compiles
+    assert(query(cold) == warm)
+    val compiled = compiles - before
+    assert(compiled == 0, s"the cold call in a new session compiled $compiled classes")
+    val all = firstLoaders ++ loaders(cold)
+    assert(all.size == 1, s"tasks of two sessions ran under ${all.size} classloaders: $all")
   }
 }
