@@ -1,8 +1,10 @@
 package graft
+
+import graft.Harness.fmt
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Round-10 verdict: with n=1 samples, five queries appeared to triple
     // (q48 0.35->1.89 etc.) with code unchanged, and nothing could prove it
     // was load noise. Every query now gets >=3 samples, taken as three FULL
@@ -11,10 +13,21 @@ object Bench {
     // load spike (round 7: both back-to-back samples of q113 landed inside
     // one spike). Overridable for fast local iteration.
     val passes = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt)
-    val spark = core.Sessions.local(cpus.toInt)
-    // Warm the session (codegen, parquet footer reads, shuffle machinery)
-    // so the first measured query doesn't absorb ~4s of one-time cost.
-    spark.range(1000).selectExpr("sum(id)").collect()
+    // The session loan warms codegen and the shuffle machinery, so the
+    // first measured query doesn't absorb ~4s of one-time cost.
+    val errors = Harness.session("graft") { spark => sweep(spark, sfDir, passes) }
+    if (errors.nonEmpty) {
+      System.err.println(s"[bench] ${errors.size} queries FAILED: " +
+        errors.map { case (k, cls) => s"$k ($cls)" }.mkString(", "))
+      sys.exit(1)
+    }
+  }
+
+  /** Runs the sweep, prints the two stdout lines, writes BENCH_FULL.json
+    * and returns the failed queries' exception classes.
+    */
+  private def sweep(spark: org.apache.spark.sql.SparkSession, sfDir: String,
+                    passes: Int): collection.Map[String, String] = {
     // The pipeline queries share cached staging stages; warm them through
     // one representative so the one-time build isn't charged to whichever
     // query happens to run first.
@@ -51,26 +64,17 @@ object Bench {
     }
     def sample(name: String,
                fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      attrib.reset(spark.sparkContext)
-      val t0 = System.nanoTime()
-      val r = try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-      catch { case e: Throwable =>
-        errors.getOrElseUpdate(name, e.getClass.getSimpleName)
-        -1.0
+      val (sec, failure, m) = attrib.measure(spark.sparkContext) {
+        try { fn(spark, sfDir).count(); None }
+        catch { case e: Throwable => Some(e.getClass.getSimpleName) }
       }
-      val m = attrib.snapshot(spark.sparkContext)
+      failure.foreach(errors.getOrElseUpdate(name, _))
       gcs(name) = gcs.getOrElse(name, Nil) :+ m.gcMs
       spills(name) = spills.getOrElse(name, Nil) :+ (m.memorySpillBytes + m.diskSpillBytes)
       peaks(name) = peaks.getOrElse(name, Nil) :+ m.peakExecutionMemory
-      r
+      if (failure.isEmpty) sec else -1.0
     }
-    // Local-iteration knob: SPARK_GRAFT_BENCH_ONLY=q123,q90 restricts the
-    // sweep to the named qNN prefixes (full 233-query sweeps are ~15 min;
-    // tuning one query shouldn't pay that). Unset in driver runs.
-    val only: Set[String] = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet).getOrElse(Set.empty)
     val names = SparkEntry.queries.keys.toSeq
-      .filter(n => only.isEmpty || only.contains(n.takeWhile(_ != '_')))
     val samples = scala.collection.mutable.LinkedHashMap[String, List[Double]](
       names.map(_ -> List.empty[Double]): _*)
     for (_ <- 1 to passes) {
@@ -105,10 +109,8 @@ object Bench {
     //   3. the line length is CHECKED against a 1800-char budget
     //      (2000 minus sbt's trailing "[success] …" line) and degrades
     //      (1-decimal, then dropping `spread`) before ever overflowing.
-    // Locale.ROOT: the f-interpolator honors the JVM default locale — a
-    // comma-decimal locale would emit invalid JSON
-    def fmt(v: Double, dec: Int): String =
-      String.format(java.util.Locale.ROOT, s"%.${dec}f", Double.box(v))
+    // Harness.fmt writes Locale.ROOT decimals, so a comma-decimal default
+    // locale cannot make the JSON invalid.
     def s3(v: Double): String = fmt(v, 3)
     // Keys shortened to their qNN prefix: 82 full-name entries (~2.7 KB)
     // overflowed the capture window again in round 5 even at ms precision.
@@ -189,11 +191,6 @@ object Bench {
     // the line above (partial in the tail) and fully in BENCH_FULL.json;
     // this line is the one the driver's parser is guaranteed to see whole.
     println(s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","build_total":${fmt(buildTotal, 1)},"serve_total":${fmt(serveTotal, 1)},"n_queries":${results.size},"errors":${errJson(full = false)},"sf":"${sfDir.split('/').last}","passes":$passes}""")
-    spark.stop()
-    if (errors.nonEmpty) {
-      System.err.println(s"[bench] ${errors.size} queries FAILED: " +
-        errors.map { case (k, cls) => s"$k ($cls)" }.mkString(", "))
-      sys.exit(1)
-    }
+    errors
   }
 }

@@ -16,6 +16,13 @@ import java.nio.file.{Files, Paths}
   */
 object PlanDump {
 
+  /** Fixed, not [[core.Sessions.cores]]: the core count sets the shuffle
+    * partitions printed in the plans, and PLANS.md must not change with
+    * the box that regenerates it. PlanDump also skips the harness's
+    * warm-up query, whose expression ids would renumber every plan.
+    */
+  private val Cpus = 4
+
   /** Numeric id of a "qNN_name" key, for stable ordering. */
   private def qid(name: String): Int =
     name.drop(1).takeWhile(_.isDigit).toInt
@@ -23,7 +30,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out   = args.lift(1).getOrElse("PLANS.md")
-    val spark = core.Sessions.local(4)
+    val spark = core.Sessions.local(Cpus)
     val names = SparkEntry.queries.keys.toSeq.sortBy(n => (qid(n), n))
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of every gated query\n\n")

@@ -24,15 +24,14 @@ import org.apache.spark.sql.functions._
   *   runMain graft.Probe q67 <sfDir>
   *     — stage split of q67 dup clusters: pair mining vs the label-
   *       propagation loop (the PERF.md "loop measured 1.8 s" claim).
-  *   runMain graft.Probe bpe <sfDir> [nEq] [nBig]
-  *     — `Bpe.fit` ≡ `fitDelta` at `nEq` merges, then `fitDelta` alone
-  *       at `nBig`.
+  *
+  * The session runs at the [[core.Sessions.cores]] rule.
   */
 object Probe {
 
   private def time[A](tag: String)(f: => A): A = {
-    val t0 = System.nanoTime(); val r = f
-    println(f"PROBE $tag%-36s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
+    val (s, r) = Harness.timed(f)
+    println(f"PROBE $tag%-36s $s%8.2f s")
     r
   }
 
@@ -49,10 +48,8 @@ object Probe {
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.nonEmpty, "subcommand required: time | plan | fmt | shuffles | q67 | bpe")
-    val spark = core.Sessions.local(32, s"probe-${args(0)}")
-    spark.range(1000).selectExpr("sum(id)").collect() // JVM/codegen warmup
-    args(0) match {
+    require(args.nonEmpty, "subcommand required: time | plan | fmt | shuffles | q67")
+    Harness.session(s"probe-${args(0)}") { spark => args(0) match {
       case "time" =>
         val dir  = args(1)
         val reps = if (args.length > 3) args(3).toInt else 2
@@ -62,9 +59,7 @@ object Probe {
         for (name <- names; fn = SparkEntry.queries(name)) {
           val times = (1 to reps).map { i =>
             val (n0, ms0) = codegen()
-            val t0 = System.nanoTime()
-            fn(spark, dir).count()
-            val s = (System.nanoTime() - t0) / 1e9
+            val (s, _) = Harness.timed(fn(spark, dir).count())
             val (n1, ms1) = codegen()
             println(f"PROBE $name rep$i $s%8.2f s compiles=${n1 - n0} compile_ms=${ms1 - ms0}%.0f")
             s
@@ -141,22 +136,7 @@ object Probe {
             d.select(col("doc_id").as("id")), edges, "doc_a", "doc_b")
         }
         time("q67.comp.count")(comp.count())
-      case "bpe" =>
-        // fit-vs-fitDelta: equivalence at a naive-affordable merge count,
-        // then fitDelta alone at the q144 gate count.
-        val d = Tables(spark, args(1)).documents
-        val nEq = if (args.length > 2) args(2).toInt else 12
-        val nBig = if (args.length > 3) args(3).toInt else 256
-        val naive = time(s"bpe.fit($nEq)") {
-          graft.operators.Bpe.fit(d, "text", nEq) }
-        val delta = time(s"bpe.fitDelta($nEq)") {
-          graft.operators.Bpe.fitDelta(d, "text", nEq) }
-        println(s"PROBE bpe.equivalent($nEq) = ${naive == delta}")
-        val big = time(s"bpe.fitDelta($nBig)") {
-          graft.operators.Bpe.fitDelta(d, "text", nBig) }
-        println(s"PROBE bpe.fitDelta($nBig).merges = ${big.length}")
       case other => sys.error(s"unknown subcommand: $other")
-    }
-    spark.stop()
+    } }
   }
 }

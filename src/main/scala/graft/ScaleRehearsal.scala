@@ -1,7 +1,8 @@
 package graft
 
+import graft.Harness.{fmt, timed}
+import org.apache.spark.graftbus.ServeMetrics
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The 10× SCALE REHEARSAL behind BENCH_SF1.json — the round-11 verdict's
@@ -135,133 +136,124 @@ object ScaleRehearsal {
     // top-cost family (29.6 s warm at sf1)
     "q274_neardup_topk", "q273_graph_ann_insert")
 
+  private def short(q: String): String = q.takeWhile(_ != '_')
+
+  /** One measured point: the cold run, the min over the warm runs, the
+    * output rows and, for the clustered corpora, the min shuffle rows over
+    * the warm runs (the candidate-volume witness).
+    */
+  private final case class Pt(cold: Double, warm: Double, rows: Long, shuffleRows: Long = 0L)
+
+  /** The wider over the narrower of two warm readings of one family,
+    * with a 0.1 s noise floor; above 2 a reading is flagged unstable.
+    */
+  private def spread(a: Double, b: Double): Double =
+    math.max(a, b) / math.max(math.min(a, b), 0.1)
+
+  /** log₃ of the sf3/sf1 warm ratio: the measured exponent of a 3× corpus
+    * step. Both points are floored at 0.2 s to keep log-noise out of
+    * sub-second families; warm points, because cold includes one-time
+    * index builds the serving story amortizes.
+    */
+  private def warmExponent(sf1: Double, sf3: Double): Double =
+    math.log(math.max(sf3, 0.2) / math.max(sf1, 0.2)) / math.log(3.0)
+
+  /** One sweep in a FRESH session (a shared session would let one scale's
+    * memoized indexes serve the next): builds, or finds, the `copies`
+    * corpus in `out`, then runs each query of `order` cold and then
+    * `warmReps` times warm, warm = the min. A failing query is recorded
+    * with its exception and the sweep goes on.
+    */
+  private def sweep(src: String, out: String, copies: Int, name: String, order: Seq[String],
+                    warmReps: Int): (Double, Map[String, Pt], Map[String, String]) =
+    Harness.session(name) { spark =>
+      val (buildSec, _) = timed(build(spark, src, out, copies))
+      val pts  = scala.collection.mutable.HashMap[String, Pt]()
+      val errs = scala.collection.mutable.HashMap[String, String]()
+      for (q <- order) try {
+        def once() = timed(SparkEntry.queries(q)(spark, out).count())
+        val (c, rows) = once()
+        val w = Seq.fill(warmReps)(once()._1).min
+        pts(q) = Pt(c, w, rows)
+        System.err.println(f"[$name] $q cold=$c%.1f warm=$w%.1f rows=$rows")
+      } catch { case e: Throwable =>
+        errs(q) = e.getClass.getSimpleName + ": " + String.valueOf(e.getMessage).take(200)
+        System.err.println(s"[$name] $q ERR ${errs(q)}")
+      }
+      (buildSec, pts.toMap, errs.toMap)
+    }
+
+  /** Warm time of `q` alone in a fresh session — empty session memos, no
+    * in-suite neighbours to perturb it — from a cold run and two warm
+    * ones. Where it is close to a sweep's min, the sweep's spread was
+    * in-suite interference (shared-memo build order, inherited GC), not
+    * the family's own cost.
+    */
+  private def isolatedWarm(src: String, out: String, copies: Int, q: String): Double = {
+    val (_, pts, errs) = sweep(src, out, copies, s"iso-x$copies-${short(q)}", Seq(q), warmReps = 2)
+    pts.getOrElse(q, sys.error(s"$q failed in isolation: ${errs(q)}")).warm
+  }
+
   /** Two-scale exponent mode: `runMain graft.ScaleRehearsal exponents
     * [srcDir]` builds the sf1 (10-copy) and sf3 (30-copy) corpora, runs
-    * the [[ExponentTier]] cold+warm at each scale IN SEPARATE SESSIONS
-    * (a shared session would let sf1's memoized indexes serve sf3), and
-    * writes BENCH_SF3.json with a per-family measured exponent
+    * the [[ExponentTier]] cold+warm at each scale IN SEPARATE SESSIONS,
+    * and writes BENCH_SF3.json with a per-family measured exponent
     * log(t₃/t₁)/log 3 — the missing leg of the 100 TB scale evidence
     * (round-14 verdict #1: plan shapes were verified, but 219/257
     * families had no >1× measured point and none had a >10× point).
+    *
+    * Per scale, TWO sessions each run a differently-seeded shuffle of the
+    * tier; the artifact keeps warm = min across sessions plus the
+    * per-family spread (both readings) and an `unstable_over_2x` map, so
+    * it carries its own trust signal. Warm is the min of two reps: one
+    * warm rep under-warms the heavy compositions (q209 at sf3: 55 → 25 →
+    * 18 s across reps, JIT and memo convergence) and reads as fake
+    * superlinearity. Cold comes from pass 1 only (pass 2's "cold" is JIT-
+    * and page-cache-warmed). Every >2×-spread family, and q273 always,
+    * also gets an [[isolatedWarm]] at both scales and an exponent from
+    * those points, so no headline exponent rests on an unconfirmed noisy
+    * reading.
     */
   private def exponentsMain(src: String): Unit = {
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    case class Pt(cold: Double, warm: Double, rows: Long)
-    // Round-17 isolation discipline (verdict #3 — the round-16 artifact
-    // was a single-session capture carrying five physically-meaningless
-    // negative warm exponents and a q38 exponent its own PERF.md had to
-    // correct from cross-session mins living only in prose): the SAME
-    // fix already proven on BENCH_SF1 — per scale, TWO separate sessions
-    // each running a differently-seeded shuffle of the tier, the
-    // artifact persisting warm = min across sessions PLUS the per-family
-    // spread (both readings + ratio) and an `unstable_over_2x` map, so
-    // the artifact carries its own trust signal. Cold comes from pass 1
-    // only (pass 2's "cold" is JIT/page-cache warmed — the fullMain
-    // advice applied here too).
+    def f(v: Double) = fmt(v, 2)
     def runScale(out: String, copies: Int, pass: Int): (Double, Map[String, Pt]) = {
-      val spark = core.Sessions.local(32, s"scale-exponents-$copies-p$pass")
-      spark.range(1000).selectExpr("sum(id)").collect()
-      val t0 = System.nanoTime()
-      build(spark, src, out, copies)
-      val buildSec = (System.nanoTime() - t0) / 1e9
-      val order = new scala.util.Random(6271 * (31 * copies + pass))
-        .shuffle(ExponentTier)
-      val pts = order.map { q =>
-        def once(): (Double, Long) = {
-          val s0 = System.nanoTime()
-          val n = SparkEntry.queries(q)(spark, out).count()
-          ((System.nanoTime() - s0) / 1e9, n)
-        }
-        // cold + TWO warm reps, warm = min: a single warm rep under-warms
-        // the heavy compositions (q209 at sf3: 55 → 25 → 18 s across
-        // reps — JIT + memo convergence), reading as fake superlinearity
-        val (c, rows) = once()
-        val (w1, _)   = once()
-        val (w2, _)   = once()
-        val w = math.min(w1, w2)
-        System.err.println(f"[x$copies p$pass] $q cold=$c%.1f warm=$w%.1f ($w1%.1f/$w2%.1f) rows=$rows")
-        q -> Pt(c, w, rows)
-      }.toMap
-      spark.stop()
-      // a fresh session per scale/pass: getOrCreate would hand the next
-      // run the stopped context otherwise
-      org.apache.spark.sql.SparkSession.clearActiveSession()
-      org.apache.spark.sql.SparkSession.clearDefaultSession()
+      val order = new scala.util.Random(6271 * (31 * copies + pass)).shuffle(ExponentTier)
+      val (buildSec, pts, errs) =
+        sweep(src, out, copies, s"scale-exponents-$copies-p$pass", order, warmReps = 2)
+      require(errs.isEmpty, errs.mkString("exponent tier failed: ", "; ", ""))
       (buildSec, pts)
     }
     val (b1, p1a) = runScale("/tmp/graft_sf1", 10, 1)
     val (_,  p1b) = runScale("/tmp/graft_sf1", 10, 2)
     val (b3, p3a) = runScale("/tmp/graft_sf3", 30, 1)
     val (_,  p3b) = runScale("/tmp/graft_sf3", 30, 2)
-    def spread(a: Double, b: Double): Double =
-      math.max(a, b) / math.max(math.min(a, b), 0.1)
     val rows = ExponentTier.map { q =>
       val (a1, a2, b1r, b2) = (p1a(q), p1b(q), p3a(q), p3b(q))
       val w1 = math.min(a1.warm, a2.warm)
       val w3 = math.min(b1r.warm, b2.warm)
-      // exponent from min-across-sessions warm points (cold includes
-      // one-time index builds the serving story amortizes); floor at
-      // 0.2 s to keep log-noise out of sub-second families
-      val e = math.log(math.max(w3, 0.2) / math.max(w1, 0.2)) / math.log(3.0)
-      s""""${q.takeWhile(_ != '_')}":{"sf1_cold":${fmt(a1.cold)},"sf1_warm":${fmt(w1)},""" +
-      s""""sf1_warm_p1":${fmt(a1.warm)},"sf1_warm_p2":${fmt(a2.warm)},""" +
-      s""""sf1_spread":${fmt(spread(a1.warm, a2.warm))},""" +
-      s""""sf3_cold":${fmt(b1r.cold)},"sf3_warm":${fmt(w3)},""" +
-      s""""sf3_warm_p1":${fmt(b1r.warm)},"sf3_warm_p2":${fmt(b2.warm)},""" +
-      s""""sf3_spread":${fmt(spread(b1r.warm, b2.warm))},""" +
-      s""""rows_sf1":${a1.rows},"rows_sf3":${b1r.rows},"warm_exponent":${fmt(e)}}"""
+      s""""${short(q)}":{"sf1_cold":${f(a1.cold)},"sf1_warm":${f(w1)},""" +
+      s""""sf1_warm_p1":${f(a1.warm)},"sf1_warm_p2":${f(a2.warm)},""" +
+      s""""sf1_spread":${f(spread(a1.warm, a2.warm))},""" +
+      s""""sf3_cold":${f(b1r.cold)},"sf3_warm":${f(w3)},""" +
+      s""""sf3_warm_p1":${f(b1r.warm)},"sf3_warm_p2":${f(b2.warm)},""" +
+      s""""sf3_spread":${f(spread(b1r.warm, b2.warm))},""" +
+      s""""rows_sf1":${a1.rows},"rows_sf3":${b1r.rows},"warm_exponent":${f(warmExponent(w1, w3))}}"""
     }
-    val unstableQs = ExponentTier.filter { q =>
-      spread(p1a(q).warm, p1b(q).warm) > 2.0 ||
-        spread(p3a(q).warm, p3b(q).warm) > 2.0
+    val unstable = ExponentTier
+      .map(q => q -> math.max(spread(p1a(q).warm, p1b(q).warm), spread(p3a(q).warm, p3b(q).warm)))
+      .filter(_._2 > 2.0)
+    val isoRows = (unstable.map(_._1) :+ "q273_graph_ann_insert").distinct.map { q =>
+      val i1 = isolatedWarm(src, "/tmp/graft_sf1", 10, q)
+      val i3 = isolatedWarm(src, "/tmp/graft_sf3", 30, q)
+      s""""${short(q)}":{"sf1":${f(i1)},"sf3":${f(i3)},"exponent":${f(warmExponent(i1, i3))}}"""
     }
-    val unstable = unstableQs.map(q =>
-      s""""${q.takeWhile(_ != '_')}":${fmt(
-        math.max(spread(p1a(q).warm, p1b(q).warm),
-                 spread(p3a(q).warm, p3b(q).warm)))}""")
-    // Round-18 (verdict #5): the SF1 sweep's isolation discipline
-    // extended to this tier — every >2×-spread family gets a PER-FAMILY
-    // FRESH-SESSION warm at BOTH scales (empty session caches, no
-    // in-suite neighbors) and an exponent recomputed from those points,
-    // so no headline exponent rests on an unconfirmed noisy reading.
-    // q273 rides along unconditionally: its committed −0.38 was the
-    // round-17 verdict's widest open attribution.
-    def isoWarm(out: String, copies: Int, q: String): Double = {
-      val s = core.Sessions.local(32,
-        s"sf3-iso-$copies-${q.takeWhile(_ != '_')}")
-      try {
-        build(s, src, out, copies) // marker-skipped: corpus exists
-        def once(): Double = {
-          val s0 = System.nanoTime()
-          SparkEntry.queries(q)(s, out).count()
-          (System.nanoTime() - s0) / 1e9
-        }
-        once() // cold (the family's own one-time index builds)
-        val w = math.min(once(), once())
-        System.err.println(f"[sf3iso x$copies] $q isolated_warm=$w%.1f")
-        w
-      } finally {
-        s.stop()
-        org.apache.spark.sql.SparkSession.clearActiveSession()
-        org.apache.spark.sql.SparkSession.clearDefaultSession()
-      }
-    }
-    val isoRows = (unstableQs :+ "q273_graph_ann_insert").distinct.map { q =>
-      val i1 = isoWarm("/tmp/graft_sf1", 10, q)
-      val i3 = isoWarm("/tmp/graft_sf3", 30, q)
-      val e = math.log(math.max(i3, 0.2) / math.max(i1, 0.2)) / math.log(3.0)
-      s""""${q.takeWhile(_ != '_')}":{"sf1":${fmt(i1)},"sf3":${fmt(i3)},""" +
-      s""""exponent":${fmt(e)}}"""
-    }
-    val line = s"""{"metric":"sf3_scaling","tier_size":${ExponentTier.size},""" +
+    Harness.writeArtifact("BENCH_SF3.json",
+      s"""{"metric":"sf3_scaling","tier_size":${ExponentTier.size},""" +
       s""""passes":2,"order":"seeded-shuffle per pass","warm":"min across sessions",""" +
-      s""""build_sec_sf1":${fmt(b1)},"build_sec_sf3":${fmt(b3)},""" +
-      s""""unstable_over_2x":{${unstable.mkString(",")}},""" +
+      s""""build_sec_sf1":${f(b1)},"build_sec_sf3":${f(b3)},""" +
+      s""""unstable_over_2x":{${unstable.map { case (q, s) => s""""${short(q)}":${f(s)}""" }.mkString(",")}},""" +
       s""""isolated":{${isoRows.mkString(",")}},""" +
-      s""""families":{${rows.mkString(",")}}}"""
-    println(line)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SF3.json"), line + "\n")
+      s""""families":{${rows.mkString(",")}}}""")
   }
 
   /** Deterministic CLUSTERED vector corpus for the q38/q274 pruning
@@ -308,6 +300,25 @@ object ScaleRehearsal {
         concat(lit("l"), pmod(col("g"), lit(4)).cast("string")).as("label"))
   }
 
+  /** Exact-DUPLICATE clustered corpus (round-17 verdict #4's geometry):
+    * `n` vectors in `nClusters` groups, every member of a group
+    * byte-IDENTICAL (one hash-random vector per group) — the crawl-corpus
+    * case where exact collapse detaches compute from output. Cluster
+    * assignment id % nClusters interleaves ids across clusters.
+    */
+  private def dupeVecs(spark: SparkSession, n: Long,
+                       nClusters: Long): DataFrame = {
+    import org.apache.spark.sql.Column
+    def unit(tag: String, key: Column, p: Column): Column =
+      pmod(xxhash64(lit(tag), key, p), lit(2000001L)).cast("double") / 1e6 - 1.0
+    spark.range(n).select(col("id").as("vec_id"),
+        (col("id") % nClusters).as("g"))
+      .select(col("vec_id"),
+        transform(sequence(lit(0), lit(63)),
+                  p => unit("D", col("g"), p).cast("float")).as("embedding"),
+        concat(lit("l"), pmod(col("g"), lit(4)).cast("string")).as("label"))
+  }
+
   /** The q38/q274 "real corpora cluster, the ball cover prunes" claim,
     * measured instead of asserted (round-16 verdict #2). Three corpus
     * geometries at two scales (10/30 × the sf0.1 vector count), both
@@ -339,109 +350,66 @@ object ScaleRehearsal {
     * Writes BENCH_CLUSTERED.json.
     * Usage: runMain graft.ScaleRehearsal clustered [srcDir]
     */
-  /** Exact-DUPLICATE clustered corpus (round-17 verdict #4's geometry):
-    * `n` vectors in `nClusters` groups, every member of a group
-    * byte-IDENTICAL (one hash-random vector per group) — the crawl-corpus
-    * case where exact collapse detaches compute from output. Cluster
-    * assignment id % nClusters interleaves ids across clusters.
-    */
-  private def dupeVecs(spark: SparkSession, n: Long,
-                       nClusters: Long): DataFrame = {
-    import org.apache.spark.sql.Column
-    def unit(tag: String, key: Column, p: Column): Column =
-      pmod(xxhash64(lit(tag), key, p), lit(2000001L)).cast("double") / 1e6 - 1.0
-    spark.range(n).select(col("id").as("vec_id"),
-        (col("id") % nClusters).as("g"))
-      .select(col("vec_id"),
-        transform(sequence(lit(0), lit(63)),
-                  p => unit("D", col("g"), p).cast("float")).as("embedding"),
-        concat(lit("l"), pmod(col("g"), lit(4)).cast("string")).as("label"))
-  }
-
   private def clusteredMain(src: String): Unit = {
     import graft.operators.Similarity
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val nBase = {
-      val s0 = core.Sessions.local(8, "clustered-probe")
-      val n = s0.read.parquet(s"$src/embeddings.parquet").count()
-      s0.stop()
-      org.apache.spark.sql.SparkSession.clearActiveSession()
-      org.apache.spark.sql.SparkSession.clearDefaultSession()
-      n
-    }
+    def f(v: Double) = fmt(v, 2)
+    val nBase = Harness.session("clustered-probe")(_.read.parquet(s"$src/embeddings.parquet").count())
     val t    = 0.95
     val tLow = 0.4 // q38's gated threshold: the regime where the cover
                    // provably cannot prune (gated_threshold_note below)
-    case class Pt(cold: Double, warm: Double, rows: Long, shuffleRows: Long)
     // one (mode, scale, op) measurement in a FRESH session: cold + two
-    // warm reps (warm = min), shuffle rows captured over the warm-min rep
-    // window as the candidate-volume witness
-    def measure(mode: String, copies: Int, op: String): Pt = {
-      val n = nBase * copies
-      val spark = core.Sessions.local(32, s"clustered-$mode-$copies-$op")
-      spark.range(1000).selectExpr("sum(id)").collect()
-      // decorrelated reuses the standard rehearsal corpora (shared with
-      // the exponents mode — usually already built)
-      val dirPath =
-        if (mode == "decorrelated") s"/tmp/graft_sf${if (copies == 10) 1 else 3}"
-        else s"/tmp/graft_clu_${mode}_$copies"
-      val vecs =
-        if (mode == "decorrelated") {
-          build(spark, src, dirPath, copies)
-          spark.read.parquet(s"$dirPath/embeddings.parquet")
-        } else {
-          val f = new java.io.File(s"$dirPath/embeddings.parquet/_SUCCESS")
-          if (!f.exists) {
-            val gen =
-              if (mode == "dupes") dupeVecs(spark, n, n / 40)
-              else clusteredVecs(spark, n, if (mode == "macro") 6L else n / 40)
-            gen.write.mode("overwrite").parquet(s"$dirPath/embeddings.parquet")
+    // warm reps (warm = min), shuffle rows captured over the warm reps
+    // as the candidate-volume witness
+    def measure(mode: String, copies: Int, op: String): Pt =
+      Harness.session(s"clustered-$mode-$copies-$op") { spark =>
+        val n = nBase * copies
+        // decorrelated reuses the standard rehearsal corpora (shared with
+        // the exponents mode — usually already built)
+        val dirPath =
+          if (mode == "decorrelated") s"/tmp/graft_sf${if (copies == 10) 1 else 3}"
+          else s"/tmp/graft_clu_${mode}_$copies"
+        val vecs =
+          if (mode == "decorrelated") {
+            build(spark, src, dirPath, copies)
+            spark.read.parquet(s"$dirPath/embeddings.parquet")
+          } else {
+            if (!new java.io.File(s"$dirPath/embeddings.parquet/_SUCCESS").exists) {
+              val gen =
+                if (mode == "dupes") dupeVecs(spark, n, n / 40)
+                else clusteredVecs(spark, n, if (mode == "macro") 6L else n / 40)
+              gen.write.mode("overwrite").parquet(s"$dirPath/embeddings.parquet")
+            }
+            spark.read.parquet(s"$dirPath/embeddings.parquet")
           }
-          spark.read.parquet(s"$dirPath/embeddings.parquet")
+        val sm = new ServeMetrics
+        spark.sparkContext.addSparkListener(sm)
+        def frame(): DataFrame = op match {
+          case "q38op" =>
+            Similarity.exactNearDupBlocked(vecs, "vec_id", "embedding", t)
+          case "topk" =>
+            Similarity.nearDupTopK(vecs, "vec_id", "embedding", t, 5)
+          case "q38op_lowt" =>
+            Similarity.exactNearDupBlocked(vecs, "vec_id", "embedding", tLow)
+          case "preblock" =>
+            Similarity.nearDupPreBlockedLsh(vecs, "vec_id", "embedding", tLow)
+          case "collapsed" =>
+            Similarity.exactNearDupCollapsed(vecs, "vec_id", "embedding", t)
+          case other => sys.error(s"unknown clustered op $other")
         }
-      val sm = new org.apache.spark.graftbus.ServeMetrics
-      spark.sparkContext.addSparkListener(sm)
-      def frame(): org.apache.spark.sql.DataFrame = op match {
-        case "q38op" =>
-          Similarity.exactNearDupBlocked(vecs, "vec_id", "embedding", t)
-        case "topk" =>
-          Similarity.nearDupTopK(vecs, "vec_id", "embedding", t, 5)
-        case "q38op_lowt" =>
-          Similarity.exactNearDupBlocked(vecs, "vec_id", "embedding", tLow)
-        case "preblock" =>
-          Similarity.nearDupPreBlockedLsh(vecs, "vec_id", "embedding", tLow)
-        case "collapsed" =>
-          Similarity.exactNearDupCollapsed(vecs, "vec_id", "embedding", t)
-        case other => sys.error(s"unknown clustered op $other")
+        def once() = sm.measure(spark.sparkContext)(frame().count())
+        val (c, rows, _) = once()
+        val warm = Seq.fill(2)(once())
+        val pt = Pt(c, warm.map(_._1).min, rows, warm.map(_._3.shuffleWriteRows).min)
+        System.err.println(f"[clustered $mode x$copies $op] cold=$c%.1f " +
+          f"warm=${pt.warm}%.1f rows=$rows shuffleRows=${pt.shuffleRows}")
+        pt
       }
-      def once(): (Double, Long, Long) = {
-        sm.reset(spark.sparkContext)
-        val s0 = System.nanoTime()
-        val rows = frame().count()
-        val sec = (System.nanoTime() - s0) / 1e9
-        val wr = sm.snapshot(spark.sparkContext).shuffleWriteRows
-        (sec, rows, wr)
-      }
-      val (c, rows, _)  = once()
-      val (w1, _, sr1)  = once()
-      val (w2, _, sr2)  = once()
-      val pt = Pt(c, math.min(w1, w2), rows, math.min(sr1, sr2))
-      System.err.println(f"[clustered $mode x$copies $op] cold=$c%.1f " +
-        f"warm=${pt.warm}%.1f rows=$rows shuffleRows=${pt.shuffleRows}")
-      spark.stop()
-      org.apache.spark.sql.SparkSession.clearActiveSession()
-      org.apache.spark.sql.SparkSession.clearDefaultSession()
-      pt
-    }
-    def opJson(op: String, p1: Pt, p3: Pt): String = {
-      val e = math.log(math.max(p3.warm, 0.2) / math.max(p1.warm, 0.2)) /
-        math.log(3.0)
-      s""""$op":{"sf1_warm":${fmt(p1.warm)},"sf3_warm":${fmt(p3.warm)},""" +
-      s""""sf1_cold":${fmt(p1.cold)},"sf3_cold":${fmt(p3.cold)},""" +
+    def opJson(op: String, p1: Pt, p3: Pt): String =
+      s""""$op":{"sf1_warm":${f(p1.warm)},"sf3_warm":${f(p3.warm)},""" +
+      s""""sf1_cold":${f(p1.cold)},"sf3_cold":${f(p3.cold)},""" +
       s""""rows_sf1":${p1.rows},"rows_sf3":${p3.rows},""" +
       s""""shuffle_rows_sf1":${p1.shuffleRows},""" +
-      s""""shuffle_rows_sf3":${p3.shuffleRows},"warm_exponent":${fmt(e)}}"""
-    }
+      s""""shuffle_rows_sf3":${p3.shuffleRows},"warm_exponent":${f(warmExponent(p1.warm, p3.warm))}}"""
     def runOps(mode: String, ops: Seq[String]): (String, Map[String, (Pt, Pt)]) = {
       val pts = ops.map { op =>
         op -> (measure(mode, 10, op), measure(mode, 30, op))
@@ -461,7 +429,7 @@ object ScaleRehearsal {
       def recall(pick: ((Pt, Pt)) => Pt): String = {
         val ex = pick(pts("q38op_lowt")).rows
         val fd = pick(pts("preblock")).rows
-        if (ex == 0) "null" else fmt(fd.toDouble / ex)
+        if (ex == 0) "null" else f(fd.toDouble / ex)
       }
       s""""$m":{$js,"recall_sf1":${recall(_._1)},""" +
       s""""recall_sf3":${recall(_._2)}}"""
@@ -473,7 +441,7 @@ object ScaleRehearsal {
     val rowsEqual =
       dupPts("q38op")._1.rows == dupPts("collapsed")._1.rows &&
       dupPts("q38op")._2.rows == dupPts("collapsed")._2.rows
-    val line =
+    Harness.writeArtifact("BENCH_CLUSTERED.json",
       s"""{"metric":"neardup_clustered","threshold":$t,"low_threshold_t":$tLow,""" +
       s""""n_base":$nBase,"scales":[10,30],"modes":{${modesOut.mkString(",")}},""" +
       s""""low_threshold":{${lowOut.mkString(",")}},""" +
@@ -484,325 +452,197 @@ object ScaleRehearsal {
       s"""pruning cannot hold there on any data; the measured 100 TB paths """ +
       s"""at low thresholds are the capped q274 contract, the q278 """ +
       s"""banded-LSH pre-blocker (recall per cosine band in q280), and the """ +
-      s"""q279 exact-duplicate collapse for dup-heavy corpora"}"""
-    println(line)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_CLUSTERED.json"), line + "\n")
+      s"""q279 exact-duplicate collapse for dup-heavy corpora"}""")
   }
+
+  /** Per-stage wall time and shuffle constants of one 100× run, read from
+    * the graftbus listener.
+    */
+  private final class Stages(spark: SparkSession, tag: String) {
+    private val sm = new ServeMetrics
+    spark.sparkContext.addSparkListener(sm)
+    private val entries = scala.collection.mutable.LinkedHashMap[String, String]()
+    def json: String = entries.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+
+    /** Runs `action` as stage `name` and returns its row count. The
+      * artifact field `perField` holds the stage's shuffle write bytes per
+      * `per` input rows, or per output row when `per` is None: a serve
+      * leg's shuffle is query-batch-sized by contract, so dividing it by
+      * the corpus would give a "constant" that shrinks with corpus size.
+      */
+    def apply(name: String, perField: String, per: Option[Long])(action: => Long): Long = {
+      val (sec, n, m) = sm.measure(spark.sparkContext)(action)
+      val wb = m.shuffleWriteBytes
+      entries(name) =
+        s"""{"sec":${fmt(sec, 2)},"rows_out":$n,"shuffle_write_bytes":$wb,""" +
+        s""""shuffle_rows":${m.shuffleWriteRows},"shuffle_read_bytes":${m.shuffleReadBytes},""" +
+        s""""$perField":${fmt(wb.toDouble / math.max(per.getOrElse(n), 1L), 2)}}"""
+      System.err.println(s"[$tag] $name ${entries(name)}")
+      n
+    }
+  }
+
+  /** The 100× modes' shared harness: 100 copies of sf0.1 (~500k
+    * documents, ~200k vectors) in /tmp/graft_sf10, `spark.sql.shuffle.
+    * partitions` sized as a cluster deployment would be (256), the build
+    * timed. `body` runs its [[Stages]] and returns the artifact's fields
+    * that go before `shuffle_partitions` and after `build_sec`.
+    */
+  private def at100x(src: String, metric: String, file: String)(
+      body: (SparkSession, String, Stages) => (String, String)): Unit =
+    Harness.session(metric) { spark =>
+      spark.conf.set("spark.sql.shuffle.partitions", "256")
+      val out = "/tmp/graft_sf10"
+      val (buildSec, _) = timed(build(spark, src, out, copies = 100))
+      val stages = new Stages(spark, metric)
+      val (head, tail) = body(spark, out, stages)
+      Harness.writeArtifact(file,
+        s"""{"metric":"$metric","copies":100,$head,"shuffle_partitions":256,""" +
+        s""""build_sec":${fmt(buildSec, 2)},$tail"stages":${stages.json}}""")
+    }
 
   /** 100×-shape demonstration (round-14 verdict stretch): the single most
     * load-bearing operator chain — MinHash LSH end-to-end (sign → band →
-    * candidate mine → exact verify → connected components) — run at sf10
-    * (100 copies of sf0.1: ~500k documents) with
-    * `spark.sql.shuffle.partitions` sized as a cluster deployment would
-    * be (256), recording per-stage wall time and SHUFFLE BYTES/ROWS so
-    * the 100 TB extrapolation in PERF.md cites measured constants
-    * (shuffle bytes per corpus document) instead of a shape argument.
+    * candidate mine → exact verify → connected components) — at 100×,
+    * recording per-stage wall time and SHUFFLE BYTES/ROWS so the 100 TB
+    * extrapolation in PERF.md cites measured constants (shuffle bytes per
+    * corpus document) instead of a shape argument. Writes
+    * BENCH_LSH100X.json.
     * Usage: runMain graft.ScaleRehearsal lsh100x [srcDir]
     */
-  private def lsh100xMain(src: String): Unit = {
-    import graft.operators.Dedup
-    val out = "/tmp/graft_sf10"
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").appName("lsh-100x")
-      .config("spark.sql.shuffle.partitions", "256")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val tb = System.nanoTime()
-    build(spark, src, out, copies = 100)
-    val buildSec = (System.nanoTime() - tb) / 1e9
-    val docs = spark.read.parquet(s"$out/documents.parquet")
-    val nDocs = docs.count()
-    val sm = new org.apache.spark.graftbus.ServeMetrics
-    spark.sparkContext.addSparkListener(sm)
-    val stages = scala.collection.mutable.LinkedHashMap[String, String]()
-    def stage(name: String)(action: => Long): Long = {
-      sm.reset(spark.sparkContext)
-      val t0 = System.nanoTime()
-      val n = action
-      val sec = (System.nanoTime() - t0) / 1e9
-      val m = sm.snapshot(spark.sparkContext)
-      val (wb, wr, rb) = (m.shuffleWriteBytes, m.shuffleWriteRows, m.shuffleReadBytes)
-      stages(name) =
-        s"""{"sec":${fmt(sec)},"rows_out":$n,"shuffle_write_bytes":$wb,""" +
-        s""""shuffle_rows":$wr,"shuffle_read_bytes":$rb,""" +
-        s""""write_bytes_per_doc":${fmt(wb.toDouble / nDocs)}}"""
-      System.err.println(s"[lsh100x] $name ${stages(name)}")
-      n
+  private def lsh100xMain(src: String): Unit =
+    at100x(src, "lsh_100x", "BENCH_LSH100X.json") { (spark, out, stage) =>
+      import graft.operators.Dedup
+      val docs = spark.read.parquet(s"$out/documents.parquet")
+      val nDocs = docs.count()
+      // Constructions happen INSIDE the stage blocks: the dedup operators
+      // run their mining EAGERLY at DataFrame-construction time (their
+      // Materialize lineage cuts), so building them outside would bill
+      // every real job to no stage.
+      var cand: DataFrame = null
+      // Stage 1 — sign + band + bucket-join candidate mining (the q36
+      // machinery at its shipped 8-hash/4-band shape, cached signatures).
+      val nCand = stage("mine_candidates", "write_bytes_per_doc", Some(nDocs)) {
+        cand = Dedup.minhashCandidates(docs, "doc_id", "text")
+        cand.count()
+      }
+      // Stage 2 — exact Jaccard verification of the candidates against the
+      // full shingle sets.
+      var verified: DataFrame = null
+      val nPairs = stage("verify_pairs", "write_bytes_per_doc", Some(nDocs)) {
+        val sh = Dedup.shingled(docs, "doc_id", "text")
+        verified = core.Materialize.cachedWhile(sh)(
+          core.Materialize.cutLocal(Dedup.verifyPairs(cand, sh, threshold = 0.5)))
+        verified.count()
+      }
+      // Stage 3 — connected components over the verified dup edges
+      // (endpoints-only label propagation: the cluster-labeling leg).
+      val nDups = stage("connected_components", "write_bytes_per_doc", Some(nDocs)) {
+        val cc = Dedup.connectedComponents(
+          docs.select(col("doc_id").as("id")), verified, "doc_a", "doc_b")
+        cc.filter(col("id") =!= col("cluster_id")).count()
+      }
+      (s""""n_docs":$nDocs""",
+        s""""n_candidates":$nCand,"n_verified_pairs":$nPairs,"n_dup_docs":$nDups,""")
     }
-    // Constructions happen INSIDE the stage blocks: the dedup operators
-    // run their mining EAGERLY at DataFrame-construction time (their
-    // Materialize lineage cuts), so building them outside
-    // would bill every real job to no stage (the first capture measured
-    // 0.15 s / 118 shuffle bytes for the whole mine — all its work had
-    // already run at construction).
-    var cand: org.apache.spark.sql.DataFrame = null
-    // Stage 1 — sign + band + bucket-join candidate mining (the q36
-    // machinery at its shipped 8-hash/4-band shape, cached signatures).
-    val nCand = stage("mine_candidates") {
-      cand = Dedup.minhashCandidates(docs, "doc_id", "text")
-      cand.count()
-    }
-    // Stage 2 — exact Jaccard verification of the candidates against the
-    // full shingle sets.
-    var verified: org.apache.spark.sql.DataFrame = null
-    val nPairs = stage("verify_pairs") {
-      val sh = Dedup.shingled(docs, "doc_id", "text")
-      verified = core.Materialize.cachedWhile(sh)(
-        core.Materialize.cutLocal(Dedup.verifyPairs(cand, sh, threshold = 0.5)))
-      verified.count()
-    }
-    // Stage 3 — connected components over the verified dup edges
-    // (endpoints-only label propagation: the cluster-labeling leg).
-    val nDups = stage("connected_components") {
-      val cc = Dedup.connectedComponents(
-        docs.select(col("doc_id").as("id")), verified, "doc_a", "doc_b")
-      cc.filter(col("id") =!= col("cluster_id")).count()
-    }
-    val line =
-      s"""{"metric":"lsh_100x","copies":100,"n_docs":$nDocs,""" +
-      s""""shuffle_partitions":256,"build_sec":${fmt(buildSec)},""" +
-      s""""n_candidates":$nCand,"n_verified_pairs":$nPairs,"n_dup_docs":$nDups,""" +
-      s""""stages":{${stages.map { case (k, v) => s""""$k":$v""" }.mkString(",")}}}"""
-    println(line)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_LSH100X.json"), line + "\n")
-    spark.stop()
-  }
 
   /** 100×-shape shuffle constants for the two heaviest BUILDS beyond the
     * LSH chain (round-15 verdict #4): NN-descent graph construction
     * (q268's build leg — the most expensive index build, sf3 cold
     * 49.6 s) and the q119 covariance scan (the d²-moment aggregation
-    * whose committed sf1 point was the contention casualty). Same
-    * harness discipline as [[lsh100xMain]]: 100 copies of sf0.1
-    * (~200k vectors, ~500k docs), cluster-shaped
-    * `spark.sql.shuffle.partitions` = 256, per-stage wall time + shuffle
-    * bytes/rows from the graftbus listener, bytes-per-input-row constants
-    * in the artifact. Writes BENCH_HEAVY100X.json.
+    * whose committed sf1 point was the contention casualty), with
+    * bytes-per-input-row constants. Writes BENCH_HEAVY100X.json.
     * Usage: runMain graft.ScaleRehearsal heavy100x [srcDir]
     */
-  private def heavy100xMain(src: String): Unit = {
-    val out = "/tmp/graft_sf10"
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[32]").appName("heavy-100x")
-      .config("spark.sql.shuffle.partitions", "256")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.2f", Double.box(v))
-    val tb = System.nanoTime()
-    build(spark, src, out, copies = 100)
-    val buildSec = (System.nanoTime() - tb) / 1e9
-    val nVecs = spark.read.parquet(s"$out/embeddings.parquet").count()
-    val sm = new org.apache.spark.graftbus.ServeMetrics
-    spark.sparkContext.addSparkListener(sm)
-    val stages = scala.collection.mutable.LinkedHashMap[String, String]()
-    // perRow ≤ 0 → normalize by the stage's OWN output row count instead
-    // of the corpus size (round-16 advice: the serve leg's shuffle is
-    // query-batch-sized by contract, so dividing it by nVecs produced a
-    // "constant" that shrank with corpus size and compared across scales
-    // as if it were one).
-    def stage(name: String, perRow: Long)(action: => Long): Long = {
-      sm.reset(spark.sparkContext)
-      val t0 = System.nanoTime()
-      val n = action
-      val sec = (System.nanoTime() - t0) / 1e9
-      val m = sm.snapshot(spark.sparkContext)
-      val (wb, wr, rb) = (m.shuffleWriteBytes, m.shuffleWriteRows, m.shuffleReadBytes)
-      val norm =
-        if (perRow > 0) s""""write_bytes_per_row":${fmt(wb.toDouble / perRow)}"""
-        else s""""write_bytes_per_out_row":${fmt(wb.toDouble / math.max(n, 1))}"""
-      stages(name) =
-        s"""{"sec":${fmt(sec)},"rows_out":$n,"shuffle_write_bytes":$wb,""" +
-        s""""shuffle_rows":$wr,"shuffle_read_bytes":$rb,$norm}"""
-      System.err.println(s"[heavy100x] $name ${stages(name)}")
-      n
+  private def heavy100xMain(src: String): Unit =
+    at100x(src, "heavy_100x", "BENCH_HEAVY100X.json") { (spark, out, stage) =>
+      val nVecs = spark.read.parquet(s"$out/embeddings.parquet").count()
+      // Stage 1 — NN-descent BUILD: md5 block init (N·draws·(block−1)
+      // candidate pairs), refinement rounds (edge-of-edge expansion), all
+      // through the bounded TopKPairs heap. Forcing the frame runs the
+      // whole build; the serve-side beam never enters.
+      stage("nnd_build", "write_bytes_per_row", Some(nVecs)) {
+        graft.queries.VectorQueries.nndBuildFrame(spark, out).count()
+      }
+      // Stage 2 — the q268 serve leg over the NOW-CACHED graph: its
+      // marginal shuffle constants must be corpus-size-free (query-batch
+      // sized), which is the session-artifact claim made measurable.
+      stage("nnd_serve_marginal", "write_bytes_per_out_row", None) {
+        SparkEntry.queries("q268_graph_ann_beam")(spark, out).count()
+      }
+      // Stage 3 — q119 covariance: the one-scan d²-moment partial+final
+      // aggregation; shuffle volume must be the d²-cell constant ×
+      // partitions, NOT proportional to the corpus.
+      stage("covariance_scan", "write_bytes_per_row", Some(nVecs)) {
+        SparkEntry.queries("q119_covariance")(spark, out).count()
+      }
+      (s""""n_vectors":$nVecs""", "")
     }
-    // Stage 1 — NN-descent BUILD: md5 block init (N·draws·(block−1)
-    // candidate pairs), refinement rounds (edge-of-edge expansion), all
-    // through the bounded TopKPairs heap. Forcing the frame runs the
-    // whole build; the serve-side beam never enters.
-    stage("nnd_build", nVecs) {
-      graft.queries.VectorQueries.nndBuildFrame(spark, out).count()
-    }
-    // Stage 2 — the q268 serve leg over the NOW-CACHED graph: its
-    // marginal shuffle constants must be corpus-size-free (query-batch
-    // sized), which is the session-artifact claim made measurable —
-    // normalized by ITS OWN output rows (perRow = -1), not the corpus.
-    stage("nnd_serve_marginal", -1) {
-      SparkEntry.queries("q268_graph_ann_beam")(spark, out).count()
-    }
-    // Stage 3 — q119 covariance: the one-scan d²-moment partial+final
-    // aggregation; shuffle volume must be the d²-cell constant ×
-    // partitions, NOT proportional to the corpus.
-    stage("covariance_scan", nVecs) {
-      SparkEntry.queries("q119_covariance")(spark, out).count()
-    }
-    val line =
-      s"""{"metric":"heavy_100x","copies":100,"n_vectors":$nVecs,""" +
-      s""""shuffle_partitions":256,"build_sec":${fmt(buildSec)},""" +
-      s""""stages":{${stages.map { case (k, v) => s""""$k":$v""" }.mkString(",")}}}"""
-    println(line)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_HEAVY100X.json"), line + "\n")
-    spark.stop()
-  }
 
   /** FULL-SUITE sf1 rehearsal: every `SparkEntry.queries` entry cold +
-    * warm at 10 copies — closing
-    * the round-14 verdict's top gap ("219/257 families have no measured
-    * 10× point").
+    * warm at 10 copies — closing the round-14 verdict's top gap
+    * ("219/257 families have no measured 10× point").
     *
-    * Round-16 isolation discipline (verdict #1: the round-15 artifact
-    * committed contention-inflated readings — q119 at 113.6 s where a
-    * same-day sibling sweep read 4.3 s — and the honest min lived only
-    * in prose): the sweep now runs TWO passes in SEPARATE sessions, each
-    * with a differently-seeded deterministic SHUFFLE of the family order
-    * (so a transient load spike can't sit on the same families twice),
-    * and the artifact of record persists, per family, the MIN across
-    * passes AND the spread (both warm readings + max/min ratio). A
-    * family whose two warm readings disagree by more than 2× is flagged
-    * in `unstable` — the artifact carries its own trust signal instead
-    * of needing a "read the min, which is elsewhere" disclaimer.
+    * The sweep runs TWO passes in SEPARATE sessions, each with a
+    * differently-seeded deterministic SHUFFLE of the family order (so a
+    * transient load spike can't sit on the same families twice), and the
+    * artifact persists, per family, the MIN across passes AND the spread
+    * (both warm readings + max/min ratio). A family whose two warm
+    * readings disagree by more than 2× is flagged in `unstable` and gets
+    * an [[isolatedWarm]] reading, committed as `isolated_warm`, so the
+    * artifact carries its own trust signal.
     * Usage: runMain graft.ScaleRehearsal full [srcDir] [outDir]
     */
   private def fullMain(src: String, out: String): Unit = {
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.1f", Double.box(v))
+    def f(v: Double) = fmt(v, 1)
     val names = SparkEntry.queries.keys.toSeq
       .sortBy(n => (n.drop(1).takeWhile(_.isDigit).toInt, n))
-    case class Pt(cold: Double, warm: Double, rows: Long)
-    def runPass(pass: Int): (Double, Map[String, Pt], Map[String, String]) = {
-      val spark = core.Sessions.local(32, s"scale-rehearsal-full-p$pass")
-      spark.range(1000).selectExpr("sum(id)").collect()
-      val t0 = System.nanoTime()
-      build(spark, src, out, copies = 10)
-      val buildSec = (System.nanoTime() - t0) / 1e9
-      // deterministic per-pass shuffle (seeded Fisher–Yates via Random):
-      // decorrelates family order across passes so external contention
-      // never lands on the same family twice
-      val order = new scala.util.Random(7919 * (pass + 1)).shuffle(names)
-      val pts  = scala.collection.mutable.HashMap[String, Pt]()
-      val errs = scala.collection.mutable.HashMap[String, String]()
-      for (q <- order) {
-        def once(): (Double, Long) = {
-          val s0 = System.nanoTime()
-          val n = SparkEntry.queries(q)(spark, out).count()
-          ((System.nanoTime() - s0) / 1e9, n)
-        }
-        try {
-          val (c, rows) = once()
-          val (w, _)    = once()
-          pts(q) = Pt(c, w, rows)
-          System.err.println(f"[sf1full p$pass] $q cold=$c%.1f warm=$w%.1f rows=$rows")
-        } catch { case e: Throwable =>
-          errs(q) = e.getClass.getSimpleName + ": " +
-            String.valueOf(e.getMessage).take(200)
-          System.err.println(s"[sf1full p$pass] $q ERR ${errs(q)}")
-        }
-      }
-      spark.stop()
-      org.apache.spark.sql.SparkSession.clearActiveSession()
-      org.apache.spark.sql.SparkSession.clearDefaultSession()
-      (buildSec, pts.toMap, errs.toMap)
-    }
+    def runPass(pass: Int) = sweep(src, out, 10, s"scale-rehearsal-full-p$pass",
+      new scala.util.Random(7919 * (pass + 1)).shuffle(names), warmReps = 1)
     val (b1, p1, e1) = runPass(1)
     val (_,  p2, e2) = runPass(2)
     def m(kv: Iterable[(String, String)]): String =
       kv.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    def short(k: String) = k.takeWhile(_ != '_')
     val both = names.filter(q => p1.contains(q) && p2.contains(q))
     // cold comes from pass 1 ONLY: pass 2 runs in the same JVM after
     // pass 1 has JIT-compiled every query path and page-cached the
     // parquet, so a min across passes would publish a systematically
-    // warmer-than-true "cold" (round-16 advice). warm stays min-of-2.
-    val cold = both.map(q => short(q) -> fmt(p1(q).cold))
-    val warm = both.map(q => short(q) -> fmt(math.min(p1(q).warm, p2(q).warm)))
-    val w1   = both.map(q => short(q) -> fmt(p1(q).warm))
-    val w2   = both.map(q => short(q) -> fmt(p2(q).warm))
+    // warmer-than-true "cold". warm stays min-of-2.
+    val cold = both.map(q => short(q) -> f(p1(q).cold))
+    val warm = both.map(q => short(q) -> f(math.min(p1(q).warm, p2(q).warm)))
+    val w1   = both.map(q => short(q) -> f(p1(q).warm))
+    val w2   = both.map(q => short(q) -> f(p2(q).warm))
     val rows = both.map(q => short(q) -> p1(q).rows.toString)
-    def spreadOf(q: String): Double = {
-      val (a, b) = (p1(q).warm, p2(q).warm)
-      math.max(a, b) / math.max(math.min(a, b), 0.1) // 0.1 s noise floor
-    }
+    def spreadOf(q: String): Double = spread(p1(q).warm, p2(q).warm)
     val unstableNames = both.filter(spreadOf(_) > 2.0)
-    val unstable = unstableNames.map(q => short(q) -> fmt(spreadOf(q)))
-    // Round-17 burn-down (round-16 verdict #5: 33 families spread >2×
-    // between passes — the min is trustworthy, the individual readings
-    // aren't): every >2× family gets a PER-FAMILY FRESH-SESSION
-    // measurement — a new SparkSession whose session caches are empty
-    // and whose in-suite neighbors can't perturb it — committed as
-    // `isolated_warm`. The sweep's in-suite spread is thereby attributed:
-    // where isolated ≈ the sweep min, the spread was in-suite
-    // interference (shared-memo build order + GC inheritance), not the
-    // family's own cost.
-    def isolatedWarm(q: String): Double = {
-      val s = core.Sessions.local(32, s"sf1-iso-${q.takeWhile(_ != '_')}")
-      try {
-        build(s, src, out, copies = 10) // marker-skipped: corpus exists
-        def once(): Double = {
-          val s0 = System.nanoTime()
-          SparkEntry.queries(q)(s, out).count()
-          (System.nanoTime() - s0) / 1e9
-        }
-        once() // cold (includes the family's own index builds)
-        val w = math.min(once(), once())
-        System.err.println(f"[sf1iso] $q isolated_warm=$w%.1f")
-        w
-      } finally {
-        s.stop()
-        org.apache.spark.sql.SparkSession.clearActiveSession()
-        org.apache.spark.sql.SparkSession.clearDefaultSession()
-      }
-    }
-    val isolated = unstableNames.map(q => short(q) -> fmt(isolatedWarm(q)))
+    val unstable = unstableNames.map(q => short(q) -> f(spreadOf(q)))
+    val isolated = unstableNames.map(q => short(q) -> f(isolatedWarm(src, out, 10, q)))
     val errs = (e1.keySet ++ e2.keySet).toSeq.sorted
       .map(q => short(q) -> ("\"" + (e1.get(q) orElse e2.get(q)).get + "\""))
-    val line =
+    Harness.writeArtifact("BENCH_SF1.json",
       s"""{"metric":"sf1_rehearsal","copies":10,"families":${names.size},""" +
       s""""passes":2,"order":"seeded-shuffle per pass",""" +
-      s""""build_sec":${fmt(b1)},""" +
+      s""""build_sec":${f(b1)},""" +
       s""""cold":${m(cold)},"warm":${m(warm)},""" +
       s""""warm_pass1":${m(w1)},"warm_pass2":${m(w2)},""" +
       s""""unstable_over_2x":${m(unstable)},""" +
       s""""isolated_warm":${m(isolated)},""" +
-      s""""rows":${m(rows)},"errors":${m(errs)}}"""
-    println(line)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("BENCH_SF1.json"), line + "\n")
+      s""""rows":${m(rows)},"errors":${m(errs)}}""")
     if (errs.nonEmpty) sys.exit(1)
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("full")) {
-      fullMain(if (args.length > 1) args(1) else "/root/testdata/sf0.1",
-               if (args.length > 2) args(2) else "/tmp/graft_sf1")
-      return
+    val src = args.lift(1).getOrElse("/root/testdata/sf0.1")
+    args.headOption match {
+      case Some("full")      => fullMain(src, args.lift(2).getOrElse("/tmp/graft_sf1"))
+      case Some("exponents") => exponentsMain(src)
+      case Some("lsh100x")   => lsh100xMain(src)
+      case Some("heavy100x") => heavy100xMain(src)
+      case Some("clustered") => clusteredMain(src)
+      case _ =>
+        System.err.println(
+          "usage: runMain graft.ScaleRehearsal full|exponents|lsh100x|heavy100x|clustered [srcDir] ...")
+        sys.exit(2)
     }
-    if (args.headOption.contains("exponents")) {
-      exponentsMain(if (args.length > 1) args(1) else "/root/testdata/sf0.1")
-      return
-    }
-    if (args.headOption.contains("lsh100x")) {
-      lsh100xMain(if (args.length > 1) args(1) else "/root/testdata/sf0.1")
-      return
-    }
-    if (args.headOption.contains("heavy100x")) {
-      heavy100xMain(if (args.length > 1) args(1) else "/root/testdata/sf0.1")
-      return
-    }
-    if (args.headOption.contains("clustered")) {
-      clusteredMain(if (args.length > 1) args(1) else "/root/testdata/sf0.1")
-      return
-    }
-    System.err.println(
-      "usage: runMain graft.ScaleRehearsal full|exponents|lsh100x|heavy100x|clustered [srcDir] ...")
-    sys.exit(2)
   }
 }

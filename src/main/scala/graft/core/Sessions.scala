@@ -57,8 +57,15 @@ object Sessions {
     */
   val CodegenCacheEntries = 1024
 
+  /** Local core count: `SPARK_GRAFT_CPUS` if set, else the JVM's available
+    * processors. One partition and one concurrent model per core, so a
+    * session never runs more tasks at once than the box has cores.
+    */
+  def cores: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt).getOrElse(Runtime.getRuntime.availableProcessors)
+
   /** Local session tuned for the test harness (local[n], small data). */
-  def local(cpus: Int = 32, appName: String = "graft"): SparkSession = {
+  def local(cpus: Int = cores, appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
       .master(s"local[$cpus]")

@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
-/** Task-level attribution between `reset()`/`snapshot()` markers: JVM GC
+/** Task-level attribution of one `measure` body: JVM GC
   * time, shuffle/agg spill bytes and peak execution memory (the bench's
   * per-sample "GC/session pressure vs plan regression" split), plus the
   * shuffle bytes/rows each stage moves (the measured constants behind
@@ -51,15 +51,22 @@ final class ServeMetrics extends SparkListener {
     catch { case _: java.util.concurrent.TimeoutException => () }
 
   /** The counters accumulated since the last reset. */
-  def snapshot(sc: SparkContext): ServeMetrics.Snapshot = {
+  private def snapshot(sc: SparkContext): ServeMetrics.Snapshot = {
     drain(sc)
     ServeMetrics.Snapshot(gcMs.get(), memSpill.get(), diskSpill.get(), peakMem.get(),
       writeBytes.get(), writeRows.get(), readBytes.get())
   }
 
-  def reset(sc: SparkContext): Unit = {
+  private def reset(sc: SparkContext): Unit = {
     drain(sc)
     all.foreach(_.set(0L))
+  }
+
+  /** Wall seconds, result and task counters of `body` alone. */
+  def measure[A](sc: SparkContext)(body: => A): (Double, A, ServeMetrics.Snapshot) = {
+    reset(sc)
+    val (sec, r) = graft.Harness.timed(body)
+    (sec, r, snapshot(sc))
   }
 }
 

@@ -33,4 +33,16 @@ class EntryContractSpec extends AnyFunSuite {
     }
     assert(bad.isEmpty, s"oracles with environment-bound paths: ${bad.keys.toSeq.sorted}")
   }
+
+  test("Harness.fmt writes a decimal point under a comma-decimal default locale") {
+    // The f-interpolator follows the default locale; Bench's and
+    // ScaleRehearsal's JSON lines are valid only because fmt does not.
+    val saved = java.util.Locale.getDefault
+    try {
+      java.util.Locale.setDefault(java.util.Locale.GERMANY)
+      assert(f"${1.5}%.2f" == "1,50", "the locale did not take effect")
+      assert(Harness.fmt(1.5, 2) == "1.50")
+    } finally java.util.Locale.setDefault(saved)
+    assert(java.util.Locale.getDefault == saved)
+  }
 }

@@ -1775,25 +1775,42 @@ class PlanQualitySpec extends SparkSpec {
     assert(buckets > 1)
   }
 
-  test("core.Materialize is the only caller of checkpoint, cache and persist in src/main") {
-    // Every lineage cut and cache goes through one file, so what a session
-    // may lose on executor loss is decided in one place. Comment lines and
-    // trailing comments are exempt.
+  /** `file:line: code` for every code line of src/main/scala, outside the
+    * `owners` files, that matches `call`. Comment lines and trailing
+    * comments are exempt.
+    */
+  private def codeLines(call: scala.util.matching.Regex, owners: String*): Seq[String] = {
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Paths.get("src/main/scala")
-    val owner = root.resolve("graft/core/Materialize.scala")
-    val call = """localCheckpoint|\.checkpoint\(|\.cache\(\)|\.persist\(""".r
+    val skip = owners.map(o => root.resolve(o)).toSet
     val files = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(f => f.toString.endsWith(".scala") && f != owner).toSeq
+      .filter(f => f.toString.endsWith(".scala") && !skip(f)).toSeq
     assert(files.size > 50, s"source tree not found from ${root.toAbsolutePath}")
-    val hits = for {
+    for {
       f <- files
       (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
       code = line.trim
       if !(code.startsWith("//") || code.startsWith("*") || code.startsWith("/*"))
       if call.findFirstIn(code.replaceFirst("//.*", "")).isDefined
     } yield s"$f:${i + 1}: $code"
+  }
+
+  test("core.Materialize is the only caller of checkpoint, cache and persist in src/main") {
+    // Every lineage cut and cache goes through one file, so what a session
+    // may lose on executor loss is decided in one place.
+    val hits = codeLines("""localCheckpoint|\.checkpoint\(|\.cache\(\)|\.persist\(""".r,
+      "graft/core/Materialize.scala")
     assert(hits.isEmpty, hits.mkString("cut or cache outside core.Materialize:\n", "\n", ""))
+  }
+
+  test("core.Sessions is the only builder of SparkSessions in src/main") {
+    // A session built elsewhere runs without the factory's codegen cache,
+    // shared executor classloader and stable class names, so its compile
+    // counts and cold timings do not compare with the engine's. EntrySmoke
+    // is exempt: it simulates the driver's plain session.
+    val hits = codeLines("""SparkSession\s*\.\s*[bB]uilder|^\.builder\(""".r,
+      "graft/core/Sessions.scala", "graft/EntrySmoke.scala")
+    assert(hits.isEmpty, hits.mkString("SparkSession built outside core.Sessions:\n", "\n", ""))
   }
 
   test("q48 and q82 keep their cut inputs as named artifacts, not session-long caches") {

@@ -44,8 +44,11 @@ bench() { # $1 = tree dir, $2 = leg tag
   # sbt '[info] ' prefix — runMain in older baseline trees routes child
   # stdout through sbt's logger (outputStrategy was only set at run/
   # scope there, and runMain does not delegate to run/).
+  # SPARK_GRAFT_CPUS is passed explicitly: HEAD's Bench defaults to the
+  # box's cores, an older baseline's to 4, and both trees must run at the
+  # same core count.
   ( cd "$1" &&
-    SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=32 \
+    SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$(nproc)" \
       sbt -batch "runMain graft.Bench" 2>/dev/null ) > "$OUT/raw_$2.log"
   grep -m1 '"metric"' "$OUT/raw_$2.log" | sed 's/^\[info\] //' > "$OUT/leg_$2.json"
   python3 -c "import json,sys; d=json.load(open('$OUT/leg_$2.json')); \

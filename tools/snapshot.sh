@@ -36,7 +36,7 @@ sbt -batch "runMain graft.PlanDump /root/testdata/sf0.001 PLANS.md"
 
 # 2. The bench capture (writes BENCH_FULL.json in cwd, prints the one-line
 #    summary the driver parses).
-SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.Bench" \
+SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$(nproc)" sbt -batch "runMain graft.Bench" \
   2>&1 | grep '"metric"' || { echo "bench failed" >&2; exit 1; }
 
 # 3. Commit everything in the same motion — including driver-written
