@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
 import java.util.concurrent.{Executors, LinkedBlockingQueue}
 
-import graft.functions.Macros
+import graft.functions.{Macros, Upserts}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
@@ -342,28 +342,32 @@ final class Runner(
     */
   private def materialize(m: Model, df: DataFrame): (DataFrame, Option[Long]) = m.materialization match {
     case Materialization.View =>
-      m.contract.foreach(enforce(m.name, df, _))
+      m.contract.foreach(Contract.enforce(m.name, df, _))
       (df, None)
 
     case Materialization.Table =>
-      m.contract.foreach(enforce(m.name, df, _))
+      m.contract.foreach(Contract.enforce(m.name, df, _))
       val rows = writeVersioned(m.name, df)
       (readTable(m.name), Some(rows))
 
     case Materialization.Incremental(uniqueKey, watermarkCol, onSchemaChange) =>
-      m.contract.foreach(enforce(m.name, df, _))
+      m.contract.foreach(Contract.enforce(m.name, df, _))
       if (onSchemaChange == Materialization.OnSchemaChange.AppendNewColumns) {
         Files.createDirectories(Paths.get(path(m.name)))
         Files.writeString(Paths.get(path(m.name), "_WIDENING"), "append_new_columns")
       }
+      // In-batch upsert rule (shared with the streaming sink): one row per
+      // uniqueKey per batch, latest watermark wins. Without it a batch
+      // carrying duplicate keys writes every copy and breaks upsert-by-key
+      // (the target-side anti-join only guards ALREADY-WRITTEN keys).
       val rows = if (!exists(m.name)) {
-        writeVersioned(m.name, latestPerKey(df, uniqueKey, watermarkCol))
+        writeVersioned(m.name, Upserts.latestPerKey(df, uniqueKey, Some(watermarkCol)))
       } else {
         val existing = readTable(m.name)
         val stats = existing.agg(max(col(watermarkCol)), count(lit(1))).head
         val wm = stats.get(0)
         val fresh0 = if (wm == null) df else df.filter(col(watermarkCol) > lit(wm))
-        val fresh  = latestPerKey(fresh0, uniqueKey, watermarkCol)
+        val fresh  = Upserts.latestPerKey(fresh0, uniqueKey, Some(watermarkCol))
         val toInsert0 = fresh.join(
           existing.select(col(uniqueKey)), Seq(uniqueKey), "left_anti")
         val toInsert = onSchemaChange match {
@@ -416,16 +420,6 @@ final class Runner(
       (readTable(m.name), Some(rows))
   }
 
-  /** In-batch upsert rule for incremental models (shared with the
-    * streaming sink — `functions.Upserts`): one row per `uniqueKey` per
-    * batch, latest watermark wins. Without this, a batch carrying
-    * duplicate keys writes every copy and violates the documented
-    * upsert-by-key invariant (the target-side anti-join only guards
-    * against ALREADY-WRITTEN keys).
-    */
-  private def latestPerKey(df: DataFrame, uniqueKey: String, watermarkCol: String): DataFrame =
-    graft.functions.Upserts.latestPerKey(df, uniqueKey, Some(watermarkCol))
-
   /** dbt snapshot metadata columns: valid_from/valid_to/scd_id/updated_at. */
   private def snapshotCols(df: DataFrame, key: String): DataFrame =
     df.withColumn("dbt_valid_from", lit(asOf))
@@ -433,10 +427,4 @@ final class Runner(
       .withColumn("dbt_updated_at", lit(asOf))
       .withColumn("dbt_scd_id",
         Macros.surrogateKey(col(key), lit(asOf).cast(StringType)))
-
-  /** Contract enforcement: schema (names + types, order-sensitive like a
-    * dbt contract), then not-null / unique data assertions.
-    */
-  private def enforce(name: String, df: DataFrame, c: Contract): Unit =
-    Contract.enforce(name, df, c)
 }

@@ -487,6 +487,58 @@ object Dedup {
               col("col.chunk_toks").as("chunk_toks"))
   }
 
+  /** The `doc_id · 2^20 + chunk_idx` packed first-occurrence key with
+    * LOUD bounds: chunk_idx ≥ 2^20 would bleed into the doc_id bits and
+    * doc_id ∉ [0, 2^43) would wrap — both SILENT tie-break corruptions,
+    * not ANSI overflows — so out-of-range inputs raise instead of
+    * reordering. Scalar, codegen'd; the oracles need no guard (DuckDB
+    * replays the same arithmetic on data already inside the bounds).
+    */
+  private[graft] def packedChunkKey(docId: Column, chunkIdx: Column): Column =
+    when(docId.between(0L, (1L << 43) - 1) && chunkIdx.between(0L, 1048575L),
+         docId * 1048576L + chunkIdx)
+      .otherwise(raise_error(concat(
+        lit("chunk key packing requires 0 <= doc_id < 2^43 and 0 <= chunk_idx < 2^20, got doc_id="),
+        docId.cast("string"), lit(" chunk_idx="), chunkIdx.cast("string")))
+        .cast(LongType))
+
+  /** A chunk frame keyed for first-occurrence picks: adds `chunk_hash`
+    * (md5 of `chunk_text`) and the packed first-occurrence key `k`
+    * ([[packedChunkKey]]).
+    */
+  def hashedChunks(chunks: DataFrame): DataFrame =
+    chunks
+      .withColumn("chunk_hash", md5(col("chunk_text")))
+      .withColumn("k", packedChunkKey(col("doc_id"), col("chunk_idx")))
+
+  /** The canonical (first-occurrence) row per chunk hash of a chunk
+    * frame: (chunk_hash, doc_id, chunk_idx) at the minimum packed key.
+    * Only the canonical row survives, so this is a pure partial+final
+    * agg — min of the (k, doc_id, chunk_idx) struct, lexicographic with
+    * the unique packed key leading — never a chunk_hash window or a
+    * join-back: a boilerplate chunk flooding the input stays bounded
+    * map-side instead of funneling one WindowExec task. Shared by the
+    * persisted q172/q227 indexes and their streaming maintenance legs.
+    */
+  def canonicalChunks(chunks: DataFrame): DataFrame =
+    hashedChunks(chunks)
+      .groupBy(col("chunk_hash"))
+      .agg(min(struct(col("k"), col("doc_id"), col("chunk_idx"))).as("__c"))
+      .select(col("chunk_hash"),
+              col("__c.doc_id").as("doc_id"),
+              col("__c.chunk_idx").as("chunk_idx"))
+
+  /** The minimum packed key of every chunk hash that occurs more than
+    * once in a [[hashedChunks]] frame: (chunk_hash, __min_k). Joined back
+    * left, a row is its hash's first occurrence iff `__min_k` is null or
+    * equals its `k`; only duplicated hashes join back.
+    */
+  def dupMinKeys(hashed: DataFrame): DataFrame =
+    hashed.groupBy(col("chunk_hash"))
+      .agg(min(col("k")).as("__min_k"), count(lit(1)).as("__n"))
+      .filter(col("__n") > 1L)
+      .drop("__n")
+
   /** Chunk-level (line-level) dedup with document reconstruction — the
     * RefinedWeb/CCNet-style granularity between document-level dedup
     * ([[exact]]) and substring-level dedup ([[exactSubstrCoverage]]):
@@ -506,32 +558,16 @@ object Dedup {
     * raise_error, the orderKeyedCopies discipline.
     *
     * Scale shape: chunking is scan-local (one `transform` over the token
-    * array — per CHUNK, not per token); the only shuffle is the
-    * chunk-text-keyed window (hash-partitioned, md5-uniform unless
-    * content repeats — exactly the duplication being removed) plus the
-    * per-doc reassembly aggregate. No all-pairs joins, no driver state.
+    * array — per CHUNK, not per token); the shuffles are the chunk-hash
+    * [[dupMinKeys]] agg and its join-back (md5-uniform unless content
+    * repeats — exactly the duplication being removed) plus the per-doc
+    * reassembly aggregate. No all-pairs joins, no driver state.
     *
     * Returns one row per input document:
     * (doc_id, n_chunks, kept_chunks, kept_tokens, residual_text).
     */
-  /** The `doc_id · 2^20 + chunk_idx` packed first-occurrence key with
-    * LOUD bounds: chunk_idx ≥ 2^20 would bleed into the doc_id bits and
-    * doc_id ∉ [0, 2^43) would wrap — both SILENT tie-break corruptions,
-    * not ANSI overflows — so out-of-range inputs raise instead of
-    * reordering. Scalar, codegen'd; the oracles need no guard (DuckDB
-    * replays the same arithmetic on data already inside the bounds).
-    */
-  private[graft] def packedChunkKey(docId: Column, chunkIdx: Column): Column =
-    when(docId.between(0L, (1L << 43) - 1) && chunkIdx.between(0L, 1048575L),
-         docId * 1048576L + chunkIdx)
-      .otherwise(raise_error(concat(
-        lit("chunk key packing requires 0 <= doc_id < 2^43 and 0 <= chunk_idx < 2^20, got doc_id="),
-        docId.cast("string"), lit(" chunk_idx="), chunkIdx.cast("string")))
-        .cast(LongType))
-
   def chunkDedup(df: DataFrame, idCol: String, textCol: String,
                  chunkTokens: Int): DataFrame = {
-    val chunks = chunkFrame(df, idCol, textCol, chunkTokens)
     // First-occurrence keep flag via groupBy + join-back on the chunk
     // HASH (md5 — the exchange carries 32-hex keys, not chunk text), not
     // a window over the chunk: a boilerplate chunk duplicated 10⁶–10⁸×
@@ -539,15 +575,9 @@ object Dedup {
     // here bounds it map-side and the dup-only right side joins back
     // small (see attachCanonical's rationale). Singletons keep via the
     // null-min coalesce.
-    val hashed = chunks
-      .withColumn("chunk_hash", md5(col("chunk_text")))
-      .withColumn("k", packedChunkKey(col("doc_id"), col("chunk_idx")))
-    val dupMin = hashed.groupBy(col("chunk_hash"))
-      .agg(min(col("k")).as("__min_k"), count(lit(1)).as("__n"))
-      .filter(col("__n") > 1L)
-      .drop("__n")
+    val hashed = hashedChunks(chunkFrame(df, idCol, textCol, chunkTokens))
     val keyed = hashed
-      .join(dupMin, Seq("chunk_hash"), "left")
+      .join(dupMinKeys(hashed), Seq("chunk_hash"), "left")
       .withColumn("keep_chunk",
         col("__min_k").isNull || col("k") === col("__min_k"))
     keyed.groupBy(col("doc_id"))
@@ -611,14 +641,8 @@ object Dedup {
     * (doc_id, n_chunks, kept_chunks, kept_chars, residual_text).
     */
   def cdcChunkDedup(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val hashed = cdcChunkFrame(df, idCol, textCol)
-      .withColumn("chunk_hash", md5(col("chunk_text")))
-      .withColumn("k", packedChunkKey(col("doc_id"), col("chunk_idx")))
-    val dupMin = hashed.groupBy(col("chunk_hash"))
-      .agg(min(col("k")).as("__min_k"), count(lit(1)).as("__n"))
-      .filter(col("__n") > 1L)
-      .drop("__n")
-    hashed.join(dupMin, Seq("chunk_hash"), "left")
+    val hashed = hashedChunks(cdcChunkFrame(df, idCol, textCol))
+    hashed.join(dupMinKeys(hashed), Seq("chunk_hash"), "left")
       .withColumn("keep_chunk",
         col("__min_k").isNull || col("k") === col("__min_k"))
       .groupBy(col("doc_id"))

@@ -1528,15 +1528,10 @@ object TextQueries {
                                concat(lit("XQZV7 "), col("text")).as("text"))
       val corpus = base.unionByName(copies)
       val isCopy = col("doc_id") >= 1000000L
-      val fixedChunks = graft.operators.Dedup
-        .chunkFrame(corpus, "doc_id", "text", ChunkDedupTokens)
-        .withColumn("chunk_hash", md5(col("chunk_text")))
-        .withColumn("k", graft.operators.Dedup
-          .packedChunkKey(col("doc_id"), col("chunk_idx")))
-      val fixedDup = fixedChunks.groupBy(col("chunk_hash"))
-        .agg(min(col("k")).as("__min_k"), count(lit(1)).as("__n"))
-        .filter(col("__n") > 1L).drop("__n")
-      val fixedStats = fixedChunks.join(fixedDup, Seq("chunk_hash"), "left")
+      val fixedChunks = Dedup.hashedChunks(
+        Dedup.chunkFrame(corpus, "doc_id", "text", ChunkDedupTokens))
+      val fixedStats = fixedChunks
+        .join(Dedup.dupMinKeys(fixedChunks), Seq("chunk_hash"), "left")
         .filter(isCopy)
         .agg(countDistinct(col("doc_id")).as("n_copy_docs"),
              sum(when(col("__min_k").isNotNull && col("k") =!= col("__min_k"),
@@ -1545,14 +1540,8 @@ object TextQueries {
         .select(lit("fixed_token").as("method"), col("n_copy_docs"),
                 col("dup_units"), col("total_units"))
       val cdcStats = {
-        val ch = graft.operators.Dedup.cdcChunkFrame(corpus, "doc_id", "text")
-          .withColumn("chunk_hash", md5(col("chunk_text")))
-          .withColumn("k", graft.operators.Dedup
-            .packedChunkKey(col("doc_id"), col("chunk_idx")))
-        val dup = ch.groupBy(col("chunk_hash"))
-          .agg(min(col("k")).as("__min_k"), count(lit(1)).as("__n"))
-          .filter(col("__n") > 1L).drop("__n")
-        ch.join(dup, Seq("chunk_hash"), "left")
+        val ch = Dedup.hashedChunks(Dedup.cdcChunkFrame(corpus, "doc_id", "text"))
+        ch.join(Dedup.dupMinKeys(ch), Seq("chunk_hash"), "left")
           .filter(isCopy)
           .agg(countDistinct(col("doc_id")).as("n_copy_docs"),
                sum(when(col("__min_k").isNotNull && col("k") =!= col("__min_k"),
@@ -4012,19 +4001,8 @@ object TextQueries {
   private def chunkIndex(s: SparkSession, dir: String): DataFrame =
     chunkIdxCache(s, dir) {
       val base = Tables(s, dir).documents.filter(col("doc_id") % 2 === 0)
-      val ch = Dedup.chunkFrame(base, "doc_id", "text", ChunkDedupTokens)
-        .withColumn("chunk_hash", md5(col("chunk_text")))
-        .withColumn("k", Dedup.packedChunkKey(col("doc_id"), col("chunk_idx")))
-      // Only the canonical (min-k) row per hash survives, so no window
-      // and no join-back: min of the (k, doc_id, chunk_idx) struct is
-      // lexicographic with the unique packed key leading — a pure
-      // partial+final agg, hot duplicate hashes bounded map-side.
-      val canon = ch
-        .groupBy(col("chunk_hash"))
-        .agg(min(struct(col("k"), col("doc_id"), col("chunk_idx"))).as("__c"))
-        .select(col("chunk_hash"),
-                col("__c.doc_id").as("doc_id"),
-                col("__c.chunk_idx").as("chunk_idx"))
+      val canon = Dedup.canonicalChunks(
+        Dedup.chunkFrame(base, "doc_id", "text", ChunkDedupTokens))
       graft.model.Contract.enforce("q172_chunk_index", canon, ChunkIndexContract)
       graft.sources.Warehouse.writeBucketed(
         canon, chunkIndexTable(s, dir), "chunk_hash", numBuckets = 16)
@@ -4045,19 +4023,13 @@ object TextQueries {
   def chunkServeIncremental(s: SparkSession, dir: String): DataFrame = {
     val idx = chunkIndex(s, dir)
     val delta = Tables(s, dir).documents.filter(col("doc_id") % 2 === 1)
-    val ch = Dedup.chunkFrame(delta, "doc_id", "text", ChunkDedupTokens)
-      .withColumn("chunk_hash", md5(col("chunk_text")))
-      .withColumn("k", Dedup.packedChunkKey(col("doc_id"), col("chunk_idx")))
+    val ch = Dedup.hashedChunks(Dedup.chunkFrame(delta, "doc_id", "text", ChunkDedupTokens))
     // Within-delta first occurrence via groupBy + dup-only join-back
     // (the attachCanonical discipline) — a chunk hash flooded across the
     // delta batch stays bounded by the partial agg, never a one-task
     // chunk_hash window.
-    val dupMin = ch.groupBy(col("chunk_hash"))
-      .agg(min(col("k")).as("__min_k"), count(lit(1)).as("__n"))
-      .filter(col("__n") > 1L)
-      .drop("__n")
     val keyed = ch
-      .join(dupMin, Seq("chunk_hash"), "left")
+      .join(Dedup.dupMinKeys(ch), Seq("chunk_hash"), "left")
       .withColumn("first_in_delta",
         col("__min_k").isNull || col("k") === col("__min_k"))
       .drop("__min_k")
@@ -4095,17 +4067,7 @@ object TextQueries {
   private def cdcChunkIndex(s: SparkSession, dir: String): DataFrame =
     cdcIdxCache(s, dir) {
       val base = Tables(s, dir).documents.filter(col("doc_id") % 2 === 0)
-      val ch = Dedup.cdcChunkFrame(base, "doc_id", "text")
-        .withColumn("chunk_hash", md5(col("chunk_text")))
-        .withColumn("k", Dedup.packedChunkKey(col("doc_id"), col("chunk_idx")))
-      // canonical row per hash via one partial+final struct-min agg —
-      // no window, no join-back (chunkIndex's rationale)
-      val canon = ch
-        .groupBy(col("chunk_hash"))
-        .agg(min(struct(col("k"), col("doc_id"), col("chunk_idx"))).as("__c"))
-        .select(col("chunk_hash"),
-                col("__c.doc_id").as("doc_id"),
-                col("__c.chunk_idx").as("chunk_idx"))
+      val canon = Dedup.canonicalChunks(Dedup.cdcChunkFrame(base, "doc_id", "text"))
       graft.model.Contract.enforce("q227_cdc_index", canon, ChunkIndexContract)
       graft.sources.Warehouse.writeBucketed(
         canon, cdcIndexTable(s, dir), "chunk_hash", numBuckets = 16)
@@ -4124,15 +4086,9 @@ object TextQueries {
   def cdcServeIncremental(s: SparkSession, dir: String): DataFrame = {
     val idx = cdcChunkIndex(s, dir)
     val delta = Tables(s, dir).documents.filter(col("doc_id") % 2 === 1)
-    val ch = Dedup.cdcChunkFrame(delta, "doc_id", "text")
-      .withColumn("chunk_hash", md5(col("chunk_text")))
-      .withColumn("k", Dedup.packedChunkKey(col("doc_id"), col("chunk_idx")))
-    val dupMin = ch.groupBy(col("chunk_hash"))
-      .agg(min(col("k")).as("__min_k"), count(lit(1)).as("__n"))
-      .filter(col("__n") > 1L)
-      .drop("__n")
+    val ch = Dedup.hashedChunks(Dedup.cdcChunkFrame(delta, "doc_id", "text"))
     val keyed = ch
-      .join(dupMin, Seq("chunk_hash"), "left")
+      .join(Dedup.dupMinKeys(ch), Seq("chunk_hash"), "left")
       .withColumn("first_in_delta",
         col("__min_k").isNull || col("k") === col("__min_k"))
       .drop("__min_k")

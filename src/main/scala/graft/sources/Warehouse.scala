@@ -1,7 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 
 /** Physical-layout utilities for the 100 TB path: partitioned writes
   * (partition pruning), bucketed tables (shuffle-free co-located joins),
@@ -39,50 +40,16 @@ object Warehouse {
     * catalog).
     */
   def writeBucketed(df: DataFrame, table: String, bucketCol: String,
-                    numBuckets: Int = 8): Unit = {
-    val spark = df.sparkSession
-    // a managed-table location can outlive its catalog entry (a previous
-    // session wrote it, this session's in-memory catalog never heard of
-    // it) — saveAsTable then fails with LOCATION_ALREADY_EXISTS, so drop
-    // both the entry and any orphaned location before writing. The
-    // location comes from the CATALOG (graftx.Bridge), not a
-    // hand-assembled <warehouse.dir>/<name>: the catalog path honors the
-    // current database (<db>.db/ subdir) and case normalization, so this
-    // can never delete an unrelated sibling directory.
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new org.apache.hadoop.fs.Path(
-      org.apache.spark.sql.graftx.Bridge.defaultTablePath(spark, table))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(numBuckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
-    // session-scoped tables die with the session's in-memory catalog, so
-    // without cleanup every run would orphan its table dirs in the
-    // shared warehouse forever (the flip side of the per-session names
-    // that prevent cross-session clobbering). Delete our OWN dirs at JVM
-    // exit — no cross-session risk by construction; only a crashed JVM
-    // leaks, and its leftovers can never collide with a future session.
-    registerExitCleanup(loc.toUri, spark.sparkContext.hadoopConfiguration)
-  }
+                    numBuckets: Int = 8): Unit =
+    replaceTable(df, table)(_.bucketBy(numBuckets, bucketCol).sortBy(bucketCol))
 
   /** Plain (unbucketed) parquet table write with the same
     * drop/orphan/exit-cleanup discipline as [[writeBucketed]] — the
     * durable-materialization primitive behind
     * [[graft.core.Materialize]]'s table mode.
     */
-  def writeTable(df: DataFrame, table: String): Unit = {
-    val spark = df.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new org.apache.hadoop.fs.Path(
-      org.apache.spark.sql.graftx.Bridge.defaultTablePath(spark, table))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-    df.write.mode(SaveMode.Overwrite).format("parquet").saveAsTable(table)
-    registerExitCleanup(loc.toUri, spark.sparkContext.hadoopConfiguration)
-  }
+  def writeTable(df: DataFrame, table: String): Unit =
+    replaceTable(df, table)(identity)
 
   /** Register a table PARTITIONED by a low-cardinality column:
     * predicates on `partitionCol` prune whole directories at scan time
@@ -93,16 +60,41 @@ object Warehouse {
     * with IN filters (q215's halo probe: ≤ 33 directories).
     */
   def writePartitionedTable(df: DataFrame, table: String,
-                            partitionCol: String): Unit = {
+                            partitionCol: String): Unit =
+    replaceTable(df, table)(_.partitionBy(partitionCol))
+
+  /** The one replace-table write behind [[writeBucketed]], [[writeTable]]
+    * and [[writePartitionedTable]]: `layout` sets the table's bucketing
+    * or partitioning on the Overwrite writer.
+    */
+  private def replaceTable(df: DataFrame, table: String)(
+      layout: DataFrameWriter[Row] => DataFrameWriter[Row]): Unit = {
     val spark = df.sparkSession
+    // a managed-table location can outlive its catalog entry (a previous
+    // session wrote it, this session's in-memory catalog never heard of
+    // it) — saveAsTable then fails with LOCATION_ALREADY_EXISTS, so drop
+    // both the entry and any orphaned location before writing. The
+    // location comes from the CATALOG (graftx.Bridge), not a
+    // hand-assembled <warehouse.dir>/<name>: the catalog path honors the
+    // current database (<db>.db/ subdir) and case normalization, so this
+    // can never delete an unrelated sibling directory.
     spark.sql(s"DROP TABLE IF EXISTS `$table`")
-    val loc = new org.apache.hadoop.fs.Path(
-      org.apache.spark.sql.graftx.Bridge.defaultTablePath(spark, table))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (loc, fs) = tableLocation(spark, table)
     if (fs.exists(loc)) fs.delete(loc, true)
-    df.write.mode(SaveMode.Overwrite).format("parquet")
-      .partitionBy(partitionCol).saveAsTable(table)
+    layout(df.write.mode(SaveMode.Overwrite)).format("parquet").saveAsTable(table)
+    // session-scoped tables die with the session's in-memory catalog, so
+    // without cleanup every run would orphan its table dirs in the
+    // shared warehouse forever (the flip side of the per-session names
+    // that prevent cross-session clobbering). Delete our OWN dirs at JVM
+    // exit — no cross-session risk by construction; only a crashed JVM
+    // leaks, and its leftovers can never collide with a future session.
     registerExitCleanup(loc.toUri, spark.sparkContext.hadoopConfiguration)
+  }
+
+  /** The catalog's default location for `table` and its filesystem. */
+  private def tableLocation(spark: SparkSession, table: String): (Path, FileSystem) = {
+    val loc = new Path(org.apache.spark.sql.graftx.Bridge.defaultTablePath(spark, table))
+    (loc, loc.getFileSystem(spark.sparkContext.hadoopConfiguration))
   }
 
   /** Append to an EXISTING unbucketed table created by [[writeTable]] —
@@ -130,9 +122,7 @@ object Warehouse {
     */
   def durableIndex(spark: SparkSession, name: String,
                    fingerprint: Option[String] = None)(build: => DataFrame): DataFrame = {
-    val loc = new org.apache.hadoop.fs.Path(
-      org.apache.spark.sql.graftx.Bridge.defaultTablePath(spark, name))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (loc, fs) = tableLocation(spark, name)
     // round-17 stretch #8: staleness no longer rests on the
     // immutable-dir convention alone — the builder stores a cheap
     // content fingerprint of its INPUT beside the index (an
@@ -140,8 +130,8 @@ object Warehouse {
     // reader whose input fingerprints differently is refused with the
     // fix in the message (the Guard discipline) instead of silently
     // served a stale graph.
-    def fpFile(dir: org.apache.hadoop.fs.Path) =
-      new org.apache.hadoop.fs.Path(dir, "_GRAFT_FINGERPRINT")
+    def fpFile(dir: Path) =
+      new Path(dir, "_GRAFT_FINGERPRINT")
     if (fs.exists(loc)) {
       (fingerprint, if (fs.exists(fpFile(loc))) {
         val in = fs.open(fpFile(loc))
@@ -167,14 +157,14 @@ object Warehouse {
     // write and the rename (they would otherwise leak in the shared
     // warehouse forever) — only siblings >10 min old, so a concurrent
     // LIVE builder's tmp is never swept mid-publish
-    val stale = fs.globStatus(new org.apache.hadoop.fs.Path(
+    val stale = fs.globStatus(new Path(
       loc.getParent, "_build_" + loc.getName + "_*"))
     if (stale != null) stale.foreach { st =>
       if (st.getModificationTime < System.currentTimeMillis() - 10 * 60 * 1000L)
         try fs.delete(st.getPath, true) catch { case _: Exception => () }
     }
     val df  = build
-    val tmp = new org.apache.hadoop.fs.Path(loc.getParent,
+    val tmp = new Path(loc.getParent,
       "_build_" + loc.getName + "_" + java.util.UUID.randomUUID().toString.take(8))
     df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
     fingerprint.foreach { fp =>
@@ -195,9 +185,7 @@ object Warehouse {
 
   /** Delete a [[durableIndex]] by name (test hygiene). */
   def dropDurableIndex(spark: SparkSession, name: String): Unit = {
-    val loc = new org.apache.hadoop.fs.Path(
-      org.apache.spark.sql.graftx.Bridge.defaultTablePath(spark, name))
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (loc, fs) = tableLocation(spark, name)
     if (fs.exists(loc)) fs.delete(loc, true)
   }
 
@@ -227,7 +215,7 @@ object Warehouse {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       exitPaths.forEach { (uri, conf) =>
         try {
-          val p = new org.apache.hadoop.fs.Path(uri)
+          val p = new Path(uri)
           p.getFileSystem(conf).delete(p, true)
         } catch { case _: Exception => () }
       }))

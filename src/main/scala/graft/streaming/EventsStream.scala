@@ -1,9 +1,10 @@
 package graft.streaming
 
+import graft.sources.Warehouse
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 
 /** Structured Streaming over the `events` table — the stretch goal from
   * SURVEY §2.10: nothing in the reference streams, but its incremental
@@ -96,7 +97,7 @@ object EventsStream {
                 lit((bins - 1).toDouble)))
       else lit(0.0)
     events.filter(col("value").isNotNull)
-      .select(bin.cast(org.apache.spark.sql.types.LongType).as("bin"))
+      .select(bin.cast(LongType).as("bin"))
       .groupBy(col("bin"))
       .agg(count(lit(1)).as("cnt"))
   }
@@ -313,36 +314,39 @@ object EventsStream {
       uniqueKey: String,
       checkpointDir: String,
       queryName: String,
-      orderCol: Option[String] = None): org.apache.spark.sql.streaming.StreamingQuery =
+      orderCol: Option[String] = None): StreamingQuery =
+    eachBatch(df, checkpointDir, queryName) { batch0 =>
+      // In-batch dedupe on uniqueKey (the anti-join below only guards
+      // against keys ALREADY in the target — a batch carrying duplicate
+      // keys would otherwise write every copy, including on the first
+      // overwrite batch). Same rule as the batch Runner: Upserts.
+      val batch = graft.functions.Upserts.latestPerKey(batch0, uniqueKey, orderCol)
+      val target = new java.io.File(targetDir)
+      // ANY existing DATA content counts (partitioned layouts nest their
+      // parquet files) — but ignore metadata/temp entries (_temporary
+      // from a crashed write, _SUCCESS, .crc) so replay after a failed
+      // first batch recovers by overwriting rather than failing the
+      // read forever. A non-parquet obstruction still fails loudly.
+      val exists = target.exists &&
+        Option(target.list()).exists(_.exists(n => !n.startsWith("_") && !n.startsWith(".")))
+      if (!exists) batch.write.mode("overwrite").parquet(targetDir)
+      else batch
+        .join(batch.sparkSession.read.parquet(targetDir).select(col(uniqueKey)),
+              Seq(uniqueKey), "left_anti")
+        .write.mode("append").parquet(targetDir)
+    }
+
+  /** The one micro-batch sink every foreachBatch leg runs through: an
+    * append-mode query named `queryName`, its source offsets in
+    * `checkpointDir`, calling `body` on each micro-batch.
+    */
+  private def eachBatch(df: DataFrame, checkpointDir: String, queryName: String)(
+      body: DataFrame => Unit): StreamingQuery =
     df.writeStream
       .queryName(queryName)
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append)
-      .foreachBatch { (batch0: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark  = batch0.sparkSession
-        // In-batch dedupe on uniqueKey (the anti-join below only guards
-        // against keys ALREADY in the target — a batch carrying duplicate
-        // keys would otherwise write every copy, including on the first
-        // overwrite batch). Same rule as the batch Runner: Upserts.
-        val batch = graft.functions.Upserts.latestPerKey(batch0.toDF(), uniqueKey, orderCol)
-        val target = new java.io.File(targetDir)
-        // ANY existing DATA content counts (partitioned layouts nest their
-        // parquet files) — but ignore metadata/temp entries (_temporary
-        // from a crashed write, _SUCCESS, .crc) so replay after a failed
-        // first batch recovers by overwriting rather than failing the
-        // read forever. A non-parquet obstruction still fails loudly.
-        val exists = target.exists &&
-          Option(target.list()).exists(_.exists(n => !n.startsWith("_") && !n.startsWith(".")))
-        if (!exists) {
-          batch.write.mode("overwrite").parquet(targetDir)
-        } else {
-          val existing = spark.read.parquet(targetDir)
-          batch
-            .join(existing.select(col(uniqueKey)), Seq(uniqueKey), "left_anti")
-            .write.mode("append").parquet(targetDir)
-        }
-        ()
-      }
+      .foreachBatch { (batch: Dataset[Row], _: Long) => body(batch.toDF()); () }
       .start()
 
   /** Streaming maintenance of the PERSISTED LSH dedup index (q145): each
@@ -359,61 +363,38 @@ object EventsStream {
       docs: DataFrame,
       table: String,
       checkpointDir: String,
-      queryName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val bands = batch.toDF()
-          .select(col("doc_id"),
-                  explode(graft.operators.Dedup.rowBands(col("text"))).as("band"))
-          .select(col("doc_id"), col("band.band_idx").as("band_idx"),
-                  col("band.band_hash").as("band_hash"))
-          .dropDuplicates("doc_id", "band_idx") // in-batch redelivery guard
-        idempotentAppendBucketed(bands, table, "band_hash", "doc_id")
-        ()
-      }
-      .start()
+      queryName: String): StreamingQuery =
+    eachBatch(docs, checkpointDir, queryName) { batch =>
+      val bands = batch
+        .select(col("doc_id"),
+                explode(graft.operators.Dedup.rowBands(col("text"))).as("band"))
+        .select(col("doc_id"), col("band.band_idx").as("band_idx"),
+                col("band.band_hash").as("band_hash"))
+        .dropDuplicates("doc_id", "band_idx") // in-batch redelivery guard
+      idempotentAppend(bands, table, "doc_id", Some("band_hash"))
+    }
 
-  /** [[idempotentAppend]] for BUCKETED state tables: the anti-join runs
-    * on `guardKey` (the redelivery identity) while appends preserve the
-    * `bucketCol` layout the probes depend on.
-    */
-  private def idempotentAppendBucketed(rows: DataFrame, table: String,
-                                       bucketCol: String,
-                                       guardKey: String): Unit = {
-    val spark = rows.sparkSession
-    val exists =
-      try { spark.table(table); true }
-      catch { case _: org.apache.spark.sql.AnalysisException => false }
-    if (!exists)
-      graft.sources.Warehouse.writeBucketed(rows, table, bucketCol, numBuckets = 16)
-    else
-      graft.sources.Warehouse.appendBucketed(
-        rows.join(spark.table(table).select(col(guardKey)).distinct(),
-                  Seq(guardKey), "left_anti"),
-        table, bucketCol, numBuckets = 16)
-  }
-
-  /** The shared idempotent micro-batch sink: create `table` from the
-    * first batch, then append only rows whose `keyCol` is not already
+  /** The shared idempotent state-table write: create `table` from the
+    * first batch, then append only rows whose `guardKey` is not already
     * present — one anti-join doubling as the redelivery guard for every
-    * foreachBatch state-table leg (decon, PSI drift, mixture audit, ANN
-    * serving results).
+    * foreachBatch state-table leg. With `bucketCol` set the table is
+    * bucketed on it (16 buckets) and every append keeps that layout, so
+    * the probes that depend on it stay shuffle-free.
     */
-  private def idempotentAppend(rows: DataFrame, table: String,
-                               keyCol: String): Unit = {
+  private def idempotentAppend(rows: DataFrame, table: String, guardKey: String,
+                               bucketCol: Option[String] = None): Unit = {
     val spark = rows.sparkSession
-    val exists =
-      try { spark.table(table); true }
-      catch { case _: org.apache.spark.sql.AnalysisException => false }
-    if (!exists) graft.sources.Warehouse.writeTable(rows, table)
-    else graft.sources.Warehouse.appendTable(
-      rows.join(spark.table(table).select(col(keyCol)).distinct(),
-                Seq(keyCol), "left_anti"),
-      table)
+    val exists = spark.catalog.tableExists(table)
+    val fresh =
+      if (!exists) rows
+      else rows.join(spark.table(table).select(col(guardKey)).distinct(),
+                     Seq(guardKey), "left_anti")
+    (bucketCol, exists) match {
+      case (Some(b), false) => Warehouse.writeBucketed(fresh, table, b, numBuckets = 16)
+      case (Some(b), true)  => Warehouse.appendBucketed(fresh, table, b, numBuckets = 16)
+      case (None, false)    => Warehouse.writeTable(fresh, table)
+      case (None, true)     => Warehouse.appendTable(fresh, table)
+    }
   }
 
   /** Streaming maintenance of the PERSISTED chunk-hash dedup index
@@ -433,35 +414,12 @@ object EventsStream {
       docs: DataFrame,
       table: String,
       checkpointDir: String,
-      queryName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val ch = graft.operators.Dedup
-          .chunkFrame(batch.toDF(), "doc_id", "text",
-                      graft.queries.TextQueries.ChunkDedupTokens)
-          .withColumn("chunk_hash", md5(col("chunk_text")))
-          .withColumn("k", graft.operators.Dedup.packedChunkKey(
-            col("doc_id"), col("chunk_idx")))
-        // Only the canonical (min-k) row per hash is appended, so this
-        // is a pure partial+final agg — min of the struct with the
-        // unique packed key leading — never a chunk_hash window: a
-        // boilerplate chunk flooding the batch stays bounded map-side
-        // instead of funneling one WindowExec task (the batch-side
-        // chunkIndex uses the same shape).
-        val canon = ch
-          .groupBy(col("chunk_hash"))
-          .agg(min(struct(col("k"), col("doc_id"), col("chunk_idx"))).as("__c"))
-          .select(col("chunk_hash"),
-                  col("__c.doc_id").as("doc_id"),
-                  col("__c.chunk_idx").as("chunk_idx"))
-        idempotentAppendBucketed(canon, table, "chunk_hash", "chunk_hash")
-        ()
-      }
-      .start()
+      queryName: String): StreamingQuery =
+    eachBatch(docs, checkpointDir, queryName) { batch =>
+      val canon = graft.operators.Dedup.canonicalChunks(graft.operators.Dedup
+        .chunkFrame(batch, "doc_id", "text", graft.queries.TextQueries.ChunkDedupTokens))
+      idempotentAppend(canon, table, "chunk_hash", Some("chunk_hash"))
+    }
 
   /** Streaming maintenance of the PERSISTED CDC chunk-hash index
     * (q227's state) — [[chunkIndexMaintainStream]] at content-defined
@@ -477,27 +435,12 @@ object EventsStream {
       docs: DataFrame,
       table: String,
       checkpointDir: String,
-      queryName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val ch = graft.operators.Dedup
-          .cdcChunkFrame(batch.toDF(), "doc_id", "text")
-          .withColumn("chunk_hash", md5(col("chunk_text")))
-          .withColumn("k", graft.operators.Dedup.packedChunkKey(
-            col("doc_id"), col("chunk_idx")))
-        val canon = ch
-          .groupBy(col("chunk_hash"))
-          .agg(min(struct(col("k"), col("doc_id"), col("chunk_idx"))).as("__c"))
-          .select(col("chunk_hash"),
-                  col("__c.doc_id").as("doc_id"),
-                  col("__c.chunk_idx").as("chunk_idx"))
-        idempotentAppendBucketed(canon, table, "chunk_hash", "chunk_hash")
-        ()
-      }
-      .start()
+      queryName: String): StreamingQuery =
+    eachBatch(docs, checkpointDir, queryName) { batch =>
+      val canon = graft.operators.Dedup.canonicalChunks(
+        graft.operators.Dedup.cdcChunkFrame(batch, "doc_id", "text"))
+      idempotentAppend(canon, table, "chunk_hash", Some("chunk_hash"))
+    }
 
   /** Streaming maintenance of the q242 bloom WORD TABLE — the runtime-
     * filter build side kept warm against a key stream (new urgent
@@ -522,20 +465,14 @@ object EventsStream {
       keys: DataFrame,
       table: String,
       checkpointDir: String,
-      queryName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    keys.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val w = graft.operators.Bloom
-          .words(batch.toDF().select(col("k")).distinct(), "k")
-          .withColumn("state_key",
-            concat_ws("|", col("word_idx"), col("words")))
-        idempotentAppendBucketed(w, table, "word_idx", "state_key")
-        ()
-      }
-      .start()
+      queryName: String): StreamingQuery =
+    eachBatch(keys, checkpointDir, queryName) { batch =>
+      val w = graft.operators.Bloom
+        .words(batch.select(col("k")).distinct(), "k")
+        .withColumn("state_key",
+          concat_ws("|", col("word_idx"), col("words")))
+      idempotentAppend(w, table, "state_key", Some("word_idx"))
+    }
 
   /** The serving read of [[bloomIndexMaintainStream]]'s state: one
     * bit_or per word collapses any row multiplicity into the exact
@@ -562,23 +499,17 @@ object EventsStream {
       docs: DataFrame,
       table: String,
       checkpointDir: String,
-      queryName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val inc = graft.queries.CurationQueries.docSegments(batch.toDF())
-          .select(md5(col("seg")).as("seg_hash"), col("seg"), col("doc_id"))
-          .dropDuplicates("seg_hash", "doc_id") // in-batch redelivery guard
-          .withColumn("inc_key",
-            md5(concat(col("seg_hash"), lit("|"),
-                       col("doc_id").cast("string"))))
-          .select(col("inc_key"), col("seg_hash"), col("seg"), col("doc_id"))
-        idempotentAppendBucketed(inc, table, "seg_hash", "inc_key")
-        ()
-      }
-      .start()
+      queryName: String): StreamingQuery =
+    eachBatch(docs, checkpointDir, queryName) { batch =>
+      val inc = graft.queries.CurationQueries.docSegments(batch)
+        .select(md5(col("seg")).as("seg_hash"), col("seg"), col("doc_id"))
+        .dropDuplicates("seg_hash", "doc_id") // in-batch redelivery guard
+        .withColumn("inc_key",
+          md5(concat(col("seg_hash"), lit("|"),
+                     col("doc_id").cast("string"))))
+        .select(col("inc_key"), col("seg_hash"), col("seg"), col("doc_id"))
+      idempotentAppend(inc, table, "inc_key", Some("seg_hash"))
+    }
 
   /** Streaming maintenance of the q215 SNM keys index: each micro-batch
     * computes its DISTINCT simhash values scan-locally, derives the
@@ -599,25 +530,18 @@ object EventsStream {
       bounds: Array[Double],
       checkpointDir: String,
       queryName: String,
-      rotations: Int = 4): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val vals = graft.operators.Dedup
-          .simhashVals(batch.toDF(), "doc_id", "text")
-        val keyed = graft.operators.Dedup.snmKeys(vals, rotations)
-          .withColumn("__b", graft.operators.Dedup
-            .snmBucketOf(bounds, graft.operators.Dedup.snmProxy(col("k")))
-            .cast(org.apache.spark.sql.types.LongType))
-          .withColumn("idx_key",
-            md5(concat(col("rot").cast("string"), lit("|"), col("k"))))
-          .select(col("idx_key"), col("rot"), col("k"), col("h"), col("__b"))
-        idempotentAppendBucketed(keyed, table, "__b", "idx_key")
-        ()
-      }
-      .start()
+      rotations: Int = 4): StreamingQuery =
+    eachBatch(docs, checkpointDir, queryName) { batch =>
+      val vals = graft.operators.Dedup.simhashVals(batch, "doc_id", "text")
+      val keyed = graft.operators.Dedup.snmKeys(vals, rotations)
+        .withColumn("__b", graft.operators.Dedup
+          .snmBucketOf(bounds, graft.operators.Dedup.snmProxy(col("k")))
+          .cast(LongType))
+        .withColumn("idx_key",
+          md5(concat(col("rot").cast("string"), lit("|"), col("k"))))
+        .select(col("idx_key"), col("rot"), col("k"), col("h"), col("__b"))
+      idempotentAppend(keyed, table, "idx_key", Some("__b"))
+    }
 
   /** Streaming maintenance of the PERSISTED source-cap index (q198's
     * state): each micro-batch merges its documents with the current kept
@@ -636,54 +560,35 @@ object EventsStream {
       docs: DataFrame,
       table: String,
       checkpointDir: String,
-      queryName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val exists =
-          try { spark.table(table); true }
-          catch { case _: org.apache.spark.sql.AnalysisException => false }
-        val cur =
-          if (exists) spark.table(table).select(col("source"), col("doc_id"))
-          else batch.toDF().select(col("source"), col("doc_id")).limit(0)
-        // DISTINCT before re-ranking: a re-delivered doc sits in both the
-        // state and the batch, and the bounded heap has multiset
-        // semantics — without the dedup a replayed doc would occupy two
-        // of its source's cap slots (caught by the replay gate)
-        val merged = batch.toDF().select(col("source"), col("doc_id"))
-          .unionByName(cur).distinct()
-        // materialize BEFORE the overwrite — the plan reads the table it
-        // is about to replace (tiny: ≤ cap·|sources| + batch rows)
-        val kept = graft.core.Materialize.cutLocal(
-          graft.queries.CurationQueries.sourceCapped(merged))
-        graft.sources.Warehouse.writeTable(kept, table)
-        // the overwrite replaced the table's files in place — drop the
-        // cached file listing or the next batch reads deleted parts.
-        // NOTE this refresh covers the STREAM's (cloned) session only:
-        // foreachBatch runs on a micro-batch session clone with its own
-        // relation cache, so OTHER sessions reading the index between
-        // maintenance batches must refreshTable themselves (the standard
-        // contract for any overwrite-in-place table; the append-only
-        // index legs above don't need it because appends only add files)
-        spark.catalog.refreshTable(table)
-        ()
-      }
-      .start()
+      queryName: String): StreamingQuery =
+    eachBatch(docs, checkpointDir, queryName) { batch =>
+      val spark = batch.sparkSession
+      val cur =
+        if (spark.catalog.tableExists(table))
+          spark.table(table).select(col("source"), col("doc_id"))
+        else batch.select(col("source"), col("doc_id")).limit(0)
+      // DISTINCT before re-ranking: a re-delivered doc sits in both the
+      // state and the batch, and the bounded heap has multiset
+      // semantics — without the dedup a replayed doc would occupy two
+      // of its source's cap slots (caught by the replay gate)
+      val merged = batch.select(col("source"), col("doc_id"))
+        .unionByName(cur).distinct()
+      // materialize BEFORE the overwrite — the plan reads the table it
+      // is about to replace (tiny: ≤ cap·|sources| + batch rows)
+      val kept = graft.core.Materialize.cutLocal(
+        graft.queries.CurationQueries.sourceCapped(merged))
+      Warehouse.writeTable(kept, table)
+      // the overwrite replaced the table's files in place — drop the
+      // cached file listing or the next batch reads deleted parts.
+      // NOTE this refresh covers the STREAM's (cloned) session only:
+      // foreachBatch runs on a micro-batch session clone with its own
+      // relation cache, so OTHER sessions reading the index between
+      // maintenance batches must refreshTable themselves (the standard
+      // contract for any overwrite-in-place table; the append-only
+      // index legs above don't need it because appends only add files)
+      spark.catalog.refreshTable(table)
+    }
 
-  /** Streaming benchmark DECONTAMINATION — q77's exact 8-gram overlap
-    * check on a continuously-arriving corpus: the benchmark n-gram set is
-    * STATIC (fixed eval suites), so each micro-batch runs the identical
-    * batch pipeline against it — explode, stream-static equi-join
-    * (benchmark side broadcast at real scale, or the q83 bloom when even
-    * its distinct n-grams are too big), per-doc hit count — and appends
-    * per-doc verdicts. Documents are batch-local, so no streaming
-    * aggregation state exists at all; the doc_id anti-join makes
-    * redelivery idempotent. Drained output ≡ batch q77 on the same
-    * corpus (StreamingSpec asserts).
-    */
   /** Orders-shaped file-source stream (the z-order leg's entry point). */
   val ordersSchema: StructType = StructType(Seq(
     StructField("o_orderkey", LongType),
@@ -714,31 +619,24 @@ object EventsStream {
       table: String,
       bounds: (Long, Long, Long, Long),
       checkpointDir: String,
-      queryName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    orders.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val s = batch.sparkSession
-        val (ckMin, ckMax, dayMin, dayMax) = bounds
-        val b = s.range(1).select(
-          lit(ckMin).as("ck_min"), lit(ckMax).as("ck_max"),
-          lit(dayMin).as("day_min"), lit(dayMax).as("day_max"))
-        val assigned = graft.queries.OlapQueries.ZOrder.assign(
-          graft.queries.OlapQueries.ZOrder.prepKeyed(batch.toDF()), b)
-        val stats = assigned.groupBy(col("file_id"))
-          .agg(count(lit(1)).as("n_rows"),
-               min(col("ck")).as("min_ck"), max(col("ck")).as("max_ck"),
-               min(col("day")).as("min_day"), max(col("day")).as("max_day"),
-               min(col("o_orderkey")).as("batch_min_key"))
-          .withColumn("guard_key",
-            md5(concat(col("file_id").cast("string"), lit("|"),
-                       col("batch_min_key").cast("string"))))
-        idempotentAppend(stats, table, "guard_key")
-        ()
-      }
-      .start()
+      queryName: String): StreamingQuery =
+    eachBatch(orders, checkpointDir, queryName) { batch =>
+      val (ckMin, ckMax, dayMin, dayMax) = bounds
+      val b = batch.sparkSession.range(1).select(
+        lit(ckMin).as("ck_min"), lit(ckMax).as("ck_max"),
+        lit(dayMin).as("day_min"), lit(dayMax).as("day_max"))
+      val assigned = graft.queries.OlapQueries.ZOrder.assign(
+        graft.queries.OlapQueries.ZOrder.prepKeyed(batch), b)
+      val stats = assigned.groupBy(col("file_id"))
+        .agg(count(lit(1)).as("n_rows"),
+             min(col("ck")).as("min_ck"), max(col("ck")).as("max_ck"),
+             min(col("day")).as("min_day"), max(col("day")).as("max_day"),
+             min(col("o_orderkey")).as("batch_min_key"))
+        .withColumn("guard_key",
+          md5(concat(col("file_id").cast("string"), lit("|"),
+                     col("batch_min_key").cast("string"))))
+      idempotentAppend(stats, table, "guard_key")
+    }
 
   /** Streaming maintenance of the q252 OCCUPANCY state — the embedding-
     * drift monitor fed by a vector stream: each micro-batch is assigned
@@ -760,26 +658,20 @@ object EventsStream {
       centroids: Array[Seq[Double]],
       table: String,
       checkpointDir: String,
-      queryName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    vectors.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val v = batch.toDF().select(col("vec_id"),
-          col("embedding").cast("array<double>").as("v"))
-        val counts = v.select(col("vec_id"),
-            graft.operators.Clustering.nearestCentroid(centroids, col("v"))
-              .getField("cid").as("cluster_id"))
-          .groupBy(col("cluster_id"))
-          .agg(count(lit(1)).as("n"), min(col("vec_id")).as("batch_min_key"))
-          .withColumn("guard_key",
-            md5(concat(col("cluster_id").cast("string"), lit("|"),
-                       col("batch_min_key").cast("string"))))
-        idempotentAppend(counts, table, "guard_key")
-        ()
-      }
-      .start()
+      queryName: String): StreamingQuery =
+    eachBatch(vectors, checkpointDir, queryName) { batch =>
+      val v = batch.select(col("vec_id"),
+        col("embedding").cast("array<double>").as("v"))
+      val counts = v.select(col("vec_id"),
+          graft.operators.Clustering.nearestCentroid(centroids, col("v"))
+            .getField("cid").as("cluster_id"))
+        .groupBy(col("cluster_id"))
+        .agg(count(lit(1)).as("n"), min(col("vec_id")).as("batch_min_key"))
+        .withColumn("guard_key",
+          md5(concat(col("cluster_id").cast("string"), lit("|"),
+                     col("batch_min_key").cast("string"))))
+      idempotentAppend(counts, table, "guard_key")
+    }
 
   /** The serving read of [[occupancyDriftStream]]'s state: per-cluster
     * totals from the batch-granular count rows.
@@ -788,34 +680,37 @@ object EventsStream {
     spark.table(table).groupBy(col("cluster_id"))
       .agg(sum(col("n")).as("n_vecs"))
 
+  /** Streaming benchmark DECONTAMINATION — q77's exact 8-gram overlap
+    * check on a continuously-arriving corpus: the benchmark n-gram set is
+    * STATIC (fixed eval suites), so each micro-batch runs the identical
+    * batch pipeline against it — explode, stream-static equi-join
+    * (benchmark side broadcast at real scale, or the q83 bloom when even
+    * its distinct n-grams are too big), per-doc hit count — and appends
+    * per-doc verdicts. Documents are batch-local, so no streaming
+    * aggregation state exists at all; the doc_id anti-join makes
+    * redelivery idempotent. Drained output ≡ batch q77 on the same
+    * corpus (StreamingSpec asserts).
+    */
   def decontaminateStream(
       docs: DataFrame,
       bench: DataFrame,
       outTable: String,
       checkpointDir: String,
-      queryName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val corpus = batch.toDF()
-        val hits = corpus
-          .select(col("doc_id"),
-                  explode(graft.functions.Text.shingles(col("text"), 8)).as("ngram"))
-          .join(bench, "ngram")
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_overlap"))
-        val res = corpus.select(col("doc_id"), col("lang"))
-          .join(hits, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("lang"),
-                  coalesce(col("n_overlap"), lit(0L)).as("n_overlap_ngrams"),
-                  (coalesce(col("n_overlap"), lit(0L)) > 0).as("is_contaminated"))
-        idempotentAppend(res, outTable, "doc_id")
-        ()
-      }
-      .start()
+      queryName: String): StreamingQuery =
+    eachBatch(docs, checkpointDir, queryName) { corpus =>
+      val hits = corpus
+        .select(col("doc_id"),
+                explode(graft.functions.Text.shingles(col("text"), 8)).as("ngram"))
+        .join(bench, "ngram")
+        .groupBy(col("doc_id"))
+        .agg(count(lit(1)).as("n_overlap"))
+      val res = corpus.select(col("doc_id"), col("lang"))
+        .join(hits, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("lang"),
+                coalesce(col("n_overlap"), lit(0L)).as("n_overlap_ngrams"),
+                (coalesce(col("n_overlap"), lit(0L)) > 0).as("is_contaminated"))
+      idempotentAppend(res, outTable, "doc_id")
+    }
 
   /** Streaming drift monitor — q181 maintained incrementally: the
     * binning parameters are FROZEN from the reference window (min epoch
@@ -833,23 +728,16 @@ object EventsStream {
       minDay: Long, vmin: Double, vmax: Double,
       table: String,
       checkpointDir: String,
-      queryName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val rows = batch.toDF().filter(col("value").isNotNull)
-          .withColumn("vmin", lit(vmin)).withColumn("vmax", lit(vmax))
-          .select(col("event_id"),
-            expr(s"(unix_micros(ts) DIV 86400000000 - ${minDay}L) DIV 7")
-              .as("week_idx"),
-            graft.queries.RetrievalQueries.psiBin(col("value")).as("bin"))
-        idempotentAppend(rows, table, "event_id")
-        ()
-      }
-      .start()
+      queryName: String): StreamingQuery =
+    eachBatch(events, checkpointDir, queryName) { batch =>
+      val rows = batch.filter(col("value").isNotNull)
+        .withColumn("vmin", lit(vmin)).withColumn("vmax", lit(vmax))
+        .select(col("event_id"),
+          expr(s"(unix_micros(ts) DIV 86400000000 - ${minDay}L) DIV 7")
+            .as("week_idx"),
+          graft.queries.RetrievalQueries.psiBin(col("value")).as("bin"))
+      idempotentAppend(rows, table, "event_id")
+    }
 
   /** Streaming mixture audit — q192 maintained incrementally: language
     * targets are FROZEN from the planning run (exactly how a shard
@@ -867,42 +755,31 @@ object EventsStream {
       targets: Seq[(String, Long, Long)], // (lang, lang_tokens, target_tokens)
       table: String,
       checkpointDir: String,
-      queryName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        import spark.implicits._
-        val tgt = broadcast(targets.toDF("lang", "lang_tokens", "target_tokens"))
-        val h = graft.functions.HexKeys.value16(
-          md5(concat(lit("mix|"), col("doc_id").cast("string")))).cast("long")
-        val rows = batch.toDF()
-          .select(col("doc_id"), col("lang"),
-            org.apache.spark.sql.functions.size(
-              graft.functions.Text.tokens(col("text"))).cast("long").as("n_tokens"))
-          .join(tgt, Seq("lang"))
-          .withColumn("h", h)
-          .select(col("doc_id"), col("lang"), col("n_tokens"),
-            ((expr("target_tokens DIV lang_tokens") +
-              when(col("h") * col("lang_tokens") <
-                   (col("target_tokens") % col("lang_tokens")) * 65536L, 1L)
-                .otherwise(0L)) * col("n_tokens")).as("emitted_tokens"))
-        idempotentAppend(rows, table, "doc_id")
-        ()
-      }
-      .start()
+      queryName: String): StreamingQuery =
+    eachBatch(docs, checkpointDir, queryName) { batch =>
+      val spark = batch.sparkSession
+      import spark.implicits._
+      val tgt = broadcast(targets.toDF("lang", "lang_tokens", "target_tokens"))
+      val h = graft.functions.HexKeys.value16(
+        md5(concat(lit("mix|"), col("doc_id").cast("string")))).cast("long")
+      val rows = batch
+        .select(col("doc_id"), col("lang"),
+          size(graft.functions.Text.tokens(col("text"))).cast("long").as("n_tokens"))
+        .join(tgt, Seq("lang"))
+        .withColumn("h", h)
+        .select(col("doc_id"), col("lang"), col("n_tokens"),
+          ((expr("target_tokens DIV lang_tokens") +
+            when(col("h") * col("lang_tokens") <
+                 (col("target_tokens") % col("lang_tokens")) * 65536L, 1L)
+              .otherwise(0L)) * col("n_tokens")).as("emitted_tokens"))
+      idempotentAppend(rows, table, "doc_id")
+    }
 
   /** Schema of the `embeddings` parquet (query-side streaming ANN legs). */
-  val embeddingSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("vec_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("embedding",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)),
-      org.apache.spark.sql.types.StructField("label",
-        org.apache.spark.sql.types.IntegerType)))
+  val embeddingSchema: StructType = StructType(Seq(
+    StructField("vec_id", LongType),
+    StructField("embedding", ArrayType(FloatType)),
+    StructField("label", IntegerType)))
 
   /** File-source stream of query vectors. */
   def readEmbeddings(spark: SparkSession, dir: String): DataFrame =
@@ -927,19 +804,12 @@ object EventsStream {
       k: Int, nprobe: Int,
       outTable: String,
       checkpointDir: String,
-      queryName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    queries.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        val res = graft.operators.Similarity.annTopKIvfServe(
-          batch.toDF(), index, cents, "vec_id", "embedding", k, nprobe)
-        idempotentAppend(res, outTable, "query_id")
-        ()
-      }
-      .start()
+      queryName: String): StreamingQuery =
+    eachBatch(queries, checkpointDir, queryName) { batch =>
+      val res = graft.operators.Similarity.annTopKIvfServe(
+        batch, index, cents, "vec_id", "embedding", k, nprobe)
+      idempotentAppend(res, outTable, "query_id")
+    }
 
   /** Streaming graph-ANN index maintenance — q273's insert beam on a
     * continuously-arriving vector stream (the index-lifecycle leg the
@@ -964,29 +834,21 @@ object EventsStream {
       baseDir: String,
       table: String,
       checkpointDir: String,
-      queryName: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      queryName: String): StreamingQuery = {
     val ctx = graft.queries.VectorQueries.insertContext(
       vectors.sparkSession, baseDir)
-    vectors.writeStream
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val edges = graft.queries.VectorQueries.insertEdgesOver(ctx, batch.toDF())
-        idempotentAppend(edges, table, "src")
-        ()
-      }
-      .start()
+    eachBatch(vectors, checkpointDir, queryName) { batch =>
+      idempotentAppend(graft.queries.VectorQueries.insertEdgesOver(ctx, batch), table, "src")
+    }
   }
 
   /** Schema of the `documents` parquet (the corpus-side streaming legs). */
-  val documentSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("lang", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("n_chars", org.apache.spark.sql.types.LongType)))
+  val documentSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType),
+    StructField("text", StringType),
+    StructField("lang", StringType),
+    StructField("source", StringType),
+    StructField("n_chars", LongType)))
 
   /** File-source stream of documents — the continuously-arriving-corpus
     * entry point for the curation legs below.
@@ -1032,9 +894,9 @@ object EventsStream {
                       defaultQ: Long, buckets: Int): DataFrame = {
     val m = map(model.toSeq.sortBy(_._1)
       .flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*)
-    val dimOf = (t: org.apache.spark.sql.Column) =>
+    val dimOf = (t: Column) =>
       (graft.functions.HexKeys.value16(md5(concat(lit("fh|"), t)), 0) % buckets)
-        .cast(org.apache.spark.sql.types.LongType)
+        .cast(LongType)
     docs.select(col("doc_id"),
       aggregate(
         transform(split(col("text"), " "),
@@ -1225,9 +1087,6 @@ object EventsStream {
       .dropDuplicates("doc_a", "doc_b", "ts_a")
   }
 
-  /** Drive a streaming DataFrame to completion against currently-available
-    * files (Trigger.AvailableNow-style smoke path for local verification).
-    */
   final case class PackDoc(doc_id: Long, n: Long, stream_id: Long)
   final case class PackState(bin: Long, fill: Long)
   final case class PackAssign(doc_id: Long, stream_id: Long, bin_seq: Long,
@@ -1272,32 +1131,22 @@ object EventsStream {
       }
   }
 
-  /** [[runToMemorySink]] with explicit micro-batch boundaries: drains
-    * the initially-available data, then runs each `step` (e.g. a
-    * MemoryStream addData) and drains again — the deterministic
-    * multi-batch harness carry-over-state parity tests need.
+  /** Drive a streaming DataFrame to completion against currently-available
+    * files (Trigger.AvailableNow-style smoke path for local verification)
+    * into the memory table `queryName`. Each `step` (e.g. a MemoryStream
+    * addData) runs after the previous drain and is drained in turn — the
+    * explicit micro-batch boundaries carry-over-state parity tests need.
     */
-  def runToMemorySinkSteps(df: DataFrame, queryName: String,
-                           steps: (() => Unit)*): DataFrame = {
-    val q = df.writeStream
-      .format("memory")
-      .queryName(queryName)
-      .outputMode(OutputMode.Append())
-      .start()
-    q.processAllAvailable()
-    steps.foreach { s => s(); q.processAllAvailable() }
-    q.stop()
-    df.sparkSession.table(queryName)
-  }
-
   def runToMemorySink(df: DataFrame, queryName: String,
-                      outputMode: OutputMode = OutputMode.Complete()): DataFrame = {
+                      outputMode: OutputMode = OutputMode.Complete(),
+                      steps: Seq[() => Unit] = Nil): DataFrame = {
     val q = df.writeStream
       .format("memory")
       .queryName(queryName)
       .outputMode(outputMode)
       .start()
     q.processAllAvailable()
+    steps.foreach { s => s(); q.processAllAvailable() }
     q.stop()
     df.sparkSession.table(queryName)
   }

@@ -1813,6 +1813,18 @@ class PlanQualitySpec extends SparkSpec {
     assert(hits.isEmpty, hits.mkString("SparkSession built outside core.Sessions:\n", "\n", ""))
   }
 
+  test("one foreachBatch sink in src/main and one replace-table write in Warehouse") {
+    // Every streaming state leg writes through EventsStream's one
+    // micro-batch sink, and every warehouse table replace through one
+    // drop / orphan-delete / write / exit-cleanup sequence.
+    val sinks = codeLines("foreachBatch".r)
+    assert(sinks.size == 1,
+      sinks.mkString("foreachBatch outside the one sink helper:\n", "\n", ""))
+    val drops = codeLines("DROP TABLE IF EXISTS".r)
+    assert(drops.size == 1 && drops.head.contains("graft/sources/Warehouse.scala"),
+      drops.mkString("DROP TABLE IF EXISTS outside Warehouse's one replace path:\n", "\n", ""))
+  }
+
   test("q48 and q82 keep their cut inputs as named artifacts, not session-long caches") {
     val s = spark.newSession()
     spark.catalog.clearCache()

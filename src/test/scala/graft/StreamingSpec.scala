@@ -738,11 +738,12 @@ class StreamingSpec extends SparkSpec {
       .select(col("doc_id"), col("text")).as[(Long, String)].collect().sortBy(_._1)
     val ms = MemoryStream[(Long, String)]
     ms.addData(rows.filter(_._1 < 250).toSeq)
-    val split = EventsStream.runToMemorySinkSteps(
+    val split = EventsStream.runToMemorySink(
       EventsStream.packStream(
         ms.toDF().toDF("doc_id", "text"), capacity = 512L, numStreams = 8).toDF(),
       "stream_pack_split",
-      () => ms.addData(rows.filter(_._1 >= 250).toSeq))
+      OutputMode.Append(),
+      Seq(() => ms.addData(rows.filter(_._1 >= 250).toSeq)))
     assert(split.collect().toSet === batch.collect().toSet,
       "carry-over state diverged from the one-shot fold")
   }
