@@ -7,10 +7,19 @@ import scala.collection.concurrent.TrieMap
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.model.Contract
+import graft.sources.Warehouse
+
 /** A named, session-scoped derived artifact: a value (a fitted model, a
   * lineage-cut frame, a persisted index) built at most once per
   * (SparkSession, key) and shared by every consumer in that session — the
   * query-level analog of a pipeline materializing a stage once.
+  *
+  * Three forms build an entry:
+  *  - [[apply]]: any value, built by the caller;
+  *  - [[cut]]: a frame behind an eager lineage cut ([[Materialize.cut]]);
+  *  - [[table]]: a frame written to a session-scoped warehouse table
+  *    named by [[tableName]] and read back.
   *
   * Names are declared once and must be unique across the JVM;
   * constructing a second artifact under a name already in use fails.
@@ -47,6 +56,26 @@ final class Artifact[V](val name: String) {
     */
   def cut(spark: SparkSession, key: String)(df: => DataFrame)(implicit ev: DataFrame <:< V): V =
     apply(spark, key)(ev(Materialize.cut(df, name)))
+
+  /** The artifact as a warehouse table: `df` is checked against
+    * `contract` under the artifact's name before any write, written by
+    * `write` (a [[Warehouse]] writer, which sets the layout) under
+    * [[tableName]], and read back.
+    */
+  def table(spark: SparkSession, key: String, contract: Option[Contract] = None)(
+      write: (DataFrame, String) => Unit)(df: => DataFrame)(implicit ev: DataFrame <:< V): V =
+    apply(spark, key) {
+      val (d, t) = (df, tableName(spark, key))
+      contract.foreach(Contract.enforce(name, d, _))
+      write(d, t)
+      ev(spark.table(t))
+    }
+
+  /** The session-scoped warehouse table of this artifact at `key`; a
+    * non-empty `part` names a side table the same build writes.
+    */
+  def tableName(spark: SparkSession, key: String, part: String = ""): String =
+    Warehouse.sessionTable(spark, if (part.isEmpty) name else s"${name}_$part", key)
 }
 
 object Artifact {

@@ -45,9 +45,8 @@ object Materialize {
   def cut(df: DataFrame, tag: String): DataFrame =
     if (!durable(df.sparkSession)) df.localCheckpoint(true)
     else {
-      val name = graft.sources.Warehouse.sessionScopedName(df.sparkSession,
-        "graft_mat_" + tag.replaceAll("[^a-zA-Z0-9]", "_").take(40) +
-          "_" + seq.incrementAndGet())
+      val name = graft.sources.Warehouse.sessionTable(df.sparkSession,
+        "mat_" + tag.take(40), seq.incrementAndGet().toString)
       graft.sources.Warehouse.writeTable(df, name)
       df.sparkSession.table(name)
     }

@@ -83,10 +83,10 @@ final case class Contract(
 
 object Contract {
 
-  /** The enforcement itself, static so marts written OUTSIDE the model
-    * runner (the persisted ANN/LSH index tables — q139/q141/q145/q146)
-    * get the same schema-equality + not-null/unique checks the Eurostat
-    * marts get, before any warehouse write.
+  /** The enforcement itself, static so tables written outside the model
+    * runner (the persisted index tables of `core.Artifact.table`) get the
+    * same schema-equality + not-null/unique checks the Eurostat marts
+    * get, before any warehouse write.
     *
     * The data checks run as one aggregation query that computes `df`
     * once, however many constraints there are: grouping sets give one

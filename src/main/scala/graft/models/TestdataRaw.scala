@@ -149,13 +149,18 @@ object TestdataRaw {
     base.unionByName(aggRow)
   }
 
+  private val builders: Seq[(String, Tables => DataFrame)] = Seq(
+    "raw_gdp"          -> rawGdp,
+    "raw_unemployment" -> rawUnemployment,
+    "raw_inflation"    -> rawInflation,
+    "raw_population"   -> rawPopulation,
+    "country_metadata" -> seedCountryMetadata)
+
   /** All four raw tables + seed, keyed by source name for the Runner. */
-  def sources(t: Tables): Map[String, DataFrame] = Map(
-    "raw_gdp"          -> rawGdp(t),
-    "raw_unemployment" -> rawUnemployment(t),
-    "raw_inflation"    -> rawInflation(t),
-    "raw_population"   -> rawPopulation(t),
-    "country_metadata" -> seedCountryMetadata(t))
+  def sources(t: Tables): Map[String, DataFrame] = builders.map { case (n, b) => n -> b(t) }.toMap
+
+  /** One raw table or the seed, by source name; builds no other. */
+  def source(t: Tables, name: String): DataFrame = builders.toMap.apply(name)(t)
 
   /** DuckDB CTEs computing the exact same raw tables from the parquet
     * views — the shared prefix of every pipeline oracle query.

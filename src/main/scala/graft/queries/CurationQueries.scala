@@ -292,11 +292,6 @@ object CurationQueries {
     notNull = Seq("seg_hash", "seg", "base_df"),
     uniqueKeys = Seq(Seq("seg_hash")))
 
-  /** Session-scoped q204 boilerplate-index table name. */
-  def boilerplateIndexTable(s: SparkSession, dir: String): String =
-    graft.sources.Warehouse.sessionScopedName(s,
-      "graft_q204_bpidx_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-
   private val bpIdxCache = new Artifact[DataFrame]("q204_boilerplate_index")
 
   /** The q204 persisted boilerplate-DF index: per-segment distinct-doc
@@ -307,17 +302,12 @@ object CurationQueries {
     * frequency.
     */
   private def boilerplateIndex(s: SparkSession, dir: String): DataFrame =
-    bpIdxCache(s, dir) {
-      val base = docSegments(
-          Tables(s, dir).documents.filter(capSplitBucket < 50))
+    bpIdxCache.table(s, dir, Some(BoilerplateIdxContract))(
+        graft.sources.Warehouse.writeBucketed(_, _, "seg_hash", 16)) {
+      docSegments(Tables(s, dir).documents.filter(capSplitBucket < 50))
         .groupBy(col("seg"))
         .agg(countDistinct(col("doc_id")).as("base_df"))
         .select(md5(col("seg")).as("seg_hash"), col("seg"), col("base_df"))
-      graft.model.Contract.enforce(
-        "q204_boilerplate_index", base, BoilerplateIdxContract)
-      graft.sources.Warehouse.writeBucketed(
-        base, boilerplateIndexTable(s, dir), "seg_hash", 16)
-      s.table(boilerplateIndexTable(s, dir))
     }
 
   private def md5Bucket16(prefix: String, key: Column): Column = {
@@ -505,17 +495,6 @@ object CurationQueries {
     notNull = Seq("source", "doc_id", "src_rank"),
     uniqueKeys = Seq(Seq("doc_id")))
 
-  /** Session-scoped q198 cap-index table name. */
-  def capIndexTable(s: SparkSession, dir: String): String =
-    graft.sources.Warehouse.sessionScopedName(s,
-      "graft_q198_capidx_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-
-  /** The q198 persisted cap index: the BASE half's (even doc_ids) kept
-    * set, built once per (session, dir) — q141/q145/q172's
-    * build-once/probe-deltas discipline applied to the cap. The state IS
-    * the selection (≤ cap·|sources| rows), so later merges never re-read
-    * the base corpus.
-    */
   /** q198's base/delta split: the q61 md5 bucket (a pure function of
     * doc_id, INDEPENDENT of `source` — the testdata assigns source by
     * doc_id % 20, so a parity split would never put two halves of one
@@ -525,15 +504,16 @@ object CurationQueries {
     graft.functions.HexKeys.value16(
       md5(concat(lit("split|"), col("doc_id").cast(StringType)))) % 100
 
+  /** The q198 persisted cap index: the BASE half's (even doc_ids) kept
+    * set, built once per (session, dir) — q141/q145/q172's
+    * build-once/probe-deltas discipline applied to the cap. The state IS
+    * the selection (≤ cap·|sources| rows), so later merges never re-read
+    * the base corpus.
+    */
   private val capIdxCache = new Artifact[DataFrame]("q198_cap_index")
   private def sourceCapIndex(s: SparkSession, dir: String): DataFrame =
-    capIdxCache(s, dir) {
-      val kept = sourceCapped(
-        Tables(s, dir).documents.filter(capSplitBucket < 50))
-      graft.model.Contract.enforce("q198_cap_index", kept, SourceCapContract)
-      graft.sources.Warehouse.writeTable(kept, capIndexTable(s, dir))
-      s.table(capIndexTable(s, dir))
-    }
+    capIdxCache.table(s, dir, Some(SourceCapContract))(graft.sources.Warehouse.writeTable)(
+      sourceCapped(Tables(s, dir).documents.filter(capSplitBucket < 50)))
 
   /** q161/q196's shared curation pass: DSIR-score every document
     * (q148's model), drop non-canonical duplicates (q67/q149's

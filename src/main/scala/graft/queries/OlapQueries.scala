@@ -577,11 +577,7 @@ object OlapQueries {
         .drop("ck_min", "ck_max", "day_min", "day_max")
   }
 
-  private def zorderStatsTable(s: SparkSession, dir: String): String =
-    graft.sources.Warehouse.sessionScopedName(s,
-      "graft_q220_zstats_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-
-  private val zIdxCache = new Artifact[DataFrame]("q220_zorder_stats")
+  private val zIdxCache = new Artifact[DataFrame]("q220_zstats")
 
   /** q220's persisted base stats: per-file min/max/count over the EVEN
     * o_orderkey half, with the base grid bounds stored as constant
@@ -589,14 +585,11 @@ object OlapQueries {
     * batches must bucket on the build-time grid, not refit it).
     */
   private def zorderStatsIndex(s: SparkSession, dir: String): DataFrame =
-    zIdxCache(s, dir) {
+    zIdxCache.table(s, dir)(graft.sources.Warehouse.writeTable) {
       val base = ZOrder.prep(
         Tables(s, dir).orders.filter(col("o_orderkey") % 2 === 0))
       val b = ZOrder.bounds(base)
-      val stats = ZOrder.fileStats(ZOrder.assign(base, b))
-        .crossJoin(broadcast(b))
-      graft.sources.Warehouse.writeTable(stats, zorderStatsTable(s, dir))
-      s.table(zorderStatsTable(s, dir))
+      ZOrder.fileStats(ZOrder.assign(base, b)).crossJoin(broadcast(b))
     }
 
   val oracles: Map[String, String] = Map(

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import graft.analytics.{Anomaly, Forecast, QualityScores}
 import graft.core.{Artifact, Tables}
+import graft.model.Model
 import graft.models._
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DateType, StringType}
@@ -40,54 +41,53 @@ object PipelineQueries {
   /** The composed pipeline references each staging model several times
     * (spine + join + annual rollup); Catalyst does not dedupe identical
     * subtrees, so without a cut the 600k-row raw-synthesis joins re-run
-    * per reference. Staging outputs are tiny (countries × months), so
-    * caching them is the correct plan cut — the query-level analog of the
-    * reference materializing marts as tables (`dbt_project.yml:45`).
-    * Cached per (session, sfDir), shared across pipeline queries, as an
-    * eager lineage cut rather than a lazy `.cache()`: consumer plans
-    * start from the materialized stage instead of carrying (and
-    * re-analyzing) the full staging lineage.
+    * per reference. Stage outputs are tiny (countries × months), so each
+    * of the eight stages below (staging, intermediate, dim, fct) is an
+    * eager lineage cut per (session, sfDir, model), shared across
+    * pipeline queries — the query-level analog of the reference
+    * materializing marts as tables (`dbt_project.yml:45`). Without the
+    * cut, q54/q56/q57/q58/q59 would each re-plan and re-run the whole
+    * staging→fct chain.
     */
   private val stageCache = new Artifact[DataFrame]("pipeline_stage")
-  private def cached(t: Tables, key: String)(build: => DataFrame): DataFrame =
-    stageCache.cut(t.spark, s"${t.dir}|$key")(build)
 
-  private def stgUnemp(t: Tables) =
-    cached(t, "su")(Staging.unemployment(TestdataRaw.rawUnemployment(t)))
-  private def stgInfl(t: Tables) =
-    cached(t, "si")(Staging.inflation(TestdataRaw.rawInflation(t)))
-  private def stgGdp(t: Tables) =
-    cached(t, "sg")(Staging.gdp(TestdataRaw.rawGdp(t)))
-  private def stgPop(t: Tables) =
-    cached(t, "sp")(Staging.population(TestdataRaw.rawPopulation(t)))
-  // The intermediate/mart layers are cached too (all tiny: countries ×
-  // months): q54/q56/q57/q58/q59 each consume fct, and without the cut the
-  // whole staging→fct chain re-plans and re-runs per query — the bench
-  // then charges the pipeline build to five queries instead of one. At
-  // real scale the Runner materializes these as tables; the cache is the
-  // query-level analog.
-  private def intAnnual(t: Tables) = cached(t, "ia")(
-    Intermediate.annualMetrics(stgGdp(t), stgPop(t), stgUnemp(t), stgInfl(t)))
-  private def intMonthly(t: Tables) = cached(t, "im")(
-    Intermediate.monthlyIndicators(stgUnemp(t), stgInfl(t), intAnnual(t)))
-  private def dim(t: Tables) = cached(t, "dim")(
-    Marts.dimCountry(TestdataRaw.seedCountryMetadata(t), stgGdp(t), AsOf))
-  private def fct(t: Tables) = cached(t, "fct")(fctPlan(t.spark, t.dir))
+  /** The Runner's DAG: a stage is its model's transform over its resolved
+    * deps, so this object wires no edge of its own.
+    */
+  private val dag: Map[String, Model] =
+    EurostatModels.models(AsOf, "graft-run").map(m => m.name -> m).toMap
+
+  /** `name`'s transform over its deps: stages come cut, raw sources are
+    * built only when a stage reads them.
+    */
+  private def plan(t: Tables, name: String): DataFrame = {
+    val m = dag(name)
+    def input(d: String) = if (dag.contains(d)) stage(t, d) else TestdataRaw.source(t, d)
+    m.transform(m.deps.map(d => d -> input(d)).toMap)
+  }
+  private def stage(t: Tables, name: String): DataFrame =
+    stageCache.cut(t.spark, s"${t.dir}|$name")(plan(t, name))
+
+  private def intAnnual(t: Tables) = stage(t, "int_country_annual_metrics")
+  private def dim(t: Tables) = stage(t, "dim_country")
+  private def fct(t: Tables) = stage(t, "fct_economic_indicators")
 
   /** The LAZY fct plan over the memoized upstream stages — the very plan
     * [[fct]] cuts, exposed so PlanQualitySpec can assert the dim-join
     * broadcast shape that the shipped cut form hides behind its
     * checkpoint scan.
     */
-  def fctPlan(s: SparkSession, dir: String): DataFrame = {
-    val t = Tables(s, dir)
-    Marts.fctEconomicIndicators(intMonthly(t), dim(t), AsOf, "graft-run")
-  }
+  def fctPlan(s: SparkSession, dir: String): DataFrame =
+    plan(Tables(s, dir), "fct_economic_indicators")
 
   val defs: Map[String, Q] = Map(
-    "q50_stg_unemployment" -> { (s, dir) => out(stgUnemp(Tables(s, dir))) },
+    "q50_stg_unemployment" -> { (s, dir) =>
+      out(stage(Tables(s, dir), "stg_eurostat__unemployment"))
+    },
     "q51_int_annual_metrics" -> { (s, dir) => out(intAnnual(Tables(s, dir))) },
-    "q52_int_monthly_indicators" -> { (s, dir) => out(intMonthly(Tables(s, dir))) },
+    "q52_int_monthly_indicators" -> { (s, dir) =>
+      out(stage(Tables(s, dir), "int_country_monthly_indicators"))
+    },
     "q53_dim_country" -> { (s, dir) => out(dim(Tables(s, dir))) },
     "q54_fct_indicators" -> { (s, dir) => out(fct(Tables(s, dir))) },
     "q55_rpt_annual_summary" -> { (s, dir) =>
@@ -144,7 +144,8 @@ object PipelineQueries {
         col("min_training_samples").cast("long")))
     },
     "q60_consistency_test" -> { (s, dir) =>
-      out(EurostatModels.euAggregateConsistencyViolations(stgGdp(Tables(s, dir))))
+      out(EurostatModels.euAggregateConsistencyViolations(
+        stage(Tables(s, dir), "stg_eurostat__gdp")))
     },
     // Semantic-layer gate: the README metric registry (semantic.Metrics)
     // computed over fct at annual grain — all six simple metrics, the

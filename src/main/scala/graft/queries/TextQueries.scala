@@ -3709,11 +3709,6 @@ object TextQueries {
               (col("jaccard") >= 0.5).as("is_near_dup"))
   }
 
-  /** Session-scoped q145 LSH band-index table name. */
-  def lshIndexTable(s: SparkSession, dir: String): String =
-    graft.sources.Warehouse.sessionScopedName(s,
-      "graft_q145_lsh_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-
   /** The q145 persisted band index: bands of the BASE half (even
     * doc_ids), materialized once per (session, dir) as a
     * band_hash-bucketed warehouse table (q139's memo discipline).
@@ -3736,13 +3731,10 @@ object TextQueries {
 
   private val lshIdxCache = new Artifact[DataFrame]("q145_lsh_index")
   private def lshIndex(s: SparkSession, dir: String): DataFrame =
-    lshIdxCache(s, dir) {
+    lshIdxCache.table(s, dir, Some(LshIndexContract))(
+        graft.sources.Warehouse.writeBucketed(_, _, "band_hash", numBuckets = 16)) {
       val base = Tables(s, dir).documents.filter(col("doc_id") % 2 === 0)
-      val bands = Dedup.lshBands(Dedup.minhashSignatures(base, "doc_id", "text"))
-      graft.model.Contract.enforce("q145_lsh_index", bands, LshIndexContract)
-      graft.sources.Warehouse.writeBucketed(
-        bands, lshIndexTable(s, dir), "band_hash", numBuckets = 16)
-      s.table(lshIndexTable(s, dir))
+      Dedup.lshBands(Dedup.minhashSignatures(base, "doc_id", "text"))
     }
 
   /** The delta batch's band frame, collected ONCE to the driver
@@ -3833,13 +3825,6 @@ object TextQueries {
     snmValsCache.cut(s, dir)(
       graft.operators.Dedup.simhashVals(Tables(s, dir).documents, "doc_id", "text"))
 
-  /** q215 persisted SNM index table names (session-scoped). */
-  def snmIndexTables(s: SparkSession, dir: String): (String, String, String, String) = {
-    def n(part: String) = graft.sources.Warehouse.sessionScopedName(s,
-      s"graft_q215_snm${part}_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-    (n("vals"), n("keys"), n("counts"), n("bounds"))
-  }
-
   /** A duplicated (rot, k) row would double-count ranks and shift every
     * window downstream of it — enforced before the write.
     */
@@ -3862,24 +3847,20 @@ object TextQueries {
     * re-deriving quantiles at probe time would silently shift buckets.
     */
   private val snmIdxCache = new Artifact[DataFrame]("q215_snm_index")
-  private[graft] def snmIndex(s: SparkSession, dir: String): DataFrame =
-    snmIdxCache(s, dir) {
-      val (valsT, keysT, countsT, boundsT) = snmIndexTables(s, dir)
-      val base = Tables(s, dir).documents.filter(
+  private[graft] def snmIndex(s: SparkSession, dir: String): DataFrame = {
+    // lazy: a memo hit builds none of them
+    lazy val baseVals = graft.core.Materialize.cut(
+      graft.operators.Dedup.simhashVals(Tables(s, dir).documents.filter(
         graft.functions.HexKeys.value16(
-          md5(concat(lit("split|"), col("doc_id").cast(StringType)))) % 100 < 50)
-      val baseVals = graft.core.Materialize.cut(
-        graft.operators.Dedup.simhashVals(base, "doc_id", "text"),
-        "snm_idx_vals")
-      val keys = graft.operators.Dedup.snmKeys(baseVals, SnmRotations)
-        .withColumn("__proxy", graft.operators.Dedup.snmProxy(col("k")))
-      val bounds = graft.operators.Sharding.boundaries(keys, "__proxy", 32)
-      val keyed = keys
-        .withColumn("__b", graft.operators.Dedup
-          .snmBucketOf(bounds, col("__proxy")).cast(LongType))
-        .select(col("rot"), col("k"), col("h"), col("__b"))
-      graft.model.Contract.enforce("q215_snm_keys", keyed, SnmKeysContract)
-      graft.sources.Warehouse.writeTable(baseVals, valsT)
+          md5(concat(lit("split|"), col("doc_id").cast(StringType)))) % 100 < 50),
+        "doc_id", "text"),
+      "snm_idx_vals")
+    lazy val keys = graft.operators.Dedup.snmKeys(baseVals, SnmRotations)
+      .withColumn("__proxy", graft.operators.Dedup.snmProxy(col("k")))
+    lazy val bounds = graft.operators.Sharding.boundaries(keys, "__proxy", 32)
+    def side(part: String) = snmIdxCache.tableName(s, dir, part)
+    snmIdxCache.table(s, dir, Some(SnmKeysContract)) { (keyed, keysT) =>
+      graft.sources.Warehouse.writeTable(baseVals, side("vals"))
       // PARTITIONED (not bucketed) by __b: the probe is a scan-only
       // consumer (filter → union → window), for which the planner
       // disables bucketed reading entirely ("Bucketed: false") and
@@ -3887,14 +3868,16 @@ object TextQueries {
       // is planner-independent, and __b has ≤ 33 values
       graft.sources.Warehouse.writePartitionedTable(keyed, keysT, "__b")
       graft.sources.Warehouse.writeTable(
-        keyed.groupBy(col("rot"), col("__b")).agg(count(lit(1)).as("__n")),
-        countsT)
+        keyed.groupBy(col("rot"), col("__b")).agg(count(lit(1)).as("__n")), side("counts"))
       graft.sources.Warehouse.writeTable(
-        s.range(1).select(
-          typedLit(bounds.toSeq).as("bounds")),
-        boundsT)
-      s.table(keysT)
+        s.range(1).select(typedLit(bounds.toSeq).as("bounds")), side("bounds"))
+    } {
+      keys
+        .withColumn("__b", graft.operators.Dedup
+          .snmBucketOf(bounds, col("__proxy")).cast(LongType))
+        .select(col("rot"), col("k"), col("h"), col("__b"))
     }
+  }
 
   /** q215: the INCREMENTAL sorted-neighborhood probe — q213 under the
     * q141/q145/q172/q198/q204 build-once/probe-deltas discipline. The
@@ -3915,9 +3898,9 @@ object TextQueries {
     */
   private def snmServeIncremental(s: SparkSession, dir: String): DataFrame = {
     val idxKeys = snmIndex(s, dir)
-    val (valsT, _, countsT, boundsT) = snmIndexTables(s, dir)
-    val idxVals = s.table(valsT)
-    val bounds = s.table(boundsT).first().getSeq[Double](0).toArray
+    def side(part: String) = s.table(snmIdxCache.tableName(s, dir, part))
+    val idxVals = side("vals")
+    val bounds = side("bounds").first().getSeq[Double](0).toArray
     val delta = Tables(s, dir).documents.filter(
       graft.functions.HexKeys.value16(
         md5(concat(lit("split|"), col("doc_id").cast(StringType)))) % 100 >= 50)
@@ -3947,7 +3930,7 @@ object TextQueries {
     val frame = idxKeys.filter(col("__b").isin(halo.map(Long.box): _*))
       .select(col("rot"), col("k"), col("h"), col("__b"))
       .unionByName(newKeys.select(col("rot"), col("k"), col("h"), col("__b")))
-    val allCounts = s.table(countsT)
+    val allCounts = side("counts")
       .unionByName(newKeys.groupBy(col("rot"), col("__b"))
         .agg(count(lit(1)).as("__n")))
       .groupBy(col("rot"), col("__b")).agg(sum(col("__n")).as("__n"))
@@ -3974,11 +3957,6 @@ object TextQueries {
               col("n_docs_b"), col("canonical_b"), col("is_new_b"))
   }
 
-  /** Session-scoped q172 chunk-hash dedup-index table name. */
-  def chunkIndexTable(s: SparkSession, dir: String): String =
-    graft.sources.Warehouse.sessionScopedName(s,
-      "graft_q172_chunkidx_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-
   /** The persisted chunk-index mart contract: one row per DISTINCT chunk
     * hash (the canonical first occurrence with its provenance) — a
     * duplicated hash row would survive probes it should block.
@@ -3999,15 +3977,14 @@ object TextQueries {
     */
   private val chunkIdxCache = new Artifact[DataFrame]("q172_chunk_index")
   private def chunkIndex(s: SparkSession, dir: String): DataFrame =
-    chunkIdxCache(s, dir) {
+    chunkIdxCache.table(s, dir, Some(ChunkIndexContract))(chunkHashBucketed) {
       val base = Tables(s, dir).documents.filter(col("doc_id") % 2 === 0)
-      val canon = Dedup.canonicalChunks(
-        Dedup.chunkFrame(base, "doc_id", "text", ChunkDedupTokens))
-      graft.model.Contract.enforce("q172_chunk_index", canon, ChunkIndexContract)
-      graft.sources.Warehouse.writeBucketed(
-        canon, chunkIndexTable(s, dir), "chunk_hash", numBuckets = 16)
-      s.table(chunkIndexTable(s, dir))
+      Dedup.canonicalChunks(Dedup.chunkFrame(base, "doc_id", "text", ChunkDedupTokens))
     }
+
+  /** The chunk_hash-bucketed layout of the q172 and q227 chunk indexes. */
+  private def chunkHashBucketed(df: DataFrame, table: String): Unit =
+    graft.sources.Warehouse.writeBucketed(df, table, "chunk_hash", numBuckets = 16)
 
   /** q172: INCREMENTAL chunk-level dedup against the persisted index —
     * the q141/q145 build-once/probe-deltas discipline applied to q169's
@@ -4049,11 +4026,6 @@ object TextQueries {
              x => x.getField("chunk_text"))).as("residual_text"))
   }
 
-  /** Session-scoped q227 CDC chunk-hash dedup-index table name. */
-  def cdcIndexTable(s: SparkSession, dir: String): String =
-    graft.sources.Warehouse.sessionScopedName(s,
-      "graft_q227_cdcidx_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-
   /** The q227 persisted CDC chunk-hash index — [[chunkIndex]]'s
     * build-once discipline at CONTENT-DEFINED granularity: canonical
     * (first-occurrence) CDC chunks of the BASE half (even doc_ids),
@@ -4065,13 +4037,9 @@ object TextQueries {
     */
   private val cdcIdxCache = new Artifact[DataFrame]("q227_cdc_index")
   private def cdcChunkIndex(s: SparkSession, dir: String): DataFrame =
-    cdcIdxCache(s, dir) {
+    cdcIdxCache.table(s, dir, Some(ChunkIndexContract))(chunkHashBucketed) {
       val base = Tables(s, dir).documents.filter(col("doc_id") % 2 === 0)
-      val canon = Dedup.canonicalChunks(Dedup.cdcChunkFrame(base, "doc_id", "text"))
-      graft.model.Contract.enforce("q227_cdc_index", canon, ChunkIndexContract)
-      graft.sources.Warehouse.writeBucketed(
-        canon, cdcIndexTable(s, dir), "chunk_hash", numBuckets = 16)
-      s.table(cdcIndexTable(s, dir))
+      Dedup.canonicalChunks(Dedup.cdcChunkFrame(base, "doc_id", "text"))
     }
 
   /** q227: incremental CDC chunk dedup against the persisted index —

@@ -1422,9 +1422,11 @@ object VectorQueries {
     * normalized nonzero vector frame behind a lineage cut; [[nndGraph]]
     * is the directed top-[[NndK]] NN-descent edge list — both cached per
     * (session, sfDir) so the build runs ONCE however many serve legs
-    * read it (q268 + three q272 widths).
+    * read it (q268 + three q272 widths). [[nndCorpus]]'s keys are
+    * [[nndGraphOver]]'s cache keys, so its artifact's `tableName` also
+    * names the build's cand_id-bucketed corpus table.
     */
-  private val nndVecCache = new Artifact[DataFrame]("nnd_corpus")
+  private[graft] val nndVecCache = new Artifact[DataFrame]("nnd_corpus")
   private val nndEdgeCache = new Artifact[DataFrame]("nnd_edges")
   private val nndSymCache = new Artifact[DataFrame]("nnd_sym_edges")
   private val q37TruthCache = new Artifact[DataFrame]("q37_truth")
@@ -1449,32 +1451,12 @@ object VectorQueries {
                              g: => DataFrame): DataFrame =
     nndSymCache.cut(s, key)(symmetrized(g))
 
-  /** Catalog name of the cand_id-bucketed NN-descent corpus table for one
-    * (session, cache key) — the persisted index every build-round vector
-    * attach joins exchange-free. Exposed for PlanQualitySpec's probe.
-    */
-  /** 8-hex md5 prefix of the FULL cache key — appended to every
-    * key-derived table/index name so two distinct dataset dirs sharing a
-    * sanitized right-truncated tail can never map to one name and
-    * silently serve each other's index (round-17 advice).
-    */
-  private def keyHash(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
-
-  private[graft] def nndCorpusTable(s: SparkSession, cacheKey: String): String =
-    graft.sources.Warehouse.sessionScopedName(s,
-      "graft_nnd_corpus_" + cacheKey.replaceAll("[^a-zA-Z0-9]", "_").takeRight(32) +
-        "_" + keyHash(cacheKey))
-
   /** Warehouse name of the cross-session durable NN-descent edge index
-    * for one cache key (dataset-dir-derived; hash-suffixed so distinct
-    * dirs can never collide) — shared by [[nndGraphOver]] and the
+    * for one cache key — shared by [[nndGraphOver]] and the
     * durable-lifecycle tests.
     */
   private[graft] def nndDurableIndexName(cacheKey: String): String =
-    "graft_nnd_edges_" + cacheKey.replaceAll("[^a-zA-Z0-9]", "_").takeRight(40) +
-      "_" + keyHash(cacheKey)
+    graft.sources.Warehouse.keyedName(nndEdgeCache.name, cacheKey)
 
   /** Normalized nonzero vectors (cand_id, cv, cn) behind a lineage cut;
     * `base = true` restricts to the q273 base split (vec_id % 5 != 3).
@@ -1571,7 +1553,7 @@ object VectorQueries {
       // and the oracle quantizes identically (nndVnCteSql's qv2/qnrm),
       // so the oracle gate stays exact — the build's candidate evolution
       // is DEFINED over quantized scores on both engines.
-      val tbl = nndCorpusTable(s, cacheKey)
+      val tbl = nndVecCache.tableName(s, cacheKey)
       val cq = transform(col("cv"), x =>
         greatest(lit(-32000L), least(lit(32000L), floor(x * 10000)))
           .cast("smallint"))
@@ -1888,15 +1870,6 @@ object VectorQueries {
                 .cast("double") / 1e9 - 1).as("cosine"))
   }
 
-  /** Catalog name of the bucketed symmetrized-kNN edge table for one
-    * (session, sf dir) — dir-derived so datasets can't cross-corrupt
-    * (q90's discipline), session-scoped so concurrent sessions on one
-    * warehouse can't clobber each other (round-7 advice).
-    */
-  def knnEdgeTable(s: SparkSession, dir: String): String =
-    graft.sources.Warehouse.sessionScopedName(s,
-      "graft_knn_edges_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-
   private val knnEdgeCache = new Artifact[DataFrame]("q118_knn_sym_edges")
 
   /** The symmetrized q118 kNN graph (both directions, distinct),
@@ -1910,14 +1883,11 @@ object VectorQueries {
     * edge table in the warehouse, scanned in place every iteration.
     */
   private def symKnnEdges(s: SparkSession, dir: String): DataFrame =
-    knnEdgeCache(s, dir) {
+    knnEdgeCache.table(s, dir)(
+        graft.sources.Warehouse.writeBucketed(_, _, "src", numBuckets = 32)) {
       val knn = knnGraph(s, dir).select(col("vec_id"), col("neighbor_id"))
       val di  = knn.select(col("vec_id").as("src"), col("neighbor_id").as("dst"))
-      val edges = di.union(di.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-      graft.sources.Warehouse.writeBucketed(
-        edges, knnEdgeTable(s, dir), "src", numBuckets = 32)
-      s.table(knnEdgeTable(s, dir))
+      di.union(di.select(col("dst").as("src"), col("src").as("dst"))).distinct()
     }
 
   /** Per-plane sign bits of the 1e3-quantized vector — the signature the
@@ -2376,27 +2346,22 @@ object VectorQueries {
     notNull = Seq("vec_id", "v", "nrm", "centroid_id"),
     uniqueKeys = Seq(Seq("vec_id")))
 
-  /** Session-scoped q139 IVF index table name. */
-  def ivfIndexTable(s: SparkSession, dir: String): String =
-    graft.sources.Warehouse.sessionScopedName(s,
-      "graft_q139_ivf_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-
   /** The q139 index build, memoized per (session, dir) — q90's bucketed-
     * table memo discipline: the nearest-centroid assignment materializes
     * ONCE to a centroid_id-bucketed warehouse table; every serve call
     * (and the PlanQualitySpec probe) then reads the bucketed layout.
     */
-  private val ivfIdxCache = new Artifact[DataFrame]("q139_ivf_index")
+  private[graft] val ivfIdxCache = new Artifact[DataFrame]("q139_ivf_index")
   private def ivfIndex(s: SparkSession, dir: String): DataFrame =
-    ivfIdxCache(s, dir) {
+    ivfIdxCache.table(s, dir, Some(IvfIndexContract))(ivfBucketed) {
       val n = Tables(s, dir).embeddings
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      val (_, assigned) = Similarity.ivfIndexFrames(n, IvfNlist)
-      graft.model.Contract.enforce("q139_ivf_index", assigned, IvfIndexContract)
-      graft.sources.Warehouse.writeBucketed(
-        assigned, ivfIndexTable(s, dir), "centroid_id", numBuckets = IvfNlist)
-      s.table(ivfIndexTable(s, dir))
+      Similarity.ivfIndexFrames(n, IvfNlist)._2
     }
+
+  /** The centroid_id-bucketed layout every IVF index table is written in. */
+  private def ivfBucketed(df: DataFrame, table: String): Unit =
+    graft.sources.Warehouse.writeBucketed(df, table, "centroid_id", numBuckets = IvfNlist)
 
   /** The q139 serving path. `queryPred` selects the query batch —
     * exposed so PlanQualitySpec can serve a single query and assert the
@@ -2429,17 +2394,12 @@ object VectorQueries {
       idx, cents, "vec_id", "embedding", k, nprobe = IvfNprobe)
   }
 
-  /** Session-scoped q141 incremental index table name. */
-  def ivfIncTable(s: SparkSession, dir: String): String =
-    graft.sources.Warehouse.sessionScopedName(s,
-      "graft_q141_ivfinc_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-
   /** The q141 incremental build, memoized per (session, dir): base
     * (even vec_ids) builds the bucketed index and freezes the centroids;
     * the delta (odd vec_ids) is assigned with those centroids and
     * APPENDED — the base files are never touched again.
     */
-  private val ivfIncCache = new Artifact[DataFrame]("q141_ivf_index")
+  private[graft] val ivfIncCache = new Artifact[DataFrame]("q141_ivf_index")
   private val ivfIncCentCache =
     new Artifact[Seq[(Long, Array[Double], Double)]]("q141_ivf_centroids")
   private def ivfIncCents(s: SparkSession, dir: String): Seq[(Long, Array[Double], Double)] =
@@ -2454,10 +2414,8 @@ object VectorQueries {
       def proj(pred: org.apache.spark.sql.Column) = e.filter(pred)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       val cents = ivfIncCents(s, dir)
-      val table = ivfIncTable(s, dir)
-      graft.sources.Warehouse.writeBucketed(
-        Similarity.ivfAssignWith(proj(col("vec_id") % 2 === 0), cents),
-        table, "centroid_id", numBuckets = IvfNlist)
+      val table = ivfIncCache.tableName(s, dir)
+      ivfBucketed(Similarity.ivfAssignWith(proj(col("vec_id") % 2 === 0), cents), table)
       graft.sources.Warehouse.appendBucketed(
         Similarity.ivfAssignWith(proj(col("vec_id") % 2 === 1), cents),
         table, "centroid_id", numBuckets = IvfNlist)
@@ -2524,11 +2482,6 @@ object VectorQueries {
       ivfIncIndex(s, dir), ivfIncCents(s, dir),
       "vec_id", "embedding", k, nprobe = IvfNprobe)
 
-  /** Session-scoped q146 rebuilt/compacted index table name. */
-  def ivfRebTable(s: SparkSession, dir: String): String =
-    graft.sources.Warehouse.sessionScopedName(s,
-      "graft_q146_ivfreb_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
-
   /** q146 rebuild centroids: re-picked from the APPENDED index's own
     * rows. The pick is a pure function of the (vec_id, v) set —
     * md5-ordered seed selection — so rebuilding from the drifted table
@@ -2553,15 +2506,9 @@ object VectorQueries {
     */
   private val ivfRebCache = new Artifact[DataFrame]("q146_ivf_index")
   private def ivfRebIndex(s: SparkSession, dir: String): DataFrame =
-    ivfRebCache(s, dir) {
-      val assigned = Similarity.ivfAssignWith(
-        ivfIncIndex(s, dir).select(col("vec_id"), col("v")),
-        ivfRebCents(s, dir))
-      graft.model.Contract.enforce("q146_ivf_index_rebuilt", assigned, IvfIndexContract)
-      graft.sources.Warehouse.writeBucketed(
-        assigned, ivfRebTable(s, dir), "centroid_id", numBuckets = IvfNlist)
-      s.table(ivfRebTable(s, dir))
-    }
+    ivfRebCache.table(s, dir, Some(IvfIndexContract))(ivfBucketed)(
+      Similarity.ivfAssignWith(
+        ivfIncIndex(s, dir).select(col("vec_id"), col("v")), ivfRebCents(s, dir)))
 
   /** The q146 serving path over the rebuilt index. */
   def ivfServeRebuilt(s: SparkSession, dir: String,

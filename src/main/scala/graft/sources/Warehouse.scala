@@ -21,17 +21,34 @@ object Warehouse {
       .parquet(path)
 
   /** Session-scoped table name: `base` plus a suffix derived from this
-    * session's UUID. Memoized bucketed tables (kNN edges, graph edges)
-    * are keyed by dataset dir, so WITHOUT scoping, two sessions over the
-    * same warehouse dir would share one catalog location — and
-    * [[writeBucketed]]'s drop-then-rewrite could clobber a table the
-    * other session is mid-read on (round-7 advice). With the UUID in the
-    * name, a session can only ever drop its own table, and the orphan-dir
-    * delete below can never hit pre-existing unrelated data.
+    * session's UUID. With the UUID in the name, two sessions over one
+    * warehouse dir never share a catalog location, so a session can only
+    * drop or rewrite its own table, and the orphan-dir delete below can
+    * never hit unrelated data.
     */
   def sessionScopedName(spark: SparkSession, base: String): String =
     base + "_s" + org.apache.spark.sql.graftx.Bridge.sessionUUID(spark)
       .replaceAll("[^a-zA-Z0-9]", "").take(12)
+
+  /** The one table name of artifact `base` at `key` (a dataset dir, a
+    * cache key, a sequence number), not session-scoped: `graft_`, the
+    * sanitized base, the sanitized key's last 32 characters, and an
+    * 8-hex md5 of the FULL key, so keys that sanitize or truncate alike
+    * (`/d/sf0.01`, `/d/sf0_01`) still name different tables. Used bare
+    * only for cross-session [[durableIndex]] names.
+    */
+  def keyedName(base: String, key: String): String = {
+    def clean(x: String) = x.replaceAll("[^a-zA-Z0-9]", "_")
+    val hash = java.security.MessageDigest.getInstance("MD5")
+      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+    s"graft_${clean(base)}_${clean(key).takeRight(32)}_$hash"
+  }
+
+  /** [[keyedName]] scoped to `spark`'s session ([[sessionScopedName]]):
+    * the name of every session-lifetime artifact table.
+    */
+  def sessionTable(spark: SparkSession, base: String, key: String): String =
+    sessionScopedName(spark, keyedName(base, key))
 
   /** Register a bucketed table: both sides of a recurring equi-join
     * bucketed by the join key on the same bucket count join WITHOUT a

@@ -321,14 +321,19 @@ object EventsStream {
       // keys would otherwise write every copy, including on the first
       // overwrite batch). Same rule as the batch Runner: Upserts.
       val batch = graft.functions.Upserts.latestPerKey(batch0, uniqueKey, orderCol)
-      val target = new java.io.File(targetDir)
+      val target = new org.apache.hadoop.fs.Path(targetDir)
+      val fs = target.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
       // ANY existing DATA content counts (partitioned layouts nest their
       // parquet files) — but ignore metadata/temp entries (_temporary
       // from a crashed write, _SUCCESS, .crc) so replay after a failed
       // first batch recovers by overwriting rather than failing the
       // read forever. A non-parquet obstruction still fails loudly.
-      val exists = target.exists &&
-        Option(target.list()).exists(_.exists(n => !n.startsWith("_") && !n.startsWith(".")))
+      // Asked of the target's own filesystem, so an s3a://, hdfs:// or
+      // file: URI target is seen as well as a local path.
+      val exists = fs.exists(target) && fs.listStatus(target).exists { st =>
+        val n = st.getPath.getName
+        !n.startsWith("_") && !n.startsWith(".")
+      }
       if (!exists) batch.write.mode("overwrite").parquet(targetDir)
       else batch
         .join(batch.sparkSession.read.parquet(targetDir).select(col(uniqueKey)),

@@ -71,4 +71,26 @@ class ArtifactSpec extends SparkSpec {
     assert(Artifact.built(s) == seen)
     assert(a(s, "absent")(2) == 2, "a probed-but-unbuilt key still builds on first use")
   }
+
+  test("keys that differ only in punctuation name different warehouse tables") {
+    val a = new Artifact[org.apache.spark.sql.DataFrame]("spec.table")
+    val (dot, underscore) = (a.tableName(spark, "/d/a.b"), a.tableName(spark, "/d/a_b"))
+    assert(dot != underscore, s"one table for two keys: $dot")
+    assert(dot.startsWith("graft_spec_table__d_a_b_"), dot)
+    assert(a.tableName(spark, "/d/a.b", "side") != dot)
+  }
+
+  test("one session builds q90 over two dirs that differ only in punctuation") {
+    // each dir's index table is its own: building the second must not
+    // drop the table the first dir's memoized frame reads
+    val root = java.nio.file.Files.createTempDirectory("graft-punct")
+    val data = java.nio.file.Paths.get("/root/testdata/sf0.001")
+    val Seq(dot, underscore) = Seq("sf0.001", "sf0_001")
+      .map(n => java.nio.file.Files.createSymbolicLink(root.resolve(n), data).toString)
+    val s = spark.newSession()
+    val first = SparkEntry.queries("q90_pagerank")(s, dot)
+    val n = first.count()
+    assert(SparkEntry.queries("q90_pagerank")(s, underscore).count() == n)
+    assert(first.count() == n, "the first dir's frame lost its table")
+  }
 }

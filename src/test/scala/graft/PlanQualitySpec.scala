@@ -357,7 +357,7 @@ class PlanQualitySpec extends SparkSpec {
     // disabled so the tiny sf0.001 ranks can't hide the shuffle behavior.
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val edges  = spark.table(graft.queries.GraphQueries.edgeTable(spark, dir))
+      val edges  = spark.table(graft.queries.GraphQueries.edgeCache.tableName(spark, dir))
       val outdeg = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
       val ranks  = edges.select(col("src").as("node")).distinct()
         .withColumn("rank", lit(1L))
@@ -1660,7 +1660,7 @@ class PlanQualitySpec extends SparkSpec {
     // frame joined on cand_id must plan with the corpus read `Bucketed:
     // true` and NO Exchange over the corpus side — only the id rows move.
     SparkEntry.queries("q268_graph_ann_beam")(spark, dir).count()
-    val tbl = graft.queries.VectorQueries.nndCorpusTable(spark, dir)
+    val tbl = graft.queries.VectorQueries.nndVecCache.tableName(spark, dir)
     val corpusB = spark.table(tbl)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -1703,7 +1703,7 @@ class PlanQualitySpec extends SparkSpec {
       assert(p2.contains("graft_nnd_edges_"),
         s"session 2 is not scanning the persisted graph index:\n$p2")
       assert(!s2.catalog.tableExists(
-          graft.queries.VectorQueries.nndCorpusTable(s2, d2)),
+          graft.queries.VectorQueries.nndVecCache.tableName(s2, d2)),
         "session 2 ran the build (its bucketed corpus table exists)")
       assert(df2.collect().map(_.toSeq).toSet == r1,
         "served results differ between the building and reusing sessions")
@@ -1801,6 +1801,15 @@ class PlanQualitySpec extends SparkSpec {
     val hits = codeLines("""localCheckpoint|\.checkpoint\(|\.cache\(\)|\.persist\(""".r,
       "graft/core/Materialize.scala")
     assert(hits.isEmpty, hits.mkString("cut or cache outside core.Materialize:\n", "\n", ""))
+  }
+
+  test("sources.Warehouse is the only namer of session tables and sanitizer of keys") {
+    // every session-scoped warehouse table is named by one function, so
+    // two keys that differ only in punctuation never share a table
+    for (call <- Seq("sessionScopedName(", """replaceAll("[^a-zA-Z0-9]"""")) {
+      val hits = codeLines(java.util.regex.Pattern.quote(call).r, "graft/sources/Warehouse.scala")
+      assert(hits.isEmpty, hits.mkString(s"$call outside sources.Warehouse:\n", "\n", ""))
+    }
   }
 
   test("core.Sessions is the only builder of SparkSessions in src/main") {

@@ -452,11 +452,11 @@ class RunnerSpec extends SparkSpec {
     graft.queries.VectorQueries.ivfServeIncremental(spark, dir, col("vec_id") === 3, 2).count()
     val c = graft.queries.VectorQueries.IvfIndexContract
     Contract.enforce("q139_readback",
-      spark.table(graft.queries.VectorQueries.ivfIndexTable(spark, dir)), c)
+      spark.table(graft.queries.VectorQueries.ivfIdxCache.tableName(spark, dir)), c)
     Contract.enforce("q141_readback",
-      spark.table(graft.queries.VectorQueries.ivfIncTable(spark, dir)), c)
+      spark.table(graft.queries.VectorQueries.ivfIncCache.tableName(spark, dir)), c)
     // violations: null centroid_id, then a duplicated vec_id
-    val base = spark.table(graft.queries.VectorQueries.ivfIndexTable(spark, dir))
+    val base = spark.table(graft.queries.VectorQueries.ivfIdxCache.tableName(spark, dir))
     intercept[ContractViolation] {
       Contract.enforce("nulls", base.withColumn("centroid_id",
         when(col("vec_id") === 0, lit(null)).otherwise(col("centroid_id"))

@@ -354,6 +354,26 @@ class StreamingSpec extends SparkSpec {
     assert(after2.select("event_id").distinct().count() == 1000)
   }
 
+  test("incremental sink appends each micro-batch to a file: URI target") {
+    import spark.implicits._
+    val src    = java.nio.file.Files.createTempDirectory("graft-uri-src").toString
+    val target = java.nio.file.Files.createTempDirectory("graft-uri-tgt").toUri.toString
+    val cp     = java.nio.file.Files.createTempDirectory("graft-uri-cp").toString
+    def arrive(ids: Long*): Unit = ids.map(id => (id, id.toDouble)).toDF("event_id", "value")
+      .coalesce(1).write.mode("append").parquet(src)
+    arrive(1L, 2L)
+    val q = EventsStream.incrementalSink(
+      spark.readStream.schema("event_id BIGINT, value DOUBLE").parquet(src),
+      target, "event_id", cp, "uri_sink")
+    try {
+      q.processAllAvailable()
+      arrive(3L, 4L)
+      q.processAllAvailable()
+    } finally q.stop()
+    val keys = spark.read.parquet(target).select("event_id").as[Long].collect().sorted.toSeq
+    assert(keys == Seq(1L, 2L, 3L, 4L), s"a later micro-batch replaced earlier ones: $keys")
+  }
+
   test("incremental sink dedupes duplicate keys within a batch; orderCol picks latest") {
     import spark.implicits._
     val srcDir = java.nio.file.Files.createTempDirectory("graft-dup-src").toString
