@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, TimestampNTZType, TimestampType}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 /** Loader for the driver-provided parquet tables under a scale-factor dir
   * (see /root/repo/TESTDATA.md). One parquet file per table; reading them
@@ -80,5 +80,16 @@ object Tables {
         "preserves the instant only under UTC - set " +
         "spark.sql.session.timeZone=UTC at session build (oracle parity " +
         "requires it anyway)")
+  }
+
+  /** `ds` over at least `defaultParallelism` partitions. Each table is one
+    * small parquet file, which a local scan reads as ONE split, so a
+    * per-row-heavy stage over it (a BPE apply, a media hash, a moment
+    * explode) would run on one core. At warehouse scale the scan already
+    * has that many splits and `ds` comes back as it is: no shuffle added.
+    */
+  def spread[T](ds: Dataset[T]): Dataset[T] = {
+    val para = ds.sparkSession.sparkContext.defaultParallelism
+    if (ds.rdd.getNumPartitions < para) ds.repartition(para) else ds
   }
 }

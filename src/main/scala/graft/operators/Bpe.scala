@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.Materialize
+import graft.core.{Materialize, Tables}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
@@ -24,6 +24,9 @@ import scala.jdk.CollectionConverters._
   * application is a scan-local typed map; no round shuffles the corpus.
   * Determinism: ties break on (count desc, a asc, b asc), so the merge
   * sequence is a pure function of the corpus.
+  *
+  * The fits split text with [[words]]; [[applyCorpus]] is the one apply
+  * path, shared by the tokenize queries and the streaming leg.
   */
 object Bpe {
 
@@ -127,6 +130,37 @@ object Bpe {
   def tokenize(toks: Seq[String], merges: Seq[(String, String)]): Seq[String] =
     merges.foldLeft(toks) { case (cur, (a, b)) => applyMerge(cur, a, b) }
 
+  /** The words of `text`: split on single spaces with every empty word
+    * dropped; a null text has none. Java's `split(' ')` drops TRAILING
+    * empties but keeps leading and interior ones, while the oracle's
+    * `string_split` keeps all of them; dropping every empty on both sides
+    * (the oracle via `list_filter`) makes fit and apply
+    * whitespace-insensitive, so fitted merges fire on a document with a
+    * leading or doubled space exactly as on its normalized form.
+    */
+  def words(text: String): Array[String] =
+    if (text == null) Array.empty[String] else text.split(' ').filter(_.nonEmpty)
+
+  /** The corpus apply: `docs` projected to (doc_id, text), each document's
+    * [[words]] tokenized under `merges` by one scan-local typed map, out
+    * as `doc_id, n_tokens_before, n_tokens_after, n_merged_tokens,
+    * tokens_hash` (md5 of the tokens joined by single spaces). Stateless
+    * per document, so a batch frame and a stream get the same rows.
+    */
+  def applyCorpus(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
+    import docs.sparkSession.implicits._
+    docs.as[(Long, String)]
+      .map { case (id, text) =>
+        val toks = words(text).toSeq
+        val out  = tokenize(toks, merges)
+        (id, toks.length.toLong, out.length.toLong, out.count(_.contains(Sep)).toLong,
+         out.mkString(" "))
+      }
+      .toDF("doc_id", "n_tokens_before", "n_tokens_after", "n_merged_tokens", "joined")
+      .select(col("doc_id"), col("n_tokens_before"), col("n_tokens_after"),
+              col("n_merged_tokens"), md5(col("joined")).as("tokens_hash"))
+  }
+
   /** One round of pair-count state maintenance: fold a ±1-weighted delta
     * into the counts table and drop exhausted pairs. Both sides hash on
     * (a, b), so under a B-partition shuffle the merged state lands
@@ -153,16 +187,13 @@ object Bpe {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     val spark = df.sparkSession
     import spark.implicits._
-    // NULL text rows contribute no pairs in pairCounts (split(null) → no
-    // row); the typed map must skip them too, not NPE on t.split
     val base = df.select(col(textCol).cast("string")).as[String]
-      .filter((t: String) => t != null)
     var merges = Vector.empty[(String, String)]
     var round = 0
     while (round < numMerges) {
       val m = merges // stable local for the closure (no var capture)
       val toksDs = base
-        .map(t => tokenize(t.split(' ').toSeq.filter(_.nonEmpty), m))
+        .map(t => tokenize(words(t).toSeq, m))
         .toDF("toks")
       val top = pairCounts(toksDs, col("toks"))
         .orderBy(col("cnt").desc, col("a"), col("b"))
@@ -205,7 +236,7 @@ object Bpe {
     *
     *   - corpus rows NOT containing adjacent (a,b) are copied unchanged
     *     (the rewrite is a narrow typed map over the cut corpus, split
-    *     over `defaultParallelism` partitions, no shuffle);
+    *     by [[graft.core.Tables.spread]], no shuffle);
     *   - pair counts change ONLY for pairs adjacent to an (a,b)
     *     occurrence, so the delta aggregation shuffles hit-row pairs
     *     only: `counts += pairs(rewritten hits) − pairs(hits)` — exact by
@@ -324,16 +355,12 @@ object Bpe {
     var counts: DataFrame = null
     var merges = Vector.empty[(String, String)]
     try {
-      // Same tokenization as fit: split on single spaces, drop empties
-      // (whitespace-insensitive), skip null text. Rows with < 2 tokens
-      // are inert for pair counting forever — dropped at entry and per
-      // round. The corpus is split over defaultParallelism partitions so
-      // the per-round rewrite runs on every core.
-      val text = df.select(col(textCol).cast("string")).as[String]
-      val para = spark.sparkContext.defaultParallelism
-      val tokenized = (if (text.rdd.getNumPartitions < para) text.repartition(para) else text)
+      // Same tokenization as fit. Rows with < 2 words are inert for pair
+      // counting forever — dropped at entry and per round. The corpus is
+      // spread so the per-round rewrite runs on every core.
+      val tokenized = Tables.spread(df.select(col(textCol).cast("string")).as[String])
         .filter((t: String) => t != null)
-        .map(t => t.split(' ').filter(_.nonEmpty))
+        .map(t => words(t))
         .filter((t: Array[String]) => t.length >= 2)
         .map(t => (t, null: Array[String]))
       def newAcc() = spark.sparkContext.collectionAccumulator[(String, String, Long)]

@@ -147,18 +147,11 @@ object Clustering {
     * bit-identical to the oracle's expression.
     */
   def nearestCentroid(centroids: Array[Seq[Double]], v: Column): Column = {
-    // sequential ascending fold — same order as DotProduct's codegen loop
-    // and DuckDB's list_dot_product, so c·c is the identical double
-    def selfDot(c: Seq[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < c.length) { acc += c(i) * c(i); i += 1 }
-      acc
-    }
     val xx = DotProduct.dotNative(v, v)
     val structs = centroids.zipWithIndex.map { case (c, j) =>
       struct(
         (xx - lit(2.0) * DotProduct.dotNative(v, array(c.map(lit): _*)) +
-          lit(selfDot(c))).as("d2"),
+          lit(DotProduct.dot(c, c))).as("d2"),
         lit(j.toLong).as("cid"))
     }
     // least() requires ≥ 2 arguments; with a single centroid (k = 1, or

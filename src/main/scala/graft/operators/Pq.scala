@@ -84,16 +84,7 @@ object Pq {
                         subDim: Int): Seq[DataFrame] = {
     val spark = queries.sparkSession
     import spark.implicits._
-    def selfDot(c: Seq[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < c.length) { acc += c(i) * c(i); i += 1 }
-      acc
-    }
-    def dot(a: Seq[Double], b: Seq[Double]): Double = {
-      var acc = 0.0; var i = 0
-      while (i < a.length) { acc += a(i) * b(i); i += 1 }
-      acc
-    }
+    import org.apache.spark.sql.graftx.DotProduct.dot
     // query batch to the driver: bounded by the caller's predicate
     // (serving batches are small by construction — the q139 argument).
     // The bound is ENFORCED, not assumed: a caller handing a corpus-sized
@@ -115,7 +106,7 @@ object Pq {
         (qid, qv) <- qRows
         qs = qv.slice(j * subDim, (j + 1) * subDim)
         (c, cid) <- cb.zipWithIndex
-      } yield (qid, cid.toLong, selfDot(qs) - 2.0 * dot(qs, c) + selfDot(c))
+      } yield (qid, cid.toLong, dot(qs, qs) - 2.0 * dot(qs, c) + dot(c, c))
       rows.toDF("query_id", s"code_$j", s"l_$j")
     }
   }

@@ -504,8 +504,8 @@ object CurationQueries {
     graft.functions.HexKeys.value16(
       md5(concat(lit("split|"), col("doc_id").cast(StringType)))) % 100
 
-  /** The q198 persisted cap index: the BASE half's (even doc_ids) kept
-    * set, built once per (session, dir) — q141/q145/q172's
+  /** The q198 persisted cap index: the BASE half's (`capSplitBucket < 50`)
+    * kept set, built once per (session, dir) — q141/q145/q172's
     * build-once/probe-deltas discipline applied to the cap. The state IS
     * the selection (≤ cap·|sources| rows), so later merges never re-read
     * the base corpus.

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.core.{Artifact, Tables}
 import graft.functions.Text
-import graft.operators.Dedup
+import graft.operators.{Bpe, Dedup}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -527,39 +527,12 @@ object TextQueries {
     // provably equivalent to the single-pass fold — earlier tokens can
     // never form new pairs because merged tokens carry the '+' sep).
     "q130_bpe_tokenize" -> { (s, dir) =>
-      import s.implicits._
       val d = Tables(s, dir).documents
       val merges: Seq[(String, String)] =
         defs("q111_bpe_pair_counts")(s, dir)
           .orderBy(col("rank"))
           .collect().map(r => (r.getString(0), r.getString(1))).toSeq
-      val baseDf = d.select(col("doc_id"), col("text").cast(StringType))
-      // per-row work is multiplied by the merge count (20 greedy passes
-      // per doc) — spread a single-split local scan across cores first
-      // (q119's guard: no-op when the scan already has ≥ cores splits)
-      val para = s.sparkContext.defaultParallelism
-      (if (baseDf.rdd.getNumPartitions < para)
-         baseDf.repartition(para) else baseDf).as[(Long, String)]
-        .map { case (id, text) =>
-          // filter(_.nonEmpty): Java split(' ') drops TRAILING empty
-          // tokens but keeps leading/interior ones, while the oracle's
-          // string_split keeps all — on any doc with irregular
-          // whitespace the two sides would count different
-          // n_tokens_before and build different walk strings. Dropping
-          // empties on BOTH sides (the oracle normalizes via
-          // list_filter + array_to_string) makes the contract
-          // whitespace-insensitive, matching q134.
-          val toks = if (text == null) Seq.empty[String]
-                     else text.split(' ').toSeq.filter(_.nonEmpty)
-          val out  = graft.operators.Bpe.tokenize(toks, merges)
-          (id, toks.length.toLong, out.length.toLong,
-           out.count(_.contains(graft.operators.Bpe.Sep)).toLong,
-           out.mkString(" "))
-        }
-        .toDF("doc_id", "n_tokens_before", "n_tokens_after",
-              "n_merged_tokens", "joined")
-        .select(col("doc_id"), col("n_tokens_before"), col("n_tokens_after"),
-                col("n_merged_tokens"), md5(col("joined")).as("tokens_hash"))
+      bpeApplied(d, merges)
     },
 
     // ---------------------------------------------------------------
@@ -611,30 +584,11 @@ object TextQueries {
     // document's tokenized sequence pins the entire merge SEQUENCE —
     // any fit divergence anywhere changes some document's hash.
     "q134_bpe_fit_apply" -> { (s, dir) =>
-      import s.implicits._
       val d = Tables(s, dir).documents
       // the fitted table is a tiny driver-side Seq but costs 5 corpus
       // scans — fit once per (session, dir)
-      val merges = bpeFitCache(s, dir)(
-        graft.operators.Bpe.fit(d, "text", numMerges = 5))
-      val baseDf = d.select(col("doc_id"), col("text").cast(StringType))
-      val para = s.sparkContext.defaultParallelism
-      (if (baseDf.rdd.getNumPartitions < para)
-         baseDf.repartition(para) else baseDf).as[(Long, String)]
-        .map { case (id, text) =>
-          // filter(_.nonEmpty) matches Bpe.fit's tokenization exactly —
-          // on irregular whitespace an unfiltered split would see empty
-          // tokens the fit never saw, so fitted merges could never fire
-          val toks = if (text == null) Seq.empty[String]
-                     else text.split(' ').toSeq.filter(_.nonEmpty)
-          val out  = graft.operators.Bpe.tokenize(toks, merges)
-          (id, out.length.toLong,
-           out.count(_.contains(graft.operators.Bpe.Sep)).toLong,
-           out.mkString(" "))
-        }
-        .toDF("doc_id", "n_tokens_after", "n_merged_tokens", "joined")
-        .select(col("doc_id"), col("n_tokens_after"), col("n_merged_tokens"),
-                md5(col("joined")).as("tokens_hash"))
+      val merges = bpeFitCache(s, dir)(Bpe.fit(d, "text", numMerges = 5))
+      bpeApplied(d, merges).drop("n_tokens_before")
     },
 
     // The SCALABLE BPE fit, gated end to end at 256 merges — q134 gates
@@ -651,27 +605,9 @@ object TextQueries {
     // BpeSpec additionally property-tests fitDelta ≡ fit on random
     // corpora (the naive loop is the executable spec).
     "q144_bpe_fit_delta" -> { (s, dir) =>
-      import s.implicits._
       val d = Tables(s, dir).documents
-      val merges = bpeDeltaFitCache(s, dir)(
-        graft.operators.Bpe.fitDelta(d, "text", numMerges = 256))
-      val baseDf = d.select(col("doc_id"), col("text").cast(StringType))
-      val para = s.sparkContext.defaultParallelism
-      (if (baseDf.rdd.getNumPartitions < para)
-         baseDf.repartition(para) else baseDf).as[(Long, String)]
-        .map { case (id, text) =>
-          // filter(_.nonEmpty) matches the fit's tokenization (q134's
-          // whitespace-insensitivity contract)
-          val toks = if (text == null) Seq.empty[String]
-                     else text.split(' ').toSeq.filter(_.nonEmpty)
-          val out  = graft.operators.Bpe.tokenize(toks, merges)
-          (id, out.length.toLong,
-           out.count(_.contains(graft.operators.Bpe.Sep)).toLong,
-           out.mkString(" "))
-        }
-        .toDF("doc_id", "n_tokens_after", "n_merged_tokens", "joined")
-        .select(col("doc_id"), col("n_tokens_after"), col("n_merged_tokens"),
-                md5(col("joined")).as("tokens_hash"))
+      val merges = bpeDeltaFitCache(s, dir)(Bpe.fitDelta(d, "text", numMerges = 256))
+      bpeApplied(d, merges).drop("n_tokens_before")
     },
 
     // q210: q144's fit with MULTI-MERGE ROUNDS — 16 rounds of up to 16
@@ -690,27 +626,12 @@ object TextQueries {
     // BpeSpec separately pins batch=1 ≡ sequential on random corpora
     // and batch>1 ≡ sequential on a disjoint-by-construction fixture.
     "q210_bpe_fit_batched" -> { (s, dir) =>
-      import s.implicits._
       val d = Tables(s, dir).documents
       val merges = bpeBatchedFitCache(s, dir)(
-        graft.operators.Bpe.fitDeltaBatched(d, "text",
+        Bpe.fitDeltaBatched(d, "text",
           numMerges = BpeBatchRounds * BpeBatchSize,
           maxBatch = BpeBatchSize, maxRounds = BpeBatchRounds))
-      val baseDf = d.select(col("doc_id"), col("text").cast(StringType))
-      val para = s.sparkContext.defaultParallelism
-      (if (baseDf.rdd.getNumPartitions < para)
-         baseDf.repartition(para) else baseDf).as[(Long, String)]
-        .map { case (id, text) =>
-          val toks = if (text == null) Seq.empty[String]
-                     else text.split(' ').toSeq.filter(_.nonEmpty)
-          val out  = graft.operators.Bpe.tokenize(toks, merges)
-          (id, out.length.toLong,
-           out.count(_.contains(graft.operators.Bpe.Sep)).toLong,
-           out.mkString(" "))
-        }
-        .toDF("doc_id", "n_tokens_after", "n_merged_tokens", "joined")
-        .select(col("doc_id"), col("n_tokens_after"), col("n_merged_tokens"),
-                md5(col("joined")).as("tokens_hash"))
+      bpeApplied(d, merges).drop("n_tokens_before")
     },
 
     // q151: vocabulary coverage / compression curve — the tokenizer-
@@ -726,21 +647,15 @@ object TextQueries {
     "q151_vocab_coverage" -> { (s, dir) =>
       import s.implicits._
       val d = Tables(s, dir).documents
-      val merges = bpeDeltaFitCache(s, dir)(
-        graft.operators.Bpe.fitDelta(d, "text", numMerges = 256))
+      val merges = bpeDeltaFitCache(s, dir)(Bpe.fitDelta(d, "text", numMerges = 256))
       val cps = BpeCoverageCheckpoints
-      val baseDf = d.select(col("text").cast(StringType))
-      val para = s.sparkContext.defaultParallelism
-      val pieces = (if (baseDf.rdd.getNumPartitions < para)
-                      baseDf.repartition(para) else baseDf).as[String]
+      val pieces = Tables.spread(d.select(col("text").cast(StringType))).as[String]
         .flatMap { text =>
-          val toks = if (text == null) Seq.empty[String]
-                     else text.split(' ').toSeq.filter(_.nonEmpty)
           val outs = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[String])]
-          var cur = toks
+          var cur: Seq[String] = Bpe.words(text).toSeq
           var prev = 0
           for (v <- cps) {
-            cur = graft.operators.Bpe.tokenize(cur, merges.slice(prev, v))
+            cur = Bpe.tokenize(cur, merges.slice(prev, v))
             prev = v
             outs += ((v.toLong, cur))
           }
@@ -750,7 +665,7 @@ object TextQueries {
       val stats = graft.core.Materialize.cutLocal(pieces
         .groupBy(col("vocab_checkpoint"))
         .agg(count(lit(1)).as("n_tokens_after"),
-             sum(when(col("piece").contains(graft.operators.Bpe.Sep), lit(1L))
+             sum(when(col("piece").contains(Bpe.Sep), lit(1L))
                    .otherwise(lit(0L))).as("n_merged_tokens"),
              countDistinct(col("piece")).as("vocab_size"))) // ≤|checkpoints| rows, consumed twice below
       val base = stats.filter(col("vocab_checkpoint") === 0)
@@ -3080,9 +2995,7 @@ object TextQueries {
       val idsDf = Tables(s, dir).documents
         .filter(col("doc_id") % 4 === 0)
         .select(expr("doc_id DIV 4").as("seq"))
-      val para = s.sparkContext.defaultParallelism
-      val base = (if (idsDf.rdd.getNumPartitions < para)
-                    idsDf.repartition(para) else idsDf).as[Long]
+      val base = Tables.spread(idsDf).as[Long]
       val fr0 = base.flatMap { seq =>
         graft.operators.Multimodal.videoFrames(
           graft.operators.Multimodal.syntheticPatternVideo(seq)).map { png =>
@@ -3459,6 +3372,13 @@ object TextQueries {
     */
   private val bpeBatchedFitCache = new Artifact[Seq[(String, String)]]("bpe_fit_batched")
 
+  /** The documents under `merges` through the one corpus apply
+    * ([[Bpe.applyCorpus]]), spread first: the per-row work is multiplied
+    * by the merge count.
+    */
+  private def bpeApplied(d: DataFrame, merges: Seq[(String, String)]): DataFrame =
+    Bpe.applyCorpus(Tables.spread(d.select(col("doc_id"), col("text").cast(StringType))), merges)
+
   /** The decoded (media_id, dhash) frame, hashed once per (session, dir)
     * — consumed by the q127 pair miner AND q132's quotient-graph cluster
     * resolution; the per-row PNG decode should never run twice.
@@ -3469,13 +3389,8 @@ object TextQueries {
       import s.implicits._
       val idsDf = Tables(s, dir).documents.select(col("doc_id"))
       // the map below multiplies work per row (PNG encode + imageio
-      // decode, ~ms/row) — if the scan supplies fewer splits than cores
-      // (one small local file), spread the id rows first so the hash
-      // build parallelizes; at warehouse scale the input has more splits
-      // than cores and this is a no-op (q119's guard discipline)
-      val para = s.sparkContext.defaultParallelism
-      val ids = (if (idsDf.rdd.getNumPartitions < para)
-                   idsDf.repartition(para) else idsDf).as[Long]
+      // decode, ~ms/row), so the id rows are spread first
+      val ids = Tables.spread(idsDf).as[Long]
       ids.map { id =>
         val h = graft.operators.Multimodal.dHash64(
           graft.operators.Multimodal.syntheticPatternPng(id))
@@ -3539,10 +3454,7 @@ object TextQueries {
   private def audioFps(s: SparkSession, dir: String): DataFrame =
     afpCache.cut(s, dir) {
       import s.implicits._
-      val idsDf = Tables(s, dir).documents.select(col("doc_id"))
-      val para = s.sparkContext.defaultParallelism
-      val ids = (if (idsDf.rdd.getNumPartitions < para)
-                   idsDf.repartition(para) else idsDf).as[Long]
+      val ids = Tables.spread(Tables(s, dir).documents.select(col("doc_id"))).as[Long]
       ids.map { id =>
         val h = graft.operators.Multimodal.audioFingerprint64(
           graft.operators.Multimodal.syntheticToneWav(id))

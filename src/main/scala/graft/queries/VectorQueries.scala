@@ -326,11 +326,7 @@ object VectorQueries {
           col("sum_d_e9").cast("double") /
             (col("n_members").cast("double") * 1e9))
       val cents = cents8(s, dir)
-      def dot(a: Seq[Double], b: Seq[Double]): Double = {
-        var acc = 0.0; var i = 0
-        while (i < a.length) { acc += a(i) * b(i); i += 1 }
-        acc
-      }
+      import org.apache.spark.sql.graftx.DotProduct.dot
       val pairs = (for {
         i <- cents.indices; j <- cents.indices if i != j
       } yield {
@@ -1067,14 +1063,9 @@ object VectorQueries {
       // transform form ran d(d+1)/2 interpreted lambdas per row and was
       // the slowest query in the bench (15 s → ~1 s at sf0.1)
       val vecs = e.select(col("embedding").cast("array<double>").as("v"))
-      // the explode below multiplies work by d(d+1)/2 — if the scan
-      // supplies fewer splits than cores (one small local file), spread
-      // the VECTOR rows first so the term build + partial agg
-      // parallelize; at warehouse scale the input has more splits than
-      // cores and this branch is a no-op (no corpus shuffle added)
-      val para = s.sparkContext.defaultParallelism
-      val spread = if (vecs.rdd.getNumPartitions < para)
-        vecs.repartition(para) else vecs
+      // the explode below multiplies work by d(d+1)/2, so the VECTOR
+      // rows are spread first and the term build + partial agg parallelize
+      val spread = Tables.spread(vecs)
       // materialize the (d(d+1)/2 + d)-row moment frame (2144 at
       // d=64) BEFORE any branch filters: otherwise the j=0 / j>0 /
       // i=j group filters push below the aggregate and each branch

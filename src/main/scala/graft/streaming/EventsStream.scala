@@ -864,23 +864,17 @@ object EventsStream {
   /** Streaming BPE tokenize apply — q130 on a continuously-arriving
     * corpus: the fitted merge table is a broadcast-sized closure constant
     * and the greedy fold is STATELESS per document, so the leg is a pure
-    * streaming map (append mode, no state store at all) whose output is
-    * bit-identical to the batch operator on the same files. This is the
-    * production shape: fit once (batch, q111), tokenize forever
-    * (stream).
+    * streaming map (append mode, no state store at all). It runs the
+    * batch queries' own apply ([[graft.operators.Bpe.applyCorpus]]), so
+    * under the same merges its counts are bit-identical to the batch
+    * apply's on the same files. This is the production shape: fit once
+    * (batch, q111), tokenize forever (stream).
     */
-  def tokenizeStream(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("doc_id"), col("text").cast("string")).as[(Long, String)]
-      .map { case (id, text) =>
-        val toks = if (text == null) Seq.empty[String] else text.split(' ').toSeq
-        val out  = graft.operators.Bpe.tokenize(toks, merges)
-        (id, toks.length.toLong, out.length.toLong,
-         out.count(_.contains(graft.operators.Bpe.Sep)).toLong)
-      }
-      .toDF("doc_id", "n_tokens_before", "n_tokens_after", "n_merged_tokens")
-  }
+  def tokenizeStream(docs: DataFrame, merges: Seq[(String, String)]): DataFrame =
+    graft.operators.Bpe.applyCorpus(
+      docs.select(col("doc_id"), col("text").cast("string")), merges)
+      .select(col("doc_id"), col("n_tokens_before"), col("n_tokens_after"),
+              col("n_merged_tokens"))
 
   /** Streaming DSIR scoring — q148's importance model applied to a
     * document stream. The production split mirrors tokenizeStream's:

@@ -60,6 +60,19 @@ object DotProduct {
   /** Column-API entry point: `dotNative($"a", $"b")`. */
   def dotNative(a: Column, b: Column): Column =
     Bridge.column(DotProduct(Bridge.expression(a), Bridge.expression(b)))
+
+  /** The driver-side twin of the loop above, in the same sequential
+    * ascending order, so a literal computed here (a centroid's c·c, a
+    * lookup-table distance) is the double the expression and DuckDB's
+    * `list_dot_product` compute.
+    */
+  def dot(a: Seq[Double], b: Seq[Double]): Double = {
+    val n = math.min(a.length, b.length)
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += a(i) * b(i); i += 1 }
+    s
+  }
 }
 
 /** Native dot product over two `array<smallint>` columns, accumulated in

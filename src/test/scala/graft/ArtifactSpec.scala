@@ -83,7 +83,7 @@ class ArtifactSpec extends SparkSpec {
   test("one session builds q90 over two dirs that differ only in punctuation") {
     // each dir's index table is its own: building the second must not
     // drop the table the first dir's memoized frame reads
-    val root = java.nio.file.Files.createTempDirectory("graft-punct")
+    val root = fixtureDir("graft-punct")
     val data = java.nio.file.Paths.get("/root/testdata/sf0.001")
     val Seq(dot, underscore) = Seq("sf0.001", "sf0_001")
       .map(n => java.nio.file.Files.createSymbolicLink(root.resolve(n), data).toString)

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.queries.{CurationQueries, TemporalQueries}
@@ -15,8 +14,8 @@ class CurationSpec extends SparkSpec {
   import spark.implicits._
 
   /** Write a crafted documents/events fixture dir and return its path. */
-  private lazy val fixtureDir: String = {
-    val dir = Files.createTempDirectory("curation_fixture").toString
+  private lazy val craftedDir: String = {
+    val dir = fixtureDir("curation_fixture").toString
     val docs = Seq(
       // doc 0: repeated content; shares its first 10-token segment with doc 1
       (0L, "a b c d e f g h i j a b c d e f g h i j", "en", "web", 39L),
@@ -50,7 +49,7 @@ class CurationSpec extends SparkSpec {
 
   private def run(name: String): DataFrame = {
     val defs = CurationQueries.defs ++ TemporalQueries.defs
-    defs(name)(spark, fixtureDir)
+    defs(name)(spark, craftedDir)
   }
 
   test("q75 segment dedup keeps only the globally first occurrence") {
@@ -66,7 +65,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("q200 boilerplate scrub removes EVERY occurrence of a df>=3 segment (q75 keeps the first)") {
-    val dir = Files.createTempDirectory("boilerplate_fixture").toString
+    val dir = fixtureDir("boilerplate_fixture").toString
     val x  = (1 to 10).map(i => s"x$i").mkString(" ") // boilerplate: df = 4
     val u0 = (1 to 10).map(i => s"u$i").mkString(" ")
     val u1 = (1 to 10).map(i => s"v$i").mkString(" ")
@@ -105,7 +104,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("q205 scrub-then-dedup catches the duplicate raw exact dedup provably misses") {
-    val dir = Files.createTempDirectory("scrubdedup_fixture").toString
+    val dir = fixtureDir("scrubdedup_fixture").toString
     val x = (1 to 10).map(i => s"x$i").mkString(" ") // boilerplate (df = 3)
     val u = (1 to 10).map(i => s"u$i").mkString(" ") // the shared body
     Seq(
@@ -245,7 +244,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("q81 retention buckets day offsets into 7-day windows") {
-    val dir = Files.createTempDirectory("retention_fixture").toString
+    val dir = fixtureDir("retention_fixture").toString
     def ts(day: Int): Timestamp = Timestamp.valueOf(f"2024-01-$day%02d 12:00:00")
     Seq(
       (0L, ts(1), 1L, "view", 1.0, "{}"),  // cohort 2024-01-01, offset 0
@@ -280,7 +279,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("q87 winnowing: shared ≥(w+k-1)-token runs share a fingerprint; short docs drop out") {
-    val fps = graft.queries.TextQueries.defs("q87_winnow_fingerprint")(spark, fixtureDir)
+    val fps = graft.queries.TextQueries.defs("q87_winnow_fingerprint")(spark, craftedDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val byDoc = fps.groupBy(_._1)
     // docs 0 and 1 share their first 10 tokens (≥ w+k-1 = 8): the MOSS
@@ -307,7 +306,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("q84 chunking covers every token with W=50/S=40 overlap") {
-    val dir  = Files.createTempDirectory("chunk_fixture").toString
+    val dir  = fixtureDir("chunk_fixture").toString
     val toks = (0 until 95).map(i => s"w$i") // 95 tokens → chunks at 0/40/80
     Seq((0L, toks.mkString(" "), "en", "web", 0L),
         (1L, "solo", "en", "web", 4L)) // 1 token → exactly one chunk
@@ -362,7 +361,7 @@ class CurationSpec extends SparkSpec {
     //   p(b|a) = (2−.75)/3 + (.75·2/3)·(1/2) = 2/3
     //   p(c|a) = (1−.75)/3 + (.75·2/3)·(1/2) = 1/3   (sum = 1 exactly)
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-kn").toString
+    val tmp = fixtureDir("graft-kn").toString
     Seq((1L, "a b", "en", "s", 3L), (2L, "a b", "en", "s", 3L),
         (3L, "a c", "en", "s", 3L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
@@ -677,7 +676,7 @@ class CurationSpec extends SparkSpec {
     df.collect().map(_.toString).sorted.toSeq
 
   test("q156 scan-local stats ≡ retired explode/groupBy tree") {
-    for (dir <- Seq("/root/testdata/sf0.001", fixtureDir)) {
+    for (dir <- Seq("/root/testdata/sf0.001", craftedDir)) {
       val got = rowsOf(CurationQueries.defs("q156_gopher_repetition")(spark, dir))
       val want = rowsOf(retiredQ156(dir))
       assert(got == want, s"q156 diverges from the retired tree on $dir")
@@ -685,7 +684,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("q76 scan-local stats ≡ retired explode/groupBy tree") {
-    for (dir <- Seq("/root/testdata/sf0.001", fixtureDir)) {
+    for (dir <- Seq("/root/testdata/sf0.001", craftedDir)) {
       val got = rowsOf(CurationQueries.defs("q76_repetition_quality")(spark, dir))
       val want = rowsOf(retiredQ76(dir))
       assert(got == want, s"q76 diverges from the retired tree on $dir")

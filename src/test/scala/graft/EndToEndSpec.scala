@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import graft.core.Tables
@@ -20,7 +19,7 @@ class EndToEndSpec extends SparkSpec {
   private val asOf2 = Timestamp.valueOf("2002-02-01 00:00:00")
 
   test("the full eurostat DAG runs end-to-end and all models are non-empty") {
-    val wh = Files.createTempDirectory("graft-e2e").toString
+    val wh = fixtureDir("graft-e2e").toString
     val t  = Tables(spark, "/root/testdata/sf0.001")
     val r  = new Runner(spark, wh, asOf1, "e2e-run-1")
     val out = r.run(EurostatModels.models(asOf1, "e2e-run-1"), TestdataRaw.sources(t))
@@ -71,14 +70,14 @@ class EndToEndSpec extends SparkSpec {
     // 120 sits above the old spread and well below a thrashing cache.
     def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     val before = compiles
-    new Runner(spark, Files.createTempDirectory("graft-e2e").toString, asOf1, "e2e-run-3")
+    new Runner(spark, fixtureDir("graft-e2e").toString, asOf1, "e2e-run-3")
       .run(EurostatModels.models(asOf1, "e2e-run-3"), TestdataRaw.sources(t))
     val recompiled = compiles - before
     assert(recompiled <= 120, s"a repeated full refresh compiled $recompiled classes")
   }
 
   test("snapshot captures a GDP revision as an SCD2 version pair") {
-    val wh = Files.createTempDirectory("graft-snap").toString
+    val wh = fixtureDir("graft-snap").toString
     val t  = Tables(spark, "/root/testdata/sf0.001")
     val models = EurostatModels.models(asOf1, "snap-1")
       .filter(m => Set("stg_eurostat__gdp", "snap_gdp_history")(m.name))

@@ -32,7 +32,7 @@ class IngestSpec extends SparkSpec {
   }
 
   test("file:// double flows end to end: fetch -> frame -> distributed decode") {
-    val f = java.nio.file.Files.createTempFile("graft-ingest", ".json")
+    val f = fixtureDir("graft-ingest").resolve("payload.json")
     java.nio.file.Files.writeString(f, payload)
     // fetchDatasets builds <base>/<code>?... — file URLs have no query
     // support, so drive the two layers the way a caller composes them

@@ -91,7 +91,7 @@ class PlanQualitySpec extends SparkSpec {
     // REBALANCE in the plan: the write-side small-files guard
     val plan = t.events.hint("rebalance").queryExecution.executedPlan.toString
     assert(plan.contains("REBALANCE"), s"no rebalance exchange in:\n$plan")
-    val out = java.nio.file.Files.createTempDirectory("graft-rebal").toString + "/ev"
+    val out = fixtureDir("graft-rebal").toString + "/ev"
     Warehouse.writeRebalanced(t.events, out)
     assert(spark.read.parquet(out).count() == t.events.count())
     // ANALYZE TABLE: row count + column NDV land in the catalog
@@ -110,7 +110,7 @@ class PlanQualitySpec extends SparkSpec {
   }
 
   test("partitioned writes prune partitions under a partition predicate") {
-    val out = java.nio.file.Files.createTempDirectory("graft-part").toString + "/events"
+    val out = fixtureDir("graft-part").toString + "/events"
     val t = graft.core.Tables(spark, dir)
     Warehouse.writePartitioned(
       t.events.withColumn("event_date", to_date(col("ts"))), out, Seq("event_date"))
@@ -1832,6 +1832,18 @@ class PlanQualitySpec extends SparkSpec {
     val drops = codeLines("DROP TABLE IF EXISTS".r)
     assert(drops.size == 1 && drops.head.contains("graft/sources/Warehouse.scala"),
       drops.mkString("DROP TABLE IF EXISTS outside Warehouse's one replace path:\n", "\n", ""))
+  }
+
+  test("one spread rule and one BPE word split in src/main") {
+    // every "spread a one-split scan across cores" guard is Tables.spread,
+    // and every whitespace word split is Bpe.words; ShingleArray's split
+    // is the native shingle kernel, which keeps the composable form's
+    // semantics on purpose
+    val spreads = codeLines("getNumPartitions".r, "graft/core/Tables.scala")
+    assert(spreads.isEmpty, spreads.mkString("partition-count guard outside Tables.spread:\n", "\n", ""))
+    val splits = codeLines(java.util.regex.Pattern.quote("split(' ')").r,
+      "graft/operators/Bpe.scala", "org/apache/spark/sql/graftx/ShingleArray.scala")
+    assert(splits.isEmpty, splits.mkString("word split outside Bpe.words:\n", "\n", ""))
   }
 
   test("q48 and q82 keep their cut inputs as named artifacts, not session-long caches") {

@@ -180,9 +180,8 @@ class RetrievalGraphSpec extends SparkSpec {
     // same rows, two different file layouts — the INPUT partitioning the
     // sketch build must be invariant to
     val (dirA, dirB) = {
-      import java.nio.file.Files
-      val a = Files.createTempDirectory("cms_a").toString
-      val b = Files.createTempDirectory("cms_b").toString
+      val a = fixtureDir("cms_a").toString
+      val b = fixtureDir("cms_b").toString
       val df = docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       df.coalesce(1).write.parquet(s"$a/documents.parquet")
       df.repartition(5).write.parquet(s"$b/documents.parquet")
@@ -253,7 +252,7 @@ class RetrievalGraphSpec extends SparkSpec {
   }
 
   test("q91 flags exact reorder-dups and containment near-dups on a crafted fixture") {
-    val dir = java.nio.file.Files.createTempDirectory("snap_fixture").toString
+    val dir = fixtureDir("snap_fixture").toString
     val ws = (1 to 12).map(i => s"w$i").mkString(" ") // 12 tokens → 5 8-grams
     val docs = Seq(
       (0L, ws, "en", "web", 1L),                                  // base
@@ -281,7 +280,7 @@ class RetrievalGraphSpec extends SparkSpec {
   test("q96 temperature sampling concentrates on sqrt(n_min*n_source) under skew") {
     // the sf corpus has UNIFORM sources (thr = n_source, everything kept),
     // so the temperature path needs a skewed fixture: 400/100/25 docs
-    val dirF = java.nio.file.Files.createTempDirectory("temp_fixture").toString
+    val dirF = fixtureDir("temp_fixture").toString
     val docs = (0 until 400).map(i => (i.toLong, s"a$i", "en", "big", 1L)) ++
       (0 until 100).map(i => (400L + i, s"b$i", "en", "mid", 1L)) ++
       (0 until 25).map(i => (500L + i, s"c$i", "en", "small", 1L))

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types._
 class RunnerSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmpDir() = Files.createTempDirectory("graft-runner").toString
+  private def tmpDir() = fixtureDir("graft-runner").toString
   private val t0 = Timestamp.valueOf("2024-01-01 00:00:00")
   private val t1 = Timestamp.valueOf("2024-02-01 00:00:00")
 

@@ -16,7 +16,7 @@ class StreamingSpec extends SparkSpec {
     * into one.
     */
   private lazy val eventsDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-stream")
+    val d = fixtureDir("graft-stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/events.parquet"),
       d.resolve("events.parquet"))
@@ -25,7 +25,7 @@ class StreamingSpec extends SparkSpec {
 
   /** Staged documents dir for the corpus-side streaming legs. */
   private lazy val docsDir: String = {
-    val d = java.nio.file.Files.createTempDirectory("graft-stream-docs")
+    val d = fixtureDir("graft-stream-docs")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$dir/documents.parquet"),
       d.resolve("documents.parquet"))
@@ -42,6 +42,22 @@ class StreamingSpec extends SparkSpec {
     val batch = EventsStream.tokenizeStream(docs, merges)
     assert(streamed.collect().toSet === batch.collect().toSet)
     assert(streamed.count() === docs.count())
+  }
+
+  test("tokenizeStream drops empty words and returns the shared corpus apply's rows") {
+    import spark.implicits._
+    // leading, trailing and doubled spaces, a blank text and a null text
+    val texts = Seq(" a b", "a  b c ", null, "  ", "a b a b", "b  a b a ")
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val merges = Seq(("a", "b"))
+    val streamed = EventsStream.tokenizeStream(docs, merges)
+    val before = streamed.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(before === texts.zipWithIndex.map { case (t, i) =>
+      i.toLong -> Option(t).fold(0L)(_.split(" ").count(_.nonEmpty).toLong)
+    }.toMap)
+    val applied = graft.operators.Bpe.applyCorpus(docs, merges)
+      .select("doc_id", "n_tokens_before", "n_tokens_after", "n_merged_tokens")
+    assert(streamed.collect().toSet === applied.collect().toSet)
   }
 
   test("streaming language-mixing profile ≡ batch q150 (stateless append)") {
@@ -198,7 +214,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming moment sums ≡ batch covariance moments, bit-identical; state ≤ d(d+1)/2 + d") {
     import org.apache.spark.sql.types._
     val embDir = {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream-emb")
+      val d = fixtureDir("graft-stream-emb")
       java.nio.file.Files.copy(
         java.nio.file.Paths.get(s"$dir/embeddings.parquet"),
         d.resolve("embeddings.parquet"))
@@ -294,14 +310,14 @@ class StreamingSpec extends SparkSpec {
 
   test("sessionization carries state across micro-batches; late events clamp or drop") {
     import spark.implicits._
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-stream-mb").toString
+    val streamDir = fixtureDir("graft-stream-mb").toString
     // minutes → TIMESTAMP_NTZ at that instant (UTC wall clock) — the same
     // physical reading the real events parquet produces on this toolchain
     def minNtz(m: Long): java.time.LocalDateTime =
       java.time.LocalDateTime.ofEpochSecond(m * 60L, 0, java.time.ZoneOffset.UTC)
     def writeBatch(rows: Seq[(Long, Long, Long)], file: String): Unit = {
       // the file source doesn't recurse: stage the part file at the root
-      val scratch = java.nio.file.Files.createTempDirectory("graft-mb-scratch")
+      val scratch = fixtureDir("graft-mb-scratch")
       rows.map { case (id, tsMin, uid) => (id, minNtz(tsMin), uid, "view", 1.0, "{}") }
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
@@ -336,19 +352,19 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("foreachBatch incremental sink upserts by key and replays idempotently") {
-    val target = java.nio.file.Files.createTempDirectory("graft-inc-target").toString
+    val target = fixtureDir("graft-inc-target").toString
     def runOnce(checkpoint: String): Unit = {
       val q = EventsStream.incrementalSink(
         EventsStream.read(spark, eventsDir).select("event_id", "ts", "value"),
         target, "event_id", checkpoint, s"inc_sink_${checkpoint.hashCode}")
       q.processAllAvailable(); q.stop()
     }
-    runOnce(java.nio.file.Files.createTempDirectory("graft-inc-cp1").toString)
+    runOnce(fixtureDir("graft-inc-cp1").toString)
     val after1 = spark.read.parquet(target).count()
     assert(after1 == 1000) // every distinct event_id landed once
     // fresh checkpoint → the source REPLAYS everything; the key anti-join
     // must keep the target unchanged
-    runOnce(java.nio.file.Files.createTempDirectory("graft-inc-cp2").toString)
+    runOnce(fixtureDir("graft-inc-cp2").toString)
     val after2 = spark.read.parquet(target)
     assert(after2.count() == 1000)
     assert(after2.select("event_id").distinct().count() == 1000)
@@ -356,9 +372,9 @@ class StreamingSpec extends SparkSpec {
 
   test("incremental sink appends each micro-batch to a file: URI target") {
     import spark.implicits._
-    val src    = java.nio.file.Files.createTempDirectory("graft-uri-src").toString
-    val target = java.nio.file.Files.createTempDirectory("graft-uri-tgt").toUri.toString
-    val cp     = java.nio.file.Files.createTempDirectory("graft-uri-cp").toString
+    val src    = fixtureDir("graft-uri-src").toString
+    val target = fixtureDir("graft-uri-tgt").toUri.toString
+    val cp     = fixtureDir("graft-uri-cp").toString
     def arrive(ids: Long*): Unit = ids.map(id => (id, id.toDouble)).toDF("event_id", "value")
       .coalesce(1).write.mode("append").parquet(src)
     arrive(1L, 2L)
@@ -376,14 +392,14 @@ class StreamingSpec extends SparkSpec {
 
   test("incremental sink dedupes duplicate keys within a batch; orderCol picks latest") {
     import spark.implicits._
-    val srcDir = java.nio.file.Files.createTempDirectory("graft-dup-src").toString
+    val srcDir = fixtureDir("graft-dup-src").toString
     // one batch carrying THREE versions of key 1 (different ts) + key 2
     Seq((1L, 100L, 10.0), (1L, 300L, 30.0), (1L, 200L, 20.0), (2L, 50L, 5.0))
       .toDF("event_id", "ts", "value")
       .repartition(3) // dupes spread across partitions — the pick must not depend on layout
       .write.mode("overwrite").parquet(srcDir)
-    val target = java.nio.file.Files.createTempDirectory("graft-dup-target").toString
-    val cp     = java.nio.file.Files.createTempDirectory("graft-dup-cp").toString
+    val target = fixtureDir("graft-dup-target").toString
+    val cp     = fixtureDir("graft-dup-cp").toString
     val stream = spark.readStream
       .schema(org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
@@ -411,13 +427,13 @@ class StreamingSpec extends SparkSpec {
     // asserts the recovery path itself via the restarted run's
     // numInputRows and the checkpoint's advancing batch ids.
     import spark.implicits._
-    val src    = java.nio.file.Files.createTempDirectory("graft-rst-src").toString
-    val target = java.nio.file.Files.createTempDirectory("graft-rst-tgt").toString
-    val cp     = java.nio.file.Files.createTempDirectory("graft-rst-cp").toString
+    val src    = fixtureDir("graft-rst-src").toString
+    val target = fixtureDir("graft-rst-tgt").toString
+    val cp     = fixtureDir("graft-rst-cp").toString
     def minNtz(m: Long): java.time.LocalDateTime =
       java.time.LocalDateTime.ofEpochSecond(m * 60L, 0, java.time.ZoneOffset.UTC)
     def writeEvents(rows: Seq[Long], file: String): Unit = {
-      val scratch = java.nio.file.Files.createTempDirectory("graft-rst-scratch")
+      val scratch = fixtureDir("graft-rst-scratch")
       rows.map(id => (id, minNtz(600L + id), id, "view", id.toDouble, "{}"))
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
@@ -456,11 +472,11 @@ class StreamingSpec extends SparkSpec {
 
   test("LSH index maintenance RESTARTS from checkpointLocation; index ≡ batch build") {
     import spark.implicits._
-    val src   = java.nio.file.Files.createTempDirectory("graft-rstl-src").toString
-    val cp    = java.nio.file.Files.createTempDirectory("graft-rstl-cp").toString
+    val src   = fixtureDir("graft-rstl-src").toString
+    val cp    = fixtureDir("graft-rstl-cp").toString
     val table = graft.sources.Warehouse.sessionScopedName(spark, "graft_lsh_restart_idx")
     def writeDocs(rows: Seq[(Long, String)], file: String): Unit = {
-      val scratch = java.nio.file.Files.createTempDirectory("graft-rstl-scratch")
+      val scratch = fixtureDir("graft-rstl-scratch")
       rows.map { case (id, t) => (id, t, "en", "web", t.length.toLong) }
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
@@ -501,7 +517,7 @@ class StreamingSpec extends SparkSpec {
     // SAME edge table as one batch insert over the union — inserts
     // depend only on the base graph, never on each other — and a full
     // re-read (fresh checkpoint = total redelivery) must not duplicate
-    val src   = java.nio.file.Files.createTempDirectory("graft-anng-src").toString
+    val src   = fixtureDir("graft-anng-src").toString
     val table = graft.sources.Warehouse.sessionScopedName(spark, "graft_ann_graph_idx")
     val delta = spark.read.parquet(s"$dir/embeddings.parquet")
       .filter(col("vec_id") % 5 === 3)
@@ -517,7 +533,7 @@ class StreamingSpec extends SparkSpec {
     java.nio.file.Files.copy(halves("half2").toPath,
       java.nio.file.Paths.get(src, "b2.parquet"))
     def runOnce(name: String): Unit = {
-      val cp = java.nio.file.Files.createTempDirectory("graft-anng-cp").toString
+      val cp = fixtureDir("graft-anng-cp").toString
       val vecs = spark.readStream.schema(EventsStream.embeddingSchema)
         .option("maxFilesPerTrigger", "1")
         .parquet(s"$src/*.parquet")
@@ -543,12 +559,12 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming cap-index maintenance ≡ one-shot cap; evictions happen; replay is a no-op") {
     import spark.implicits._
-    val src   = java.nio.file.Files.createTempDirectory("graft-cap-src").toString
+    val src   = fixtureDir("graft-cap-src").toString
     val table = graft.sources.Warehouse.sessionScopedName(spark, "graft_cap_stream_idx")
     val all = graft.core.Tables(spark, dir).documents
       .select(col("doc_id"), col("text"), col("lang"), col("source"), col("n_chars"))
     def stage(pred: org.apache.spark.sql.Column, name: String): Unit = {
-      val scratch = java.nio.file.Files.createTempDirectory("graft-cap-scratch")
+      val scratch = fixtureDir("graft-cap-scratch")
       all.filter(pred).coalesce(1).write.mode("overwrite").parquet(scratch.toString)
       val part = new java.io.File(scratch.toString).listFiles()
         .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
@@ -563,7 +579,7 @@ class StreamingSpec extends SparkSpec {
       q.stop()
       inputRows
     }
-    val cp1 = java.nio.file.Files.createTempDirectory("graft-cap-cp1").toString
+    val cp1 = fixtureDir("graft-cap-cp1").toString
     def snapshot(): Set[(String, Long, Long)] = {
       // the maintenance leg overwrites the table in place; its refresh
       // covers the stream's cloned session, so this reader refreshes too
@@ -597,7 +613,7 @@ class StreamingSpec extends SparkSpec {
       "no eviction exercised — the fixture no longer covers displacement")
     // replay with a fresh checkpoint re-reads both files: the top-k union
     // identity must keep the state unchanged
-    val cp2 = java.nio.file.Files.createTempDirectory("graft-cap-cp2").toString
+    val cp2 = fixtureDir("graft-cap-cp2").toString
     drain(cp2, "cap_maint_replay")
     assert(snapshot() === want, "replay perturbed the cap state")
     // and the two cp1 drains genuinely RESTARTED from the checkpoint:
@@ -610,11 +626,11 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming dedup drops re-delivered events across micro-batches; state is watermark-bounded") {
     import spark.implicits._
-    val streamDir = java.nio.file.Files.createTempDirectory("graft-dedup-stream").toString
+    val streamDir = fixtureDir("graft-dedup-stream").toString
     def minNtz(m: Long): java.time.LocalDateTime =
       java.time.LocalDateTime.ofEpochSecond(m * 60L, 0, java.time.ZoneOffset.UTC)
     def writeBatch(rows: Seq[(Long, Long)], file: String): Unit = {
-      val scratch = java.nio.file.Files.createTempDirectory("graft-dedup-scratch")
+      val scratch = fixtureDir("graft-dedup-scratch")
       rows.map { case (id, tsMin) => (id, minNtz(tsMin), id, "view", 1.0, "{}") }
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
         .coalesce(1).write.mode("overwrite").parquet(scratch.toString)
@@ -685,7 +701,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming LSH index maintenance: bands land bucketed, contract holds, replay is a no-op") {
     val docs = graft.core.Tables(spark, dir).documents
     val table = graft.sources.Warehouse.sessionScopedName(spark, "graft_lsh_stream_idx")
-    val ck1 = java.nio.file.Files.createTempDirectory("graft-lsh-ck1").toString
+    val ck1 = fixtureDir("graft-lsh-ck1").toString
     val q1 = EventsStream.lshIndexMaintainStream(
       EventsStream.readDocuments(spark, docsDir), table, ck1, "lsh_maint_1")
     q1.processAllAvailable(); q1.stop()
@@ -700,7 +716,7 @@ class StreamingSpec extends SparkSpec {
       graft.queries.TextQueries.LshIndexContract)
     // redelivery: a FRESH checkpoint re-reads the same files; the
     // anti-join guard must keep the append a no-op
-    val ck2 = java.nio.file.Files.createTempDirectory("graft-lsh-ck2").toString
+    val ck2 = fixtureDir("graft-lsh-ck2").toString
     val q2 = EventsStream.lshIndexMaintainStream(
       EventsStream.readDocuments(spark, docsDir), table, ck2, "lsh_maint_2")
     q2.processAllAvailable(); q2.stop()
@@ -770,9 +786,9 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming chunk-index maintenance ≡ arrival-order batch build; replay is a no-op") {
     val docs  = graft.core.Tables(spark, dir).documents
-    val watch = java.nio.file.Files.createTempDirectory("graft-chunk-watch")
+    val watch = fixtureDir("graft-chunk-watch")
     def stageHalf(pred: org.apache.spark.sql.Column, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-chunk-half")
+      val tmp = fixtureDir("graft-chunk-half")
       docs.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp)
         .filter(p => p.toString.endsWith(".parquet")).findFirst.get
@@ -782,7 +798,7 @@ class StreamingSpec extends SparkSpec {
     // the arrival order whose first-occurrence semantics q172 gates
     stageHalf(col("doc_id") % 2 === 0, "b0.parquet")
     val table = graft.sources.Warehouse.sessionScopedName(spark, "graft_chunk_stream_idx")
-    val ck1 = java.nio.file.Files.createTempDirectory("graft-chunk-ck1").toString
+    val ck1 = fixtureDir("graft-chunk-ck1").toString
     val q1 = EventsStream.chunkIndexMaintainStream(
       EventsStream.readDocuments(spark, watch.toString), table, ck1, "chunk_maint_1")
     q1.processAllAvailable()
@@ -807,7 +823,7 @@ class StreamingSpec extends SparkSpec {
       graft.queries.TextQueries.ChunkIndexContract)
     // redelivery with a fresh checkpoint: the hash anti-join guard must
     // keep the append a no-op
-    val ck2 = java.nio.file.Files.createTempDirectory("graft-chunk-ck2").toString
+    val ck2 = fixtureDir("graft-chunk-ck2").toString
     val q2 = EventsStream.chunkIndexMaintainStream(
       EventsStream.readDocuments(spark, watch.toString), table, ck2, "chunk_maint_2")
     q2.processAllAvailable(); q2.stop()
@@ -824,7 +840,7 @@ class StreamingSpec extends SparkSpec {
     assert(buildKeys.length > 8, "fixture too small to split")
     val (h1, h2) = buildKeys.splitAt(buildKeys.length / 2)
     val table = graft.sources.Warehouse.sessionScopedName(spark, "graft_bloom_stream_idx")
-    val ck1 = java.nio.file.Files.createTempDirectory("graft-bloom-ck1").toString
+    val ck1 = fixtureDir("graft-bloom-ck1").toString
     val ms = MemoryStream[Long]
     ms.addData(h1.toSeq)
     val q1 = EventsStream.bloomIndexMaintainStream(
@@ -846,7 +862,7 @@ class StreamingSpec extends SparkSpec {
     // OR-semilattice makes the read invariant, and the exact-row guard
     // keeps byte-identical rows from re-appending
     val nRows = spark.table(table).count()
-    val ck2 = java.nio.file.Files.createTempDirectory("graft-bloom-ck2").toString
+    val ck2 = fixtureDir("graft-bloom-ck2").toString
     val ms2 = MemoryStream[Long]
     ms2.addData(buildKeys.toSeq)
     val q2 = EventsStream.bloomIndexMaintainStream(
@@ -875,7 +891,7 @@ class StreamingSpec extends SparkSpec {
       e.filter(col("vec_id") % 2 === 0), "vec_id", "embedding",
       k = 8, iters = 2)
     val table = graft.sources.Warehouse.sessionScopedName(spark, "graft_occ_stream")
-    val ck1 = java.nio.file.Files.createTempDirectory("graft-occ-ck1").toString
+    val ck1 = fixtureDir("graft-occ-ck1").toString
     val mid = rows(rows.length / 2)._1
     val ms = MemoryStream[(Long, Array[Float])]
     ms.addData(rows.filter(_._1 < mid).toSeq)
@@ -899,7 +915,7 @@ class StreamingSpec extends SparkSpec {
     // per-cluster row re-derives an existing (cluster, batch-min) guard
     // key, so the append is a no-op and the read is unchanged
     val nRows = spark.table(table).count()
-    val ck2 = java.nio.file.Files.createTempDirectory("graft-occ-ck2").toString
+    val ck2 = fixtureDir("graft-occ-ck2").toString
     val ms2 = MemoryStream[(Long, Array[Float])]
     ms2.addData(rows.toSeq)
     val q2 = EventsStream.occupancyDriftStream(
@@ -913,9 +929,9 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming CDC chunk index: drained state ≡ arrival-order build; replay is a no-op") {
     val docs  = graft.core.Tables(spark, dir).documents
-    val watch = java.nio.file.Files.createTempDirectory("graft-cdc-watch")
+    val watch = fixtureDir("graft-cdc-watch")
     def stageHalf(pred: org.apache.spark.sql.Column, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-cdc-half")
+      val tmp = fixtureDir("graft-cdc-half")
       docs.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp)
         .filter(p => p.toString.endsWith(".parquet")).findFirst.get
@@ -923,7 +939,7 @@ class StreamingSpec extends SparkSpec {
     }
     stageHalf(col("doc_id") % 2 === 0, "b0.parquet")
     val table = graft.sources.Warehouse.sessionScopedName(spark, "graft_cdc_stream_idx")
-    val ck1 = java.nio.file.Files.createTempDirectory("graft-cdc-ck1").toString
+    val ck1 = fixtureDir("graft-cdc-ck1").toString
     val q1 = EventsStream.cdcIndexMaintainStream(
       EventsStream.readDocuments(spark, watch.toString), table, ck1, "cdc_maint_1")
     q1.processAllAvailable()
@@ -946,7 +962,7 @@ class StreamingSpec extends SparkSpec {
     assert(got === want, "streamed CDC index diverged from the arrival-order build")
     graft.model.Contract.enforce("cdc_stream_idx", spark.table(table),
       graft.queries.TextQueries.ChunkIndexContract)
-    val ck2 = java.nio.file.Files.createTempDirectory("graft-cdc-ck2").toString
+    val ck2 = fixtureDir("graft-cdc-ck2").toString
     val q2 = EventsStream.cdcIndexMaintainStream(
       EventsStream.readDocuments(spark, watch.toString), table, ck2, "cdc_maint_2")
     q2.processAllAvailable(); q2.stop()
@@ -955,9 +971,9 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming boilerplate-DF index: drained readout ≡ batch DF; replay is a no-op") {
     val docs  = graft.core.Tables(spark, dir).documents
-    val watch = java.nio.file.Files.createTempDirectory("graft-bp-watch")
+    val watch = fixtureDir("graft-bp-watch")
     def stageHalf(pred: org.apache.spark.sql.Column, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-bp-half")
+      val tmp = fixtureDir("graft-bp-half")
       docs.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp)
         .filter(p => p.toString.endsWith(".parquet")).findFirst.get
@@ -965,7 +981,7 @@ class StreamingSpec extends SparkSpec {
     }
     stageHalf(col("doc_id") % 2 === 0, "b0.parquet")
     val table = graft.sources.Warehouse.sessionScopedName(spark, "graft_bp_stream_idx")
-    val ck1 = java.nio.file.Files.createTempDirectory("graft-bp-ck1").toString
+    val ck1 = fixtureDir("graft-bp-ck1").toString
     val q1 = EventsStream.boilerplateIndexMaintainStream(
       EventsStream.readDocuments(spark, watch.toString), table, ck1, "bp_maint_1")
     q1.processAllAvailable()
@@ -985,7 +1001,7 @@ class StreamingSpec extends SparkSpec {
     // redelivery with a fresh checkpoint: the incidence-key anti-join
     // keeps the append a no-op
     val n = spark.table(table).count()
-    val ck2 = java.nio.file.Files.createTempDirectory("graft-bp-ck2").toString
+    val ck2 = fixtureDir("graft-bp-ck2").toString
     val q2 = EventsStream.boilerplateIndexMaintainStream(
       EventsStream.readDocuments(spark, watch.toString), table, ck2, "bp_maint_2")
     q2.processAllAvailable(); q2.stop()
@@ -999,9 +1015,9 @@ class StreamingSpec extends SparkSpec {
     // frame over everything delivered (set-typed state: arrival-order
     // free), and a fresh-checkpoint replay must be a no-op.
     val docs  = graft.core.Tables(spark, dir).documents
-    val watch = java.nio.file.Files.createTempDirectory("graft-snm-watch")
+    val watch = fixtureDir("graft-snm-watch")
     def stageHalf(pred: org.apache.spark.sql.Column, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-snm-half")
+      val tmp = fixtureDir("graft-snm-half")
       docs.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp)
         .filter(p => p.toString.endsWith(".parquet")).findFirst.get
@@ -1015,7 +1031,7 @@ class StreamingSpec extends SparkSpec {
       .withColumn("__proxy", graft.operators.Dedup.snmProxy(col("k")))
     val bounds = graft.operators.Sharding.boundaries(allKeys, "__proxy", 8)
     val table = graft.sources.Warehouse.sessionScopedName(spark, "graft_snm_stream_idx")
-    val ck1 = java.nio.file.Files.createTempDirectory("graft-snm-ck1").toString
+    val ck1 = fixtureDir("graft-snm-ck1").toString
     stageHalf(col("doc_id") % 2 === 0, "b0.parquet")
     val q1 = EventsStream.snmIndexMaintainStream(
       EventsStream.readDocuments(spark, watch.toString), table, bounds, ck1, "snm_maint_1")
@@ -1038,7 +1054,7 @@ class StreamingSpec extends SparkSpec {
     // redelivery with a fresh checkpoint: the (rot,k) anti-join keeps
     // the append a no-op
     val n = spark.table(table).count()
-    val ck2 = java.nio.file.Files.createTempDirectory("graft-snm-ck2").toString
+    val ck2 = fixtureDir("graft-snm-ck2").toString
     val q2 = EventsStream.snmIndexMaintainStream(
       EventsStream.readDocuments(spark, watch.toString), table, bounds, ck2, "snm_maint_2")
     q2.processAllAvailable(); q2.stop()
@@ -1052,16 +1068,16 @@ class StreamingSpec extends SparkSpec {
     // restarted run may read ONLY the unseen file, the commit sequence
     // must continue, and the drained state must equal the batch build.
     val docs  = graft.core.Tables(spark, dir).documents
-    val watch = java.nio.file.Files.createTempDirectory("graft-bpr-watch")
+    val watch = fixtureDir("graft-bpr-watch")
     def stageHalf(pred: org.apache.spark.sql.Column, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-bpr-half")
+      val tmp = fixtureDir("graft-bpr-half")
       docs.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp)
         .filter(p => p.toString.endsWith(".parquet")).findFirst.get
       java.nio.file.Files.copy(part, watch.resolve(name))
     }
     val table = graft.sources.Warehouse.sessionScopedName(spark, "graft_bp_restart_idx")
-    val cp = java.nio.file.Files.createTempDirectory("graft-bpr-cp").toString
+    val cp = fixtureDir("graft-bpr-cp").toString
     def runOnce(name: String): Long = {
       val q = EventsStream.boilerplateIndexMaintainStream(
         EventsStream.readDocuments(spark, watch.toString), table, cp, name)
@@ -1095,9 +1111,9 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming ANN serving from the persisted IVF index ≡ batch serving; replay is a no-op") {
     val emb   = graft.core.Tables(spark, dir).embeddings
-    val watch = java.nio.file.Files.createTempDirectory("graft-ann-watch")
+    val watch = fixtureDir("graft-ann-watch")
     def stageHalf(pred: org.apache.spark.sql.Column, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-ann-half")
+      val tmp = fixtureDir("graft-ann-half")
       emb.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp)
         .filter(p => p.toString.endsWith(".parquet")).findFirst.get
@@ -1106,7 +1122,7 @@ class StreamingSpec extends SparkSpec {
     stageHalf(col("vec_id") < 25, "e0.parquet")
     val (idx, cents) = graft.queries.VectorQueries.ivfServingParts(spark, dir)
     val outTable = graft.sources.Warehouse.sessionScopedName(spark, "graft_ann_stream_out")
-    val ck1 = java.nio.file.Files.createTempDirectory("graft-ann-ck1").toString
+    val ck1 = fixtureDir("graft-ann-ck1").toString
     val q1 = EventsStream.annServeStream(
       EventsStream.readEmbeddings(spark, watch.toString).filter(col("vec_id") < 50),
       idx, cents, k = 3, nprobe = graft.queries.VectorQueries.IvfNprobe,
@@ -1123,7 +1139,7 @@ class StreamingSpec extends SparkSpec {
     assert(got === want, "streamed ANN serving diverged from the batch serve")
     // redelivery with a fresh checkpoint: the query_id anti-join guard
     // must keep the append a no-op
-    val ck2 = java.nio.file.Files.createTempDirectory("graft-ann-ck2").toString
+    val ck2 = fixtureDir("graft-ann-ck2").toString
     val q2 = EventsStream.annServeStream(
       EventsStream.readEmbeddings(spark, watch.toString).filter(col("vec_id") < 50),
       idx, cents, k = 3, nprobe = graft.queries.VectorQueries.IvfNprobe,
@@ -1141,7 +1157,7 @@ class StreamingSpec extends SparkSpec {
       .agg(min(col("value")), max(col("value"))).head
     val (vmin, vmax) = (ref.getDouble(0), ref.getDouble(1))
     val table = graft.sources.Warehouse.sessionScopedName(spark, "graft_psi_stream")
-    val ck1 = java.nio.file.Files.createTempDirectory("graft-psi-ck1").toString
+    val ck1 = fixtureDir("graft-psi-ck1").toString
     val q1 = EventsStream.psiDriftStream(
       EventsStream.read(spark, eventsDir), minDay, vmin, vmax, table, ck1, "psi_1")
     q1.processAllAvailable(); q1.stop()
@@ -1157,7 +1173,7 @@ class StreamingSpec extends SparkSpec {
     assert(got === want, "streamed drift state diverged from the batch curve")
     // replay with a fresh checkpoint: event_id anti-join keeps it a no-op
     val n = spark.table(table).count()
-    val ck2 = java.nio.file.Files.createTempDirectory("graft-psi-ck2").toString
+    val ck2 = fixtureDir("graft-psi-ck2").toString
     val q2 = EventsStream.psiDriftStream(
       EventsStream.read(spark, eventsDir), minDay, vmin, vmax, table, ck2, "psi_2")
     q2.processAllAvailable(); q2.stop()
@@ -1171,7 +1187,7 @@ class StreamingSpec extends SparkSpec {
       .distinct().collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     val table = graft.sources.Warehouse.sessionScopedName(spark, "graft_mix_stream")
-    val ck1 = java.nio.file.Files.createTempDirectory("graft-mix-ck1").toString
+    val ck1 = fixtureDir("graft-mix-ck1").toString
     val q1 = EventsStream.mixtureAuditStream(
       EventsStream.readDocuments(spark, docsDir), plan, table, ck1, "mix_1")
     q1.processAllAvailable(); q1.stop()
@@ -1184,7 +1200,7 @@ class StreamingSpec extends SparkSpec {
       s"streamed audit $got diverged from batch q192 $want")
     // replay with a fresh checkpoint: doc_id anti-join keeps it a no-op
     val n = spark.table(table).count()
-    val ck2 = java.nio.file.Files.createTempDirectory("graft-mix-ck2").toString
+    val ck2 = fixtureDir("graft-mix-ck2").toString
     val q2 = EventsStream.mixtureAuditStream(
       EventsStream.readDocuments(spark, docsDir), plan, table, ck2, "mix_2")
     q2.processAllAvailable(); q2.stop()
@@ -1196,9 +1212,9 @@ class StreamingSpec extends SparkSpec {
     val bench = docs.filter(col("doc_id") % 10 === 0)
       .select(explode(graft.functions.Text.shingles(col("text"), 8)).as("ngram"))
       .distinct()
-    val watch = java.nio.file.Files.createTempDirectory("graft-decon-watch")
+    val watch = fixtureDir("graft-decon-watch")
     def stageCorpus(pred: org.apache.spark.sql.Column, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-decon-half")
+      val tmp = fixtureDir("graft-decon-half")
       docs.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp)
         .filter(p => p.toString.endsWith(".parquet")).findFirst.get
@@ -1207,7 +1223,7 @@ class StreamingSpec extends SparkSpec {
     // the q77 corpus split (non-benchmark docs), arriving in two batches
     stageCorpus(col("doc_id") % 10 =!= 0 && col("doc_id") < 250, "c0.parquet")
     val outTable = graft.sources.Warehouse.sessionScopedName(spark, "graft_decon_stream_out")
-    val ck1 = java.nio.file.Files.createTempDirectory("graft-decon-ck1").toString
+    val ck1 = fixtureDir("graft-decon-ck1").toString
     val q1 = EventsStream.decontaminateStream(
       EventsStream.readDocuments(spark, watch.toString), bench, outTable, ck1, "decon_1")
     q1.processAllAvailable()
@@ -1222,7 +1238,7 @@ class StreamingSpec extends SparkSpec {
     assert(want.exists(_._4), "fixture has no contaminated doc — vacuous parity")
     assert(got === want, "streamed decontamination diverged from batch q77")
     // replay with a fresh checkpoint: the doc_id anti-join keeps it a no-op
-    val ck2 = java.nio.file.Files.createTempDirectory("graft-decon-ck2").toString
+    val ck2 = fixtureDir("graft-decon-ck2").toString
     val q2 = EventsStream.decontaminateStream(
       EventsStream.readDocuments(spark, watch.toString), bench, outTable, ck2, "decon_2")
     q2.processAllAvailable(); q2.stop()
@@ -1232,9 +1248,9 @@ class StreamingSpec extends SparkSpec {
   test("z-order stats maintenance: drained state re-aggregates to the batch delta stats") {
     import graft.queries.OlapQueries.ZOrder
     val orders = graft.core.Tables(spark, dir).orders
-    val watch = java.nio.file.Files.createTempDirectory("graft-zs-watch")
+    val watch = fixtureDir("graft-zs-watch")
     def stage(pred: org.apache.spark.sql.Column, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-zs-half")
+      val tmp = fixtureDir("graft-zs-half")
       orders.filter(pred).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
       val part = java.nio.file.Files.list(tmp)
         .filter(p => p.toString.endsWith(".parquet")).findFirst.get
@@ -1245,7 +1261,7 @@ class StreamingSpec extends SparkSpec {
       ZOrder.prep(orders.filter(col("o_orderkey") % 2 === 0))).collect().head
     val bounds = (bRow.getLong(0), bRow.getLong(1), bRow.getLong(2), bRow.getLong(3))
     val table = graft.sources.Warehouse.sessionScopedName(spark, "graft_zs_stream_idx")
-    val ck1 = java.nio.file.Files.createTempDirectory("graft-zs-ck1").toString
+    val ck1 = fixtureDir("graft-zs-ck1").toString
     stage(col("o_orderkey") % 4 === 1, "b0.parquet")
     val q1 = EventsStream.zorderStatsMaintainStream(
       EventsStream.readOrders(spark, watch.toString), table, bounds, ck1, "zs_maint_1")
@@ -1274,7 +1290,7 @@ class StreamingSpec extends SparkSpec {
     assert(spark.table(table).count() >= got.size.toLong)
     // redelivery with a fresh checkpoint: the guard key keeps appends no-op
     val n = spark.table(table).count()
-    val ck2 = java.nio.file.Files.createTempDirectory("graft-zs-ck2").toString
+    val ck2 = fixtureDir("graft-zs-ck2").toString
     val q2 = EventsStream.zorderStatsMaintainStream(
       EventsStream.readOrders(spark, watch.toString), table, bounds, ck2, "zs_maint_2")
     q2.processAllAvailable(); q2.stop()
