@@ -28,15 +28,6 @@ object JsonStat {
         StructField("label", MapType(StringType, StringType)))) // code → label
       )))))))
 
-  /** Decode a DataFrame with (`dataset_code`, `payload` json string) into
-    * flat rows: dataset_code, flat_idx, value, plus `{dim}_code` /
-    * `{dim}_label` for each of `dims`.
-    *
-    * Strides: stride(d) = Π size(d+1..); code position for dim d of flat
-    * index i = (i / stride(d)) % size(d) (`extract_eurostat.py:150-155`).
-    * The position→code lookup inverts the category index map with
-    * `map_from_entries` over swapped entries.
-    */
   /** Corrupt-payload audit — the PERMISSIVE half of the ingest contract:
     * [[decode]] silently DROPS payloads `from_json` can't parse (null
     * struct) or that parse without the fields the stride decode needs;
@@ -53,6 +44,15 @@ object JsonStat {
               col("js.dimension").isNull)
       .select(col("dataset_code"), col("payload"))
 
+  /** Decode a DataFrame with (`dataset_code`, `payload` json string) into
+    * flat rows: dataset_code, flat_idx, value, plus `{dim}_code` /
+    * `{dim}_label` for each of `dims`.
+    *
+    * Strides: stride(d) = Π size(d+1..); code position for dim d of flat
+    * index i = (i / stride(d)) % size(d) (`extract_eurostat.py:150-155`).
+    * The position→code lookup inverts the category index map with
+    * `map_from_entries` over swapped entries.
+    */
   def decode(df: DataFrame, dims: Seq[String]): DataFrame = {
     val parsed = df
       .withColumn("js", from_json(col("payload"), payloadSchema))

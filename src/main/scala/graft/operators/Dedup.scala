@@ -258,9 +258,6 @@ object Dedup {
     }
   }
 
-  /** Exact Jaccard verification of candidate (doc_a, doc_b) pairs against
-    * the full shingle sets: shared = |A ∩ B| via `array_intersect`.
-    */
   /** Substring-level EXACT dedup (the ExactSubstr pass of Lee et al.,
     * "Deduplicating Training Data Makes Language Models Better"): for
     * every document, the exact character spans that occur VERBATIM in at
@@ -339,12 +336,6 @@ object Dedup {
     substrSpanStats(delta.select(col(idCol).as("doc_id")), cov, k)
   }
 
-  /** Shared span-merge tail of the ExactSubstr family: covered gram
-    * extents [pos, pos+k) → maximal spans (per-DOC gaps-and-islands — a
-    * new span starts where pos clears every previous extent's end; the
-    * window is bounded by one document's length) → zero-filled per-doc
-    * stats.
-    */
   /** Covered gram extents [pos, pos+k) → maximal merged spans
     * (doc_id, s, e), 1-based character extents [s, e), disjoint per doc.
     * The gaps-and-islands window is bounded by one document's length.
@@ -361,6 +352,12 @@ object Dedup {
       .agg(min(col("pos")).as("s"), (max(col("pos")) + k).as("e"))
   }
 
+  /** Shared span-merge tail of the ExactSubstr family: covered gram
+    * extents [pos, pos+k) → maximal spans (per-DOC gaps-and-islands — a
+    * new span starts where pos clears every previous extent's end; the
+    * window is bounded by one document's length) → zero-filled per-doc
+    * stats.
+    */
   private def substrSpanStats(docIds: DataFrame, cov: DataFrame, k: Int): DataFrame = {
     val spans = mergedSpans(cov, k)
     val perDoc = spans.groupBy(col("doc_id"))
@@ -657,6 +654,9 @@ object Dedup {
              x => x.getField("chunk_text"))).as("residual_text"))
   }
 
+  /** Exact Jaccard verification of candidate (doc_a, doc_b) pairs against
+    * the full shingle sets: shared = |A ∩ B| via `array_intersect`.
+    */
   def verifyPairs(cand: DataFrame, sh: DataFrame, threshold: Double): DataFrame = {
     val a = sh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a"),
                       col("n_shingles").as("size_a"))
@@ -732,6 +732,19 @@ object Dedup {
     }
   }
 
+  /** The distinct simhash VALUE frame behind the SNM screen:
+    * (simhash, n_docs, canonical = min doc id, h = 16-hex padded) — ONE
+    * corpus shingle+md5 pass collapsing identical values map-side.
+    * Surfaced separately so callers (q213, its quantile boundary scan,
+    * q214's recall audit) can memoize it instead of re-running the
+    * corpus pass per consumer.
+    */
+  def simhashVals(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    simhash(df, idCol, textCol)
+      .groupBy(col("simhash"))
+      .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("canonical"))
+      .withColumn("h", lpad(hex(col("simhash")), 16, "0"))
+
   /** Sorted-neighborhood simhash candidate mining (Manku, Jain & Das
     * Sarma, WWW'07 — the production simhash dedup design; public
     * algorithm): the OTHER standard simhash screen next to banding
@@ -770,33 +783,12 @@ object Dedup {
     * hamming ≤ maxHamming, each side carrying its doc count and
     * canonical (min) doc id for remediation.
     */
-  /** The distinct simhash VALUE frame behind the SNM screen:
-    * (simhash, n_docs, canonical = min doc id, h = 16-hex padded) — ONE
-    * corpus shingle+md5 pass collapsing identical values map-side.
-    * Surfaced separately so callers (q213, its quantile boundary scan,
-    * q214's recall audit) can memoize it instead of re-running the
-    * corpus pass per consumer.
-    */
-  def simhashVals(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    simhash(df, idCol, textCol)
-      .groupBy(col("simhash"))
-      .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("canonical"))
-      .withColumn("h", lpad(hex(col("simhash")), 16, "0"))
-
   def snmPairs(df: DataFrame, idCol: String, textCol: String,
                windowW: Int = 2, rotations: Int = 4,
                maxHamming: Int = 8, buckets: Int = 32): DataFrame =
     snmPairsFromVals(simhashVals(df, idCol, textCol),
                      windowW, rotations, maxHamming, buckets)
 
-  /** [[snmPairs]] over an ALREADY-BUILT (ideally memoized) value frame
-    * from [[simhashVals]]. `materialize = false` skips the mid-plan
-    * rank-frame cut and returns the RAW composed plan — for plan
-    * inspection only (withCachesIf's rationale: an eager checkpoint
-    * collapses the plan to an ExistingRDD scan, which documents
-    * nothing); executing the lazy form replays the rank sort once per
-    * consumer.
-    */
   /** The per-rotation key frame of a [[simhashVals]] frame: one
     * (rot, k, h) row per (rotation, value); rotation by 4r hex digits
     * is a bijection on the 16-hex key, so ORDER BY k alone is total
@@ -832,6 +824,14 @@ object Dedup {
         when(proxy <= b, i).otherwise(rest)
       }
 
+  /** [[snmPairs]] over an ALREADY-BUILT (ideally memoized) value frame
+    * from [[simhashVals]]. `materialize = false` skips the mid-plan
+    * rank-frame cut and returns the RAW composed plan — for plan
+    * inspection only (withCachesIf's rationale: an eager checkpoint
+    * collapses the plan to an ExistingRDD scan, which documents
+    * nothing); executing the lazy form replays the rank sort once per
+    * consumer.
+    */
   def snmPairsFromVals(vals: DataFrame,
                        windowW: Int, rotations: Int,
                        maxHamming: Int, buckets: Int = 32,
@@ -1021,6 +1021,32 @@ object Dedup {
       // cache can go when this block exits, on the throw path too
       labels.unionByName(singletons)
     }
+  }
+
+  /** Duplicate clusters of media ids through the QUOTIENT GRAPH of an
+    * exact hash: `hashes` is (media_id, `hashCol`), `pairs` the near-dup
+    * (id_a, id_b) pairs. Each id maps to the REPRESENTATIVE of its exact
+    * hash (rep = min id of the hash group, one aggregate), the pairs map
+    * through id → rep (two equi-joins) and dedupe, and
+    * [[connectedComponents]] runs on the rep graph, whose edges are
+    * distinct-hash pairs, not id pairs. The clusters are the same as on
+    * the id graph: a rep is ≤ every id it covers and the hash determines
+    * the distance, so the min rep of a component is its min id. Returns
+    * [[withClusterSize]] over (media_id, cluster_id).
+    */
+  private[graft] def hashQuotientClusters(hashes: DataFrame, hashCol: String, pairs: DataFrame): DataFrame = {
+    val reps = hashes.groupBy(col(hashCol)).agg(min(col("media_id")).as("rep"))
+    val idRep = hashes.join(reps, Seq(hashCol)).select(col("media_id"), col("rep"))
+    val repEdges = pairs
+      .join(idRep.select(col("media_id").as("id_a"), col("rep").as("rep_a")), Seq("id_a"))
+      .join(idRep.select(col("media_id").as("id_b"), col("rep").as("rep_b")), Seq("id_b"))
+      .filter(col("rep_a") =!= col("rep_b"))
+      .select(col("rep_a"), col("rep_b")).distinct()
+    val comp = connectedComponents(
+      idRep.select(col("rep").as("id")).distinct(), repEdges, "rep_a", "rep_b")
+    withClusterSize(
+      idRep.join(comp.select(col("id").as("rep"), col("cluster_id")), Seq("rep"))
+        .select(col("media_id"), col("cluster_id")), "media_id")
   }
 
   /** Alternating LARGE-STAR / SMALL-STAR contraction (Kiveris et al.,

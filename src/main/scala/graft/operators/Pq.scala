@@ -68,13 +68,6 @@ object Pq {
       codebooks.indices.map(j => col(s"d2_$j")).reduce(_ + _))
   }
 
-  /** Asymmetric-distance (ADC) top-k: score every CODE row against a
-    * query batch through a driver-built (query, subspace, code) → d²
-    * lookup table, approx d² = fixed-order sum of the M table hits.
-    * The corpus side carries only its codes — the vectors never move.
-    * The lookup frames are broadcast-sized by construction
-    * (|queries|·M·k rows); ranking is per-query (bounded query batch).
-    */
   /** The driver-built per-subspace lookup tables: (query_id, code_j,
     * l_j) with l_j the SAME d² expression the oracle's list_dot_product
     * CTE evaluates (sequential ascending folds throughout).
@@ -127,6 +120,13 @@ object Pq {
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("approx_d2"))
   }
 
+  /** Asymmetric-distance (ADC) top-k: score every CODE row against a
+    * query batch through a driver-built (query, subspace, code) → d²
+    * lookup table, approx d² = fixed-order sum of the M table hits.
+    * The corpus side carries only its codes — the vectors never move.
+    * The lookup frames are broadcast-sized by construction
+    * (|queries|·M·k rows); ranking is per-query (bounded query batch).
+    */
   def adcTopK(queries: DataFrame, codes: DataFrame, idCol: String,
               vecCol: String, codebooks: Seq[Array[Seq[Double]]],
               subDim: Int, k: Int): DataFrame = {

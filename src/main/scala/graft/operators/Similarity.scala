@@ -45,24 +45,6 @@ object Similarity {
     concat(bits: _*)
   }
 
-  /** Brute-force cosine top-k: for each row of `queries`, the k nearest
-    * `corpus` rows by cosine. Norms are precomputed per side (O(n·d)) and
-    * the join is broadcast(queries) × corpus scan — the right EXACT
-    * baseline shape: the corpus is scanned once and never shuffled.
-    *
-    * Top-k selection is the bounded-heap [[graftx.TopKPairs]] aggregate
-    * (map-side partial top-k, ≤ k survivors per task per query cross the
-    * shuffle), NOT a `row_number` window — the window form funnels every
-    * scored corpus row of one query through ONE task, which at 100 TB is
-    * the whole corpus per window task (the round-7 verdict's last `weak`
-    * item). The exact double cosine rides through the string-keyed heap
-    * via [[graftx.SortableDouble]]'s lossless order-preserving encoding
-    * and is decoded back bit-for-bit, so the output (and its oracle
-    * hash) is identical to the window form: (cosine DESC NULLS LAST,
-    * neighbor_id ASC), exact values. Null cosines (zero-norm vectors)
-    * encode as an all-'z' key that sorts after every hex key — NULLS
-    * LAST — and decode back to null.
-    */
   /** Rank `scored` — (query_id, neighbor_id, cosine) — to per-query top-k
     * via the bounded-heap [[org.apache.spark.sql.graftx.TopKPairs]]
     * aggregate: map-side ≤ k survivors per task per query cross the
@@ -91,6 +73,24 @@ object Similarity {
                 .otherwise(SortableDouble.decodeDesc(col("col.key"))).as("cosine"))
   }
 
+  /** Brute-force cosine top-k: for each row of `queries`, the k nearest
+    * `corpus` rows by cosine. Norms are precomputed per side (O(n·d)) and
+    * the join is broadcast(queries) × corpus scan — the right EXACT
+    * baseline shape: the corpus is scanned once and never shuffled.
+    *
+    * Top-k selection is the bounded-heap [[graftx.TopKPairs]] aggregate
+    * (map-side partial top-k, ≤ k survivors per task per query cross the
+    * shuffle), NOT a `row_number` window — the window form funnels every
+    * scored corpus row of one query through ONE task, which at 100 TB is
+    * the whole corpus per window task (the round-7 verdict's last `weak`
+    * item). The exact double cosine rides through the string-keyed heap
+    * via [[graftx.SortableDouble]]'s lossless order-preserving encoding
+    * and is decoded back bit-for-bit, so the output (and its oracle
+    * hash) is identical to the window form: (cosine DESC NULLS LAST,
+    * neighbor_id ASC), exact values. Null cosines (zero-norm vectors)
+    * encode as an all-'z' key that sorts after every hex key — NULLS
+    * LAST — and decode back to null.
+    */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame, idCol: String,
                      vecCol: String, k: Int): DataFrame = {
     val q = queries.select(
@@ -132,8 +132,8 @@ object Similarity {
     * the data distribution (lists partition the corpus evenly-ish even
     * when vectors cluster on one side of every hyperplane) at the price of
     * a centroid-selection pass.
-    */
-  /** `negLabelCol`: when set, only candidates whose `negLabelCol` value
+    *
+    * `negLabelCol`: when set, only candidates whose `negLabelCol` value
     * DIFFERS from the query's are scored — the hard-negative-mining mode
     * (contrastive training wants, per anchor, the most-similar vectors of
     * a DIFFERENT class). The filter rides the probed-list candidate

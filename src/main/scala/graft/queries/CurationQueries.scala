@@ -72,14 +72,7 @@ object CurationQueries {
     */
   private def knScores(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables(s, dir).documents
-    val toks = Text.tokens(col("text"))
-    val m    = greatest(size(toks) - 1, lit(0))
-    val pairs = docs.select(
-      col("doc_id"),
-      posexplode(zip_with(slice(toks, lit(1), m), slice(toks, lit(2), m),
-        (a, b) => struct(a.as("prev"), b.as("cur")))).as(Seq("pos", "bg")))
-      .select(col("doc_id"), col("pos"),
-              col("bg.prev").as("prev"), col("bg.cur").as("cur"))
+    val pairs = bigrams(docs)
     val c2  = pairs.groupBy(col("prev"), col("cur")).agg(count(lit(1)).as("c2"))
     val ch  = pairs.groupBy(col("prev")).agg(count(lit(1)).as("ch"))
     val n1f = c2.groupBy(col("prev")).agg(count(lit(1)).as("n1f"))
@@ -96,12 +89,50 @@ object CurationQueries {
       .join(broadcast(n1f), "prev")
       .join(broadcast(n1p), "cur")
       .crossJoin(broadcast(bt))
+      .select(col("doc_id"), col("pos"), termLogp(term1 + term2))
+    perplexityReport(docs, scored)
+  }
+
+  /** (doc_id, pos, prev, cur): each document's adjacent token pairs in
+    * order, extracted scan-locally (a zip of two shifted slices of the
+    * token array, no self-join on position).
+    */
+  private def bigrams(docs: DataFrame): DataFrame = {
+    val toks = Text.tokens(col("text"))
+    val m    = greatest(size(toks) - 1, lit(0))
+    docs.select(
+      col("doc_id"),
+      posexplode(zip_with(slice(toks, lit(1), m), slice(toks, lit(2), m),
+        (a, b) => struct(a.as("prev"), b.as("cur")))).as(Seq("pos", "bg")))
       .select(col("doc_id"), col("pos"),
-              (floor(log(term1 + term2) * 1e9 + 0.5) / 1e9).as("logp"))
-    val sumLogp = aggregate(
-      transform(array_sort(collect_list(struct(col("pos"), col("logp")))),
-                x => x.getField("logp")),
-      lit(0.0), (acc, x) => acc + x)
+              col("bg.prev").as("prev"), col("bg.cur").as("cur"))
+  }
+
+  /** One LM term, `logp` = ln(`p`) quantized to 1e-9 (floor(x·1e9 + 0.5)
+    * / 1e9) BEFORE the fold: ln() is not correctly rounded, and JVM
+    * Math.log and DuckDB's libm differ by 1 ulp on some arguments (about
+    * 3% of q102's bigrams), so both engines must fold identical doubles.
+    */
+  private def termLogp(p: Column): Column =
+    (floor(log(p) * 1e9 + 0.5) / 1e9).as("logp")
+
+  /** The per-doc LM fold of (pos, logp) rows: a sequential left-to-right
+    * sum over the pos-sorted log-probs. collect_list order depends on the
+    * partitioning and array_sort fixes it; DuckDB mirrors the fold with
+    * list_reduce over list(logp ORDER BY pos). Both engines run the same
+    * IEEE additions in the same order, never a merge-order float sum.
+    */
+  private def sumLogp: Column = aggregate(
+    transform(array_sort(collect_list(struct(col("pos"), col("logp")))),
+              x => x.getField("logp")),
+    lit(0.0), (acc, x) => acc + x)
+
+  /** The bigram-LM report: every document of `docs` with its bigram
+    * count, [[sumLogp]] over its `scored` (doc_id, pos, logp) rows, the
+    * mean and the 1e-9-quantized perplexity exp(−mean). A document under
+    * two tokens keeps a row with n_bigrams = 0 and identity scores.
+    */
+  private def perplexityReport(docs: DataFrame, scored: DataFrame): DataFrame = {
     val perDoc = scored.groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"), sumLogp.as("sum_logprob"))
     docs.select(col("doc_id"), col("lang"))
@@ -342,14 +373,6 @@ object CurationQueries {
   /** q157's total sample budget (Hamilton-apportioned across languages). */
   private val QuotaB = 200
 
-  /** The q243/q245 per-doc EXCESS-LOSS frame: (doc_id, source,
-    * excess_e9) where excess = max(0, ℓ_uni − ℓ_kn) = max(0, lp_kn −
-    * lp_uni) on the two gated LM scorers' per-doc avg log-probs,
-    * quantized to a 1e9 BIGINT immediately so every downstream rollup
-    * is an exact integer sum. Docs too short to score under both models
-    * (no tokens or no bigrams) are excluded — a loss is only comparable
-    * where both models emit one.
-    */
   /** Per-doc excess loss — memoized per (session, dir) and cut: both
     * LMs are corpus-FITTED scorers and the quantized excess is a pure
     * function of the corpus, consumed by two gated queries (q243's
@@ -358,6 +381,14 @@ object CurationQueries {
     * (`dom` feeds the normalizer and the readout).
     */
   private val excessCache = new Artifact[DataFrame]("excess_per_doc")
+  /** The q243/q245 per-doc EXCESS-LOSS frame: (doc_id, source,
+    * excess_e9) where excess = max(0, ℓ_uni − ℓ_kn) = max(0, lp_kn −
+    * lp_uni) on the two gated LM scorers' per-doc avg log-probs,
+    * quantized to a 1e9 BIGINT immediately so every downstream rollup
+    * is an exact integer sum. Docs too short to score under both models
+    * (no tokens or no bigrams) are excluded — a loss is only comparable
+    * where both models emit one.
+    */
   private def excessPerDoc(s: SparkSession, dir: String): DataFrame =
     excessCache.cut(s, dir) {
       val uni = defs("q78_unigram_lm")(s, dir)
@@ -504,6 +535,48 @@ object CurationQueries {
     graft.functions.HexKeys.value16(
       md5(concat(lit("split|"), col("doc_id").cast(StringType)))) % 100
 
+  /** Per document of the (doc_id, seg_idx, seg, kept) segment rows: its
+    * segment count, kept-segment count and `clean_text`, the kept
+    * segments joined by spaces in seg_idx order.
+    */
+  private def reassembled(flagged: DataFrame): DataFrame =
+    flagged.groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_segments"),
+           sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept_segments"),
+           array_join(
+             transform(
+               array_sort(collect_list(
+                 when(col("kept"), struct(col("seg_idx"), col("seg"))))),
+               x => x.getField("seg")),
+             " ").as("clean_text"))
+
+  /** The five-stage waterfall of a (s1..s5) flag frame per `by` group
+    * (one group when `by` is empty): one row per stage with its stage_idx,
+    * name, n_in, n_dropped and n_out, from one aggregation of the
+    * survivor counts c0..c5.
+    */
+  private def stageWaterfall(flags: DataFrame, by: String*): DataFrame = {
+    val c = flags.groupBy(by.map(col): _*).agg(
+      count(lit(1)).as("c0"),
+      sum(when(col("s1"), 1L).otherwise(0L)).as("c1"),
+      sum(when(col("s2"), 1L).otherwise(0L)).as("c2"),
+      sum(when(col("s3"), 1L).otherwise(0L)).as("c3"),
+      sum(when(col("s4"), 1L).otherwise(0L)).as("c4"),
+      sum(when(col("s5"), 1L).otherwise(0L)).as("c5"))
+    val stages = Seq((1L, "eval_holdout", "c0", "c1"),
+                     (2L, "min_length", "c1", "c2"),
+                     (3L, "quality", "c2", "c3"),
+                     (4L, "exact_dedup", "c3", "c4"),
+                     (5L, "decontamination", "c4", "c5"))
+    c.select(by.map(col) :+ explode(array(stages.map { case (i, name, in, out) =>
+        struct(lit(i).as("stage_idx"), lit(name).as("stage"),
+               col(in).as("n_in"), (col(in) - col(out)).as("n_dropped"),
+               col(out).as("n_out"))
+      }: _*)).as("x"): _*)
+      .select(by.map(col) ++ Seq(col("x.stage_idx"), col("x.stage"), col("x.n_in"),
+              col("x.n_dropped"), col("x.n_out")): _*)
+  }
+
   /** The q198 persisted cap index: the BASE half's (`capSplitBucket < 50`)
     * kept set, built once per (session, dir) — q141/q145/q172's
     * build-once/probe-deltas discipline applied to the cap. The state IS
@@ -548,40 +621,10 @@ object CurationQueries {
     val selected = graft.core.Materialize.cutLocal(w.join(canon, Seq("doc_id"))
       .join(d.select(col("doc_id"), col("lang")), Seq("doc_id"))
       .orderBy(col("logw_q").desc, col("doc_id")).limit(100)) // 100 rows, consumed by counts + pick below
-    val B = 50
-    val counts = selected.groupBy(col("lang")).agg(count(lit(1)).as("n_l"))
-    val tot = counts.agg(sum(col("n_l")).as("nn"))
-    val q = graft.core.Materialize.cutLocal(counts.crossJoin(broadcast(tot))
-      .select(col("lang"), col("n_l"),
-              expr(s"($B * n_l) DIV nn").as("base_l"),
-              (lit(B.toLong) * col("n_l") -
-                expr(s"($B * n_l) DIV nn") * col("nn")).as("rem"))) // ≤|langs| rows, consumed twice below
-    val sumBase = q.agg(sum(col("base_l")).as("sum_base"))
-    val ranked = q
-      .agg(sort_array(collect_list(struct((-col("rem")).as("negrem"),
-             col("lang").as("lang"), col("base_l").as("base_l")))).as("xs"))
-      .select(posexplode(col("xs")).as(Seq("pos", "x")))
-      .select(col("x.lang").as("lang"), col("x.base_l").as("base_l"),
-              (col("pos") + 1).cast(LongType).as("seat_rank"))
-    val tgt = ranked.crossJoin(broadcast(sumBase))
-      .select(col("lang"),
-              (col("base_l") +
-                when(col("seat_rank") <= lit(B.toLong) - col("sum_base"),
-                     lit(1L)).otherwise(lit(0L))).as("target_n"))
-    val key = md5(concat(lit("quota|"), col("doc_id").cast(StringType)))
-    selected.select(col("doc_id"), col("lang"), col("logw_q"),
-                    key.as("sample_key"))
-      .groupBy(col("lang"))
-      .agg(org.apache.spark.sql.graftx.TopKPairs
-        .topK(col("sample_key"), col("doc_id"), B).as("top"))
-      .select(col("lang"), posexplode(col("top")))
-      .select(col("lang"), col("col.id").as("doc_id"),
-              (col("pos") + 1).cast(LongType).as("strat_rank"))
-      .join(broadcast(tgt), Seq("lang"))
-      .filter(col("strat_rank") <= col("target_n"))
+    graft.operators.Sampling.quotaSample(selected, "lang", "doc_id", 50, "quota|")
       .join(selected.select(col("doc_id"), col("logw_q")), Seq("doc_id"))
       .select(col("lang"), col("doc_id"), col("logw_q"), col("strat_rank"),
-              col("target_n").cast(LongType).as("target_n"))
+              col("target_n"))
   }
 
   /** The q148 model in driver form for the STREAMING scoring leg
@@ -743,15 +786,7 @@ object CurationQueries {
         .select(col("doc_id"), col("seg_idx"), col("seg"),
                 (col("doc_id") === col("first_occ.doc_id") &&
                  col("seg_idx") === col("first_occ.seg_idx")).as("kept"))
-      flagged.groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_segments"),
-             sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept_segments"),
-             array_join(
-               transform(
-                 array_sort(collect_list(
-                   when(col("kept"), struct(col("seg_idx"), col("seg"))))),
-                 x => x.getField("seg")),
-               " ").as("clean_text"))
+      reassembled(flagged)
     },
 
     // ---------------------------------------------------------------
@@ -787,15 +822,7 @@ object CurationQueries {
       val flagged = segs.join(bp, Seq("seg"), "left")
         .select(col("doc_id"), col("seg_idx"), col("seg"),
                 col("__bp").isNull.as("kept"))
-      flagged.groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_segments"),
-             sum(when(col("kept"), 1L).otherwise(0L)).as("n_kept_segments"),
-             array_join(
-               transform(
-                 array_sort(collect_list(
-                   when(col("kept"), struct(col("seg_idx"), col("seg"))))),
-                 x => x.getField("seg")),
-               " ").as("clean_text"))
+      reassembled(flagged)
         .select(col("doc_id"), col("n_segments"), col("n_kept_segments"),
                 (col("n_segments") - col("n_kept_segments")).as("n_removed"),
                 md5(col("clean_text")).as("clean_hash"),
@@ -1009,42 +1036,18 @@ object CurationQueries {
     },
 
     // ---------------------------------------------------------------
-    // q78: corpus unigram-LM scoring — the "perplexity filter" of a
-    // training-data pipeline, with the corpus itself as the LM: global
-    // token frequencies, p(tok) = cnt/total, and each document scored by
-    // its mean log-probability (low = rare-token-heavy / atypical docs).
-    //
-    // Shape at 100 TB: the LM is one partial-aggregated groupBy(tok) —
-    // vocabulary-sized output, broadcast back onto the token stream, so
-    // the corpus is never shuffled to score it. Determinism: cnt/total is
-    // one integer→double division and the per-doc reduction is a
-    // sequential left-to-right fold over the pos-sorted log-prob array
-    // (collect_list order is partition-dependent; array_sort fixes it),
-    // mirrored by DuckDB list_reduce over list(... ORDER BY pos) —
-    // bit-identical IEEE op sequences, no merge-order float sums.
-    // ---------------------------------------------------------------
     // q102: bigram LM scoring with add-one smoothing — the conditional
     // upgrade of q78's unigram filter (the CCNet-style "does this text
     // read like language" score): p(wᵢ|wᵢ₋₁) = (c₂(wᵢ₋₁wᵢ)+1) /
-    // (c₁(wᵢ₋₁)+V). Bigrams are extracted SCAN-LOCAL (zip of shifted
-    // array slices — no self-join on position); the bigram/unigram
-    // count tables are vocab-bounded (broadcast here; corpus-scale
-    // vocabularies make them plain equi-join tables) and the per-doc
-    // sum is the same pos-ordered sequential fold as q78 — no
-    // merge-order float accumulation. Sub-2-token docs keep a row with
-    // n_bigrams=0 and identity scores (the q76 lesson).
+    // (c₁(wᵢ₋₁)+V). Bigrams are extracted scan-locally ([[bigrams]]);
+    // the bigram/unigram count tables are vocab-bounded (broadcast here;
+    // corpus-scale vocabularies make them plain equi-join tables) and
+    // the report is [[perplexityReport]]'s pos-ordered fold.
     // ---------------------------------------------------------------
     "q102_bigram_lm" -> { (s, dir) =>
       val docs = Tables(s, dir).documents
-      val toks = Text.tokens(col("text"))
-      val m    = greatest(size(toks) - 1, lit(0))
-      val pairs = docs.select(
-        col("doc_id"),
-        posexplode(zip_with(slice(toks, lit(1), m), slice(toks, lit(2), m),
-          (a, b) => struct(a.as("prev"), b.as("cur")))).as(Seq("pos", "bg")))
-        .select(col("doc_id"), col("pos"),
-                col("bg.prev").as("prev"), col("bg.cur").as("cur"))
-      val tok = docs.select(explode(toks).as("tok"))
+      val pairs = bigrams(docs)
+      val tok = docs.select(explode(Text.tokens(col("text"))).as("tok"))
       val c1  = tok.groupBy(col("tok")).agg(count(lit(1)).as("c1"))
       val v   = c1.agg(count(lit(1)).as("vocab"))
       val c2  = pairs.groupBy(col("prev"), col("cur")).agg(count(lit(1)).as("c2"))
@@ -1053,31 +1056,9 @@ object CurationQueries {
         .join(broadcast(c1.withColumnRenamed("tok", "prev")), "prev")
         .crossJoin(broadcast(v))
         .select(col("doc_id"), col("pos"),
-                // ln() is not correctly rounded and differs by 1 ulp
-                // between JVM Math.log and DuckDB's libm on ~3% of these
-                // arguments (q78's argument set happens to agree) —
-                // quantize each term to 1e-9 BEFORE the fold so both
-                // engines sum identical doubles in identical order
-                (floor(log((col("c2").cast(DoubleType) + lit(1.0)) /
-                    (col("c1").cast(DoubleType) + col("vocab").cast(DoubleType)))
-                  * 1e9 + 0.5) / 1e9).as("logp"))
-      val sumLogp = aggregate(
-        transform(array_sort(collect_list(struct(col("pos"), col("logp")))),
-                  x => x.getField("logp")),
-        lit(0.0), (acc, x) => acc + x)
-      val perDoc = scored.groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_bigrams"), sumLogp.as("sum_logprob"))
-      docs.select(col("doc_id"), col("lang"))
-        .join(perDoc, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("lang"),
-                coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-                coalesce(col("sum_logprob"), lit(0.0)).as("sum_logprob"),
-                coalesce(col("sum_logprob") / col("n_bigrams").cast(DoubleType),
-                         lit(0.0)).as("avg_logprob"),
-                coalesce(
-                  floor(exp(-(col("sum_logprob") / col("n_bigrams").cast(DoubleType)))
-                    * 1e9 + 0.5) / 1e9,
-                  lit(1.0)).as("perplexity"))
+                termLogp((col("c2").cast(DoubleType) + lit(1.0)) /
+                  (col("c1").cast(DoubleType) + col("vocab").cast(DoubleType))))
+      perplexityReport(docs, scored)
     },
 
     // ---------------------------------------------------------------
@@ -1091,9 +1072,9 @@ object CurationQueries {
     // N1+(·w)/|bigram types|. All model statistics are integer counts
     // (vocabulary-sized partial aggregates, broadcast back — the corpus
     // is never shuffled to score); the per-term double expression is a
-    // fixed operation tree both engines evaluate identically, ln/exp
-    // terms ride the q78/q102 1e-9 quantization, and the per-doc sum is
-    // the pos-sorted sequential fold.
+    // fixed operation tree both engines evaluate identically, and the
+    // terms are quantized and folded as q102's ([[termLogp]],
+    // [[perplexityReport]]).
     // ---------------------------------------------------------------
     "q175_kneser_ney_lm" -> { (s, dir) => knScores(s, dir) },
 
@@ -1124,6 +1105,17 @@ object CurationQueries {
     },
 
     // ---------------------------------------------------------------
+    // q78: corpus unigram-LM scoring — the "perplexity filter" of a
+    // training-data pipeline, with the corpus itself as the LM: global
+    // token frequencies, p(tok) = cnt/total, and each document scored by
+    // its mean log-probability (low = rare-token-heavy / atypical docs).
+    //
+    // Shape at 100 TB: the LM is one partial-aggregated groupBy(tok) —
+    // vocabulary-sized output, broadcast back onto the token stream, so
+    // the corpus is never shuffled to score it. Determinism: cnt/total is
+    // one integer→double division, each term is quantized by [[termLogp]]
+    // and the per-doc reduction is the [[sumLogp]] fold.
+    // ---------------------------------------------------------------
     "q78_unigram_lm" -> { (s, dir) =>
       val docs = Tables(s, dir).documents
       val tok = docs.select(
@@ -1135,18 +1127,7 @@ object CurationQueries {
         .join(broadcast(vocab), "tok")
         .crossJoin(broadcast(total))
         .select(col("doc_id"), col("pos"),
-                // quantize each ln() term before the fold: JVM Math.log
-                // and DuckDB's libm disagree by 1 ulp on some arguments
-                // (bit q102 on ~3% of its bigrams; this argument set
-                // happens to agree today, but that's data luck, not a
-                // guarantee)
-                (floor(log(col("cnt").cast(DoubleType) /
-                    col("total").cast(DoubleType)) * 1e9 + 0.5) / 1e9)
-                  .as("logp"))
-      val sumLogp = aggregate(
-        transform(array_sort(collect_list(struct(col("pos"), col("logp")))),
-                  x => x.getField("logp")),
-        lit(0.0), (acc, x) => acc + x)
+                termLogp(col("cnt").cast(DoubleType) / col("total").cast(DoubleType)))
       scored.groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_tokens"), sumLogp.as("sum_logprob"))
         .select(col("doc_id"), col("n_tokens"), col("sum_logprob"),
@@ -1372,49 +1353,14 @@ object CurationQueries {
     // ---------------------------------------------------------------
     // q157: EXACT quota sampling — q86/q96 keep each doc independently
     // (expected counts only); when a mixture spec demands exact counts
-    // ("exactly 200 docs, proportional to corpus shares"), the quotas
-    // come from largest-remainder apportionment (Hamilton's method, all
-    // INTEGER arithmetic: base = ⌊B·n_l/N⌋, residual seats to the
-    // largest remainders B·n_l − base·N, ties by language asc) and the
-    // per-stratum pick is the q68 bounded-heap TopKPairs on an
-    // md5-derived key — exact counts, no rand(), no per-stratum sort,
-    // no window over the corpus. The ≤|langs|-row quota table is ranked
-    // via the bounded collect_list collapse (the q142 rule) and joins
-    // back by broadcast.
+    // ("exactly 200 docs, proportional to corpus shares"), the per-
+    // language quotas are largest-remainder apportioned and picked by
+    // md5 rank: [[graft.operators.Sampling.quotaSample]] owns the
+    // apportionment, its tie order and the pick.
     // ---------------------------------------------------------------
     "q157_quota_sample" -> { (s, dir) =>
-      val d = Tables(s, dir).documents
-      val counts = d.groupBy(col("lang")).agg(count(lit(1)).as("n_l"))
-      val tot = counts.agg(sum(col("n_l")).as("nn"))
-      val q = graft.core.Materialize.cutLocal(counts.crossJoin(broadcast(tot))
-        .select(col("lang"), col("n_l"),
-                expr(s"($QuotaB * n_l) DIV nn").as("base_l"),
-                (lit(QuotaB.toLong) * col("n_l") -
-                  expr(s"($QuotaB * n_l) DIV nn") * col("nn")).as("rem"))) // ≤|langs| rows, consumed twice below
-      val sumBase = q.agg(sum(col("base_l")).as("sum_base"))
-      val ranked = q
-        .agg(sort_array(collect_list(struct((-col("rem")).as("negrem"),
-               col("lang").as("lang"), col("base_l").as("base_l")))).as("xs"))
-        .select(posexplode(col("xs")).as(Seq("pos", "x")))
-        .select(col("x.lang").as("lang"), col("x.base_l").as("base_l"),
-                (col("pos") + 1).cast(LongType).as("seat_rank"))
-      val tgt = ranked.crossJoin(broadcast(sumBase))
-        .select(col("lang"),
-                (col("base_l") +
-                  when(col("seat_rank") <= lit(QuotaB.toLong) - col("sum_base"),
-                       lit(1L)).otherwise(lit(0L))).as("target_n"))
-      val key = md5(concat(lit("quota|"), col("doc_id").cast(StringType)))
-      d.select(col("doc_id"), col("lang"), key.as("sample_key"))
-        .groupBy(col("lang"))
-        .agg(org.apache.spark.sql.graftx.TopKPairs
-          .topK(col("sample_key"), col("doc_id"), QuotaB).as("top"))
-        .select(col("lang"), posexplode(col("top")))
-        .select(col("lang"), col("col.id").as("doc_id"),
-                (col("pos") + 1).cast(LongType).as("strat_rank"))
-        .join(broadcast(tgt), Seq("lang"))
-        .filter(col("strat_rank") <= col("target_n"))
-        .select(col("lang"), col("doc_id"), col("strat_rank"),
-                col("target_n").cast(LongType).as("target_n"))
+      graft.operators.Sampling.quotaSample(
+        Tables(s, dir).documents, "lang", "doc_id", QuotaB, "quota|")
     },
 
     // ---------------------------------------------------------------
@@ -1929,27 +1875,7 @@ object CurationQueries {
           col("n_out").cast(DoubleType) / col("n_in").cast(DoubleType))
     },
 
-    "q182_curation_waterfall" -> { (s, dir) =>
-      val c = waterfallFlags(s, dir).agg(
-        count(lit(1)).as("c0"),
-        sum(when(col("s1"), 1L).otherwise(0L)).as("c1"),
-        sum(when(col("s2"), 1L).otherwise(0L)).as("c2"),
-        sum(when(col("s3"), 1L).otherwise(0L)).as("c3"),
-        sum(when(col("s4"), 1L).otherwise(0L)).as("c4"),
-        sum(when(col("s5"), 1L).otherwise(0L)).as("c5"))
-      val stages = Seq((1L, "eval_holdout", "c0", "c1"),
-                       (2L, "min_length", "c1", "c2"),
-                       (3L, "quality", "c2", "c3"),
-                       (4L, "exact_dedup", "c3", "c4"),
-                       (5L, "decontamination", "c4", "c5"))
-      c.select(explode(array(stages.map { case (i, name, in, out) =>
-          struct(lit(i).as("stage_idx"), lit(name).as("stage"),
-                 col(in).as("n_in"), (col(in) - col(out)).as("n_dropped"),
-                 col(out).as("n_out"))
-        }: _*)).as("x"))
-        .select(col("x.stage_idx"), col("x.stage"), col("x.n_in"),
-                col("x.n_dropped"), col("x.n_out"))
-    },
+    "q182_curation_waterfall" -> { (s, dir) => stageWaterfall(waterfallFlags(s, dir)) },
 
     // ---------------------------------------------------------------
     // q186: q182's waterfall GROUPED BY SOURCE — the per-provenance
@@ -1958,25 +1884,7 @@ object CurationQueries {
     // one grouped aggregation, stages unpivoted per source.
     // ---------------------------------------------------------------
     "q186_waterfall_by_source" -> { (s, dir) =>
-      val c = waterfallFlags(s, dir).groupBy(col("source")).agg(
-        count(lit(1)).as("c0"),
-        sum(when(col("s1"), 1L).otherwise(0L)).as("c1"),
-        sum(when(col("s2"), 1L).otherwise(0L)).as("c2"),
-        sum(when(col("s3"), 1L).otherwise(0L)).as("c3"),
-        sum(when(col("s4"), 1L).otherwise(0L)).as("c4"),
-        sum(when(col("s5"), 1L).otherwise(0L)).as("c5"))
-      val stages = Seq((1L, "eval_holdout", "c0", "c1"),
-                       (2L, "min_length", "c1", "c2"),
-                       (3L, "quality", "c2", "c3"),
-                       (4L, "exact_dedup", "c3", "c4"),
-                       (5L, "decontamination", "c4", "c5"))
-      c.select(col("source"), explode(array(stages.map { case (i, name, in, out) =>
-          struct(lit(i).as("stage_idx"), lit(name).as("stage"),
-                 col(in).as("n_in"), (col(in) - col(out)).as("n_dropped"),
-                 col(out).as("n_out"))
-        }: _*)).as("x"))
-        .select(col("source"), col("x.stage_idx"), col("x.stage"),
-                col("x.n_in"), col("x.n_dropped"), col("x.n_out"))
+      stageWaterfall(waterfallFlags(s, dir), "source")
     },
 
     // ---------------------------------------------------------------
@@ -2426,9 +2334,6 @@ object CurationQueries {
        |f4 AS (SELECT *, s3 AND doc_id = min_id AS s4 FROM f3),
        |f5 AS (SELECT *, s4 AND NOT contam AS s5 FROM f4)""".stripMargin
 
-  /** The q168 oracle body — shared by q168 and (as a derived table)
-    * the q190 training-order manifest.
-    */
   /** The q190 manifest oracle, parameterized by epoch count — shared by
     * q190 (1 epoch) and q203's spacing audit (3 epochs) so both gates
     * pin the same key derivation (the q168OracleSql discipline).
@@ -2531,6 +2436,9 @@ object CurationQueries {
        |  2 * sum(CASE WHEN kept THEN 1 ELSE 0 END) < count(*) AS is_dropped
        |FROM flagged GROUP BY doc_id""".stripMargin
 
+  /** The q168 oracle body — shared by q168 and (as a derived table)
+    * the q190 training-order manifest.
+    */
   private lazy val q168OracleSql: String = {
       val bucket = s"(${graft.functions.HexKeys.value16Sql()})"
       s"""WITH t AS (
@@ -2562,9 +2470,6 @@ object CurationQueries {
          |FROM t JOIN tgt USING (lang) JOIN h USING (doc_id)""".stripMargin
     }
 
-  /** The q77 oracle body — shared verbatim by q77 and (as a derived
-    * table) the q182 waterfall.
-    */
   /** The q83 bloom-screen oracle — a val so q238's report can use
     * it as a derived table (the q168OracleSql discipline).
     */
@@ -2612,6 +2517,9 @@ object CurationQueries {
          |WHERE t.doc_id % 10 <> 0""".stripMargin
   }
 
+  /** The q77 oracle body — shared verbatim by q77 and (as a derived
+    * table) the q182 waterfall.
+    */
   private val deconOracleSql: String =
     """WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
       |bench AS (
@@ -2693,15 +2601,12 @@ object CurationQueries {
         |           1.0) AS perplexity
         |FROM t LEFT JOIN agg USING (doc_id)""".stripMargin
 
-  /** q161/q196's shared oracle chain ([[curationV2]] mirrored in SQL);
-    * `capped` inserts q195's per-source cap CTE and restricts which docs
-    * are eligible for the top-100 selection — exactly where the Spark def
-    * applies `restrict`.
-    */
-  /** The q161/q196/q209 oracle, parameterized by an ELIGIBILITY
-    * restriction: `restrictCte` contributes a `doc_id`-valued CTE (with
-    * trailing ",\n"), `restrictJoin` the matching join line — "" / "" is
-    * the unrestricted q161.
+  /** The q161/q196/q209 oracle chain ([[curationV2]] mirrored in SQL),
+    * parameterized by an ELIGIBILITY restriction: `restrictCte`
+    * contributes a `doc_id`-valued CTE (with trailing ",\n"),
+    * `restrictJoin` the matching join line, restricting which docs are
+    * eligible for the top-100 selection exactly where the Spark def
+    * applies `restrict`; "" / "" is the unrestricted q161.
     */
   private def curationV2OracleSql(restrictCte: String,
                                   restrictJoin: String): String = {

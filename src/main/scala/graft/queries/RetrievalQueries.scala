@@ -412,20 +412,9 @@ object RetrievalQueries {
     },
 
     "q131_classifier_eval" -> { (s, dir) =>
-      val cells = graft.core.Materialize.cutLocal(defs("q129_quality_classifier")(s, dir)
-        .filter(!col("in_train"))
-        .groupBy(col("label"), col("predicted"))
-        .agg(count(lit(1)).as("n_docs"))) // ≤|labels|² rows, consumed by 3 margins below
-      val rt = cells.groupBy(col("label")).agg(sum(col("n_docs")).as("n_labeled"))
-      val ct = cells.groupBy(col("predicted")).agg(sum(col("n_docs")).as("n_predicted"))
-      cells.join(broadcast(rt), Seq("label"))
-        .join(broadcast(ct), Seq("predicted"))
-        .select(col("label"), col("predicted"), col("n_docs"),
-                col("n_labeled"), col("n_predicted"),
-                (col("n_docs").cast(DoubleType) / col("n_labeled").cast(DoubleType))
-                  .as("recall_component"),
-                (col("n_docs").cast(DoubleType) / col("n_predicted").cast(DoubleType))
-                  .as("precision_component"))
+      graft.operators.Classifier.confusion(
+        defs("q129_quality_classifier")(s, dir).filter(!col("in_train")),
+        "label", "predicted")
     },
 
     // ---------------------------------------------------------------
@@ -889,9 +878,6 @@ object RetrievalQueries {
          |LEFT JOIN dot USING (doc_id)
          |CROSS JOIN b""".stripMargin
 
-  /** The q88 BM25 oracle — a val so q142's fusion oracle composes it
-    * (the q127Oracle discipline).
-    */
   /** The q142 oracle body — shared verbatim by q142 and (as a derived
     * table) q250's overlap read.
     */
@@ -923,6 +909,9 @@ object RetrievalQueries {
        |ORDER BY rrf_score DESC, doc_id ASC
        |LIMIT 25""".stripMargin
 
+  /** The q88 BM25 oracle — a val so q142's fusion oracle composes it
+    * (the q127Oracle discipline).
+    */
   private lazy val q88Oracle: String = {
       val terms = BmTerms
       val tfSel = terms.zipWithIndex

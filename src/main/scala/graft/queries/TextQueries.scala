@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.core.{Artifact, Tables}
 import graft.functions.Text
-import graft.operators.{Bpe, Dedup}
+import graft.operators.{Bpe, Classifier, Dedup}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -335,25 +335,10 @@ object TextQueries {
     // per-cell recall/precision components — diagonal cells read as the
     // class recall/precision a pipeline tunes the heuristic against
     // before trusting it to route a 100 TB corpus. Scale shape: the scan
-    // collapses to ≤ L² cells via one partial+final agg; the cell frame
-    // is checkpointed (driver-small) so the row/column marginals don't
-    // re-scan the corpus, and they join back by broadcast.
+    // collapses to ≤ L² cells via one partial+final agg
+    // ([[graft.operators.Classifier.confusion]]).
     "q120_langid_eval" -> { (s, dir) =>
-      val cells = graft.core.Materialize.cutLocal(defs("q32_langid")(s, dir)
-        .groupBy(col("labeled_lang"), col("predicted_lang"))
-        .agg(count(lit(1)).as("n_docs"))) // ≤|langs|² rows, consumed by 3 margins below
-      val rt = cells.groupBy(col("labeled_lang"))
-        .agg(sum(col("n_docs")).as("n_labeled"))
-      val ct = cells.groupBy(col("predicted_lang"))
-        .agg(sum(col("n_docs")).as("n_predicted"))
-      cells.join(broadcast(rt), Seq("labeled_lang"))
-        .join(broadcast(ct), Seq("predicted_lang"))
-        .select(col("labeled_lang"), col("predicted_lang"), col("n_docs"),
-                col("n_labeled"), col("n_predicted"),
-                (col("n_docs").cast(DoubleType) / col("n_labeled").cast(DoubleType))
-                  .as("recall_component"),
-                (col("n_docs").cast(DoubleType) / col("n_predicted").cast(DoubleType))
-                  .as("precision_component"))
+      Classifier.confusion(defs("q32_langid")(s, dir), "labeled_lang", "predicted_lang")
     },
 
     // q150: WITHIN-document language mixing — q32 classifies whole
@@ -2753,32 +2738,12 @@ object TextQueries {
     // to one canonical), every media id labeled with its cluster's min
     // id, cluster size, and canonical flag.
     //
-    // QUOTIENT-GRAPH discipline: byte-identical re-encodes (Hamming 0)
-    // dominate real image corpora, so ids are first collapsed to one
-    // REPRESENTATIVE per exact dHash (rep = min id of the hash group —
-    // one agg over the memoized hash frame), the pair set maps through
-    // id→rep (two equi-joins) and dedupes, and connectedComponents runs
-    // on the REP graph — edges ∝ distinct-hash pairs, not id pairs
-    // (sf0.1: 1.57M id edges → ~2k rep edges). The result is provably
-    // identical: rep ≤ every id it covers and hash determines distance,
-    // so min-rep per component = min-id per component and components
-    // map back 1:1. Labels rejoin by rep; the per-cluster window is
-    // bounded by cluster size.
+    // Byte-identical re-encodes (Hamming 0) dominate real image corpora,
+    // so the components run on the exact-dHash quotient graph
+    // ([[graft.operators.Dedup.hashQuotientClusters]]; sf0.1: 1.57M id
+    // edges → ~2k rep edges).
     "q132_image_dup_clusters" -> { (s, dir) =>
-      val h = dhashes(s, dir)
-      val reps = h.groupBy(col("dhash")).agg(min(col("media_id")).as("rep"))
-      val idRep = h.join(reps, Seq("dhash")).select(col("media_id"), col("rep"))
-      val pairs = defs("q127_image_neardup")(s, dir)
-      val repEdges = pairs
-        .join(idRep.select(col("media_id").as("id_a"), col("rep").as("rep_a")), Seq("id_a"))
-        .join(idRep.select(col("media_id").as("id_b"), col("rep").as("rep_b")), Seq("id_b"))
-        .filter(col("rep_a") =!= col("rep_b"))
-        .select(col("rep_a"), col("rep_b")).distinct()
-      val comp = graft.operators.Dedup.connectedComponents(
-        idRep.select(col("rep").as("id")).distinct(), repEdges, "rep_a", "rep_b")
-      Dedup.withClusterSize(
-        idRep.join(comp.select(col("id").as("rep"), col("cluster_id")), Seq("rep"))
-          .select(col("media_id"), col("cluster_id")), "media_id")
+      Dedup.hashQuotientClusters(dhashes(s, dir), "dhash", defs("q127_image_neardup")(s, dir))
     },
 
     // KMV distinct-count sketch: per-language distinct-token cardinality
@@ -2957,20 +2922,7 @@ object TextQueries {
     // at fixture density, so CC iterates over the quotient graph, not
     // the id graph — provably the same clusters).
     "q137_audio_dup_clusters" -> { (s, dir) =>
-      val h = audioFps(s, dir)
-      val reps = h.groupBy(col("afp")).agg(min(col("media_id")).as("rep"))
-      val idRep = h.join(reps, Seq("afp")).select(col("media_id"), col("rep"))
-      val pairs = audioPairs(s, dir)
-      val repEdges = pairs
-        .join(idRep.select(col("media_id").as("id_a"), col("rep").as("rep_a")), Seq("id_a"))
-        .join(idRep.select(col("media_id").as("id_b"), col("rep").as("rep_b")), Seq("id_b"))
-        .filter(col("rep_a") =!= col("rep_b"))
-        .select(col("rep_a"), col("rep_b")).distinct()
-      val comp = graft.operators.Dedup.connectedComponents(
-        idRep.select(col("rep").as("id")).distinct(), repEdges, "rep_a", "rep_b")
-      Dedup.withClusterSize(
-        idRep.join(comp.select(col("id").as("rep"), col("cluster_id")), Seq("rep"))
-          .select(col("media_id"), col("cluster_id")), "media_id")
+      Dedup.hashQuotientClusters(audioFps(s, dir), "afp", audioPairs(s, dir))
     },
 
     // Perceptual VIDEO near-dup — the sequence modality q127 (stills)
@@ -3042,11 +2994,6 @@ object TextQueries {
                .as("k_avg"))
     })
 
-  /** The shared q36/q145/q152 CTE chain: shingles → md5 word pair →
-    * K–M signatures → bands → candidate pairs. Parameterized by
-    * (numHashes, rowsPerBand) so q199 can replay the chain at the
-    * PLANNER-chosen banding; q36/q145/q152 keep the 8/2 default.
-    */
   /** The q35 oracle body — exact trigram-Jaccard pairs at threshold 0.5,
     * shared verbatim by q35 and (as the truth derived table) q244.
     */
@@ -3067,6 +3014,11 @@ object TextQueries {
       |FROM pairs
       |WHERE CAST(shared AS DOUBLE) / CAST(size_a + size_b - shared AS DOUBLE) >= 0.5""".stripMargin
 
+  /** The shared q36/q145/q152 CTE chain: shingles → md5 word pair →
+    * K–M signatures → bands → candidate pairs. Parameterized by
+    * (numHashes, rowsPerBand) so q199 can replay the chain at the
+    * PLANNER-chosen banding; q36/q145/q152 keep the 8/2 default.
+    */
   private def minhashCtesSql: String = minhashCtesSql(8, 2)
   private def minhashCtesSql(numHashes: Int, rowsPerBand: Int): String = {
       require(numHashes % rowsPerBand == 0, "bands must tile the signature")
@@ -3385,19 +3337,23 @@ object TextQueries {
     */
   private val dhashCache = new Artifact[DataFrame]("dhash_frame")
   private def dhashes(s: SparkSession, dir: String): DataFrame =
-    dhashCache.cut(s, dir) {
-      import s.implicits._
-      val idsDf = Tables(s, dir).documents.select(col("doc_id"))
-      // the map below multiplies work per row (PNG encode + imageio
-      // decode, ~ms/row), so the id rows are spread first
-      val ids = Tables.spread(idsDf).as[Long]
-      ids.map { id =>
-        val h = graft.operators.Multimodal.dHash64(
-          graft.operators.Multimodal.syntheticPatternPng(id))
-          .getOrElse(sys.error(s"undecodable synthetic PNG for id $id"))
-        (id, h)
-      }.toDF("media_id", "dhash")
-    }
+    dhashCache.cut(s, dir)(mediaHashes(s, dir, "dhash", "PNG") { id =>
+      graft.operators.Multimodal.dHash64(graft.operators.Multimodal.syntheticPatternPng(id))
+    })
+
+  /** (media_id, `hashCol`): every document id's synthetic media item
+    * decoded and hashed to 64 bits by `hash`, failing loudly on an item
+    * that does not decode (`kind` names it). The map multiplies work per
+    * row (encode + decode, ~ms/row), so the id rows are spread first.
+    */
+  private def mediaHashes(s: SparkSession, dir: String, hashCol: String, kind: String)(
+      hash: Long => Option[Long]): DataFrame = {
+    import s.implicits._
+    val ids = Tables.spread(Tables(s, dir).documents.select(col("doc_id"))).as[Long]
+    ids.map { id =>
+      (id, hash(id).getOrElse(sys.error(s"undecodable synthetic $kind for id $id")))
+    }.toDF("media_id", hashCol)
+  }
 
   /** The q127 dHash pair miner, mined once per (session, dir) — the
     * jaccard05 memo discipline: q127 itself and q132's cluster
@@ -3452,16 +3408,9 @@ object TextQueries {
     */
   private val afpCache = new Artifact[DataFrame]("afp_frame")
   private def audioFps(s: SparkSession, dir: String): DataFrame =
-    afpCache.cut(s, dir) {
-      import s.implicits._
-      val ids = Tables.spread(Tables(s, dir).documents.select(col("doc_id"))).as[Long]
-      ids.map { id =>
-        val h = graft.operators.Multimodal.audioFingerprint64(
-          graft.operators.Multimodal.syntheticToneWav(id))
-          .getOrElse(sys.error(s"undecodable synthetic WAV for id $id"))
-        (id, h)
-      }.toDF("media_id", "afp")
-    }
+    afpCache.cut(s, dir)(mediaHashes(s, dir, "afp", "WAV") { id =>
+      graft.operators.Multimodal.audioFingerprint64(graft.operators.Multimodal.syntheticToneWav(id))
+    })
 
   /** The q135 audio-fingerprint pair miner, mined once per (session, dir)
     * — the [[dhashPairs]] memo discipline (same CLUSTER CAVEAT as
@@ -3621,10 +3570,6 @@ object TextQueries {
               (col("jaccard") >= 0.5).as("is_near_dup"))
   }
 
-  /** The q145 persisted band index: bands of the BASE half (even
-    * doc_ids), materialized once per (session, dir) as a
-    * band_hash-bucketed warehouse table (q139's memo discipline).
-    */
   /** The persisted-LSH-index mart contract (q139's discipline applied to
     * q145): band frame schema exactly, all columns non-null, and one row
     * per (doc_id, band_idx) — a duplicated band row would double-emit
@@ -3641,6 +3586,10 @@ object TextQueries {
     notNull = Seq("doc_id", "band_idx", "band_hash"),
     uniqueKeys = Seq(Seq("doc_id", "band_idx")))
 
+  /** The q145 persisted band index: bands of the BASE half (even
+    * doc_ids), materialized once per (session, dir) as a
+    * band_hash-bucketed warehouse table (q139's memo discipline).
+    */
   private val lshIdxCache = new Artifact[DataFrame]("q145_lsh_index")
   private def lshIndex(s: SparkSession, dir: String): DataFrame =
     lshIdxCache.table(s, dir, Some(LshIndexContract))(
@@ -4084,14 +4033,6 @@ object TextQueries {
        |FROM terms GROUP BY doc_id""".stripMargin
   }
 
-  /** The q127 dHash pair oracle — shared by q132's cluster oracle. */
-  /** The q67 cluster oracle — a val so q143's best-copy resolution can
-    * compose it (the q127Oracle discipline).
-    */
-  /** The duplicate-edge CTE chain (trigram Jaccard ≥ 0.5 pairs + exact
-    * md5 pairs, both a&lt;b-oriented) shared by the q67/q149/q154 cluster
-    * oracle and q155's cross-source matrix.
-    */
   /** CDC chunk CTEs over `src` (doc_id, text): boundary positions from
     * [[org.apache.spark.sql.graftx.CdcChunkArray.boundaryHashSql]]'s
     * k-term polynomial (ONE builder for both engines — the ZOrder
@@ -4140,6 +4081,10 @@ object TextQueries {
        |  FROM ${pfx}ch)""".stripMargin
   }
 
+  /** The duplicate-edge CTE chain (trigram Jaccard ≥ 0.5 pairs + exact
+    * md5 pairs, both a&lt;b-oriented) shared by the q67/q149/q154 cluster
+    * oracle and q155's cross-source matrix.
+    */
   private[queries] lazy val dupEdgeCtesSql: String =
     """sh AS (
       |  SELECT doc_id,
@@ -4232,6 +4177,9 @@ object TextQueries {
        |FROM k
        |WHERE n_rest > 0""".stripMargin
 
+  /** The q67 cluster oracle — a val so q143's best-copy resolution can
+    * compose it (the q127Oracle discipline).
+    */
   private lazy val q67Oracle: String =
     s"""WITH RECURSIVE
       |$dupEdgeCtesSql,
@@ -4297,6 +4245,7 @@ object TextQueries {
       |  FROM h a JOIN h b ON a.doc_id < b.doc_id)
       |WHERE hamming <= 7""".stripMargin
 
+  /** The q127 dHash pair oracle — shared by q132's cluster oracle. */
   private lazy val q127Oracle: String =
       """WITH ids AS (
         |  SELECT doc_id, CAST(doc_id % 16 AS BIGINT) AS f, doc_id // 16 AS v

@@ -436,45 +436,13 @@ object VectorQueries {
     // q184: cluster-balanced CORESET sampling — the embedding-space
     // dual of q157's language quotas (the "semantic diversity" sampler
     // real pipelines run before expensive annotation/training): q97's
-    // kmeans partitions the corpus, exact largest-remainder
-    // apportionment turns cluster sizes into a 100-vector budget, and
-    // each cluster's picks are the md5-ranked TopKPairs heap — exact
-    // counts, no rand(), no per-cluster sort, no corpus window.
+    // kmeans partitions the corpus and
+    // [[graft.operators.Sampling.quotaSample]] apportions a 100-vector
+    // budget over the clusters and picks each cluster's md5-ranked rows.
     "q184_coreset_sample" -> { (s, dir) =>
-      val B = 100L
-      val asg = kmeans8(s, dir).select(col("vec_id"), col("cluster_id"))
-      val counts = asg.groupBy(col("cluster_id")).agg(count(lit(1)).as("n_c"))
-      val tot = counts.agg(sum(col("n_c")).as("nn"))
-      val q = graft.core.Materialize.cutLocal(counts.crossJoin(broadcast(tot))
-        .select(col("cluster_id"), col("n_c"),
-                expr(s"($B * n_c) DIV nn").as("base_c"),
-                (lit(B) * col("n_c") -
-                  expr(s"($B * n_c) DIV nn") * col("nn")).as("rem"))) // ≤k rows, consumed twice below
-      val sumBase = q.agg(sum(col("base_c")).as("sum_base"))
-      val ranked = q
-        .agg(sort_array(collect_list(struct((-col("rem")).as("negrem"),
-               col("cluster_id").as("cluster_id"),
-               col("base_c").as("base_c")))).as("xs"))
-        .select(posexplode(col("xs")).as(Seq("pos", "x")))
-        .select(col("x.cluster_id").as("cluster_id"), col("x.base_c").as("base_c"),
-                (col("pos") + 1).cast("long").as("seat_rank"))
-      val tgt = ranked.crossJoin(broadcast(sumBase))
-        .select(col("cluster_id"),
-                (col("base_c") +
-                  when(col("seat_rank") <= lit(B) - col("sum_base"), 1L)
-                    .otherwise(0L)).as("target_n"))
-      val key = md5(concat(lit("coreset|"), col("vec_id").cast("string")))
-      asg.select(col("vec_id"), col("cluster_id"), key.as("sample_key"))
-        .groupBy(col("cluster_id"))
-        .agg(org.apache.spark.sql.graftx.TopKPairs
-          .topK(col("sample_key"), col("vec_id"), B.toInt).as("top"))
-        .select(col("cluster_id"), posexplode(col("top")))
-        .select(col("cluster_id"), col("col.id").as("vec_id"),
-                (col("pos") + 1).cast("long").as("strat_rank"))
-        .join(broadcast(tgt), Seq("cluster_id"))
-        .filter(col("strat_rank") <= col("target_n"))
-        .select(col("cluster_id"), col("vec_id"), col("strat_rank"),
-                col("target_n").cast("long").as("target_n"))
+      graft.operators.Sampling.quotaSample(
+        kmeans8(s, dir).select(col("vec_id"), col("cluster_id")),
+        "cluster_id", "vec_id", 100, "coreset|")
     },
 
     // q180: the PQ quality gate (q116's recall discipline applied to the
@@ -694,17 +662,9 @@ object VectorQueries {
       // runs vec_id < 20, q64's IVF runs vec_id < 50 — the join keys on
       // the exact side, so recall is reported for its 20 queries
       val exact = q37Truth(s, dir) // the identical 20-query k=3 truth
-      val approx = Similarity.annTopKIvf(
+      recallAt3(exact, Similarity.annTopKIvf(
           e.filter(col("vec_id") < 50), e, "vec_id", "embedding",
-          k = 3, nlist = 16, nprobe = 4)
-        .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-      exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-        .groupBy(col("query_id"))
-        .agg(count(lit(1)).as("n_exact"),
-             sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
-        .select(col("query_id"), col("n_exact"), col("n_hit"),
-                (col("n_hit").cast("double") / col("n_exact").cast("double"))
-                  .as("recall_at_3"))
+          k = 3, nlist = 16, nprobe = 4))
     },
 
     // -----------------------------------------------------------------
@@ -1312,15 +1272,7 @@ object VectorQueries {
     // -----------------------------------------------------------------
     "q268_graph_ann_beam" -> { (s, dir) =>
       val found = beamServeTopK(s, dir, BeamWidth, 3)
-      val exact = q37Truth(s, dir)
-      exact.join(found.withColumn("hit", lit(1L)),
-                 Seq("query_id", "neighbor_id"), "left")
-        .groupBy(col("query_id"))
-        .agg(count(lit(1)).as("n_exact"),
-             coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
-        .select(col("query_id"), col("n_exact"), col("n_hit"),
-                (col("n_hit").cast(DoubleType) / col("n_exact"))
-                  .as("recall_at_3"))
+      recallAt3(q37Truth(s, dir), found)
     },
 
     // -----------------------------------------------------------------
@@ -1398,15 +1350,7 @@ object VectorQueries {
         nndCorpus(s, dir),
                            queryFrame(n, col("vec_id") < 20),
                            entryFrame(n), BeamWidth, 3)
-      val exact = q37Truth(s, dir)
-      exact.join(found.withColumn("hit", lit(1L)),
-                 Seq("query_id", "neighbor_id"), "left")
-        .groupBy(col("query_id"))
-        .agg(count(lit(1)).as("n_exact"),
-             coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
-        .select(col("query_id"), col("n_exact"), col("n_hit"),
-                (col("n_hit").cast(DoubleType) / col("n_exact"))
-                  .as("recall_at_3"))
+      recallAt3(q37Truth(s, dir), found)
     })
 
   /** q268/q272 shared NN-descent machinery. [[nndCorpus]] is the
@@ -1431,6 +1375,21 @@ object VectorQueries {
   private def q37Truth(s: SparkSession, dir: String): DataFrame =
     q37TruthCache.cut(s, dir)(
       defs("q37_cosine_topk")(s, dir).select(col("query_id"), col("neighbor_id")))
+
+  /** Recall@3 per query of `found` (query_id, neighbor_id) against the
+    * `exact` (query_id, neighbor_id) truth: n_exact truth rows, n_hit of
+    * them found, and their ratio. The join keys on the truth side, so a
+    * query is reported iff it has truth rows.
+    */
+  private def recallAt3(exact: DataFrame, found: DataFrame): DataFrame =
+    exact.join(found.select(col("query_id"), col("neighbor_id"), lit(1L).as("hit")),
+               Seq("query_id", "neighbor_id"), "left")
+      .groupBy(col("query_id"))
+      .agg(count(lit(1)).as("n_exact"),
+           coalesce(sum(col("hit")), lit(0L)).as("n_hit"))
+      .select(col("query_id"), col("n_exact"), col("n_hit"),
+              (col("n_hit").cast(DoubleType) / col("n_exact"))
+                .as("recall_at_3"))
 
   /** Symmetrized (both directions, distinct) view of an NN-descent edge
     * frame, materialized ONCE per (session, key). Every beam round
@@ -1824,11 +1783,6 @@ object VectorQueries {
              queryFrame(n, col("vec_id") < 20), entryFrame(n), width, k)
   }
 
-  /** ANN with determinism-hardened bucketing: vectors are quantized to
-    * integers (floor(x·1000)) before the ±1 hyperplane dot, so the bucket
-    * bit is a comparison on an exact integer sum — immune to float fold
-    * order. Exact cosine then runs on the candidate set only.
-    */
   /** The q118 kNN-graph builder (label-blocked top-3 by quantized cosine,
     * bounded-heap TopKPairs — never a per-vector window over the pair
     * stream); shared with q125's Adamic–Adar scoring.
@@ -1899,6 +1853,11 @@ object VectorQueries {
     (0 until NumPlanes).map(i => sigs.getItem(i).cast("string"))
   }
 
+  /** ANN with determinism-hardened bucketing: vectors are quantized to
+    * integers (floor(x·1000)) before the ±1 hyperplane dot, so the bucket
+    * bit is a comparison on an exact integer sum — immune to float fold
+    * order. Exact cosine then runs on the candidate set only.
+    */
   private def annTopKQuantized(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     import graft.functions.Vectors._
     def bucket(vec: org.apache.spark.sql.Column) = concat(quantSigBits(vec): _*)
@@ -1992,14 +1951,6 @@ object VectorQueries {
       (0 until NumPlanes).combinations(h).size).sum
   }
 
-  /** The unrolled 2-iteration Lloyd CTE chain shared by the q97 and q98
-    * oracles: seeds → (assign, update) ×2 → final assignment `af`
-    * (pick rows with rn = 1). One assign = cross join against the
-    * k-row centroid CTE with d² = x·x − 2·x·c + c·c (sequential
-    * list_dot_product folds, ties to the smaller cid); one update = the
-    * q45 DECIMAL(18,7) exact per-(cluster, dim) means, empty clusters
-    * keeping their previous centroid via the LEFT JOIN coalesce.
-    */
   /** q177/q178 PQ parameters — shared by the defs and the oracle CTEs. */
   val PqM = 4
   val PqSubDim = 16
@@ -2164,10 +2115,6 @@ object VectorQueries {
       enc
     }
 
-  /** The q177/q178 oracle head: per-subspace kmeans replays (the q97 CTE
-    * shape sliced to 16 dims, per-subspace seed prefixes) joined into a
-    * `codes` table (vec_id, code_0..3, d2_0..3).
-    */
   /** One PQ kmeans-replay chain over source CTE `src` (must expose
     * (vec_id, v)): per-subspace seeds/iterations/assignment, CTE names
     * suffixed `$sfx` so two chains (raw + residual) can coexist in one
@@ -2232,6 +2179,10 @@ object VectorQueries {
        |       JOIN best_${sfx}2 b2 USING (vec_id) JOIN best_${sfx}3 b3 USING (vec_id))""".stripMargin
   }
 
+  /** The q177/q178 oracle head: per-subspace kmeans replays (the q97 CTE
+    * shape sliced to 16 dims, per-subspace seed prefixes) joined into a
+    * `codes` table (vec_id, code_0..3, d2_0..3).
+    */
   private def pqOracleCtes: String =
     s"""n AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
        |${pqChainCtes("n", "pq", "", "codes")}""".stripMargin
@@ -2280,6 +2231,14 @@ object VectorQueries {
       |      FROM sc)
       |WHERE rank <= 3""".stripMargin
 
+  /** The unrolled 2-iteration Lloyd CTE chain shared by the q97 and q98
+    * oracles: seeds → (assign, update) ×2 → final assignment `af`
+    * (pick rows with rn = 1). One assign = cross join against the
+    * k-row centroid CTE with d² = x·x − 2·x·c + c·c (sequential
+    * list_dot_product folds, ties to the smaller cid); one update = the
+    * q45 DECIMAL(18,7) exact per-(cluster, dim) means, empty clusters
+    * keeping their previous centroid via the LEFT JOIN coalesce.
+    */
   private def kmeansOracleCtes: String = {
     def dist(vec: String, cen: String) =
       s"list_dot_product($vec, $vec) - 2 * list_dot_product($vec, $cen)" +
@@ -3158,10 +3117,6 @@ object VectorQueries {
        |FROM embeddings e""".stripMargin
   }
 
-  /** q116's oracle wraps the q37 and q64 oracles as derived tables (both
-    * are self-contained SELECTs; DuckDB allows a nested WITH inside a
-    * parenthesized subquery) and compares their neighbor sets.
-    */
   /** q153's per-truncation exact top-3 — the q37 oracle with vectors
     * sliced to their first `d` components (slice-then-cast ≡
     * cast-then-slice, and prefix dot products fold identically).
@@ -3230,12 +3185,6 @@ object VectorQueries {
        |       t.label = p.predicted_label AS is_correct
        |FROM pred p JOIN lab t ON p.query_id = t.vec_id""".stripMargin
 
-  /** The q268/q272 shared graph-build CTE chain: normalized vectors
-    * (`vn` — NOT `n`, see the shadowing note on the q268 entry),
-    * md5-random constant-size block init, NN-descent rounds, the
-    * symmetrized edge set, the query batch, and the per-label entry
-    * beam seed `b0`.
-    */
   /** The normalized-vectors CTE `vn` (NOT `n` — see the shadowing note
     * on the q268 entry).
     */
@@ -3292,8 +3241,11 @@ object VectorQueries {
        |  UNION
        |  SELECT dst, src FROM g$NndRounds)""".stripMargin
 
-  /** q268/q272 shared chain: vectors, full-corpus build, query batch,
-    * per-label entries, beam seed.
+  /** The q268/q272 shared graph-build CTE chain: normalized vectors
+    * (`vn` — NOT `n`, see the shadowing note on the q268 entry),
+    * md5-random constant-size block init, NN-descent rounds, the
+    * symmetrized edge set, the query batch, and the per-label entry
+    * beam seed `b0`.
     */
   private def nndGraphCtesSql: String =
     s"""$nndVnCteSql,
@@ -3617,6 +3569,9 @@ object VectorQueries {
                s"WHEN $b THEN $n" }.mkString(" ")} END AS BIGINT) AS probes_per_query,
          |  (r.recall >= $MultiprobeTargetRecall) AS met_target
          |FROM r JOIN sel ON r.probe_bits = sel.probe_bits""".stripMargin) +
+    // q116's oracle wraps the q37 and q64 oracles as derived tables (both
+    // are self-contained SELECTs; DuckDB allows a nested WITH inside a
+    // parenthesized subquery) and compares their neighbor sets.
     ("q116_ann_recall" ->
       s"""SELECT e.query_id, count(*) AS n_exact,
          |  CAST(sum(CASE WHEN a.neighbor_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit,

@@ -6,27 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression,
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, LongType}
 
-/** Every banded sign-LSH signature of one vector in ONE expression.
-  *
-  * The composed form — `bands × planesPerBand` separate `DotProduct(q,
-  * array(lit...))` sub-expressions, each carrying its plane as `dims`
-  * literal nodes — builds a ~30k-node expression tree for the 36×12
-  * pre-blocker (432 plane dots × 64 literals): analysis/optimization of
-  * that tree dominated q278's wall at bench scale, and the projection
-  * blows past the whole-stage-codegen method limit. This expression
-  * keeps the plane matrix as ONE flattened `double[]` reference object
-  * and emits all band signatures in a single fused loop.
-  *
-  * Arithmetic is IDENTICAL to the composed form, term for term: plane
-  * `b·P + i`'s dot is a strict ascending-index fold over
-  * `min(|vec|, dims)` elements (graftx.DotProduct's loop), the sign test
-  * is `>= 0`, and bit `i` of band `b`'s signature is set on a
-  * non-negative dot. Inputs are the 1e3-quantized vectors of the q40/
-  * q216 determinism family — integer values in double slots, so every
-  * product and ≤64-term sum is exact (< 2^53) and the signature is
-  * fold-order-free; the DuckDB oracle replays it from SQL-side md5
-  * planes bit-for-bit.
-  */
 /** The plane matrix as a VALUE type with a digest identity: a bare
   * `Seq[Seq[Double]]` constructor arg made every TreeNode rendering of
   * the expression print all bands×planesPerBand×dims doubles (the
@@ -57,6 +36,27 @@ final class PlaneMatrix(val rows: Seq[Seq[Double]]) extends Serializable {
   override def toString: String = s"planes[${nPlanes}x$dims:$digest]"
 }
 
+/** Every banded sign-LSH signature of one vector in ONE expression.
+  *
+  * The composed form — `bands × planesPerBand` separate `DotProduct(q,
+  * array(lit...))` sub-expressions, each carrying its plane as `dims`
+  * literal nodes — builds a ~30k-node expression tree for the 36×12
+  * pre-blocker (432 plane dots × 64 literals): analysis/optimization of
+  * that tree dominated q278's wall at bench scale, and the projection
+  * blows past the whole-stage-codegen method limit. This expression
+  * keeps the plane matrix as ONE flattened `double[]` reference object
+  * and emits all band signatures in a single fused loop.
+  *
+  * Arithmetic is IDENTICAL to the composed form, term for term: plane
+  * `b·P + i`'s dot is a strict ascending-index fold over
+  * `min(|vec|, dims)` elements (graftx.DotProduct's loop), the sign test
+  * is `>= 0`, and bit `i` of band `b`'s signature is set on a
+  * non-negative dot. Inputs are the 1e3-quantized vectors of the q40/
+  * q216 determinism family — integer values in double slots, so every
+  * product and ≤64-term sum is exact (< 2^53) and the signature is
+  * fold-order-free; the DuckDB oracle replays it from SQL-side md5
+  * planes bit-for-bit.
+  */
 case class BandSigs(child: Expression, planes: PlaneMatrix,
                     planesPerBand: Int)
     extends UnaryExpression with ExpectsInputTypes {

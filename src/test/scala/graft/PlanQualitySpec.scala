@@ -1846,6 +1846,35 @@ class PlanQualitySpec extends SparkSpec {
     assert(splits.isEmpty, splits.mkString("word split outside Bpe.words:\n", "\n", ""))
   }
 
+  test("one quota apportionment and one LM fold in src/main") {
+    // the largest-remainder ranking is Sampling.quotaSample and the
+    // pos-ordered log-prob fold is CurationQueries.sumLogp
+    val negrem = codeLines("negrem".r)
+    assert(negrem.size == 1, negrem.mkString("remainder ranking outside Sampling.quotaSample:\n", "\n", ""))
+    val folds = codeLines(java.util.regex.Pattern.quote("""struct(col("pos"), col("logp"))""").r)
+    assert(folds.size == 1, folds.mkString("log-prob fold outside CurationQueries.sumLogp:\n", "\n", ""))
+  }
+
+  test("every scaladoc in src/main sits on a name: no /** block followed only by another") {
+    // the scaladoc tool attaches only the last of two stacked blocks, so
+    // the first documents nothing or the wrong name
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.size > 50, s"source tree not found from ${root.toAbsolutePath}")
+    val stacked = for {
+      f <- files
+      lines = java.nio.file.Files.readAllLines(f).asScala.map(_.trim).toIndexedSeq
+      (line, i) <- lines.zipWithIndex
+      if line.startsWith("/**")
+      end = lines.indexWhere(_.contains("*/"), i)
+      next = lines.indexWhere(_.nonEmpty, end + 1)
+      if end >= 0 && next >= 0 && lines(next).startsWith("/**")
+    } yield s"$f:${i + 1}"
+    assert(stacked.isEmpty, stacked.mkString("scaladoc followed only by another scaladoc:\n", "\n", ""))
+  }
+
   test("q48 and q82 keep their cut inputs as named artifacts, not session-long caches") {
     val s = spark.newSession()
     spark.catalog.clearCache()

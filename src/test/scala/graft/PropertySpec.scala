@@ -382,4 +382,41 @@ class PropertySpec extends SparkSpec {
     assert(m((0L, 0L)) == 0L && m((255L, 255L)) == 65535L &&
            m((1L, 0L)) == 1L && m((0L, 1L)) == 2L)
   }
+
+  private val quotaGen: Gen[(Seq[Long], Int)] = for {
+    k      <- Gen.choose(2, 6)
+    sizes  <- Gen.listOfN(k, Gen.oneOf(2L, 3L, 5L)) // repeated sizes tie remainders
+    budget <- Gen.choose(1, sizes.sum.toInt)
+  } yield (sizes, budget)
+
+  test("largest-remainder quotas: Σ target_n = B, base or base+1, ties to the lower stratum") {
+    var splitTies = 0
+    forSeeds(quotaGen, (1L to 8L)) { case (sizes, budget) =>
+      val strata = sizes.indices.map(i => s"s$i")
+      val pool = strata.zip(sizes).flatMap { case (st, n) => (0L until n).map(j => (st, j)) }
+        .zipWithIndex.map { case ((st, _), id) => (st, id.toLong) }.toDF("stratum", "id")
+      val rows = graft.operators.Sampling.quotaSample(pool, "stratum", "id", budget, "quota|")
+        .collect().map(r => (r.getString(0), r.getLong(3)))
+      val picked = rows.groupBy(_._1).map { case (st, rs) => st -> rs.length.toLong }
+      // a stratum with no row has target 0 (its rows all fail strat_rank <= 0)
+      val target = strata.map(st => st -> rows.find(_._1 == st).map(_._2).getOrElse(0L)).toMap
+      val total = sizes.sum
+      val base = strata.zip(sizes).map { case (st, n) => st -> budget * n / total }.toMap
+      val rem = strata.zip(sizes).map { case (st, n) => st -> (budget * n - base(st) * total) }.toMap
+      val case_ = s"sizes=$sizes budget=$budget target=$target"
+      assert(target.values.sum == budget, case_)
+      assert(strata.forall(st => picked.getOrElse(st, 0L) == target(st)), case_)
+      assert(strata.forall(st => target(st) == base(st) || target(st) == base(st) + 1), case_)
+      val seated = strata.filter(st => target(st) == base(st) + 1).toSet
+      for (a <- strata; b <- strata if a < b && rem(a) == rem(b) && seated(b)) {
+        assert(seated(a), s"$b took the residual seat its tied lower stratum $a lacks: $case_")
+      }
+      for (a <- strata; b <- strata if rem(a) > rem(b) && seated(b)) {
+        assert(seated(a), s"$b (remainder ${rem(b)}) seated over $a (${rem(a)}): $case_")
+      }
+      splitTies += (for (a <- strata; b <- strata
+                         if a < b && rem(a) == rem(b) && seated(a) && !seated(b)) yield 1).sum
+    }
+    assert(splitTies > 0, "no generated case split a remainder tie")
+  }
 }
