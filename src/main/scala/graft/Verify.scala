@@ -6,7 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional 3rd arg: comma-separated query names — local pre-flight on a
-    // subset without paying for the full 57-query dump.
+    // subset without paying for the dump of every query.
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
     new java.io.File(outDir).mkdirs()

@@ -68,7 +68,7 @@ object Clustering {
     val out = v.select(col(idCol), col("v"), best.getField("cid").as("cluster_id"),
                        best.getField("d2").as("dist2"))
     val cols = col(idCol) +: col("cluster_id") +:
-      (floor(col("dist2") * 1e9 + 0.5) / 1e9).as("dist2") +:
+      graft.functions.Exact.q9(col("dist2")).as("dist2") +:
       (if (keepVectors) Seq(col("v")) else Nil)
     out.select(cols: _*)
   }

@@ -61,7 +61,7 @@ object Pq {
       val best = Clustering.nearestCentroid(
         cb, slice(col("v"), j * subDim + 1, subDim))
       (best.getField("cid").as(s"code_$j"),
-       (floor(best.getField("d2") * 1e9 + 0.5) / 1e9).as(s"d2_$j"))
+       graft.functions.Exact.q9(best.getField("d2")).as(s"d2_$j"))
     }
     val out = v.select(col(idCol) +: (parts.map(_._1) ++ parts.map(_._2)): _*)
     out.withColumn("distortion",
@@ -114,7 +114,7 @@ object Pq {
       .orderBy(col("approx_d2").asc, col("neighbor_id").asc)
     joined
       .select(col("query_id"), col("neighbor_id"),
-              (floor(approx * 1e9 + 0.5) / 1e9).as("approx_d2"))
+              graft.functions.Exact.q9(approx).as("approx_d2"))
       .withColumn("rank", row_number().over(w).cast(LongType))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("approx_d2"))

@@ -351,7 +351,7 @@ object Similarity {
                   minCosine: Double, kNeighbors: Int, k: Int = 8,
                   iters: Int = 2,
                   cacheKey: Option[String] = None): DataFrame = {
-    val Big = 1000000000000000000L // 10^18; scaled cosine < 2^31
+    import org.apache.spark.sql.graftx.TopKPairs
     // Score each UNORDERED candidate pair once (id_a < id_b — the same
     // half-join q38 runs; the dot product is the dominant cost), then
     // emit both orientations with a scan-local explode so every doc sees
@@ -360,7 +360,7 @@ object Similarity {
     val half = blockedQualifyingPairs(corpus, idCol, vecCol, minCosine,
                                       k, iters, cacheKey)
       .select(col("id_a"), col("id_b"),
-              floor((col("cosine") + 1) * 1e9 + 0.5).cast("long").as("scaled"))
+              graft.functions.Exact.e9(col("cosine") + 1).as("scaled"))
     val scored = half
       .select(explode(array(
         struct(col("id_a").as("src"), col("id_b").as("dst"), col("scaled")),
@@ -368,18 +368,14 @@ object Similarity {
         .as("e"))
       .select(col("e.src").as("id_a"), col("e.scaled").as("scaled"),
               col("e.dst").as("id_b"))
-    val key = concat(
-      lpad((lit(Big) - col("scaled")).cast("string"), 19, "0"),
-      lit("|"), lpad(col("id_b").cast("string"), 19, "0"))
     scored
-      .select(col("id_a"), key.as("key"), col("id_b"))
+      .select(col("id_a"), TopKPairs.descIdKey(col("scaled"), col("id_b")).as("key"),
+              col("id_b"))
       .groupBy(col("id_a"))
-      .agg(org.apache.spark.sql.graftx.TopKPairs
-        .topK(col("key"), col("id_b"), kNeighbors).as("top"))
+      .agg(TopKPairs.topK(col("key"), col("id_b"), kNeighbors).as("top"))
       .select(col("id_a"), explode(col("top")).as("c"))
       .select(col("id_a").as("doc_id"), col("c.id").as("neighbor_id"),
-              ((lit(Big) - substring(col("c.key"), 1, 19).cast("long"))
-                 .cast("double") / 1e9 - 1).as("cosine_q"))
+              (TopKPairs.descScore(col("c.key")).cast("double") / 1e9 - 1).as("cosine_q"))
   }
 
   /** Corpus-FITTED ball-cover state: the assignment frame `w` (id, v,

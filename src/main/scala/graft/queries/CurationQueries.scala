@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.core.{Artifact, Tables}
-import graft.functions.Text
+import graft.functions.{Exact, Text}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -108,13 +108,10 @@ object CurationQueries {
               col("bg.prev").as("prev"), col("bg.cur").as("cur"))
   }
 
-  /** One LM term, `logp` = ln(`p`) quantized to 1e-9 (floor(x·1e9 + 0.5)
-    * / 1e9) BEFORE the fold: ln() is not correctly rounded, and JVM
-    * Math.log and DuckDB's libm differ by 1 ulp on some arguments (about
-    * 3% of q102's bigrams), so both engines must fold identical doubles.
+  /** One LM term, `logp` = ln(`p`) quantized BEFORE the fold (the
+    * [[graft.functions.Exact]] rule), so both engines fold identical doubles.
     */
-  private def termLogp(p: Column): Column =
-    (floor(log(p) * 1e9 + 0.5) / 1e9).as("logp")
+  private def termLogp(p: Column): Column = Exact.q9(log(p)).as("logp")
 
   /** The per-doc LM fold of (pos, logp) rows: a sequential left-to-right
     * sum over the pos-sorted log-probs. collect_list order depends on the
@@ -143,8 +140,7 @@ object CurationQueries {
               coalesce(col("sum_logprob") / col("n_bigrams").cast(DoubleType),
                        lit(0.0)).as("avg_logprob"),
               coalesce(
-                floor(exp(-(col("sum_logprob") / col("n_bigrams").cast(DoubleType)))
-                  * 1e9 + 0.5) / 1e9,
+                Exact.q9(exp(-(col("sum_logprob") / col("n_bigrams").cast(DoubleType)))),
                 lit(1.0)).as("perplexity"))
   }
 
@@ -399,8 +395,7 @@ object CurationQueries {
         .join(uni, "doc_id").join(kn, "doc_id")
         .filter(col("n_tokens") > 0L && col("n_bigrams") > 0L)
         .select(col("doc_id"), col("source"),
-          floor(greatest(lit(0.0), col("lp_kn") - col("lp_uni")) * 1e9 + 0.5)
-            .cast(LongType).as("excess_e9"))
+          Exact.e9(greatest(lit(0.0), col("lp_kn") - col("lp_uni"))).as("excess_e9"))
     }
 
   /** The q243/q245 oracle CTE chain replaying [[excessPerDoc]]: q78 +
@@ -473,10 +468,9 @@ object CurationQueries {
     val tot = byDim.agg(sum(col("r_cnt")).as("tr"), sum(col("t_cnt")).as("tt"))
     val model = byDim.crossJoin(broadcast(tot))
       .select(col("dim"),
-        floor((log((col("t_cnt") + lit(0.5)) / (col("tt") + lit(DsirB / 2.0))) -
-               log((col("r_cnt") + lit(0.5)) / (col("tr") + lit(DsirB / 2.0))))
-                * 1e9 + lit(0.5))
-          .cast(LongType).as("qratio"))
+        Exact.e9(log((col("t_cnt") + lit(0.5)) / (col("tt") + lit(DsirB / 2.0))) -
+                 log((col("r_cnt") + lit(0.5)) / (col("tr") + lit(DsirB / 2.0))))
+          .as("qratio"))
     (docDim, tot, model)
   }
 
@@ -640,9 +634,8 @@ object CurationQueries {
     val m = model.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val t = tot.collect()(0)
     val (tr, tt) = (t.getLong(0), t.getLong(1))
-    val default = math.floor(
-      (math.log(0.5 / (tt + DsirB / 2.0)) - math.log(0.5 / (tr + DsirB / 2.0)))
-        * 1e9 + 0.5).toLong
+    val default = Exact.e9(
+      math.log(0.5 / (tt + DsirB / 2.0)) - math.log(0.5 / (tr + DsirB / 2.0)))
     (m, default)
   }
 
@@ -689,8 +682,7 @@ object CurationQueries {
       val terms = ranked.join(broadcast(tot), Seq("lang"))
         .select(col("lang"), col("rk"), col("tok"), col("tot"),
                 col("n_sources"), col("sumsq"),
-                floor((-share) * log(share) * 1e9 + 0.5)
-                  .cast(LongType).as("hterm"))
+                Exact.entropyTerm(share).as("hterm"))
       terms.groupBy(col("lang"))
         .agg(max(col("n_sources")).as("n_sources"),
              max(col("tot")).as("total_tokens"),
@@ -702,8 +694,7 @@ object CurationQueries {
             (col("total_tokens").cast(DoubleType) *
               col("total_tokens").cast(DoubleType))).as("hhi"),
           (col("hsum").cast(DoubleType) / 1e9).as("entropy"),
-          (floor(exp(col("hsum").cast(DoubleType) / 1e9) * 1e9 + 0.5) / 1e9)
-            .as("effective_sources"),
+          Exact.q9(exp(col("hsum").cast(DoubleType) / 1e9)).as("effective_sources"),
           ((lit(2L) * col("srt") -
               (col("n_sources") + 1L) * col("total_tokens"))
              .cast(DoubleType) /
@@ -1133,12 +1124,9 @@ object CurationQueries {
         .select(col("doc_id"), col("n_tokens"), col("sum_logprob"),
                 (col("sum_logprob") / col("n_tokens").cast(DoubleType))
                   .as("avg_logprob"),
-                // exp() is not correctly rounded and differs by 1 ulp
-                // between JVM Math.exp and DuckDB's libm — quantize to
-                // 1e-9 on both sides (floor(x·1e9+0.5), the same trick as
-                // the engine round() divergence).
-                (floor(exp(-(col("sum_logprob") / col("n_tokens").cast(DoubleType)))
-                   * 1e9 + 0.5) / 1e9).as("perplexity"))
+                // exp() is not correctly rounded: quantized (the Exact rule)
+                Exact.q9(exp(-(col("sum_logprob") / col("n_tokens").cast(DoubleType))))
+                  .as("perplexity"))
     },
 
     // ---------------------------------------------------------------
@@ -1656,8 +1644,7 @@ object CurationQueries {
           org.apache.spark.sql.functions.broadcast(
             s.range(1, 9).select(col("id").as("epochs"))))
         .withColumn("decay_e9",
-          floor(exp((lit(1L) - col("epochs")).cast(DoubleType) / 15.0) * 1e9
-                + 0.5).cast(LongType))
+          Exact.e9(exp((lit(1L) - col("epochs")).cast(DoubleType) / 15.0)))
         .withColumn("eff_factor_e9",
           lit(1000000000L) + lit(EpochRepeatConst) * (lit(1000000000L) - col("decay_e9")))
         .select(col("epochs"), col("unique_tokens"),
@@ -1700,7 +1687,7 @@ object CurationQueries {
           col("sum_excess_e9").cast(DoubleType) /
             (col("n_docs").cast(DoubleType) * 1e9))
         .withColumn("exp_e9",
-          floor(exp(col("mean_excess")) * 1e9 + 0.5).cast(LongType))
+          Exact.e9(exp(col("mean_excess"))))
       val z = dom.agg(sum(col("exp_e9")).as("z"), count(lit(1)).as("k"))
       dom.crossJoin(broadcast(z))
         .select(col("source"), col("n_docs"), col("mean_excess"),
@@ -1740,7 +1727,7 @@ object CurationQueries {
           md5(concat(lit("wrs|"), col("doc_id").cast(StringType))))
           .cast(DoubleType) + 1.0) / 65537.0
       val keyed = d.select(col("doc_id"), col("n_tokens"),
-        ((floor(log(u) * 1e9 + 0.5) / 1e9) /
+        (Exact.q9(log(u)) /
           col("n_tokens").cast(DoubleType)).as("sample_key"))
       val top = keyed
         .agg(TopKPairs.topK(SortableDouble.sortKeyDesc(col("sample_key")),

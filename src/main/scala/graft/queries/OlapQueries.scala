@@ -177,8 +177,7 @@ object OlapQueries {
         .agg(sum(col("wt")).as("n_eff"),
              sum(col("wt") * col("n_chars")).as("sum_len"))
         .select(col("r"),
-          (floor(col("sum_len").cast(DoubleType) /
-             col("n_eff").cast(DoubleType) * 1e9 + 0.5) / 1e9).as("mean_r"))
+          q9(col("sum_len").cast(DoubleType) / col("n_eff").cast(DoubleType)).as("mean_r"))
       import graft.functions.Exact
       val a = rep.agg(
         count(lit(1)).as("n_replicates"),

@@ -1,7 +1,8 @@
 package graft.queries
 
 import graft.core.{Artifact, Tables}
-import graft.functions.Text
+import graft.functions.{Exact, Text}
+import graft.operators.Drift
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -37,7 +38,7 @@ object RetrievalQueries {
     */
   private val RboWeightsE9: Seq[Long] =
     (1 to RboK).map(d =>
-      math.floor(0.1 * math.pow(0.9, d - 1) / d * 1e9 + 0.5).toLong)
+      Exact.e9(0.1 * math.pow(0.9, d - 1) / d))
 
   /** Suffix sums S_m = Σ_{d=m..K} W_d — exact BIGINT sums of the
     * quantized weights, so a doc matched at depth m = max(rank_a,
@@ -112,7 +113,7 @@ object RetrievalQueries {
         .map(i => when(col(s"tf$i") > 0, 1L).otherwise(0L)).reduce(_ + _)
       base.crossJoin(broadcast(stats))
         .select(col("doc_id"), col("lang"), nMatched.as("n_terms_matched"),
-                (floor(score * 1e9 + 0.5) / 1e9).as("bm25_score"))
+                Exact.q9(score).as("bm25_score"))
         .filter(col("n_terms_matched") > 0)
         .orderBy(col("bm25_score").desc, col("doc_id").asc)
         .limit(25)
@@ -406,9 +407,9 @@ object RetrievalQueries {
           (col("n_pos").cast(DoubleType) / col("n_docs").cast(DoubleType))
             .as("positive_rate"),
           col("mean_score_e9"),
-          (floor(lit(1.0) /
-             (lit(1.0) + exp(-(col("mean_score_e9").cast(DoubleType) / 1e9)))
-             * 1e9 + 0.5) / 1e9).as("expected_rate"))
+          Exact.q9(lit(1.0) /
+             (lit(1.0) + exp(-(col("mean_score_e9").cast(DoubleType) / 1e9))))
+            .as("expected_rate"))
     },
 
     "q131_classifier_eval" -> { (s, dir) =>
@@ -462,25 +463,21 @@ object RetrievalQueries {
         .groupBy(col("doc_id"), col("tok")).agg(count(lit(1)).as("tf"))
       val dfreq = tf.groupBy(col("tok")).agg(count(lit(1)).as("df"))
       val n = docs.agg(count(lit(1)).as("n_docs"))
-      val Big = 1000000000000000000L // 10^18 — scores scale to < 10^12
-      val scaled = floor(col("tf").cast(DoubleType) *
-        log(col("n_docs").cast(DoubleType) / col("df").cast(DoubleType)) *
-        1e9 + 0.5).cast(LongType)
-      val key = concat(lpad((lit(Big) - scaled).cast(StringType), 19, "0"),
-                       lit("|"), col("tok"))
+      import org.apache.spark.sql.graftx.TopKPairs
+      val scaled = Exact.e9(col("tf").cast(DoubleType) *
+        log(col("n_docs").cast(DoubleType) / col("df").cast(DoubleType)))
+      val key = TopKPairs.descKey(scaled, col("tok"))
       tf.join(broadcast(dfreq), "tok")
         .crossJoin(broadcast(n))
         .select(col("doc_id"), key.as("key"), col("tf"))
         .groupBy(col("doc_id"))
-        .agg(org.apache.spark.sql.graftx.TopKPairs
-          .topK(col("key"), col("tf"), 3).as("top"))
+        .agg(TopKPairs.topK(col("key"), col("tf"), 3).as("top"))
         .select(col("doc_id"), posexplode(col("top")))
         .select(
           col("doc_id"), (col("pos") + 1).cast(LongType).as("kw_rank"),
           substring_index(col("col.key"), "|", -1).as("tok"),
           col("col.id").as("tf"),
-          ((lit(Big) - substring(col("col.key"), 1, 19).cast(LongType))
-            .cast(DoubleType) / 1e9).as("tfidf_score"))
+          (TopKPairs.descScore(col("col.key")).cast(DoubleType) / 1e9).as("tfidf_score"))
     },
 
     // ---------------------------------------------------------------
@@ -489,14 +486,10 @@ object RetrievalQueries {
     // continuously-refreshed training corpus needs ("did this batch's
     // feature distribution shift?"). Bins are fixed from the REFERENCE
     // side only (standard PSI practice: 10 uniform bins over its
-    // min/max, current-side outliers clamped into the edge bins);
-    // Laplace smoothing (+0.5 per bin) keeps empty bins finite. Scale
+    // min/max, current-side outliers clamped into the edge bins). Scale
     // shape: two scans collapse to one stats row + two ≤10-row count
     // frames; everything after the partial+final counts is constant-
-    // size. Determinism: p/q derive from integer counts via one fixed
-    // op sequence, psi terms quantize to 1e-9, and the TOTAL is an
-    // exact DECIMAL sum of the quantized terms (order-independent) —
-    // the q06/q52 discipline, so the rows hash-gate.
+    // size. Smoothing, terms and the exact total: Drift.psi.
     // ---------------------------------------------------------------
     // ---------------------------------------------------------------
     // q181: q112's PSI unrolled over EVENT TIME — the monitoring form a
@@ -505,8 +498,7 @@ object RetrievalQueries {
     // reference week's min/max (q112's practice), one PSI total per
     // week. Week indexing is pure integer arithmetic on epoch days
     // ((day − min_day) DIV 7 — never engine week-of-year semantics);
-    // the per-bin/term/total arithmetic is byte-for-byte q112's, so the
-    // whole drift curve hash-gates. Scale shape: two aggregations
+    // the per-bin/term/total arithmetic is q112's Drift.psi per week. Scale shape: two aggregations
     // (stats row + (week, bin) counts) and constant-size frames after.
     // ---------------------------------------------------------------
     "q181_windowed_psi" -> { (s, dir) =>
@@ -563,20 +555,7 @@ object RetrievalQueries {
         .select(col("week_idx"), col("bin"),
                 coalesce(col("ref_cnt"), lit(0L)).as("ref_cnt"),
                 coalesce(col("cur_cnt"), lit(0L)).as("cur_cnt"))
-      val totals = joined.groupBy(col("week_idx"))
-        .agg(sum(col("ref_cnt")).as("n_ref"), sum(col("cur_cnt")).as("n_cur"))
-      val p = (col("ref_cnt").cast(DoubleType) + 0.5) /
-        (col("n_ref").cast(DoubleType) + 0.5 * B)
-      val q = (col("cur_cnt").cast(DoubleType) + 0.5) /
-        (col("n_cur").cast(DoubleType) + 0.5 * B)
-      val term = floor((p - q) * log(p / q) * 1e9 + 0.5) / 1e9
-      val perBin = joined.join(broadcast(totals), Seq("week_idx"))
-        .select(col("week_idx"), col("bin"), col("ref_cnt"), col("cur_cnt"),
-                term.as("psi_term"))
-      val weekTotal = perBin.groupBy(col("week_idx"))
-        .agg(sum(col("psi_term").cast(DecimalType(18, 9))).cast(DoubleType)
-          .as("psi_total"))
-      perBin.join(broadcast(weekTotal), Seq("week_idx"))
+      Drift.psi(joined, B, "week_idx")
   }
 
   // lazy: defs2 is declared below; eager init would read it as null
@@ -591,12 +570,7 @@ object RetrievalQueries {
       val stats = ref.agg(min(col("value")).as("vmin"), max(col("value")).as("vmax"))
       def counts(side: DataFrame, name: String) = side
         .crossJoin(broadcast(stats))
-        .select(greatest(lit(0.0),
-            when(col("vmax") > col("vmin"),
-              least(floor((col("value") - col("vmin")) /
-                (col("vmax") - col("vmin")) * B), lit((B - 1).toDouble)))
-            .otherwise(lit(0.0)))
-          .cast(LongType).as("bin"))
+        .select(psiBin(col("value")).as("bin"))
         .groupBy(col("bin")).agg(count(lit(1)).as(name))
       val bins = s.range(B).select(col("id").as("bin"))
       val joined = bins
@@ -605,20 +579,7 @@ object RetrievalQueries {
         .select(col("bin"),
                 coalesce(col("ref_cnt"), lit(0L)).as("ref_cnt"),
                 coalesce(col("cur_cnt"), lit(0L)).as("cur_cnt"))
-      val totals = joined.agg(sum(col("ref_cnt")).as("n_ref"),
-                              sum(col("cur_cnt")).as("n_cur"))
-      val p = (col("ref_cnt").cast(DoubleType) + 0.5) /
-        (col("n_ref").cast(DoubleType) + 0.5 * B)
-      val q = (col("cur_cnt").cast(DoubleType) + 0.5) /
-        (col("n_cur").cast(DoubleType) + 0.5 * B)
-      val term = floor((p - q) * log(p / q) * 1e9 + 0.5) / 1e9
-      val perBin = joined.crossJoin(broadcast(totals))
-        .select(col("bin"), col("ref_cnt"), col("cur_cnt"),
-                term.as("psi_term"))
-      val total = perBin
-        .agg(sum(col("psi_term").cast(DecimalType(18, 9))).cast(DoubleType)
-          .as("psi_total"))
-      perBin.crossJoin(broadcast(total))
+      Drift.psi(joined, B)
     },
 
     // ---------------------------------------------------------------
@@ -677,10 +638,7 @@ object RetrievalQueries {
     // VOCAB-bounded tf aggregate (partial+final); the rank window runs
     // only over that aggregate (q93's allowance, constPartition
     // non-foldable key); the OLS is ONE single-row aggregation over
-    // ≤ 100 points. Determinism: ln() values 1e-9-quantized BEFORE
-    // any sum (the q102 lesson — JVM/DuckDB ln differs 1 ulp on ~3%
-    // of args), sums DECIMAL-exact, slope/intercept/r² fixed-order
-    // IEEE quantized to 1e-9.
+    // ≤ 100 points. Determinism: Exact.logLogFit.
     "q122_zipf_fit" -> { (s, dir) =>
       val docs = Tables(s, dir).documents
       val tf = docs.select(explode(Text.tokens(col("text"))).as("tok"))
@@ -690,30 +648,9 @@ object RetrievalQueries {
         .orderBy(col("freq").desc, col("tok"))
       val pts = tf.withColumn("rank", row_number().over(w).cast(LongType))
         .filter(col("rank") <= 100)
-        .select(
-          (floor(log(col("rank").cast(DoubleType)) * 1e9 + 0.5) / 1e9).as("x"),
-          (floor(log(col("freq").cast(DoubleType)) * 1e9 + 0.5) / 1e9).as("y"))
-      def d9(c: Column)   = c.cast(DecimalType(18, 9))
-      val agg = pts.agg(
-        count(lit(1)).as("n"),
-        sum(d9(col("x"))).as("sx"), sum(d9(col("y"))).as("sy"),
-        sum(d9(col("x")) * d9(col("x"))).as("sxx"),
-        sum(d9(col("x")) * d9(col("y"))).as("sxy"),
-        sum(d9(col("y")) * d9(col("y"))).as("syy"))
-      val nd  = col("n").cast(DoubleType)
-      val sxd = col("sx").cast(DoubleType); val syd = col("sy").cast(DoubleType)
-      val sxxd = col("sxx").cast(DoubleType); val sxyd = col("sxy").cast(DoubleType)
-      val syyd = col("syy").cast(DoubleType)
-      val den   = nd * sxxd - sxd * sxd
-      val slope = (nd * sxyd - sxd * syd) / den
-      val icept = (syd - slope * sxd) / nd
-      val r2 = ((nd * sxyd - sxd * syd) * (nd * sxyd - sxd * syd)) /
-        (den * (nd * syyd - syd * syd))
-      agg.select(
-        col("n").as("n_points"),
-        (floor(slope * 1e9 + 0.5) / 1e9).as("zipf_slope"),
-        (floor(icept * 1e9 + 0.5) / 1e9).as("zipf_intercept"),
-        (floor(r2 * 1e9 + 0.5) / 1e9).as("r_squared"))
+      Exact.logLogFit(pts, col("rank").cast(DoubleType), col("freq").cast(DoubleType))
+        .select(col("n").as("n_points"), col("slope").as("zipf_slope"),
+                col("intercept").as("zipf_intercept"), col("r_squared"))
     },
 
     // -----------------------------------------------------------------
@@ -754,7 +691,7 @@ object RetrievalQueries {
         .withColumn("e_raw", expr(
           "CAST(26499596412111161535758336 AS DECIMAL(38,0)) div " +
             "(CAST(s_sum AS DECIMAL(38,0)) * 1000000)"))
-      val lnq = floor(log(lit(256.0) / col("v").cast(DoubleType)) * 1e9 + 0.5)
+      val lnq = Exact.e9(log(lit(256.0) / col("v").cast(DoubleType)))
       val fin = est.select(col("source"),
         when(col("v") > 0 && col("e_raw") <= 640,
           floor(lit(256.0) * lnq / 1e9).cast(LongType))

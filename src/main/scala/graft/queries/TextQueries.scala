@@ -1,9 +1,10 @@
 package graft.queries
 
 import graft.core.{Artifact, Tables}
-import graft.functions.Text
+import graft.functions.{Exact, Text}
 import graft.operators.{Bpe, Classifier, Dedup}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.TopKPairs
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -232,15 +233,11 @@ object TextQueries {
         .agg(count(lit(1)).as("df"), sum(col("c")).as("tf"),
              sum(col("c").cast(DecimalType(38, 0)) *
                  col("c").cast(DecimalType(38, 0))).as("tf2"))
-      val Big = 1000000000000000000L
-      val key = concat(lpad((lit(Big) - col("tf")).cast("string"), 19, "0"),
-                       lit("|"), col("term"))
       // TopKPairs ids are BIGINT; the term rides the key's suffix
       // (19 digits + '|' + term) and is recovered by substring.
       val top = st
-        .select(key.as("key"), lit(0L).as("zid"))
-        .agg(org.apache.spark.sql.graftx.TopKPairs
-          .topK(col("key"), col("zid"), BurstTopTerms).as("top"))
+        .select(TopKPairs.descKey(col("tf"), col("term")).as("key"), lit(0L).as("zid"))
+        .agg(TopKPairs.topK(col("key"), col("zid"), BurstTopTerms).as("top"))
         .select(explode(col("top")).as("t"))
         .select(substring(col("t.key"), 21, 1000000).as("term"))
       val tot = d.agg(count(lit(1)).as("n"))
@@ -252,8 +249,8 @@ object TextQueries {
             ./((dec(col("n")) * dec(col("tf"))).cast(DoubleType)).as("vmr"),
           (col("df").cast(DoubleType) /
             (col("n").cast(DoubleType) *
-              (floor((lit(1.0) - exp(-col("tf").cast(DoubleType) /
-                 col("n").cast(DoubleType))) * 1e9 + 0.5) / 1e9)))
+              Exact.q9(lit(1.0) - exp(-col("tf").cast(DoubleType) /
+                 col("n").cast(DoubleType)))))
             .as("poisson_burst_ratio"))
     },
 
@@ -280,8 +277,8 @@ object TextQueries {
         val u = graft.functions.HexKeys.value32(
           md5(concat(lit(s"dp|$e|"), col("source"))), 0)
         val c = (u.cast(DoubleType) + 0.5) / 4294967296.0 - 0.5
-        val noise = floor((lit(-invEps) * signum(c)) *
-          log(lit(1.0) - lit(2.0) * abs(c)) * 1e9 + 0.5) / 1e9
+        val noise = Exact.q9((lit(-invEps) * signum(c)) *
+          log(lit(1.0) - lit(2.0) * abs(c)))
         counts.select(lit(e).cast(LongType).as("eps_x10"), col("source"),
                       col("true_n"),
                       (col("true_n") + noise).as("released_n"),
@@ -381,8 +378,7 @@ object TextQueries {
       val share = col("c").cast(DoubleType) / col("n").cast(DoubleType)
       val terms = cnt.join(tot, Seq("doc_id"))
         .select(col("doc_id"), col("seg_lang"), col("c"), col("n"),
-                floor(-share * log(share) * 1e9 + lit(0.5))
-                  .cast(LongType).as("term_q"))
+                Exact.entropyTerm(share).as("term_q"))
       val domShare = (-col("dom.negc")).cast(DoubleType) /
         col("n_segments").cast(DoubleType)
       terms.groupBy(col("doc_id"))
@@ -468,7 +464,7 @@ object TextQueries {
         val pAb   = col("cnt").cast(DoubleType) / col("np").cast(DoubleType)
         val denom = (col("ua").cast(DoubleType) / col("n").cast(DoubleType)) *
           (col("ub").cast(DoubleType) / col("n").cast(DoubleType))
-        floor(log(pAb / denom) * 1e9 + 0.5) / 1e9
+        Exact.q9(log(pAb / denom))
       }
       pairs.filter(col("cnt") >= 5)
         .join(broadcast(uni.select(col("tok").as("a"), col("ucnt").as("ua"))), Seq("a"))
@@ -937,7 +933,7 @@ object TextQueries {
         (col("n_in") + col("n_rest")).cast(DoubleType)
       val pRaw = lit(2.0) * exp(lit(-2.0) * col("ks_stat") * col("ks_stat") * nEff)
       val withP = panel.withColumn("p_q",
-        least(floor(pRaw * 1e9 + 0.5).cast(LongType), lit(1000000000L)))
+        least(Exact.e9(pRaw), lit(1000000000L)))
       val W = org.apache.spark.sql.expressions.Window
       val cw = W.partitionBy(graft.functions.Macros.constPartition(col("p_q")))
       val ranked = withP
@@ -990,15 +986,11 @@ object TextQueries {
         length(col("text")).cast(LongType).as("n_chars"),
         org.apache.spark.sql.graftx.CharHistogram.charHistogram(col("text"))
           .as("hist"))
-      def termQ(x: Column, nChars: Column): Column = {
-        val r = x.getField("c").cast(DoubleType) / nChars.cast(DoubleType)
-        floor(-r * log(r) * 1e9 + 0.5).cast(LongType)
-      }
       base.select(
           col("doc_id"), col("n_chars"),
           size(col("hist")).cast(LongType).as("n_distinct_chars"),
-          aggregate(col("hist"), lit(0L),
-                    (acc, x) => acc + termQ(x, col("n_chars"))).as("h_q"))
+          aggregate(col("hist"), lit(0L), (acc, x) => acc + Exact.entropyTerm(
+            x.getField("c").cast(DoubleType) / col("n_chars").cast(DoubleType))).as("h_q"))
         .select(col("doc_id"), col("n_chars"), col("n_distinct_chars"),
                 (col("h_q").cast(DoubleType) / 1e9).as("entropy_nats"),
                 (col("h_q") < 2000000000L).as("is_low_entropy"),
@@ -1038,10 +1030,8 @@ object TextQueries {
           .charHistogram(col("text").substr(lit(1), length(col("text")) - 1))
           .as("h1"))
       val n2 = col("n_chars") - 1L
-      def termQ(cnt: Column, tot: Column): Column = {
-        val r = cnt.cast(DoubleType) / tot.cast(DoubleType)
-        floor(-r * log(r) * 1e9 + 0.5).cast(LongType)
-      }
+      def termQ(cnt: Column, tot: Column): Column =
+        Exact.entropyTerm(cnt.cast(DoubleType) / tot.cast(DoubleType))
       base.select(
           col("doc_id"), col("n_chars"),
           size(col("h2")).cast(LongType).as("n_distinct_bigrams"),
@@ -1657,9 +1647,9 @@ object TextQueries {
         when(q > 0, lit(0.5) * q * log(q / m)).otherwise(lit(0.0))
       lattice
         .select(col("source_a"), col("source_b"),
-                (floor(term * 1e9 + 0.5) / 1e9).as("t"))
+                Exact.q9(term).as("t"))
         .groupBy(col("source_a"), col("source_b"))
-        .agg(sum(col("t").cast(DecimalType(18, 9))).cast(DoubleType).as("jsd"))
+        .agg(Exact.sumExact(col("t"), 9).as("jsd"))
     },
 
     // q174: LSH banding PLANNER — the S-curve arithmetic behind q36's
@@ -2141,9 +2131,7 @@ object TextQueries {
         .select(posexplode(col("top")))
         .select((col("pos") + 1).cast(LongType).as("tail_rank"),
                 SortableDouble.decodeDesc(col("col.key")).cast(LongType).as("cluster_size"))
-        .withColumn("tq",
-          floor(lit(1e9) * log(col("cluster_size").cast("double")) + lit(0.5))
-            .cast(LongType))
+        .withColumn("tq", Exact.e9(log(col("cluster_size").cast("double"))))
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(graft.functions.Macros.constPartition(col("tq")))
         .orderBy(col("tail_rank"))
@@ -2581,9 +2569,7 @@ object TextQueries {
     // shuffle both readouts REUSE (ReusedExchange, asserted in
     // PlanQualitySpec) — then V_k = Σ_{b≤k} |{tok : min-bucket = b}|
     // and N_k = Σ_{b≤k} tokens_b, cumulated by an 8-row window. The
-    // Heaps fit is q122's OLS verbatim (quantized ln, decimal-exact
-    // sums, fixed-order IEEE readout) over the 8 (ln N_k, ln V_k)
-    // points. Bucketing is pure BIGINT math (doc_id·B div (max+1)) so
+    // Heaps fit is q122's Exact.logLogFit over the 8 (N_k, V_k) points. Bucketing is pure BIGINT math (doc_id·B div (max+1)) so
     // truncation == floor in both engines.
     "q162_heaps_law" -> { (s, dir) =>
       val d  = Tables(s, dir).documents
@@ -2614,22 +2600,9 @@ object TextQueries {
         .withColumn("cum_tokens", sum(col("nt")).over(w).cast(LongType))
         .withColumn("cum_vocab", sum(col("nv")).over(w).cast(LongType))
         .select(col("b").as("checkpoint"), col("cum_tokens"), col("cum_vocab"))
-      val pts = curve.select(
-        (floor(log(col("cum_tokens").cast(DoubleType)) * 1e9 + 0.5) / 1e9).as("x"),
-        (floor(log(col("cum_vocab").cast(DoubleType)) * 1e9 + 0.5) / 1e9).as("y"))
-      def d9(c: Column) = c.cast(DecimalType(18, 9))
-      val agg = pts.agg(
-        count(lit(1)).as("n"),
-        sum(d9(col("x"))).as("sx"), sum(d9(col("y"))).as("sy"),
-        sum(d9(col("x")) * d9(col("x"))).as("sxx"),
-        sum(d9(col("x")) * d9(col("y"))).as("sxy"))
-      val nd   = col("n").cast(DoubleType)
-      val sxd  = col("sx").cast(DoubleType); val syd = col("sy").cast(DoubleType)
-      val sxxd = col("sxx").cast(DoubleType); val sxyd = col("sxy").cast(DoubleType)
-      val beta = (nd * sxyd - sxd * syd) / (nd * sxxd - sxd * sxd)
-      val fit = agg.select(
-        (floor(beta * 1e9 + 0.5) / 1e9).as("heaps_beta"),
-        (floor(((syd - beta * sxd) / nd) * 1e9 + 0.5) / 1e9).as("heaps_log_k"))
+      val fit = Exact.logLogFit(curve, col("cum_tokens").cast(DoubleType),
+                                col("cum_vocab").cast(DoubleType))
+        .select(col("slope").as("heaps_beta"), col("intercept").as("heaps_log_k"))
       curve.crossJoin(broadcast(fit))
     },
 
@@ -2692,7 +2665,7 @@ object TextQueries {
         .filter(col("source_a") < col("source_b"))
         .groupBy(col("source_a"), col("source_b"))
         .agg(count(lit(1)).as("exact_overlap"))
-      def q9(c: Column) = floor(c * 1e9 + 0.5) / 1e9
+      import Exact.q9
       u.join(exact, Seq("source_a", "source_b"))
         .select(col("source_a"), col("source_b"), col("exact_overlap"),
           q9(col("est_a")).as("est_a"), q9(col("est_b")).as("est_b"),

@@ -170,7 +170,7 @@ object TimeSeriesQueries {
       dev.join(broadcast(mad), col("event_type") === col("et2"))
         .select(col("event_id"), col("event_type"), col("value"),
                 col("med"), col("mad"),
-                (floor(z * 1e9 + 0.5) / 1e9).as("robust_z"),
+                q9(z).as("robust_z"),
                 coalesce(abs(z) > 3.5, lit(false)).as("is_mad_outlier"))
     },
 

@@ -1,8 +1,10 @@
 package graft.queries
 
 import graft.core.{Artifact, Tables}
-import graft.operators.Similarity
+import graft.functions.Exact
+import graft.operators.{Drift, Similarity}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftx.TopKPairs
 import org.apache.spark.sql.types.{DoubleType, LongType}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -190,7 +192,6 @@ object VectorQueries {
     // exact decimal sums — the clustering/aggregation primitive for
     // embedding pipelines. Long format keeps the oracle to scalar columns.
     "q45_embedding_centroids" -> { (s, dir) =>
-      import graft.functions.Exact
       val e = Tables(s, dir).embeddings
       e.select(col("label").cast("long").as("label"),
                posexplode(col("embedding").cast("array<double>")))
@@ -319,7 +320,7 @@ object VectorQueries {
     "q246_davies_bouldin" -> { (s, dir) =>
       import s.implicits._
       val perDoc = kmeans8(s, dir).select(col("cluster_id"),
-        floor(sqrt(col("dist2")) * 1e9 + 0.5).cast("long").as("d_e9"))
+        Exact.e9(sqrt(col("dist2"))).as("d_e9"))
       val sFrame = perDoc.groupBy(col("cluster_id"))
         .agg(count(lit(1)).as("n_members"), sum(col("d_e9")).as("sum_d_e9"))
         .withColumn("s_scatter",
@@ -332,7 +333,7 @@ object VectorQueries {
       } yield {
         val d2 = dot(cents(i), cents(i)) - 2 * dot(cents(i), cents(j)) +
           dot(cents(j), cents(j))
-        (i.toLong, j.toLong, math.floor(math.sqrt(d2) * 1e9 + 0.5).toLong)
+        (i.toLong, j.toLong, Exact.e9(math.sqrt(d2)))
       }).toDF("cid_i", "cid_j", "m_e9")
       val sI = sFrame.select(col("cluster_id").as("cid_i"),
                              col("n_members"), col("s_scatter").as("s_i"))
@@ -341,9 +342,8 @@ object VectorQueries {
       broadcast(pairs).filter(col("m_e9") > 0L)
         .join(sI, "cid_i").join(sJ, "cid_j")
         .select(col("cid_i"), col("n_members"), col("s_i"),
-                floor(((col("s_i") + col("s_j")) /
-                        (col("m_e9").cast("double") / 1e9)) * 1e9 + 0.5)
-                  .cast("long").as("r_e9"))
+                Exact.e9((col("s_i") + col("s_j")) /
+                         (col("m_e9").cast("double") / 1e9)).as("r_e9"))
         .groupBy(col("cid_i").as("cluster_id"), col("n_members"),
                  col("s_i").as("s_scatter"))
         .agg((max(col("r_e9")).cast("double") / 1e9).as("db_i"))
@@ -829,14 +829,11 @@ object VectorQueries {
     // SEMANTICS shift while its surface statistics hold (new topic, same
     // token mix), but the k-means cluster occupancy histogram catches it.
     // Reference = even vec_ids, current = odd (the established
-    // base/delta convention); per cluster the two counts, the q112
-    // Laplace-smoothed PSI term ((p−q)·ln(p/q), quantized to 1e-9 as ONE
-    // term — the gate-proven cross-engine shape), and the corpus PSI
-    // total with the standard 0.2 drift flag. Scale shape: occupancy is
-    // a partial+final count over the memoized shuffle-free assignment;
-    // everything after runs on the ≤k-row cluster frame against 1-row
-    // broadcast totals; the DECIMAL(18,9) term sum is exact, so the
-    // total is partition-order-free.
+    // base/delta convention); per cluster the two counts and q112's
+    // Drift.psi term, and the corpus PSI total with the standard 0.2
+    // drift flag. Scale shape: occupancy is a partial+final count over
+    // the memoized shuffle-free assignment; everything after runs on the
+    // ≤k-row cluster frame against 1-row broadcast totals.
     // -----------------------------------------------------------------
     "q252_embedding_drift" -> { (s, dir) =>
       val asg = kmeans8(s, dir).select(col("vec_id"), col("cluster_id"))
@@ -850,21 +847,7 @@ object VectorQueries {
         .select(col("cluster_id"),
                 coalesce(col("ref_cnt"), lit(0L)).as("ref_cnt"),
                 coalesce(col("cur_cnt"), lit(0L)).as("cur_cnt"))
-      val totals = joined.agg(sum(col("ref_cnt")).as("n_ref"),
-                              sum(col("cur_cnt")).as("n_cur"))
-      val p = (col("ref_cnt").cast("double") + 0.5) /
-        (col("n_ref").cast("double") + 0.5 * 8)
-      val q = (col("cur_cnt").cast("double") + 0.5) /
-        (col("n_cur").cast("double") + 0.5 * 8)
-      val term = floor((p - q) * log(p / q) * 1e9 + 0.5) / 1e9
-      val perC = joined.crossJoin(broadcast(totals))
-        .select(col("cluster_id"), col("ref_cnt"), col("cur_cnt"),
-                term.as("psi_term"))
-      val total = perC.agg(
-        sum(col("psi_term").cast("decimal(18,9)")).cast("double")
-          .as("psi_total"))
-      perC.crossJoin(broadcast(total))
-        .withColumn("is_drifted", col("psi_total") > 0.2)
+      Drift.psi(joined, 8).withColumn("is_drifted", col("psi_total") > 0.2)
     },
 
     // q159: kNN majority-vote classifier over the IVF ANN path — the
@@ -917,17 +900,10 @@ object VectorQueries {
       TruncDims.map { d =>
         val tr = e.select(col("vec_id"),
                           slice(col("embedding"), 1, d).as("embedding"))
-        val approx = Similarity.bruteForceTopK(
-            tr.filter(col("vec_id") < 20), tr, "vec_id", "embedding", k = 3)
-          .select(col("query_id"), col("neighbor_id"), lit(1L).as("hit"))
-        exact.join(approx, Seq("query_id", "neighbor_id"), "left")
-          .groupBy(col("query_id"))
-          .agg(count(lit(1)).as("n_exact"),
-               sum(coalesce(col("hit"), lit(0L))).as("n_hit"))
+        recallAt3(exact, Similarity.bruteForceTopK(
+            tr.filter(col("vec_id") < 20), tr, "vec_id", "embedding", k = 3))
           .select(col("query_id"), lit(d.toLong).as("trunc_dims"),
-                  col("n_exact"), col("n_hit"),
-                  (col("n_hit").cast("double") / col("n_exact").cast("double"))
-                    .as("recall_at_3"))
+                  col("n_exact"), col("n_hit"), col("recall_at_3"))
       }.reduce(_ unionByName _)
     },
 
@@ -1056,10 +1032,9 @@ object VectorQueries {
         .select(col("i").cast("long").as("dim_i"),
                 col("j").cast("long").as("dim_j"),
                 col("n").as("n_rows"),
-                (floor(col("cov_raw") * 1e9 + 0.5) / 1e9).as("cov"),
+                Exact.q9(col("cov_raw")).as("cov"),
                 when(col("vi") > 0 && col("vj") > 0,
-                     floor(col("cov_raw") / sqrt(col("vi") * col("vj")) *
-                       1e9 + 0.5) / 1e9).as("corr"))
+                     Exact.q9(col("cov_raw") / sqrt(col("vi") * col("vj")))).as("corr"))
     },
 
     // Distributed PCA, completed: q119's covariance matrix (d² values —
@@ -1110,12 +1085,11 @@ object VectorQueries {
       var lam = 0.0; var j = 0
       while (j < d) { lam += u(j) * t(j); j += 1 }
       val uLit   = array(u.map(lit(_)): _*)
-      val lamQ   = math.floor(lam * 1e9 + 0.5) / 1e9
       val e      = Tables(s, dir).embeddings
       e.select(col("vec_id"),
-               (floor(Vectors.dot(col("embedding").cast("array<double>"), uLit) *
-                  1e9 + 0.5) / 1e9).as("pc1_score"),
-               lit(lamQ).as("eigenvalue"))
+               Exact.q9(Vectors.dot(col("embedding").cast("array<double>"), uLit))
+                 .as("pc1_score"),
+               lit(Exact.q9(lam)).as("eigenvalue"))
     },
 
     // Scalar int8 quantization — the embedding-compression step of a
@@ -1193,18 +1167,14 @@ object VectorQueries {
         .reduce(_ unionAll _)
         .groupBy(col("seed"), col("node")).agg(sum(col("rmass")).as("rank_mass"))
         .filter(col("node") =!= col("seed"))
-      val Big = 1000000000000000000L
-      val key = concat(lpad((lit(Big) - col("rank_mass")).cast("string"), 19, "0"),
-                       lit("|"), lpad(col("node").cast("string"), 19, "0"))
-      all.select(col("seed"), key.as("key"), col("node"))
+      all.select(col("seed"), TopKPairs.descIdKey(col("rank_mass"), col("node")).as("key"),
+                 col("node"))
         .groupBy(col("seed"))
-        .agg(org.apache.spark.sql.graftx.TopKPairs
-          .topK(col("key"), col("node"), 5).as("top"))
+        .agg(TopKPairs.topK(col("key"), col("node"), 5).as("top"))
         .select(col("seed"), posexplode(col("top")))
         .select(col("seed"), (col("pos") + 1).cast(LongType).as("rank"),
                 col("col.id").as("node"),
-                (lit(Big) - substring(col("col.key"), 1, 19).cast(LongType))
-                  .as("rank_mass"))
+                TopKPairs.descScore(col("col.key")).as("rank_mass"))
     },
 
     // -----------------------------------------------------------------
@@ -1423,8 +1393,6 @@ object VectorQueries {
       n.select(col("vec_id").as("cand_id"), col("v").as("cv"), col("nrm").as("cn"))
     }
 
-  private val NndBig = 1000000000000000000L // 10^18; scaled cosine < 2^31
-
   /** NN-descent over an arbitrary corpus frame (cand_id, cv, cn):
     * md5-random constant-size block init, NndRounds refinement rounds,
     * directed top-NndK edge list. Cached per (session, cacheKey).
@@ -1514,25 +1482,20 @@ object VectorQueries {
             .dotShort(col("cq"), col("cq")).cast("double"))),
         tbl, "cand_id", numBuckets = 32)
       val corpusB = s.table(tbl)
-      val scaled = floor((org.apache.spark.sql.graftx.DotProductShort
-                            .dotShort(col("sq"), col("dq")).cast("double") /
-                            (col("sqn") * col("dqn")) + 1) * 1e9 + 0.5)
-        .cast("long").as("scaled")
+      val scaled = Exact.e9(org.apache.spark.sql.graftx.DotProductShort
+                              .dotShort(col("sq"), col("dq")).cast("double") /
+                              (col("sqn") * col("dqn")) + 1).as("scaled")
       // heap over (src, dst, scaled) candidates; re-emits scaled so the
       // next round's ∪g branch reuses it instead of re-joining vectors
       def topKEdges(cand: DataFrame, tag: String): DataFrame = {
-        val key = concat(
-          lpad((lit(NndBig) - col("scaled")).cast("string"), 19, "0"),
-          lit("|"), lpad(col("dst").cast("string"), 19, "0"))
         graft.core.Materialize.cut(
-          cand.select(col("src"), key.as("key"), col("dst"))
+          cand.select(col("src"), TopKPairs.descIdKey(col("scaled"), col("dst")).as("key"),
+                      col("dst"))
             .groupBy(col("src"))
-            .agg(org.apache.spark.sql.graftx.TopKPairs
-              .topKDistinct(col("key"), col("dst"), NndK).as("top"))
+            .agg(TopKPairs.topKDistinct(col("key"), col("dst"), NndK).as("top"))
             .select(col("src"), explode(col("top")).as("c"))
             .select(col("src"), col("c.id").as("dst"),
-                    (lit(NndBig) - substring(col("c.key"), 1, 19).cast("long"))
-                      .as("scaled")), tag)
+                    TopKPairs.descScore(col("c.key")).as("scaled")), tag)
       }
       val initScored = (0 until NndDraws).map { d =>
         // 32-bit draw: value16 capped the usable block count at 65536,
@@ -1713,24 +1676,20 @@ object VectorQueries {
       // and is excluded only at the final readout. The query vector and
       // norm come from the VecTable reference object above — no per-round
       // query-side join; arithmetic is term-for-term the composed tree
-      // (floor((dot(qv,cv)/(qn*cn)+1)*1e9+0.5) cast long).
+      // Exact.e9(dot(qv,cv)/(qn*cn) + 1).
       val scored = broadcast(expanded)
         .join(corpus, Seq("cand_id"))
         .select(col("query_id"), col("cand_id"),
                 ScaledCosineLookup.score(col("query_id"), col("cv"),
                                          col("cn"), table).as("scaled"))
-      val key = concat(
-        lpad((lit(NndBig) - col("scaled")).cast("string"), 19, "0"),
-        lit("|"), lpad(col("cand_id").cast("string"), 19, "0"))
+      val key = TopKPairs.descIdKey(col("scaled"), col("cand_id"))
       val next = scored
         .select(col("query_id"), key.as("key"), col("cand_id"))
         .groupBy(col("query_id"))
-        .agg(org.apache.spark.sql.graftx.TopKPairs
-          .topKDistinct(col("key"), col("cand_id"), width).as("top"))
+        .agg(TopKPairs.topKDistinct(col("key"), col("cand_id"), width).as("top"))
         .select(col("query_id"), explode(col("top")).as("c"))
         .select(col("query_id"), col("c.id").as("cand_id"),
-                (lit(NndBig) - substring(col("c.key"), 1, 19).cast("long"))
-                  .as("scaled"))
+                TopKPairs.descScore(col("c.key")).as("scaled"))
       // iterative ROUND state (a local cut, as in the CC loop): without
       // the per-round cut the beam lineage
       // COMPOUNDS — round r's broadcast subtrees nest rounds 1..r-1
@@ -1742,14 +1701,11 @@ object VectorQueries {
       // serve leg — same truncation argument).
       beam = if (round < BeamRounds) graft.core.Materialize.cutLocal(next) else next
     }
-    val key3 = concat(
-      lpad((lit(NndBig) - col("scaled")).cast("string"), 19, "0"),
-      lit("|"), lpad(col("cand_id").cast("string"), 19, "0"))
     beam.filter(col("cand_id") =!= col("query_id"))
-      .select(col("query_id"), key3.as("key"), col("cand_id"))
+      .select(col("query_id"), TopKPairs.descIdKey(col("scaled"), col("cand_id")).as("key"),
+              col("cand_id"))
       .groupBy(col("query_id"))
-      .agg(org.apache.spark.sql.graftx.TopKPairs
-        .topK(col("key"), col("cand_id"), k).as("top"))
+      .agg(TopKPairs.topK(col("key"), col("cand_id"), k).as("top"))
       .select(col("query_id"), explode(col("top")).as("c"))
       .select(col("query_id"), col("c.id").as("neighbor_id"))
   }
@@ -1798,21 +1754,15 @@ object VectorQueries {
                      col("v").as("va"), col("nrm").as("na"))
     val b = n.select(col("vec_id").as("nid"), col("label"),
                      col("v").as("vb"), col("nrm").as("nb"))
-    val Big = 1000000000000000000L // 10^18; scaled cosine < 2^31
-    val scaled = floor((Vectors.dot(col("va"), col("vb")) /
-      (col("na") * col("nb")) + 1) * 1e9 + 0.5).cast("long")
-    val key = concat(lpad((lit(Big) - scaled).cast("string"), 19, "0"),
-                     lit("|"), lpad(col("nid").cast("string"), 19, "0"))
+    val scaled = Exact.e9(Vectors.dot(col("va"), col("vb")) / (col("na") * col("nb")) + 1)
     a.join(b, Seq("label")).filter(col("vid") =!= col("nid"))
-      .select(col("vid"), key.as("key"), col("nid"))
+      .select(col("vid"), TopKPairs.descIdKey(scaled, col("nid")).as("key"), col("nid"))
       .groupBy(col("vid"))
-      .agg(org.apache.spark.sql.graftx.TopKPairs
-        .topK(col("key"), col("nid"), 3).as("top"))
+      .agg(TopKPairs.topK(col("key"), col("nid"), 3).as("top"))
       .select(col("vid").as("vec_id"), posexplode(col("top")))
       .select(col("vec_id"), (col("pos") + 1).cast("long").as("rank"),
               col("col.id").as("neighbor_id"),
-              ((lit(Big) - substring(col("col.key"), 1, 19).cast("long"))
-                .cast("double") / 1e9 - 1).as("cosine"))
+              (TopKPairs.descScore(col("col.key")).cast("double") / 1e9 - 1).as("cosine"))
   }
 
   private val knnEdgeCache = new Artifact[DataFrame]("q118_knn_sym_edges")
@@ -2399,7 +2349,7 @@ object VectorQueries {
           (col("nrm") * col("cnrm")))
       val per = idx.join(seedDf, Seq("centroid_id"))
         .select(col("centroid_id"), (col("vec_id") % 2 === 0).as("is_base"),
-                floor(cos * 1e9 + 0.5).cast("long").as("q"))
+                Exact.e9(cos).as("q"))
       val corpusN = broadcast(per.agg(count(lit(1)).as("corpus_n")))
       val agg0 = per.groupBy(col("centroid_id")).agg(
         count(lit(1)).as("n_total"),

@@ -933,7 +933,7 @@ object EventsStream {
     val n = size(langs).cast("double")
     def term(c: Column): Column = {
       val p = c.cast("double") / n
-      when(c > 0, floor(-p * log(p) * 1e9 + lit(0.5)).cast("long"))
+      when(c > 0, graft.functions.Exact.entropyTerm(p))
         .otherwise(lit(0L))
     }
     val nLangs = cnts.map(c => when(c > 0, lit(1L)).otherwise(lit(0L))).reduce(_ + _)

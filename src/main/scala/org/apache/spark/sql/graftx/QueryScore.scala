@@ -80,6 +80,8 @@ object VecTable {
   * `min(|cv|, dim)` elements with the query component as the LEFT factor
   * (IEEE multiplication is commutative bitwise, the fold order is what
   * matters); the floor-of-double is Spark's own `(long) Math.floor(x)`.
+  * The quantization is `graft.functions.Exact.e9`'s rule, spelled natively
+  * here because `graftx` does not depend on `graft.*`.
   * Results are bit-identical, gated by the q255/q268/q272/q273 oracles
   * and the expression-level parity test in VectorOpsSpec.
   */

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.functions.{concat, lit, lpad, substring}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -130,6 +131,25 @@ case class TopKPairs(
 }
 
 object TopKPairs {
+
+  /** 10^18: scores in [0, 10^18) invert to 19-digit key prefixes. */
+  private val Desc = 1000000000000000000L
+
+  /** Key whose binary string order is (`score` DESC, `tail` ASC):
+    * `lpad(10^18 − score, 19, '0') ‖ '|' ‖ tail`, for BIGINT scores in
+    * [0, 10^18). The prefix is fixed-width, so the tail only breaks ties.
+    */
+  def descKey(score: Column, tail: Column): Column =
+    concat(lpad((lit(Desc) - score).cast(StringType), 19, "0"), lit("|"), tail)
+
+  /** [[descKey]] with a non-negative BIGINT id as the tail, zero-padded
+    * to 19 digits so string order is id order.
+    */
+  def descIdKey(score: Column, id: Column): Column =
+    descKey(score, lpad(id.cast(StringType), 19, "0"))
+
+  /** The score a [[descKey]] encodes. */
+  def descScore(key: Column): Column = lit(Desc) - substring(key, 1, 19).cast(LongType)
 
   private val cmp = new java.util.Comparator[(UTF8String, Long)] {
     override def compare(a: (UTF8String, Long), b: (UTF8String, Long)): Int = {

@@ -1855,6 +1855,22 @@ class PlanQualitySpec extends SparkSpec {
     assert(folds.size == 1, folds.mkString("log-prob fold outside CurationQueries.sumLogp:\n", "\n", ""))
   }
 
+  test("one owner each for the 1e-9 quantization, the top-k key constant and DECIMAL(18,9)") {
+    // oracle parity rests on every engine applying these rules in the same
+    // order; a pasted copy can drift from its owner unseen. stripMargin
+    // lines (`|...`) are the DuckDB oracle SQL, which spells them literally.
+    def outside(call: scala.util.matching.Regex, owners: String*): Seq[String] =
+      codeLines(call, owners: _*).filterNot(_.split(": ", 2)(1).startsWith("|"))
+    val quant = outside("""1e9\s*\+\s*(lit\()?0\.5""".r,
+      "graft/functions/Exact.scala", "org/apache/spark/sql/graftx/QueryScore.scala")
+    assert(quant.isEmpty, quant.mkString("1e-9 quantization outside Exact:\n", "\n", ""))
+    val big = outside("1000000000000000000L".r)
+    assert(big.size == 1 && big.head.contains("graftx/TopKPairs.scala"),
+      big.mkString("10^18 top-k key constant outside TopKPairs:\n", "\n", ""))
+    val d9 = outside("""DecimalType\(18,\s*9\)""".r, "graft/functions/Exact.scala")
+    assert(d9.isEmpty, d9.mkString("DECIMAL(18,9) outside Exact:\n", "\n", ""))
+  }
+
   test("every scaladoc in src/main sits on a name: no /** block followed only by another") {
     // the scaladoc tool attaches only the last of two stacked blocks, so
     // the first documents nothing or the wrong name

@@ -419,4 +419,32 @@ class PropertySpec extends SparkSpec {
     }
     assert(splitTies > 0, "no generated case split a remainder tie")
   }
+
+  test("Exact.q9/e9: column forms equal the driver-side forms bit for bit") {
+    import graft.functions.Exact
+    // half-unit boundaries: x·1e9 + 0.5 lands on an integer near
+    // x = (k + ½)/1e9, so test that point and its neighbours one ulp away
+    val gen: Gen[Seq[Double]] = for {
+      plain <- Gen.listOfN(30, Gen.choose(-1e6, 1e6))
+      small <- Gen.listOfN(30, Gen.choose(-1e-3, 1e-3))
+      ks    <- Gen.listOfN(20, Gen.choose(-4000000000L, 4000000000L))
+    } yield Seq(0.0, -0.0, 5e-10, -5e-10) ++ plain ++ small ++ ks.flatMap { k =>
+      val h = (k + 0.5) / 1e9
+      Seq(Math.nextDown(h), h, Math.nextUp(h))
+    }
+    forSeeds(gen) { xs =>
+      val df = xs.toDF("x")
+      // the local relation is folded by the interpreter; the repartitioned
+      // copy runs the generated code
+      for (in <- Seq(df, df.repartition(2))) {
+        in.select(col("x"), Exact.q9(col("x")), Exact.e9(col("x"))).collect().foreach { r =>
+          val x = r.getDouble(0)
+          assert(java.lang.Double.doubleToRawLongBits(r.getDouble(1)) ==
+                   java.lang.Double.doubleToRawLongBits(Exact.q9(x)), s"q9($x)")
+          assert(r.getLong(2) == Exact.e9(x), s"e9($x)")
+        }
+      }
+    }
+  }
 }
+

@@ -77,4 +77,17 @@ class TopKSpec extends SparkSpec {
     val base = Seq(("g", "k", 1L), ("g", "k", 1L), ("g", "z", 9L)).toDF("g", "key", "id")
     assert(viaDistinctAgg(base, 2) == Set(("g", "k", 1L, 1L), ("g", "z", 9L, 2L)))
   }
+
+  test("descScore inverts descIdKey on [0, 10^18); binary key order is (score desc, id asc)") {
+    val rnd = new scala.util.Random(7)
+    val scores = Seq(0L, 1L, 9L, 10L, 999999999L, 999999999999999999L) ++
+      Seq.fill(20)(math.abs(rnd.nextLong()) % 1000000000000000000L)
+    val ids = Seq(0L, 1L, 10L, 9999999999L) ++ Seq.fill(3)(math.abs(rnd.nextLong()))
+    val keyed = (for (sc <- scores; id <- ids) yield (sc, id)).toDF("score", "id")
+      .select($"score", $"id", TopKPairs.descIdKey($"score", $"id").as("key"))
+    val back = keyed.select($"score", TopKPairs.descScore($"key")).as[(Long, Long)].collect()
+    assert(back.forall { case (sc, got) => sc == got })
+    val ordered = keyed.orderBy($"key").select($"score", $"id").as[(Long, Long)].collect().toSeq
+    assert(ordered == ordered.sortBy { case (sc, id) => (-sc, id) })
+  }
 }
