@@ -19,32 +19,12 @@ object Text {
     regexp_count(text, lit("\\w+|[^\\w\\s]")).cast(LongType)
 
   /** Distinct word-level n-gram shingles (default trigram) — the unit for
-    * Jaccard / MinHash dedup. Deterministic order-independent set.
-    *
-    * Built with `zip_with` over shifted `slice`s rather than indexing
-    * inside a `transform` lambda: higher-order functions evaluate
-    * interpreted with no common-subexpression elimination, so a lambda
-    * that references the token array re-runs `split` per element —
-    * O(tokens²) per document. `zip_with` arguments are evaluated once,
-    * keeping this linear.
+    * Jaccard / MinHash dedup. Deterministic order-independent set. Native
+    * ([[org.apache.spark.sql.graftx.ShingleArray]]); TextSpec pins it to
+    * the composable-built-ins reference form.
     */
   def shingles(text: Column, n: Int = 3): Column =
     org.apache.spark.sql.graftx.ShingleArray.shinglesNative(text, n)
-
-  /** The composable-built-ins form of [[shingles]], kept as the reference
-    * semantics the native expression must match (TextSpec asserts
-    * equality). ~40× slower: HOFs evaluate interpreted with intermediate
-    * arrays per step.
-    */
-  def shinglesComposable(text: Column, n: Int = 3): Column = {
-    val toks = tokens(text)
-    val m    = greatest(size(toks) - (n - 1), lit(0))
-    val base = slice(toks, lit(1), m)
-    val grams = (1 until n).foldLeft(base) { (acc, o) =>
-      zip_with(acc, slice(toks, lit(1 + o), m), (a, b) => concat(a, lit(" "), b))
-    }
-    when(size(toks) >= n, array_distinct(grams)).otherwise(array().cast("array<string>"))
-  }
 
   /** Canonical document fingerprint: md5 of the sorted token multiset —
     * catches reordered-but-identical-content duplicates.
@@ -54,18 +34,11 @@ object Text {
 
   /** Number of tokens contained in a fixed word list (total hits, not
     * distinct) — the building block for stopword-based language scoring.
+    * Native; TextSpec pins it bit-for-bit to the composable reference
+    * form.
     */
   def wordListHits(toks: Column, words: Seq[String]): Column =
     org.apache.spark.sql.graftx.WordSetHits.hitsNative(toks, words)
-
-  /** The composable-built-ins form — the reference semantics the native
-    * expression must match bit-for-bit (TextSpec), and the fallback if a
-    * build lacks the custom expression.
-    */
-  def wordListHitsComposable(toks: Column, words: Seq[String]): Column = {
-    val w = array(words.map(lit): _*)
-    size(filter(toks, t => array_contains(w, t))).cast(LongType)
-  }
 
   /** Fraction of characters in the CJK unified ideograph block — a cheap,
     * deterministic signal for zh/ja text where stopword lists don't apply.

@@ -22,13 +22,6 @@ object Vectors {
   def dot(a: Column, b: Column): Column =
     org.apache.spark.sql.graftx.DotProduct.dotNative(a, b)
 
-  /** The composable-built-ins form, kept as the reference semantics the
-    * native expression must match (and as the fallback if an engine build
-    * lacks the custom expression).
-    */
-  def dotComposable(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine similarity; null when either norm is zero. */

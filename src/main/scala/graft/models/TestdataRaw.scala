@@ -2,7 +2,7 @@ package graft.models
 
 import graft.core.Tables
 import graft.functions.Exact._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -31,17 +31,44 @@ object TestdataRaw {
     * double ops in Spark and DuckDB, unlike each engine's round(), which
     * disagree on values whose binary form sits a hair under a half-cent.
     */
-  private def r2(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private def r2(c: Column): Column =
     floor(c * 100 + 0.5) / 100
 
-  private def meta(dataset: String): Seq[org.apache.spark.sql.Column] = Seq(
-    lit(dataset).as("dataset_code"),
-    lit(ExtractedAt).cast(TimestampType).as("extracted_at"))
-
-  def rawGdp(t: Tables): DataFrame = {
-    val perNation = t.orders
+  /** `facts` (orders, or lineitem ⋈ orders) joined to each order's
+    * customer and, broadcast, the customer's nation — the `n_name`
+    * geo code every raw table groups by.
+    */
+  private def byNation(t: Tables, facts: DataFrame): DataFrame =
+    facts
       .join(t.customer, col("o_custkey") === col("c_custkey"))
       .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
+
+  /** `monthly` plus one annual (`YYYY`) row per (geo, year) — the average
+    * of its months — which staging's length-≥7 guard must drop.
+    */
+  private def withAnnualNoise(monthly: DataFrame): DataFrame = {
+    val annualNoise = monthly
+      .withColumn("time_code", substring(col("time_code"), 1, 4))
+      .groupBy(col("geo_code"), col("time_code"))
+      .agg(r2(avgExact(col("value"), 6)).as("value"))
+    monthly.unionByName(annualNoise)
+  }
+
+  /** The raw-table column head of the extract DDL — dataset and
+    * extraction stamp, value, frequency, geo and time codes with their
+    * labels — then the table's `dims`.
+    */
+  private def rawTable(df: DataFrame, dataset: String, freqCode: String,
+                       freqLabel: String, dims: Column*): DataFrame =
+    df.select((Seq(
+      lit(dataset).as("dataset_code"),
+      lit(ExtractedAt).cast(TimestampType).as("extracted_at"),
+      col("value"), lit(freqCode).as("freq_code"), lit(freqLabel).as("freq_label"),
+      col("geo_code"), col("geo_code").as("geo_label"),
+      col("time_code"), col("time_code").as("time_label")) ++ dims): _*)
+
+  def rawGdp(t: Tables): DataFrame = {
+    val perNation = byNation(t, t.orders)
       .groupBy(col("n_name").as("geo_code"),
                year(col("o_orderdate")).cast(StringType).as("time_code"))
       .agg(r2(sumExact(col("o_totalprice")) / 1000.0).as("value"))
@@ -49,77 +76,47 @@ object TestdataRaw {
       .groupBy(col("time_code"))
       .agg(r2(sumExact(col("value"))).as("value"))
       .withColumn("geo_code", lit("ALLNATIONS"))
-    perNation.unionByName(euRow)
-      .select(meta("nama_10_gdp") ++ Seq(
-        col("value"), lit("A").as("freq_code"), lit("Annual").as("freq_label"),
-        col("geo_code"), col("geo_code").as("geo_label"),
-        col("time_code"), col("time_code").as("time_label"),
-        lit("CP_MEUR").as("unit_code"),
-        lit("Current prices, million euro").as("unit_label"),
-        lit("B1GQ").as("na_item_code"),
-        lit("Gross domestic product at market prices").as("na_item_label")): _*)
+    rawTable(perNation.unionByName(euRow), "nama_10_gdp", "A", "Annual",
+      lit("CP_MEUR").as("unit_code"),
+      lit("Current prices, million euro").as("unit_label"),
+      lit("B1GQ").as("na_item_code"),
+      lit("Gross domestic product at market prices").as("na_item_label"))
   }
 
   def rawPopulation(t: Tables): DataFrame =
-    t.orders
-      .join(t.customer, col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
-      .groupBy(col("n_name").as("geo_code"),
-               year(col("o_orderdate")).cast(StringType).as("time_code"))
-      .agg((countDistinct(col("c_custkey")) * 1000).cast(DoubleType).as("value"))
-      .select(meta("demo_pjan") ++ Seq(
-        col("value"), lit("A").as("freq_code"), lit("Annual").as("freq_label"),
-        col("geo_code"), col("geo_code").as("geo_label"),
-        col("time_code"), col("time_code").as("time_label"),
-        lit("T").as("sex_code"), lit("Total").as("sex_label"),
-        lit("TOTAL").as("age_code"), lit("Total").as("age_label")): _*)
+    rawTable(byNation(t, t.orders)
+        .groupBy(col("n_name").as("geo_code"),
+                 year(col("o_orderdate")).cast(StringType).as("time_code"))
+        .agg((countDistinct(col("c_custkey")) * 1000).cast(DoubleType).as("value")),
+      "demo_pjan", "A", "Annual",
+      lit("T").as("sex_code"), lit("Total").as("sex_label"),
+      lit("TOTAL").as("age_code"), lit("Total").as("age_label"))
 
   /** Monthly unemployment-style rate: avg order price scaled into a
     * plausible 0-50 band; plus annual rows the staging filter must drop.
     */
   def rawUnemployment(t: Tables): DataFrame = {
-    val monthly = t.orders
-      .join(t.customer, col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
+    val monthly = byNation(t, t.orders)
       .groupBy(col("n_name").as("geo_code"),
                date_format(col("o_orderdate"), "yyyy-MM").as("time_code"))
       .agg(r2(avgExact(col("o_totalprice")) / 20000.0).as("value"))
-    val annualNoise = monthly
-      .withColumn("time_code", substring(col("time_code"), 1, 4))
-      .groupBy(col("geo_code"), col("time_code"))
-      .agg(r2(avgExact(col("value"), 6)).as("value"))
-    monthly.unionByName(annualNoise)
-      .select(meta("une_rt_m") ++ Seq(
-        col("value"), lit("M").as("freq_code"), lit("Monthly").as("freq_label"),
-        col("geo_code"), col("geo_code").as("geo_label"),
-        col("time_code"), col("time_code").as("time_label"),
-        lit("SA").as("s_adj_code"), lit("Seasonally adjusted").as("s_adj_label"),
-        lit("Y15-74").as("age_code"), lit("15-74 years").as("age_label"),
-        lit("PC_ACT").as("unit_code"), lit("Percentage of active population").as("unit_label"),
-        lit("T").as("sex_code"), lit("Total").as("sex_label")): _*)
+    rawTable(withAnnualNoise(monthly), "une_rt_m", "M", "Monthly",
+      lit("SA").as("s_adj_code"), lit("Seasonally adjusted").as("s_adj_label"),
+      lit("Y15-74").as("age_code"), lit("15-74 years").as("age_label"),
+      lit("PC_ACT").as("unit_code"), lit("Percentage of active population").as("unit_label"),
+      lit("T").as("sex_code"), lit("Total").as("sex_label"))
   }
 
   /** Monthly inflation-style MoM rate from lineitem discounts (can be
     * negative); plus annual rows to drop.
     */
   def rawInflation(t: Tables): DataFrame = {
-    val monthly = t.lineitem
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .join(t.customer, col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t.nation), col("c_nationkey") === col("n_nationkey"))
+    val monthly = byNation(t, t.lineitem.join(t.orders, col("l_orderkey") === col("o_orderkey")))
       .groupBy(col("n_name").as("geo_code"),
                date_format(col("l_shipdate"), "yyyy-MM").as("time_code"))
       .agg(r2(avgExact(col("l_discount"), 6) * 100 - 2.5).as("value"))
-    val annualNoise = monthly
-      .withColumn("time_code", substring(col("time_code"), 1, 4))
-      .groupBy(col("geo_code"), col("time_code"))
-      .agg(r2(avgExact(col("value"), 6)).as("value"))
-    monthly.unionByName(annualNoise)
-      .select(meta("prc_hicp_mmor") ++ Seq(
-        col("value"), lit("M").as("freq_code"), lit("Monthly").as("freq_label"),
-        col("geo_code"), col("geo_code").as("geo_label"),
-        col("time_code"), col("time_code").as("time_label"),
-        lit("CP00").as("coicop_code"), lit("All-items HICP").as("coicop_label")): _*)
+    rawTable(withAnnualNoise(monthly), "prc_hicp_mmor", "M", "Monthly",
+      lit("CP00").as("coicop_code"), lit("All-items HICP").as("coicop_label"))
   }
 
   /** Seed analog of `seeds/country_metadata.csv`: one row per nation with

@@ -3,6 +3,7 @@ package graft.operators
 import graft.core.Materialize
 import graft.functions.Text
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftx.CharGramArray
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
@@ -138,8 +139,6 @@ object Dedup {
     */
   def jaccardCandidates(sh: DataFrame, threshold: Double,
                         materialize: Boolean = true): DataFrame = {
-    val ex = sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
-    val dfreq = ex.groupBy(col("shingle")).agg(count(lit(1)).as("df_count"))
     // AllPairs asymmetric prefixes (Bayardo et al.): the larger document
     // PROBES with prefix |S|−⌈t·|S|⌉+1; the smaller document is INDEXED
     // with the shorter prefix |S|+1−⌈(2t/(1+t))·|S|⌉. The 1e-9 slack on
@@ -151,22 +150,10 @@ object Dedup {
         (nS - ceil(lit(threshold) * nS - 1e-9) + 1).cast(LongType),
         (nS + 1 - ceil(lit(2 * threshold / (1 + threshold)) * nS - 1e-9)).cast(LongType))
       else (nS, nS)
-    val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("df_count"), col("shingle"))
-    // n_shingles rides the SAME doc_id window as the prefix rank (count
-    // over the unordered-frame spec shares the rank window's exchange +
-    // sort), so the doc-length join back to `sh` — a whole extra shuffle
-    // of the exploded postings — is gone.
-    val wDocAll = Window.partitionBy(col("doc_id"))
     // Cache: the candidate self-join consumes the ranked prefix twice;
-    // without a cut the dfreq-join + window re-run per side. Join key is
-    // an 8-byte xxhash64 of the shingle, not the string — less shuffle
-    // volume. Freed before return (candidates are a tiny pair set).
-    val ranked = ex.join(dfreq, Seq("shingle"))
-      .withColumn("rn", row_number().over(wDoc))
-      .withColumn("n_shingles", count(lit(1)).over(wDocAll))
-      .select(col("doc_id"), col("n_shingles"), col("rn"),
-              probeLen.as("probe_len"), indexLen.as("index_len"),
-              xxhash64(col("shingle")).as("shingle_h"))
+    // without a cut the dfreq-join + window re-run per side. Freed before
+    // return (candidates are a tiny pair set).
+    val ranked = rankedShingles(sh, probeLen.as("probe_len"), indexLen.as("index_len"))
     val probe = ranked.filter(col("rn") <= col("probe_len"))
       .select(col("doc_id").as("doc_b"), col("n_shingles").as("size_b"),
               col("rn").as("rn_b"), col("shingle_h"))
@@ -194,6 +181,45 @@ object Dedup {
     }
   }
 
+  /** The AllPairs global order of [[jaccardCandidates]] and
+    * [[containmentPairs]]: one row per (document, distinct shingle) with
+    * the shingle's rank `rn` in its document under (document frequency
+    * asc, shingle asc) — rare shingles first — the document size
+    * `n_shingles`, the caller's `prefixLens` over `n_shingles`, and the
+    * join key `shingle_h`: an 8-byte xxhash64 of the shingle, not the
+    * string, for less shuffle volume. `n_shingles` rides the SAME doc_id
+    * window as the rank (count over the unordered-frame spec shares the
+    * rank window's exchange + sort), so no doc-length join back to `sh`
+    * (a whole extra shuffle of the exploded postings) is needed.
+    */
+  private def rankedShingles(sh: DataFrame, prefixLens: Column*): DataFrame = {
+    val ex = sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
+    val dfreq = ex.groupBy(col("shingle")).agg(count(lit(1)).as("df_count"))
+    val wDoc = Window.partitionBy(col("doc_id")).orderBy(col("df_count"), col("shingle"))
+    val wDocAll = Window.partitionBy(col("doc_id"))
+    ex.join(dfreq, Seq("shingle"))
+      .withColumn("rn", row_number().over(wDoc))
+      .withColumn("n_shingles", count(lit(1)).over(wDocAll))
+      .select((Seq(col("doc_id"), col("n_shingles"), col("rn")) ++ prefixLens :+
+               xxhash64(col("shingle")).as("shingle_h")): _*)
+  }
+
+  /** Candidate (doc_a, doc_b) pairs joined to both documents' full
+    * shingle sets (sh_a, size_a, sh_b, size_b) with `shared` = |A ∩ B|
+    * ([[org.apache.spark.sql.graftx.IntersectSize]]): the exact
+    * verification input of [[verifyPairs]] and [[containmentPairs]].
+    */
+  private def sharedShingles(cand: DataFrame, sh: DataFrame): DataFrame = {
+    val a = sh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a"),
+                      col("n_shingles").as("size_a"))
+    val b = sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b"),
+                      col("n_shingles").as("size_b"))
+    cand.join(a, Seq("doc_a")).join(b, Seq("doc_b"))
+      .withColumn("shared",
+        org.apache.spark.sql.graftx.IntersectSize
+          .intersectSize(col("sh_a"), col("sh_b")).cast(LongType))
+  }
+
   /** Exact containment (asymmetric Jaccard) near-superset pairs:
     * |A ∩ B| / |A| ≥ t with A the SMALLER set (ties to the lower id) —
     * the inclusion detector symmetric Jaccard structurally misses: a
@@ -218,15 +244,7 @@ object Dedup {
     require(threshold > 0 && threshold <= 1, s"threshold out of (0,1]: $threshold")
     val sh = shingled(df, idCol, textCol, n)
     withCachesIf(materialize, sh) {
-      val ex    = sh.select(col("doc_id"), explode(col("shingles")).as("shingle"))
-      val dfreq = ex.groupBy(col("shingle")).agg(count(lit(1)).as("df_count"))
-      val wDoc  = Window.partitionBy(col("doc_id")).orderBy(col("df_count"), col("shingle"))
-      val wDocAll = Window.partitionBy(col("doc_id"))
-      val ranked = ex.join(dfreq, Seq("shingle"))
-        .withColumn("rn", row_number().over(wDoc))
-        .withColumn("n_shingles", count(lit(1)).over(wDocAll))
-        .select(col("doc_id"), col("n_shingles"), col("rn"),
-                xxhash64(col("shingle")).as("shingle_h"))
+      val ranked = rankedShingles(sh)
       val probeLen = (col("n_shingles") -
         ceil(lit(threshold) * col("n_shingles") - 1e-9) + 1).cast(LongType)
       val probe = ranked.filter(col("rn") <= probeLen)
@@ -242,14 +260,7 @@ object Dedup {
           .select(col("doc_a"), col("doc_b"))
           .distinct()
       }
-      val a = sh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a"),
-                        col("n_shingles").as("size_a"))
-      val b = sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b"),
-                        col("n_shingles").as("size_b"))
-      cand.join(a, Seq("doc_a")).join(b, Seq("doc_b"))
-        .withColumn("shared",
-          org.apache.spark.sql.graftx.IntersectSize
-            .intersectSize(col("sh_a"), col("sh_b")).cast(LongType))
+      sharedShingles(cand, sh)
         .withColumn("containment",
           col("shared").cast(DoubleType) / col("size_a").cast(DoubleType))
         .filter(col("containment") >= threshold)
@@ -300,11 +311,7 @@ object Dedup {
     */
   private def substrCov(df: DataFrame, idCol: String, textCol: String,
                         k: Int): DataFrame = {
-    import org.apache.spark.sql.graftx.CharGramArray
-    val g = df.select(col(idCol).as("doc_id"),
-                      posexplode(CharGramArray.charGrams(col(textCol), k)))
-      .select(col("doc_id"), (col("pos") + 1).cast(LongType).as("pos"),
-              col("col").as("gram"))
+    val g = substrGrams(df, idCol, textCol, k)
     val shared = g.groupBy(col("gram"))
       .agg(countDistinct(col("doc_id")).as("ndocs"))
       .filter(col("ndocs") >= 2)
@@ -312,29 +319,44 @@ object Dedup {
     g.join(shared, Seq("gram")).select(col("doc_id"), col("pos"))
   }
 
+  /** The ExactSubstr family's one gram scan: stride-1 k-grams
+    * ([[org.apache.spark.sql.graftx.CharGramArray]], native) as
+    * (doc_id, pos, gram) rows with a 1-based `pos`.
+    */
+  private def substrGrams(df: DataFrame, idCol: String, textCol: String,
+                          k: Int): DataFrame =
+    df.select(col(idCol).as("doc_id"),
+              posexplode(CharGramArray.charGrams(col(textCol), k)))
+      .select(col("doc_id"), (col("pos") + 1).cast(LongType).as("pos"),
+              col("col").as("gram"))
+
+  /** The delta-ingest head of the ExactSubstr family: the (doc_id, pos)
+    * set of 1-based delta gram positions whose k-gram occurs anywhere in
+    * `base`. The base collapses to its DISTINCT gram set and each delta
+    * gram probes it with one equi-join, so cost is ∝ delta size plus the
+    * one-off base gram build.
+    */
+  private def substrCovAgainst(delta: DataFrame, base: DataFrame, idCol: String,
+                               textCol: String, k: Int): DataFrame = {
+    val g = substrGrams(delta, idCol, textCol, k)
+    val baseGrams = base
+      .select(explode(CharGramArray.charGrams(col(textCol), k)).as("gram"))
+      .distinct()
+    g.join(baseGrams, Seq("gram")).select(col("doc_id"), col("pos"))
+  }
+
   /** Incremental ExactSubstr — the delta-ingest form of
     * [[exactSubstrCoverage]] (the q91 snapshot-dedup discipline): for
     * each NEW document, the exact character spans occurring verbatim
     * (length ≥ k) anywhere in the EXISTING corpus. At 100 TB you do not
-    * re-run corpus×corpus dedup per crawl increment: the base side
-    * collapses to its DISTINCT gram set once (in production: a
-    * maintained gram index, bucketable by gram key), and each delta doc
-    * probes it with one equi-join — cost ∝ delta size, not corpus size,
-    * plus the one-off index build.
+    * re-run corpus×corpus dedup per crawl increment: [[substrCovAgainst]]
+    * probes the base's distinct gram set (in production: a maintained
+    * gram index, bucketable by gram key).
     */
   def exactSubstrAgainst(delta: DataFrame, base: DataFrame, idCol: String,
-                         textCol: String, k: Int): DataFrame = {
-    import org.apache.spark.sql.graftx.CharGramArray
-    val g = delta.select(col(idCol).as("doc_id"),
-                         posexplode(CharGramArray.charGrams(col(textCol), k)))
-      .select(col("doc_id"), (col("pos") + 1).cast(LongType).as("pos"),
-              col("col").as("gram"))
-    val baseGrams = base
-      .select(explode(CharGramArray.charGrams(col(textCol), k)).as("gram"))
-      .distinct()
-    val cov = g.join(baseGrams, Seq("gram")).select(col("doc_id"), col("pos"))
-    substrSpanStats(delta.select(col(idCol).as("doc_id")), cov, k)
-  }
+                         textCol: String, k: Int): DataFrame =
+    substrSpanStats(delta.select(col(idCol).as("doc_id")),
+                    substrCovAgainst(delta, base, idCol, textCol, k), k)
 
   /** Covered gram extents [pos, pos+k) → maximal merged spans
     * (doc_id, s, e), 1-based character extents [s, e), disjoint per doc.
@@ -401,24 +423,15 @@ object Dedup {
 
   /** Incremental REMOVAL — [[exactSubstrRemediate]]'s delta-ingest form
     * (the q133 discipline): each NEW document is cleaned of every span
-    * occurring verbatim in the EXISTING corpus, probing the base's
-    * DISTINCT gram set with one equi-join — cost ∝ delta size. The base
-    * itself is untouched (it was remediated when IT was the delta).
+    * occurring verbatim in the EXISTING corpus ([[substrCovAgainst]]).
+    * The base itself is untouched (it was remediated when IT was the
+    * delta).
     */
   def exactSubstrRemediateAgainst(delta: DataFrame, base: DataFrame,
                                   idCol: String, textCol: String,
-                                  k: Int, minChars: Int): DataFrame = {
-    import org.apache.spark.sql.graftx.CharGramArray
-    val g = delta.select(col(idCol).as("doc_id"),
-                         posexplode(CharGramArray.charGrams(col(textCol), k)))
-      .select(col("doc_id"), (col("pos") + 1).cast(LongType).as("pos"),
-              col("col").as("gram"))
-    val baseGrams = base
-      .select(explode(CharGramArray.charGrams(col(textCol), k)).as("gram"))
-      .distinct()
-    val cov = g.join(baseGrams, Seq("gram")).select(col("doc_id"), col("pos"))
-    remediateTail(delta, idCol, textCol, mergedSpans(cov, k), minChars)
-  }
+                                  k: Int, minChars: Int): DataFrame =
+    remediateTail(delta, idCol, textCol,
+      mergedSpans(substrCovAgainst(delta, base, idCol, textCol, k), k), minChars)
 
   /** Shared removal tail: fold a document's merged spans into the
     * residual text (see [[exactSubstrRemediate]] for the cost argument).
@@ -536,6 +549,54 @@ object Dedup {
       .filter(col("__n") > 1L)
       .drop("__n")
 
+  /** Adds `keep_chunk` to a [[hashedChunks]] frame: true on each chunk
+    * hash's first occurrence (minimum packed key `k`) within the frame.
+    * The flag comes from a groupBy + join-back on the chunk HASH
+    * ([[dupMinKeys]]; md5, so the exchange carries 32-hex keys, not chunk
+    * text), never a window over the chunk: a boilerplate chunk
+    * duplicated 10⁶–10⁸× would funnel through one WindowExec task, while
+    * the partial agg bounds it map-side and the dup-only right side
+    * joins back small (see [[attachCanonical]]'s rationale). Singletons
+    * keep via the null `__min_k`.
+    *
+    * `base` is a persisted (chunk_hash) index of chunks kept earlier:
+    * with it a chunk must also miss the index (one hash-equi left probe,
+    * `in_base` null), and the within-frame flag is `first_in_delta`.
+    */
+  private[graft] def keepFirstChunks(hashed: DataFrame, base: Option[DataFrame]): DataFrame = {
+    val first = col("__min_k").isNull || col("k") === col("__min_k")
+    val keyed = hashed.join(dupMinKeys(hashed), Seq("chunk_hash"), "left")
+    base match {
+      case None => keyed.withColumn("keep_chunk", first)
+      case Some(idx) =>
+        keyed.withColumn("first_in_delta", first)
+          .drop("__min_k")
+          .join(idx.select(col("chunk_hash"), lit(true).as("in_base")),
+                Seq("chunk_hash"), "left")
+          .withColumn("keep_chunk", col("first_in_delta") && col("in_base").isNull)
+    }
+  }
+
+  /** Per-document readout of a [[keepFirstChunks]] frame: (doc_id,
+    * n_chunks, kept_chunks, `keptCol` = the kept chunks' `sizeCol` sum,
+    * residual_text = the kept chunk texts in chunk order, joined by
+    * `separator`). collect_list order is partition-dependent, so sorting
+    * the (chunk_idx, chunk_text) structs restores document order; when()
+    * without otherwise yields NULL for cut chunks, which collect_list
+    * drops.
+    */
+  private[graft] def reassembleKept(keyed: DataFrame, sizeCol: String, keptCol: String,
+                     separator: String): DataFrame =
+    keyed.groupBy(col("doc_id"))
+      .agg(max(col("n_chunks")).as("n_chunks"),
+           sum(when(col("keep_chunk"), 1L).otherwise(0L)).as("kept_chunks"),
+           sum(when(col("keep_chunk"), col(sizeCol)).otherwise(0L)).as(keptCol),
+           concat_ws(separator, transform(
+             array_sort(collect_list(
+               when(col("keep_chunk"),
+                    struct(col("chunk_idx"), col("chunk_text"))))),
+             x => x.getField("chunk_text"))).as("residual_text"))
+
   /** Chunk-level (line-level) dedup with document reconstruction — the
     * RefinedWeb/CCNet-style granularity between document-level dedup
     * ([[exact]]) and substring-level dedup ([[exactSubstrCoverage]]):
@@ -564,34 +625,10 @@ object Dedup {
     * (doc_id, n_chunks, kept_chunks, kept_tokens, residual_text).
     */
   def chunkDedup(df: DataFrame, idCol: String, textCol: String,
-                 chunkTokens: Int): DataFrame = {
-    // First-occurrence keep flag via groupBy + join-back on the chunk
-    // HASH (md5 — the exchange carries 32-hex keys, not chunk text), not
-    // a window over the chunk: a boilerplate chunk duplicated 10⁶–10⁸×
-    // would funnel through one WindowExec task, while the partial agg
-    // here bounds it map-side and the dup-only right side joins back
-    // small (see attachCanonical's rationale). Singletons keep via the
-    // null-min coalesce.
-    val hashed = hashedChunks(chunkFrame(df, idCol, textCol, chunkTokens))
-    val keyed = hashed
-      .join(dupMinKeys(hashed), Seq("chunk_hash"), "left")
-      .withColumn("keep_chunk",
-        col("__min_k").isNull || col("k") === col("__min_k"))
-    keyed.groupBy(col("doc_id"))
-      .agg(max(col("n_chunks")).as("n_chunks"),
-           sum(when(col("keep_chunk"), 1L).otherwise(0L)).as("kept_chunks"),
-           sum(when(col("keep_chunk"), col("chunk_toks")).otherwise(0L))
-             .as("kept_tokens"),
-           // collect_list order is partition-dependent; sorting the
-           // (chunk_idx, chunk_text) structs restores document order.
-           // when() without otherwise yields NULL for cut chunks, which
-           // collect_list drops.
-           concat_ws(" ", transform(
-             array_sort(collect_list(
-               when(col("keep_chunk"),
-                    struct(col("chunk_idx"), col("chunk_text"))))),
-             x => x.getField("chunk_text"))).as("residual_text"))
-  }
+                 chunkTokens: Int): DataFrame =
+    reassembleKept(
+      keepFirstChunks(hashedChunks(chunkFrame(df, idCol, textCol, chunkTokens)), None),
+      "chunk_toks", "kept_tokens", " ")
 
   /** CDC parameters shared by the q225/q226 defs, their oracles, and the
     * specs: 8-cp grams, divisor 64 → expected chunk ≈ 64 chars. One
@@ -628,50 +665,27 @@ object Dedup {
     * `doc_id·2^20 + chunk_idx` key — [[packedChunkKey]]'s loud bounds),
     * and every document reassembles from its kept chunks in order
     * (empty-string separator: CDC chunks partition the exact character
-    * stream, unlike token chunks which re-join on spaces). Same
-    * flooded-key discipline as [[chunkDedup]]: first-occurrence via
-    * groupBy + join-back on the chunk md5 — a boilerplate chunk
-    * duplicated 10⁶–10⁸× is bounded map-side by the partial agg, never
-    * funneled through a window task.
+    * stream, unlike token chunks which re-join on spaces). Keep flag and
+    * reassembly are [[chunkDedup]]'s ([[keepFirstChunks]],
+    * [[reassembleKept]]).
     *
     * Returns one row per input document:
     * (doc_id, n_chunks, kept_chunks, kept_chars, residual_text).
     */
-  def cdcChunkDedup(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val hashed = hashedChunks(cdcChunkFrame(df, idCol, textCol))
-    hashed.join(dupMinKeys(hashed), Seq("chunk_hash"), "left")
-      .withColumn("keep_chunk",
-        col("__min_k").isNull || col("k") === col("__min_k"))
-      .groupBy(col("doc_id"))
-      .agg(max(col("n_chunks")).as("n_chunks"),
-           sum(when(col("keep_chunk"), 1L).otherwise(0L)).as("kept_chunks"),
-           sum(when(col("keep_chunk"), col("chunk_chars")).otherwise(0L))
-             .as("kept_chars"),
-           concat_ws("", transform(
-             array_sort(collect_list(
-               when(col("keep_chunk"),
-                    struct(col("chunk_idx"), col("chunk_text"))))),
-             x => x.getField("chunk_text"))).as("residual_text"))
-  }
+  def cdcChunkDedup(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    reassembleKept(keepFirstChunks(hashedChunks(cdcChunkFrame(df, idCol, textCol)), None),
+                   "chunk_chars", "kept_chars", "")
 
   /** Exact Jaccard verification of candidate (doc_a, doc_b) pairs against
     * the full shingle sets: shared = |A ∩ B| via `array_intersect`.
     */
-  def verifyPairs(cand: DataFrame, sh: DataFrame, threshold: Double): DataFrame = {
-    val a = sh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a"),
-                      col("n_shingles").as("size_a"))
-    val b = sh.select(col("doc_id").as("doc_b"), col("shingles").as("sh_b"),
-                      col("n_shingles").as("size_b"))
-    cand.join(a, Seq("doc_a")).join(b, Seq("doc_b"))
-      .withColumn("shared",
-        org.apache.spark.sql.graftx.IntersectSize
-          .intersectSize(col("sh_a"), col("sh_b")).cast(LongType))
+  def verifyPairs(cand: DataFrame, sh: DataFrame, threshold: Double): DataFrame =
+    sharedShingles(cand, sh)
       .withColumn("jaccard",
         col("shared").cast(DoubleType) /
           (col("size_a") + col("size_b") - col("shared")).cast(DoubleType))
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("shared"), col("jaccard"))
-  }
 
   /** 64-bit SimHash per document over distinct trigram-shingle features,
     * packed into a single signed LongType (bit 0 = MSB = the sign bit).

@@ -22,6 +22,13 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   */
 object Multimodal {
 
+  // ImageIO defaults to a FILE-backed stream cache: one temp file created
+  // and deleted per decode, hammering executor local disk; in-memory
+  // payloads never need it. Every ImageIO call of the engine goes through
+  // this object ([[readImage]], [[pngBytes]]), whose initializer runs
+  // once per JVM before any of them.
+  javax.imageio.ImageIO.setUseCache(false)
+
   final case class MediaRecord(
       media_id: Long,
       modality: String,       // image | audio | video
@@ -56,6 +63,21 @@ object Multimodal {
   def asMediaTable(df: DataFrame, idCol: String, payloadCol: String,
                    modality: String): Dataset[MediaRecord] =
     asMediaTable(df, idCol, payloadCol, lit(modality))
+
+  /** The synthetic fixture record of `id` in `modality`: a
+    * [[syntheticPng]] image, a [[syntheticWav]] clip or a
+    * [[syntheticVideo]] of (id % 4) + 2 frames, with source
+    * `synthetic://id` — the q71–q73, q101 and q104 corpora, whose oracles
+    * regenerate every payload arithmetically from the id.
+    */
+  def syntheticRecord(id: Long, modality: String): MediaRecord = {
+    val payload = modality match {
+      case "image" => syntheticPng(id)
+      case "audio" => syntheticWav(id)
+      case "video" => syntheticVideo(id, (id % 4).toInt + 2)
+    }
+    MediaRecord(id, modality, payload, s"synthetic://$id")
+  }
 
   /** Column-valued modality variant (e.g. routed per row from metadata). */
   def asMediaTable(df: DataFrame, idCol: String, payloadCol: String,
@@ -94,32 +116,48 @@ object Multimodal {
     * byte string is a data condition, not a task failure.
     */
   def imageStats(payload: Array[Byte]): Option[ImageStats] =
-    if (payload == null || payload.isEmpty) None
-    else try {
-      Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))).map { img =>
-        val w = img.getWidth
-        val h = img.getHeight
-        var sr = 0L; var sg = 0L; var sb = 0L
-        val hist = new Array[Long](3 * HistBins)
-        val binShift = 8 - Integer.numberOfTrailingZeros(HistBins) // value >> 6 for 4 bins
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val rgb = img.getRGB(x, y)
-            val r = (rgb >> 16) & 0xff; val g = (rgb >> 8) & 0xff; val b = rgb & 0xff
-            sr += r; sg += g; sb += b
-            hist(r >> binShift) += 1
-            hist(HistBins + (g >> binShift)) += 1
-            hist(2 * HistBins + (b >> binShift)) += 1
-            x += 1
-          }
-          y += 1
+    readImage(payload) { img =>
+      val w = img.getWidth
+      val h = img.getHeight
+      var sr = 0L; var sg = 0L; var sb = 0L
+      val hist = new Array[Long](3 * HistBins)
+      val binShift = 8 - Integer.numberOfTrailingZeros(HistBins) // value >> 6 for 4 bins
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          val rgb = img.getRGB(x, y)
+          val r = (rgb >> 16) & 0xff; val g = (rgb >> 8) & 0xff; val b = rgb & 0xff
+          sr += r; sg += g; sb += b
+          hist(r >> binShift) += 1
+          hist(HistBins + (g >> binShift)) += 1
+          hist(2 * HistBins + (b >> binShift)) += 1
+          x += 1
         }
-        val n = w.toLong * h
-        ImageStats(w, h, sr.toDouble / n, sg.toDouble / n, sb.toDouble / n, hist)
+        y += 1
       }
-    } catch { case _: Exception => None }
+      val n = w.toLong * h
+      ImageStats(w, h, sr.toDouble / n, sg.toDouble / n, sb.toDouble / n, hist)
+    }
+
+  /** The one image decoder (`javax.imageio`: PNG/JPEG, JDK built-in):
+    * `f` of the decoded image, or None for a null, empty or undecodable
+    * payload — an undecodable byte string is a data condition, not a
+    * task failure.
+    */
+  private def readImage[T](payload: Array[Byte])(f: java.awt.image.BufferedImage => T): Option[T] =
+    if (payload == null || payload.isEmpty) None
+    else try Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))).map(f)
+    catch { case _: Exception => None }
+
+  /** The one image encoder: `img` as PNG bytes (lossless, so a decode
+    * gives back the exact pixels).
+    */
+  private def pngBytes(img: java.awt.image.RenderedImage): Array[Byte] = {
+    val bos = new java.io.ByteArrayOutputStream()
+    javax.imageio.ImageIO.write(img, "png", bos)
+    bos.toByteArray
+  }
 
   /** Compatibility view of [[imageStats]]: (width, height, mean_r, mean_g,
     * mean_b) with means on the 0-255 scale.
@@ -134,7 +172,6 @@ object Multimodal {
     * same arithmetic from the id (q71).
     */
   def syntheticPng(id: Long): Array[Byte] = {
-    javax.imageio.ImageIO.setUseCache(false) // no temp-file stream cache
     val w = (id % 7).toInt + 1
     val h = (id % 5).toInt + 1
     val img = new java.awt.image.BufferedImage(
@@ -147,9 +184,7 @@ object Multimodal {
       while (x < w) { img.setRGB(x, y, rgb); x += 1 }
       y += 1
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    pngBytes(img)
   }
 
   /** Deterministic PATTERNED PNG fixture for perceptual hashing (q127):
@@ -163,7 +198,6 @@ object Multimodal {
     * oracle can reproduce arithmetically from the id alone.
     */
   def syntheticPatternPng(id: Long): Array[Byte] = {
-    javax.imageio.ImageIO.setUseCache(false)
     val f = (id % 16).toInt
     val v = (id / 16).toInt
     val img = new java.awt.image.BufferedImage(
@@ -179,9 +213,7 @@ object Multimodal {
       }
       y += 1
     }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
+    pngBytes(img)
   }
 
   /** Perceptual difference hash (dHash) over REAL decoded pixels: the
@@ -203,47 +235,44 @@ object Multimodal {
     * undecodable payloads.
     */
   def dHash64(payload: Array[Byte]): Option[Long] =
-    if (payload == null || payload.isEmpty) None
-    else try {
-      Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))).map { img =>
-        val w = img.getWidth
-        val h = img.getHeight
-        val cell = new Array[Long](9 * 8)
-        val cnt  = new Array[Long](9 * 8)
-        var y = 0
-        while (y < h) {
-          val r = y * 8 / h
-          var x = 0
-          while (x < w) {
-            val c = x * 9 / w
-            val rgb = img.getRGB(x, y)
-            val k = r * 9 + c
-            cell(k) +=
-              ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
-            cnt(k) += 1
-            x += 1
-          }
-          y += 1
+    readImage(payload) { img =>
+      val w = img.getWidth
+      val h = img.getHeight
+      val cell = new Array[Long](9 * 8)
+      val cnt  = new Array[Long](9 * 8)
+      var y = 0
+      while (y < h) {
+        val r = y * 8 / h
+        var x = 0
+        while (x < w) {
+          val c = x * 9 / w
+          val rgb = img.getRGB(x, y)
+          val k = r * 9 + c
+          cell(k) +=
+            ((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)
+          cnt(k) += 1
+          x += 1
         }
-        var bits = 0L
-        var rr = 0
-        while (rr < 8) {
-          var cc = 0
-          while (cc < 8) {
-            val a = rr * 9 + cc
-            val b = a + 1
-            // mean_a < mean_b via cross-multiplication: sums ≤ 765·w·h/72
-            // and counts ≤ ceil(w/9)·ceil(h/8), so the products stay far
-            // below Long overflow for any image ImageIO can hold in memory
-            if (cell(a) * cnt(b) < cell(b) * cnt(a))
-              bits |= 1L << (rr * 8 + cc)
-            cc += 1
-          }
-          rr += 1
-        }
-        bits
+        y += 1
       }
-    } catch { case _: Exception => None }
+      var bits = 0L
+      var rr = 0
+      while (rr < 8) {
+        var cc = 0
+        while (cc < 8) {
+          val a = rr * 9 + cc
+          val b = a + 1
+          // mean_a < mean_b via cross-multiplication: sums ≤ 765·w·h/72
+          // and counts ≤ ceil(w/9)·ceil(h/8), so the products stay far
+          // below Long overflow for any image ImageIO can hold in memory
+          if (cell(a) * cnt(b) < cell(b) * cnt(a))
+            bits |= 1L << (rr * 8 + cc)
+          cc += 1
+        }
+        rr += 1
+      }
+      bits
+    }
 
   /** REAL audio decode — 16-bit PCM mono WAV via manual RIFF chunk
     * parsing (pure JDK byte work, no codec library): returns
@@ -406,30 +435,25 @@ object Multimodal {
     * decodable image. Headless-safe (BufferedImage needs no display).
     */
   def resizeImage(payload: Array[Byte], width: Int, height: Int): Option[Array[Byte]] = {
-    // programmer errors fail loudly BEFORE the catch below, which exists
+    // programmer errors fail loudly BEFORE readImage, whose catch exists
     // only to classify undecodable DATA as None
     require(width >= 1 && height >= 1, s"resize target must be positive: ${width}x$height")
-    if (payload == null || payload.isEmpty) None
-    else try {
-      Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))).map { src =>
-        // preserve alpha: drawing an RGBA source onto a 3-channel buffer
-        // composites transparency onto black; PNG re-encode keeps alpha
-        val destType =
-          if (src.getColorModel.hasAlpha) java.awt.image.BufferedImage.TYPE_INT_ARGB
-          else java.awt.image.BufferedImage.TYPE_3BYTE_BGR
-        val dst = new java.awt.image.BufferedImage(width, height, destType)
-        val g = dst.createGraphics()
-        try g.drawImage(src, 0, 0, width, height, null)
-        finally g.dispose()
-        val bos = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(dst, "png", bos)
-        bos.toByteArray
-      }
-    } catch { case _: Exception => None }
+    readImage(payload) { src =>
+      // preserve alpha: drawing an RGBA source onto a 3-channel buffer
+      // composites transparency onto black; PNG re-encode keeps alpha
+      val destType =
+        if (src.getColorModel.hasAlpha) java.awt.image.BufferedImage.TYPE_INT_ARGB
+        else java.awt.image.BufferedImage.TYPE_3BYTE_BGR
+      val dst = new java.awt.image.BufferedImage(width, height, destType)
+      val g = dst.createGraphics()
+      try g.drawImage(src, 0, 0, width, height, null)
+      finally g.dispose()
+      pngBytes(dst)
+    }
   }
 
   /** Batched image resize over a media table — the `mapInPandas`-shaped
-    * batch op: per-partition init (stream-cache off), every image payload
+    * batch op: every image payload
     * rewritten to a `width`×`height` PNG; non-images and undecodable
     * payloads pass through unchanged.
     */
@@ -438,7 +462,6 @@ object Multimodal {
     val spark = media.sparkSession
     import spark.implicits._
     media.mapPartitions { it =>
-      javax.imageio.ImageIO.setUseCache(false)
       it.map { r =>
         if (r.modality != "image") r
         else resizeImage(r.payload, width, height)
@@ -539,7 +562,6 @@ object Multimodal {
     val spark = media.sparkSession
     import spark.implicits._
     media.mapPartitions { it =>
-      javax.imageio.ImageIO.setUseCache(false)
       it.filter(_.modality == "video").flatMap { r =>
         selectVideoFrames(r.payload, _ % every == 0).iterator
           .flatMap { case (f, frame) =>
@@ -565,10 +587,6 @@ object Multimodal {
     media.mapPartitions { it =>
       // per-partition init happens here (digest instance; a real audio/
       // video codec would load its native state once per partition too).
-      // ImageIO defaults to a FILE-backed stream cache — one temp file
-      // created and deleted per decode, hammering executor local disk;
-      // in-memory payloads never need it.
-      javax.imageio.ImageIO.setUseCache(false)
       val md = java.security.MessageDigest.getInstance("MD5")
       it.map { r =>
         md.reset()

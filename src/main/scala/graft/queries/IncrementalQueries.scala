@@ -82,10 +82,7 @@ object IncrementalQueries {
     // q133: incremental ExactSubstr — q128's substring-level exact
     // dedup in the delta-ingest shape (q91's discipline): each NEW
     // document's verbatim ≥25-char spans against the EXISTING corpus
-    // only. Cost ∝ delta, not corpus²: the base side collapses to its
-    // distinct gram set (in production a maintained, gram-bucketed
-    // index) and delta grams probe it with one equi-join. See
-    // Dedup.exactSubstrAgainst.
+    // only; cost ∝ delta, not corpus² (Dedup.substrCovAgainst).
     // ---------------------------------------------------------------
     "q133_incremental_substr" -> { (s, dir) =>
       val docs = Tables(s, dir).documents
@@ -98,9 +95,8 @@ object IncrementalQueries {
     // q183: the incremental REMOVAL — q167's remediation in its
     // delta-ingest form (q133 reports the incremental coverage stats;
     // this CUTS the spans): every new document is cleaned of the spans
-    // it shares with the existing corpus, probing the base's distinct
-    // gram set with one equi-join — cost ∝ delta size. The residual
-    // text rides in the gate byte-for-byte.
+    // it shares with the existing corpus (Dedup.substrCovAgainst). The
+    // residual text rides in the gate byte-for-byte.
     "q183_incremental_remediate" -> { (s, dir) =>
       val docs = Tables(s, dir).documents
       graft.operators.Dedup.exactSubstrRemediateAgainst(

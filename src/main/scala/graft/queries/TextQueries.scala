@@ -1368,9 +1368,8 @@ object TextQueries {
     // keeps only its FIRST corpus-wide occurrence (min (doc_id,
     // chunk_idx), packed into ONE BIGINT so both engines take the same
     // min — no struct-ordering semantics in the gate), documents
-    // reassembled from their kept chunks in order. ONE chunk-key shuffle
-    // (the window) + a per-doc aggregate; no all-pairs anything. The
-    // reconstructed text rides in the gate.
+    // reassembled from their kept chunks in order (Dedup.keepFirstChunks,
+    // Dedup.reassembleKept). The reconstructed text rides in the gate.
     "q169_chunk_dedup" -> { (s, dir) =>
       graft.operators.Dedup.chunkDedup(
         Tables(s, dir).documents, "doc_id", "text", ChunkDedupTokens)
@@ -1386,9 +1385,8 @@ object TextQueries {
     // re-synchronize ~divisor chars past any edit, which is why every
     // production dedup store (LBFS/FastCDC lineage) chunks this way.
     // Scale shape identical to q169: one native pass per doc, explode
-    // per CHUNK (~n/64 rows, never per char), first-occurrence via
-    // groupBy + join-back on the chunk md5 (flooded-key safe), per-doc
-    // reassembly agg. q226 measures the fixed-vs-CDC contrast.
+    // per CHUNK (~n/64 rows, never per char), then q169's keep flag and
+    // reassembly. q226 measures the fixed-vs-CDC contrast.
     // ---------------------------------------------------------------
     "q225_cdc_chunk_dedup" -> { (s, dir) =>
       graft.operators.Dedup.cdcChunkDedup(
@@ -2773,8 +2771,7 @@ object TextQueries {
     "q71_image_decode" -> { (s, dir) =>
       import s.implicits._
       val ids = Tables(s, dir).documents.select(col("doc_id")).as[Long]
-      val media = ids.map(id => graft.operators.Multimodal.MediaRecord(
-        id, "image", graft.operators.Multimodal.syntheticPng(id), s"synthetic://$id"))
+      val media = ids.map(id => graft.operators.Multimodal.syntheticRecord(id, "image"))
       graft.operators.Multimodal.extractFeatures(media).toDF()
         .select(col("media_id"), col("is_decoded"),
                 col("image_width"), col("image_height"),
@@ -2790,8 +2787,7 @@ object TextQueries {
     "q101_audio_decode" -> { (s, dir) =>
       import s.implicits._
       val ids = Tables(s, dir).documents.select(col("doc_id")).as[Long]
-      val media = ids.map(id => graft.operators.Multimodal.MediaRecord(
-        id, "audio", graft.operators.Multimodal.syntheticWav(id), s"synthetic://$id"))
+      val media = ids.map(id => graft.operators.Multimodal.syntheticRecord(id, "audio"))
       graft.operators.Multimodal.extractFeatures(media).toDF()
         .select(col("media_id"), col("is_decoded"),
                 col("audio_sample_rate"), col("audio_n_samples"),
@@ -2805,8 +2801,7 @@ object TextQueries {
     "q72_image_resize" -> { (s, dir) =>
       import s.implicits._
       val ids = Tables(s, dir).documents.select(col("doc_id")).as[Long]
-      val media = ids.map(id => graft.operators.Multimodal.MediaRecord(
-        id, "image", graft.operators.Multimodal.syntheticPng(id), s"synthetic://$id"))
+      val media = ids.map(id => graft.operators.Multimodal.syntheticRecord(id, "image"))
       val resized = graft.operators.Multimodal.resizeAll(media, 4, 3)
       graft.operators.Multimodal.extractFeatures(resized).toDF()
         .select(col("media_id"), col("is_decoded"),
@@ -2821,10 +2816,7 @@ object TextQueries {
     "q73_frame_sample" -> { (s, dir) =>
       import s.implicits._
       val ids = Tables(s, dir).documents.select(col("doc_id")).as[Long]
-      val media = ids.map(id => graft.operators.Multimodal.MediaRecord(
-        id, "video",
-        graft.operators.Multimodal.syntheticVideo(id, (id % 4).toInt + 2),
-        s"synthetic://$id"))
+      val media = ids.map(id => graft.operators.Multimodal.syntheticRecord(id, "video"))
       graft.operators.Multimodal.sampleFrames(media, every = 2).toDF()
     },
 
@@ -2842,16 +2834,11 @@ object TextQueries {
       // fully-qualified references only: an object-val alias would drag
       // the (non-serializable) module instance into the map closure
       val media = ids.map { id =>
-        (id % 3) match {
-          case 0 => graft.operators.Multimodal.MediaRecord(
-            id, "image", graft.operators.Multimodal.syntheticPng(id), s"synthetic://$id")
-          case 1 => graft.operators.Multimodal.MediaRecord(
-            id, "audio", graft.operators.Multimodal.syntheticWav(id), s"synthetic://$id")
-          case _ => graft.operators.Multimodal.MediaRecord(
-            id, "video",
-            graft.operators.Multimodal.syntheticVideo(id, (id % 4).toInt + 2),
-            s"synthetic://$id")
-        }
+        graft.operators.Multimodal.syntheticRecord(id, (id % 3) match {
+          case 0 => "image"
+          case 1 => "audio"
+          case _ => "video"
+        })
       }
       graft.operators.Multimodal.extractFeatures(media).toDF()
         .select(col("media_id"), col("modality"), posexplode(col("feature")))
@@ -3831,33 +3818,22 @@ object TextQueries {
     * what the oracle replays with a packed (parity, doc_id, chunk_idx)
     * BIGINT key over the one-shot chunk table.
     */
-  def chunkServeIncremental(s: SparkSession, dir: String): DataFrame = {
-    val idx = chunkIndex(s, dir)
+  def chunkServeIncremental(s: SparkSession, dir: String): DataFrame =
+    serveAgainstIndex(s, dir, chunkIndex(s, dir),
+      Dedup.chunkFrame(_, "doc_id", "text", ChunkDedupTokens), "chunk_toks", "kept_tokens", " ")
+
+  /** The q172/q227 serve: the delta half (odd doc_ids) chunked by
+    * `chunker`, kept where a chunk misses `index` and is the within-delta
+    * first occurrence ([[Dedup.keepFirstChunks]]), and reassembled per
+    * document ([[Dedup.reassembleKept]] over `sizeCol`/`keptCol`/
+    * `separator`).
+    */
+  private def serveAgainstIndex(s: SparkSession, dir: String, index: DataFrame,
+                                chunker: DataFrame => DataFrame, sizeCol: String,
+                                keptCol: String, separator: String): DataFrame = {
     val delta = Tables(s, dir).documents.filter(col("doc_id") % 2 === 1)
-    val ch = Dedup.hashedChunks(Dedup.chunkFrame(delta, "doc_id", "text", ChunkDedupTokens))
-    // Within-delta first occurrence via groupBy + dup-only join-back
-    // (the attachCanonical discipline) — a chunk hash flooded across the
-    // delta batch stays bounded by the partial agg, never a one-task
-    // chunk_hash window.
-    val keyed = ch
-      .join(Dedup.dupMinKeys(ch), Seq("chunk_hash"), "left")
-      .withColumn("first_in_delta",
-        col("__min_k").isNull || col("k") === col("__min_k"))
-      .drop("__min_k")
-      .join(idx.select(col("chunk_hash"), lit(true).as("in_base")),
-            Seq("chunk_hash"), "left")
-      .withColumn("keep_chunk",
-        col("first_in_delta") && col("in_base").isNull)
-    keyed.groupBy(col("doc_id"))
-      .agg(max(col("n_chunks")).as("n_chunks"),
-           sum(when(col("keep_chunk"), 1L).otherwise(0L)).as("kept_chunks"),
-           sum(when(col("keep_chunk"), col("chunk_toks")).otherwise(0L))
-             .as("kept_tokens"),
-           concat_ws(" ", transform(
-             array_sort(collect_list(
-               when(col("keep_chunk"),
-                    struct(col("chunk_idx"), col("chunk_text"))))),
-             x => x.getField("chunk_text"))).as("residual_text"))
+    Dedup.reassembleKept(Dedup.keepFirstChunks(Dedup.hashedChunks(chunker(delta)), Some(index)),
+                         sizeCol, keptCol, separator)
   }
 
   /** The q227 persisted CDC chunk-hash index — [[chunkIndex]]'s
@@ -3877,38 +3853,14 @@ object TextQueries {
     }
 
   /** q227: incremental CDC chunk dedup against the persisted index —
-    * [[chunkServeIncremental]] verbatim at CDC granularity: delta docs
-    * (odd ids) chunk scan-locally via the native rolling-hash pass; a
-    * chunk survives iff its hash misses the bucketed base index (the
-    * index side joins without an Exchange) AND it is the within-delta
-    * first occurrence (groupBy + dup-only join-back — never a
-    * chunk_hash window). Keep semantics are arrival-order (base before
-    * delta), replayed in the oracle with the parity-leading packed key.
+    * [[chunkServeIncremental]] at CDC granularity ([[serveAgainstIndex]]):
+    * delta docs chunk scan-locally via the native rolling-hash pass. Keep
+    * semantics are arrival-order (base before delta), replayed in the
+    * oracle with the parity-leading packed key.
     */
-  def cdcServeIncremental(s: SparkSession, dir: String): DataFrame = {
-    val idx = cdcChunkIndex(s, dir)
-    val delta = Tables(s, dir).documents.filter(col("doc_id") % 2 === 1)
-    val ch = Dedup.hashedChunks(Dedup.cdcChunkFrame(delta, "doc_id", "text"))
-    val keyed = ch
-      .join(Dedup.dupMinKeys(ch), Seq("chunk_hash"), "left")
-      .withColumn("first_in_delta",
-        col("__min_k").isNull || col("k") === col("__min_k"))
-      .drop("__min_k")
-      .join(idx.select(col("chunk_hash"), lit(true).as("in_base")),
-            Seq("chunk_hash"), "left")
-      .withColumn("keep_chunk",
-        col("first_in_delta") && col("in_base").isNull)
-    keyed.groupBy(col("doc_id"))
-      .agg(max(col("n_chunks")).as("n_chunks"),
-           sum(when(col("keep_chunk"), 1L).otherwise(0L)).as("kept_chunks"),
-           sum(when(col("keep_chunk"), col("chunk_chars")).otherwise(0L))
-             .as("kept_chars"),
-           concat_ws("", transform(
-             array_sort(collect_list(
-               when(col("keep_chunk"),
-                    struct(col("chunk_idx"), col("chunk_text"))))),
-             x => x.getField("chunk_text"))).as("residual_text"))
-  }
+  def cdcServeIncremental(s: SparkSession, dir: String): DataFrame =
+    serveAgainstIndex(s, dir, cdcChunkIndex(s, dir),
+      Dedup.cdcChunkFrame(_, "doc_id", "text"), "chunk_chars", "kept_chars", "")
 
   private val enList = Text.langProfiles.toMap.apply("en").map(w => s"'$w'").mkString(", ")
 

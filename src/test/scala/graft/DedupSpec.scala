@@ -392,6 +392,52 @@ class DedupSpec extends SparkSpec {
       s"prefix-edited copy kept ${out(2L).getAs[Long]("kept_chars")} chars — CDC failed to realign")
   }
 
+  test("token and CDC chunk dedup: full repeat, in-document repeat, repeat-free document") {
+    // token chunks of 3: doc 2 repeats doc 1 in full, doc 3's third chunk
+    // repeats its first, doc 4 repeats nothing
+    val d = Seq((1L, "a b c d e f g"), (2L, "a b c d e f g"),
+                (3L, "x y z p q r x y z"), (4L, "m n o u")).toDF("doc_id", "text")
+    val tok = Dedup.chunkDedup(d, "doc_id", "text", chunkTokens = 3)
+      .collect().map(r => r.getAs[Long]("doc_id") ->
+        (r.getAs[Long]("kept_chunks"), r.getAs[Long]("kept_tokens"),
+         r.getAs[String]("residual_text"))).toMap
+    assert(tok == Map(
+      1L -> (3L, 7L, "a b c d e f g"),
+      2L -> (0L, 0L, ""),
+      3L -> (2L, 6L, "x y z p q r"),
+      4L -> (2L, 4L, "m n o u")))
+
+    // CDC: the same three shapes over random text, each document's
+    // expected readout replayed from its chunks in (doc_id, chunk_idx)
+    // order with a seen-set
+    val rnd = new scala.util.Random(7)
+    def text(n: Int) = (1 to n).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
+    val s = text(400)
+    val t = text(300)
+    val u = text(300)
+    val c = Seq((1L, s), (2L, s), (3L, t + t), (4L, u)).toDF("doc_id", "text")
+    val chunks = Dedup.cdcChunkFrame(c, "doc_id", "text").collect()
+      .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("chunk_idx"),
+                 r.getAs[String]("chunk_text")))
+      .sortBy(x => (x._1, x._2))
+    val seen = scala.collection.mutable.Set.empty[String]
+    val want = chunks.groupBy(_._1).toSeq.sortBy(_._1).map { case (id, cs) =>
+      val kept = cs.sortBy(_._2).map(_._3).filter(seen.add)
+      id -> (kept.size.toLong, kept.map(_.length.toLong).sum, kept.mkString)
+    }.toMap
+    val cdc = Dedup.cdcChunkDedup(c, "doc_id", "text").collect()
+      .map(r => r.getAs[Long]("doc_id") ->
+        (r.getAs[Long]("kept_chunks"), r.getAs[Long]("kept_chars"),
+         r.getAs[String]("residual_text"))).toMap
+    assert(cdc == want)
+    val nChunks = chunks.groupBy(_._1).map { case (id, cs) => id -> cs.length.toLong }
+    assert(cdc(2L) == ((0L, 0L, "")))
+    assert(cdc(3L)._1 < nChunks(3L), "t + t must repeat a chunk inside doc 3")
+    // the empty separator gives back a repeat-free document verbatim
+    assert(cdc(1L) == ((nChunks(1L), s.length.toLong, s)))
+    assert(cdc(4L) == ((nChunks(4L), u.length.toLong, u)))
+  }
+
   test("chunkDedup cuts a repeated chunk WITHIN one document") {
     val rep = ((1 to 20) ++ (1 to 20)).map("t" + _).mkString(" ") // chunk1 == chunk0
     val d = Seq((7L, rep)).toDF("doc_id", "text")

@@ -1777,7 +1777,11 @@ class PlanQualitySpec extends SparkSpec {
 
   /** `file:line: code` for every code line of src/main/scala, outside the
     * `owners` files, that matches `call`. Comment lines and trailing
-    * comments are exempt.
+    * comments are exempt: `//` lines, and every line of a `/* … */` block
+    * (opened by a line starting with `/*`, closed by the line holding
+    * `*/`). A line starting with `*` outside a block is code, an
+    * expression continued with the `*` operator (tools/codelines.sh
+    * counts by the same rule).
     */
   private def codeLines(call: scala.util.matching.Regex, owners: String*): Seq[String] = {
     import scala.jdk.CollectionConverters._
@@ -1786,13 +1790,19 @@ class PlanQualitySpec extends SparkSpec {
     val files = java.nio.file.Files.walk(root).iterator().asScala
       .filter(f => f.toString.endsWith(".scala") && !skip(f)).toSeq
     assert(files.size > 50, s"source tree not found from ${root.toAbsolutePath}")
+    def code(lines: Seq[String]): Seq[(String, Int)] = {
+      var inBlock = false
+      lines.map(_.trim).zipWithIndex.filter { case (line, _) =>
+        if (inBlock) { inBlock = !line.contains("*/"); false }
+        else if (line.startsWith("/*")) { inBlock = !line.drop(2).contains("*/"); false }
+        else !line.startsWith("//")
+      }
+    }
     for {
       f <- files
-      (line, i) <- java.nio.file.Files.readAllLines(f).asScala.zipWithIndex
-      code = line.trim
-      if !(code.startsWith("//") || code.startsWith("*") || code.startsWith("/*"))
-      if call.findFirstIn(code.replaceFirst("//.*", "")).isDefined
-    } yield s"$f:${i + 1}: $code"
+      (line, i) <- code(java.nio.file.Files.readAllLines(f).asScala.toSeq)
+      if call.findFirstIn(line.replaceFirst("//.*", "")).isDefined
+    } yield s"$f:${i + 1}: $line"
   }
 
   test("core.Materialize is the only caller of checkpoint, cache and persist in src/main") {
@@ -1869,6 +1879,24 @@ class PlanQualitySpec extends SparkSpec {
       big.mkString("10^18 top-k key constant outside TopKPairs:\n", "\n", ""))
     val d9 = outside("""DecimalType\(18,\s*9\)""".r, "graft/functions/Exact.scala")
     assert(d9.isEmpty, d9.mkString("DECIMAL(18,9) outside Exact:\n", "\n", ""))
+  }
+
+  test("one body each for the chunk reassembly, the gram scan, ImageIO and the synthetic media") {
+    // each shape has one owner; a pasted copy is a second body that can
+    // drift from it unseen
+    val owned = Seq(
+      ("""struct(col("chunk_idx"), col("chunk_text"))""", "graft/operators/Dedup.scala", 1),
+      ("CharGramArray.charGrams", "graft/operators/Dedup.scala", 2),
+      ("ImageIO.read(", "graft/operators/Multimodal.scala", 1),
+      ("ImageIO.write(", "graft/operators/Multimodal.scala", 1),
+      // codeLines cuts a line at its first `//`, so the fixture URI is
+      // matched up to its scheme
+      ("\"synthetic:", "graft/operators/Multimodal.scala", 1))
+    for ((call, owner, bodies) <- owned) {
+      val hits = codeLines(java.util.regex.Pattern.quote(call).r)
+      assert(hits.size == bodies && hits.forall(_.contains(owner)),
+        hits.mkString(s"$call: expected $bodies line(s) in $owner, got:\n", "\n", ""))
+    }
   }
 
   test("every scaladoc in src/main sits on a name: no /** block followed only by another") {

@@ -15,7 +15,7 @@ class SimilaritySpec extends SparkSpec {
     }.toDF("id", "a", "b")
     val rows = df.select(
       Vectors.dot(col("a"), col("b")).as("native"),
-      Vectors.dotComposable(col("a"), col("b")).as("composable")).collect()
+      ReferenceForms.dotComposable(col("a"), col("b")).as("composable")).collect()
     rows.foreach(r => assert(r.getDouble(0) == r.getDouble(1))) // exact, not approx
   }
 

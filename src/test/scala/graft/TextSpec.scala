@@ -19,7 +19,7 @@ class TextSpec extends SparkSpec {
     Text.langProfiles.foreach { case (_, words) =>
       val rows = df.select(
         Text.wordListHits(col("toks"), words).as("native"),
-        Text.wordListHitsComposable(col("toks"), words).as("composable")).collect()
+        ReferenceForms.wordListHitsComposable(col("toks"), words).as("composable")).collect()
       rows.foreach(r => assert(r.getLong(0) == r.getLong(1)))
     }
     // null-element and null-array behavior match too
@@ -28,7 +28,7 @@ class TextSpec extends SparkSpec {
       "UNION ALL SELECT CAST(NULL AS ARRAY<STRING>)")
     val er = edge.select(
       Text.wordListHits(col("toks"), Seq("the", "of")).as("native"),
-      Text.wordListHitsComposable(col("toks"), Seq("the", "of")).as("composable"))
+      ReferenceForms.wordListHitsComposable(col("toks"), Seq("the", "of")).as("composable"))
       .collect()
     er.foreach { r =>
       assert(r.isNullAt(0) == r.isNullAt(1))
@@ -69,7 +69,7 @@ class TextSpec extends SparkSpec {
     for (n <- Seq(2, 3, 5)) {
       val mismatch = docs.select(
         Text.shingles(col("text"), n).as("native"),
-        Text.shinglesComposable(col("text"), n).as("composable"))
+        ReferenceForms.shinglesComposable(col("text"), n).as("composable"))
         .filter(not(col("native") === col("composable")))
         .count()
       assert(mismatch == 0, s"n=$n")
