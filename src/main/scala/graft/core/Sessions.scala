@@ -9,8 +9,8 @@ import org.apache.spark.sql.SparkSession
   * inside a model, `threads` becomes task parallelism
   * (`spark.sql.shuffle.partitions`, one partition per local core; on a real
   * cluster this is raised to O(cores) and AQE coalesces the rest); across
-  * models, [[graft.model.Runner.run]] runs independent models concurrently,
-  * at most `defaultParallelism` (the local core count) at a time — dbt's
+  * models and independent query legs, [[Parallel]] is the driver-side
+  * scheduler, at `defaultParallelism` (the local core count) — dbt's
   * `threads: 4` on a 4-core box.
   *
   * Event-time contract: `events.ts` (TIMESTAMP(NANOS) parquet) reads as
@@ -58,7 +58,7 @@ object Sessions {
   val CodegenCacheEntries = 1024
 
   /** Local core count: `SPARK_GRAFT_CPUS` if set, else the JVM's available
-    * processors. One partition and one concurrent model per core, so a
+    * processors. One partition and one [[Parallel]] task per core, so a
     * session never runs more tasks at once than the box has cores.
     */
   def cores: Int =

@@ -2,8 +2,8 @@ package graft.model
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.sql.Timestamp
-import java.util.concurrent.{Executors, LinkedBlockingQueue}
 
+import graft.core.Parallel
 import graft.functions.{Macros, Upserts}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
@@ -11,8 +11,9 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 
 /** DAG runner: topologically orders registered models over their `deps`
   * edges and applies each model's materializer (the Spark equivalent of
-  * `dbt run`, SURVEY §3.1). Planning is Catalyst's; this class only owns
-  * scheduling + materialization + contract enforcement.
+  * `dbt run`, SURVEY §3.1). Planning is Catalyst's and scheduling is
+  * [[graft.core.Parallel]]'s; this class owns materialization + contract
+  * enforcement.
   *
   * Wall-clock-dependent columns are driven by the injected `asOf` clock
   * and `runId` so results are reproducible (SURVEY §7.4.4).
@@ -246,71 +247,35 @@ final class Runner(
     * resolved DataFrame (views stay lazy, tables/incrementals/snapshots
     * read back their materialized output).
     *
-    * Scheduling follows dbt's `threads`: a model starts as soon as all its
-    * `deps` are resolved, with at most `defaultParallelism` models in
-    * flight, earliest in topo order first. The worker threads are created
-    * per run from the calling thread, so every job a model launches
-    * carries the caller's job-local properties (job group, description,
-    * custom properties). A failing model's dependents never start; models
-    * independent of it still run. Once every started model has finished,
-    * the exception of the earliest failing model in topo order is rethrown
-    * unchanged. Audit lines are logged in topo order.
+    * Models are scheduled by [[graft.core.Parallel.run]] in topo order,
+    * each over the sources and its `deps`; its contract is dbt's `threads`
+    * rule. Audit lines are logged in topo order, also when a model fails.
     */
   def run(models: Seq[Model], sources: Map[String, DataFrame]): Map[String, DataFrame] = {
     val order = topoOrder(models)
-    val known = sources.keySet ++ order.map(_.name)
+    val byName = order.map(m => m.name -> m).toMap
+    val known = sources.keySet ++ byName.keySet
     order.foreach { m =>
       val missing = m.deps.filterNot(known.contains)
       require(missing.isEmpty, s"model ${m.name}: unresolved deps $missing")
     }
-    val resolved = scala.collection.mutable.Map[String, DataFrame](sources.toSeq: _*)
-    val rowCounts = scala.collection.mutable.Map.empty[String, Long]
-    val failures = scala.collection.mutable.Map.empty[String, Throwable]
-    val waiting = scala.collection.mutable.ArrayBuffer(order: _*)
-    val finished = new LinkedBlockingQueue[(Model, Either[Throwable, (DataFrame, Option[Long])])]()
-    val width = math.max(1, spark.sparkContext.defaultParallelism)
-    // The pool creates its threads inside execute(), which only this
-    // thread calls: each inherits this thread's Spark local properties.
-    val pool = Executors.newFixedThreadPool(width)
-    var inFlight = 0
-    def launchReady(): Unit =
-      waiting.filter(_.deps.forall(resolved.contains)).take(width - inFlight).foreach { m =>
-        waiting -= m
-        m.customSchema.foreach { cs =>
-          val schema = schemaName(cs)
-          schemaDirs += m.name -> schema
-          // env stamp: lets fresh Runners resolve this schema dir later
-          // without ever crossing env boundaries (see path())
-          val dir = Paths.get(warehouseDir, schema)
-          Files.createDirectories(dir)
-          Files.writeString(dir.resolve("_ENV"), env)
-        }
-        val deps = resolved.toMap
-        inFlight += 1
-        pool.execute { () =>
-          val out =
-            try Right(materialize(m, m.transform(deps)))
-            catch { case t: Throwable => Left(t) }
-          finished.put(m -> out)
-        }
-      }
-    try {
-      launchReady()
-      while (inFlight > 0) {
-        val (m, out) = finished.take()
-        inFlight -= 1
-        out match {
-          case Right((df, rows)) =>
-            resolved += m.name -> df
-            rows.foreach(rowCounts += m.name -> _)
-          case Left(t) => failures += m.name -> t
-        }
-        launchReady()
-      }
-    } finally pool.shutdown()
-    order.foreach(m => rowCounts.get(m.name).foreach(logRowCount(m.name, _)))
-    order.flatMap(m => failures.get(m.name)).headOption.foreach(t => throw t)
-    resolved.toMap
+    order.foreach(m => m.customSchema.foreach { cs =>
+      val schema = schemaName(cs)
+      schemaDirs += m.name -> schema
+      // env stamp: lets fresh Runners resolve this schema dir later
+      // without ever crossing env boundaries (see path())
+      val dir = Paths.get(warehouseDir, schema)
+      Files.createDirectories(dir)
+      Files.writeString(dir.resolve("_ENV"), env)
+    })
+    val rowCounts = scala.collection.concurrent.TrieMap.empty[String, Long]
+    val frames =
+      try Parallel.run[Model, DataFrame](spark, order)(_.deps.flatMap(byName.get)) { (m, in) =>
+        val (df, rows) = materialize(m, m.transform(sources ++ in.map { case (d, f) => d.name -> f }))
+        rows.foreach(rowCounts += m.name -> _)
+        df
+      } finally order.foreach(m => rowCounts.get(m.name).foreach(logRowCount(m.name, _)))
+    sources ++ order.map(_.name).zip(frames)
   }
 
   /** Kahn topological sort over dep edges; deterministic (name-ordered)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.{Artifact, Tables}
+import graft.core.{Artifact, Parallel, Tables}
 import graft.functions.{Exact, Text}
 import graft.operators.{Bpe, Classifier, Dedup}
 import org.apache.spark.sql.functions._
@@ -2046,34 +2046,28 @@ object TextQueries {
       // concurrent legs read it instead of racing to build it
       val jac = jaccard05(s, dir)
       // the four threshold legs are INDEPENDENT jobs whose cost is an
-      // eager CC convergence loop each — overlap them from a thread pool
-      // (guide §2.6) so one leg's convergence-round tail back-fills the
-      // cores another leg's next round needs; results are per-leg
-      // deterministic and the union keeps the threshold order
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val legs = Await.result(Future.sequence(Seq(5, 6, 7, 8).map { t =>
-        Future {
-          val edges = exactEdges.union(
-            jac.filter(col("jaccard") >= t.toDouble / 10.0)
-              .select(col("doc_a"), col("doc_b")))
-          val nodes = edges.select(col("doc_a").as("id"))
-            .union(edges.select(col("doc_b").as("id"))).distinct()
-          val g = Dedup.connectedComponents(nodes, edges, "doc_a", "doc_b")
-            .join(bytes, col("id") === col("doc_id"))
-            .groupBy(col("cluster_id"))
-            .agg(count(lit(1)).as("sz"), sum(col("nb")).as("sum_nb"),
-                 max(col("nb")).as("max_nb"))
-          g.agg(count(lit(1)).as("n_dup_clusters"),
-                coalesce(sum(col("sz") - 1L), lit(0L)).as("n_dup_docs"),
-                coalesce(sum(col("sum_nb") - col("max_nb")), lit(0L))
-                  .as("bytes_saved"))
-            .select(lit(t.toLong).as("threshold_x10"), col("n_dup_clusters"),
-                    col("n_dup_docs"), col("bytes_saved"))
-        }
-      }), Duration.Inf)
-      legs.reduce(_.unionAll(_))
+      // eager CC convergence loop each — overlap them (guide §2.6) so one
+      // leg's convergence-round tail back-fills the cores another leg's
+      // next round needs; results are per-leg deterministic and the union
+      // keeps the threshold order
+      Parallel.map(s, Seq(5, 6, 7, 8)) { t =>
+        val edges = exactEdges.union(
+          jac.filter(col("jaccard") >= t.toDouble / 10.0)
+            .select(col("doc_a"), col("doc_b")))
+        val nodes = edges.select(col("doc_a").as("id"))
+          .union(edges.select(col("doc_b").as("id"))).distinct()
+        val g = Dedup.connectedComponents(nodes, edges, "doc_a", "doc_b")
+          .join(bytes, col("id") === col("doc_id"))
+          .groupBy(col("cluster_id"))
+          .agg(count(lit(1)).as("sz"), sum(col("nb")).as("sum_nb"),
+               max(col("nb")).as("max_nb"))
+        g.agg(count(lit(1)).as("n_dup_clusters"),
+              coalesce(sum(col("sz") - 1L), lit(0L)).as("n_dup_docs"),
+              coalesce(sum(col("sum_nb") - col("max_nb")), lit(0L))
+                .as("bytes_saved"))
+          .select(lit(t.toLong).as("threshold_x10"), col("n_dup_clusters"),
+                  col("n_dup_docs"), col("bytes_saved"))
+      }.reduce(_.unionAll(_))
     },
 
     // ---------------------------------------------------------------

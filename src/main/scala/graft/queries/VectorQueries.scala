@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.{Artifact, Tables}
+import graft.core.{Artifact, Parallel, Tables}
 import graft.functions.Exact
 import graft.operators.{Drift, Similarity}
 import org.apache.spark.sql.functions._
@@ -1263,23 +1263,18 @@ object VectorQueries {
       // the three width legs are independent serve runs over the SAME
       // session-cached graph (the first leg to reach the memo builds it;
       // the others block on the memo, not on a duplicate build) — their
-      // per-round beam jobs overlap from a thread pool (guide §2.6)
-      // instead of serializing 3 × BeamRounds round-trips
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      Await.result(Future.sequence(BeamSweepWidths.map { w =>
-        Future {
-          val fin = beamServeTopK(s, dir, w, 3)
-          exact.join(fin.withColumn("hit", lit(1L)),
-                     Seq("query_id", "neighbor_id"), "left")
-            .agg(count(lit(1)).as("total"),
-                 coalesce(sum(col("hit")), lit(0L)).as("found"))
-            .select(lit(w.toLong).as("beam_width"), col("found"), col("total"),
-                    (col("found").cast(DoubleType) / col("total").cast(DoubleType))
-                      .as("recall"))
-        }
-      }), Duration.Inf).reduce(_ unionAll _)
+      // per-round beam jobs overlap (guide §2.6) instead of serializing
+      // 3 × BeamRounds round-trips
+      Parallel.map(s, BeamSweepWidths) { w =>
+        val fin = beamServeTopK(s, dir, w, 3)
+        exact.join(fin.withColumn("hit", lit(1L)),
+                   Seq("query_id", "neighbor_id"), "left")
+          .agg(count(lit(1)).as("total"),
+               coalesce(sum(col("hit")), lit(0L)).as("found"))
+          .select(lit(w.toLong).as("beam_width"), col("found"), col("total"),
+                  (col("found").cast(DoubleType) / col("total").cast(DoubleType))
+                    .as("recall"))
+      }.reduce(_ unionAll _)
     },
 
     // -----------------------------------------------------------------

@@ -136,6 +136,14 @@ object Warehouse {
     * cross-corrupt) and the files are meant to outlive the JVM. Staleness
     * follows the testdata contract: a dataset dir's content is immutable;
     * regenerated data lands in a new dir and therefore a new index name.
+    *
+    * Leak: an index whose name changes stays in the shared warehouse for
+    * good. That happens when the name derivation changes (a shortened key
+    * tail) or the dataset dir moves or is renamed; the new name builds a
+    * new index and nothing removes the old one. No sweep can mend this
+    * safely, because an index under a stale name looks exactly like
+    * another live dataset's index. Only [[dropDurableIndex]], given the
+    * old name, removes it.
     */
   def durableIndex(spark: SparkSession, name: String,
                    fingerprint: Option[String] = None)(build: => DataFrame): DataFrame = {
@@ -200,7 +208,9 @@ object Warehouse {
     spark.read.parquet(loc.toString)
   }
 
-  /** Delete a [[durableIndex]] by name (test hygiene). */
+  /** Delete a [[durableIndex]] by name (test hygiene, and the only way to
+    * remove an index left under a name that changed).
+    */
   def dropDurableIndex(spark: SparkSession, name: String): Unit = {
     val (loc, fs) = tableLocation(spark, name)
     if (fs.exists(loc)) fs.delete(loc, true)

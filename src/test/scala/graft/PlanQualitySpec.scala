@@ -1781,7 +1781,8 @@ class PlanQualitySpec extends SparkSpec {
     * (opened by a line starting with `/*`, closed by the line holding
     * `*/`). A line starting with `*` outside a block is code, an
     * expression continued with the `*` operator (tools/codelines.sh
-    * counts by the same rule).
+    * counts by the same rule). A `//` inside a string literal on the line
+    * (a URI such as `synthetic://`) is code, not a trailing comment.
     */
   private def codeLines(call: scala.util.matching.Regex, owners: String*): Seq[String] = {
     import scala.jdk.CollectionConverters._
@@ -1801,8 +1802,27 @@ class PlanQualitySpec extends SparkSpec {
     for {
       f <- files
       (line, i) <- code(java.nio.file.Files.readAllLines(f).asScala.toSeq)
-      if call.findFirstIn(line.replaceFirst("//.*", "")).isDefined
+      if call.findFirstIn(withoutTrailingComment(line)).isDefined
     } yield s"$f:${i + 1}: $line"
+  }
+
+  /** `line` cut at its first `//` outside a string literal (`"…"` with
+    * escapes, `"""…"""`, or the char literal `'"'`).
+    */
+  private def withoutTrailingComment(line: String): String = {
+    val tq = "\"\"\""
+    var open = "" // the delimiter of the literal the scan is in, if any
+    var i = 0
+    var end = line.length
+    while (i < end) {
+      if (open.isEmpty && line.startsWith("//", i)) end = i
+      else if (open.isEmpty && line.startsWith("'\"'", i)) i += 3
+      else if (open != "\"" && line.startsWith(tq, i)) { open = if (open.isEmpty) tq else ""; i += 3 }
+      else if (open == "\"" && line.charAt(i) == '\\') i += 2
+      else if (open != tq && line.charAt(i) == '"') { open = if (open.isEmpty) "\"" else ""; i += 1 }
+      else i += 1
+    }
+    line.take(end)
   }
 
   test("core.Materialize is the only caller of checkpoint, cache and persist in src/main") {
@@ -1889,14 +1909,21 @@ class PlanQualitySpec extends SparkSpec {
       ("CharGramArray.charGrams", "graft/operators/Dedup.scala", 2),
       ("ImageIO.read(", "graft/operators/Multimodal.scala", 1),
       ("ImageIO.write(", "graft/operators/Multimodal.scala", 1),
-      // codeLines cuts a line at its first `//`, so the fixture URI is
-      // matched up to its scheme
-      ("\"synthetic:", "graft/operators/Multimodal.scala", 1))
+      ("\"synthetic://", "graft/operators/Multimodal.scala", 1))
     for ((call, owner, bodies) <- owned) {
       val hits = codeLines(java.util.regex.Pattern.quote(call).r)
       assert(hits.size == bodies && hits.forall(_.contains(owner)),
         hits.mkString(s"$call: expected $bodies line(s) in $owner, got:\n", "\n", ""))
     }
+  }
+
+  test("core.Parallel is the only driver-side thread pool in src/main") {
+    // every fan-out of Spark work over driver threads goes through one
+    // scheduler, whose threads carry their caller's job group and local
+    // properties; a pool that outlives its caller does not
+    val hits = codeLines("""ExecutionContext|\bFuture\b|\bAwait\b|Executors\.""".r,
+      "graft/core/Parallel.scala")
+    assert(hits.isEmpty, hits.mkString("thread pool or Future outside core.Parallel:\n", "\n", ""))
   }
 
   test("every scaladoc in src/main sits on a name: no /** block followed only by another") {
